@@ -145,38 +145,6 @@ object BenchOne {
             .whenMatchedUpdateAll().execute())
         }
       }),
-      // r14 decomposition: where does the lineage read's ~0.9 s go?
-      // lin_plain = rewrite read without lineage; lin_full = shipped lineage
-      // read (scan + metadata struct + regexp + broadcast join); lin_scanonly
-      // = same scan WITHOUT the lookup join (meta cols consumed raw);
-      // lin_dsv2 = the native DSv2 scan whose reader emits _row_id /
-      // _last_updated_seq as per-slice constants (the candidate shape);
-      // lin_dsv2_plain = the same scan without lineage columns (its floor)
-      "lineage_decompose" -> (() => {
-        val t = fresh()
-        t.append(li)
-        (1 to 4).foreach(_ => t.append(li.limit(20000).repartition(4)))
-        val m = t.meta
-        val tasks = t.newScan().planFiles()
-        val dels = t.newScan().planDeletes()
-        val cols = m.schema.columnNames
-        run("lin_plain", 1, 5)(() => time(consume(
-          graft.table.Reads.readTasksWithDeletes(t, m, tasks, dels, cols,
-            graft.meta.expr.TrueExpr, rowPositions = false))))
-        run("lin_full", 1, 5)(() => time(consume(
-          graft.table.Reads.readTasksWithDeletes(t, m, tasks, dels, cols,
-            graft.meta.expr.TrueExpr, rowPositions = false,
-            withLineage = true))))
-        run("lin_scanonly", 1, 5)(() => time(consume(
-          graft.table.Reads.readFiles(spark, t, m, tasks, cols,
-            graft.meta.expr.TrueExpr, withMeta = true, withLineage = true))))
-        run("lin_dsv2", 1, 5)(() => time(consume(
-          spark.read.format("graft").load(t.location)
-            .select((cols.map(col) ++ Seq(col("_row_id"),
-              col("_last_updated_seq"))): _*))))
-        run("lin_dsv2_plain", 1, 5)(() => time(consume(
-          spark.read.format("graft").load(t.location))))
-      }),
       // plan evidence for the lineage read path: explain the bin-pack
       // rewrite's read frame (lineage ON) so before/after dumps can show
       // the join disappearing from the scan→write pipeline

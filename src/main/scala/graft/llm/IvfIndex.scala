@@ -314,29 +314,17 @@ final class IvfIndex private (val table: IceTable,
     // neighbor code norm; the query-side norm is constant within a window
     // and cannot change the order, so the per-pair work is one dot fold.
     //
-    // ONE metadata pass serves both phases: the ranking frame reads the
-    // planned file set directly (Reads.readFiles over the list-pruned
-    // tasks), and the rescore fetch prunes the SAME task list by id metrics
-    // instead of re-walking manifests — the two fixed costs the small-corpus
-    // bench exposed. A table with live deletes (never produced by
-    // build/sync, but a user can DML the index) falls back to the native
-    // scan, which owns delete application.
+    // ONE metadata pass serves both phases: the ranking frame scans the
+    // planned (list-pruned) task list, and the rescore fetch prunes the
+    // SAME task list by id metrics instead of re-walking manifests — the
+    // two fixed costs the small-corpus bench exposed.
     val hasCNorm = table.meta.schema.columnNames.contains(IvfIndex.CNormCol)
     val listFilter = Exprs.in(IvfIndex.ListCol, allLists.map(Int.box): _*)
-    val hasDeletes = table.currentSnapshot
-      .flatMap(_.summary.get("total-delete-files")).flatMap(_.toLongOption)
-      .map(_ > 0)
-      .getOrElse(table.newScan().filter(listFilter).planDeletes().nonEmpty)
-    val planned: Seq[FileScanTask] =
-      if (hasDeletes) Nil else table.newScan().filter(listFilter).planFiles()
+    val planned = table.newScan().filter(listFilter).planFiles()
     val candCols =
       if (hasCNorm) Seq(idCol, IvfIndex.CodesCol, IvfIndex.CNormCol, IvfIndex.ListCol)
       else Seq(idCol, IvfIndex.CodesCol, IvfIndex.ListCol)
-    val candRaw =
-      if (hasDeletes)
-        table.newScan().filter(listFilter).select(candCols: _*).toDF
-      else Reads.readFiles(spark, table, table.meta, planned, candCols,
-        Binder.bind(table.meta.schema, listFilter))
+    val candRaw = readCandidates(planned, candCols, listFilter)
     val cand = candRaw.select((col(idCol).as("neighbor_id") +:
       candCols.tail.map(col)): _*)
     val ranked0 = cand.join(broadcast(q), Seq(IvfIndex.ListCol))
@@ -352,7 +340,22 @@ final class IvfIndex private (val table: IceTable,
         ranked.select("query_id", "neighbor_id", "sim"), k * rescoreFactor)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    rescoreExact(qLocal, survivors, k, listFilter, planned, hasDeletes)
+    rescoreExact(qLocal, survivors, k, listFilter, planned)
+  }
+
+  /** Phase 1's candidate frame over the planned task list. Live deletes
+    * (never produced by build/sync, but a user can DML the index) apply in
+    * the scan's readers; their presence comes from the O(1) snapshot
+    * summary counter when the head carries it. */
+  private def readCandidates(planned: Seq[FileScanTask], cols: Seq[String],
+      listFilter: graft.meta.expr.Expr): DataFrame = {
+    val m = table.meta
+    val hasDeletes = table.currentSnapshot
+      .flatMap(_.summary.get("total-delete-files")).flatMap(_.toLongOption)
+      .forall(_ > 0)
+    Reads.readTasksWithDeletes(table, m, planned,
+      if (hasDeletes) table.newScan().filter(listFilter).planDeletes() else Nil,
+      cols, Binder.bind(m.schema, listFilter), rowPositions = false)
   }
 
   /** Phase 2 of the quantized probes — exact rescore of the survivors
@@ -364,8 +367,7 @@ final class IvfIndex private (val table: IceTable,
     * join, no window, no second job over corpus data. */
   private def rescoreExact(qLocal: Seq[(Long, Seq[Double])],
       survivors: Array[(Long, Long)], k: Int,
-      listFilter: graft.meta.expr.Expr, planned: Seq[FileScanTask],
-      hasDeletes: Boolean): DataFrame = {
+      listFilter: graft.meta.expr.Expr, planned: Seq[FileScanTask]): DataFrame = {
     val spark = table.spark
     val survivorIds = survivors.map(_._2).distinct.toSeq
     val qById = qLocal.toMap
@@ -373,7 +375,7 @@ final class IvfIndex private (val table: IceTable,
     // phase 1's planned (list-pruned) task list, then id-metrics prunes it
     // per file — no second metadata pass
     val nvById: Map[Long, Seq[Double]] = fetchByIds(Some(listFilter),
-      survivorIds, preplanned = if (hasDeletes) None else Some(planned))
+      survivorIds, preplanned = Some(planned))
     val outRows = survivors.groupBy(_._1).toSeq.flatMap { case (qid, pairs) =>
       val qv = qById(qid)
       pairs.iterator.map(_._2).distinct
@@ -584,22 +586,12 @@ final class IvfIndex private (val table: IceTable,
         org.apache.spark.sql.types.IntegerType)))
     val q = spark.createDataFrame(java.util.Arrays.asList(qRows: _*), qSchema)
     // phase 1 — ADC ranking over pqcodes + vnorm only (every other column
-    // unread); same one-metadata-pass / delete-fallback shape as the int8
-    // probe
+    // unread); same one-metadata-pass shape as the int8 probe
     val listFilter = Exprs.in(IvfIndex.ListCol, allLists.map(Int.box): _*)
-    val hasDeletes = table.currentSnapshot
-      .flatMap(_.summary.get("total-delete-files")).flatMap(_.toLongOption)
-      .map(_ > 0)
-      .getOrElse(table.newScan().filter(listFilter).planDeletes().nonEmpty)
-    val planned: Seq[FileScanTask] =
-      if (hasDeletes) Nil else table.newScan().filter(listFilter).planFiles()
+    val planned = table.newScan().filter(listFilter).planFiles()
     val candCols = Seq(idCol, IvfIndex.PqCodesCol, IvfIndex.VNormCol,
       IvfIndex.ListCol)
-    val candRaw =
-      if (hasDeletes)
-        table.newScan().filter(listFilter).select(candCols: _*).toDF
-      else Reads.readFiles(spark, table, table.meta, planned, candCols,
-        Binder.bind(table.meta.schema, listFilter))
+    val candRaw = readCandidates(planned, candCols, listFilter)
     val cand = candRaw.select(col(idCol).as("neighbor_id"),
       col(IvfIndex.PqCodesCol), col(IvfIndex.VNormCol), col(IvfIndex.ListCol))
     val ranked0 = cand.join(broadcast(q), Seq(IvfIndex.ListCol))
@@ -613,7 +605,7 @@ final class IvfIndex private (val table: IceTable,
         ranked.select("query_id", "neighbor_id", "sim"), k * rescoreFactor)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    rescoreExact(qLocal, survivors, k, listFilter, planned, hasDeletes)
+    rescoreExact(qLocal, survivors, k, listFilter, planned)
   }
 }
 

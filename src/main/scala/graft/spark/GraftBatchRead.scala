@@ -69,13 +69,14 @@ final case class GraftDvSet(blobs: Array[GraftDvBlob],
 
 object GraftDeleteApply {
   /** Same normalization as `IceTable.normPath`/`MergeOnRead.normPathCol`:
-    * `_metadata.file_path` writes "file:///p", listings give "file:/p". */
+    * stored paths may be "file:///p" or "file:/p", probes compare "/p". */
   def normPath(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  /** Hash-key normalization for probe values: match the V1 anti join's
-    * `<=>` semantics (NaN equals NaN via boxing; -0.0 equals 0.0 by
-    * normalizing; binary wrapped for structural equality). `copy` detaches
-    * buffer-backed values from reused reader rows before storing in a set. */
+  /** Hash-key normalization for probe values: null-safe `<=>` equality
+    * semantics (NaN equals NaN via boxing; -0.0 equals 0.0 by normalizing;
+    * binary wrapped for structural equality). Keys are primitive
+    * (`MergeOnRead.requirePrimitiveKeys`). `copy` detaches buffer-backed
+    * values from reused reader rows before storing in a set. */
   def keyValue(v: Any, copy: Boolean): Any = v match {
     case null => null
     case s: UTF8String => if (copy) s.copy() else s
@@ -821,8 +822,8 @@ object GraftReaderFactory extends PartitionReaderFactory {
 /** Driver-side planning of DSv2 input partitions from planned data files.
   * Shared by the batch scan and the micro-batch stream. Files are grouped by
   * writer schema (field-ID resolution across renames/promotions, imported
-  * identity-partition constants — same rules as `Reads.readFiles`), then
-  * size-packed into tasks (ref `core/.../util/TableScanUtil.planTasks`).
+  * identity-partition constants as literals), then size-packed into tasks
+  * (ref `core/.../util/TableScanUtil.planTasks`).
   *
   * Columnar: when no group needs a row-level projection (no casts, no
   * constants, no missing columns) and every format supports batch reads for
@@ -859,9 +860,9 @@ object GraftReadPlanner {
       seqs: Map[String, Long] = Map.empty,
       /** Per-slice open-cost weight override (bytes). Internal rewrite reads
         * pass the calling session's `spark.sql.files.openCostInBytes` so the
-        * read-side bin-packing matches the V1 route they replaced (binPack
-        * compaction packs with open cost 0: each task carries ~target BYTES
-        * of small files, not target-minus-padding). */
+        * read-side bin-packing follows the session the caller configured
+        * (binPack compaction packs with open cost 0: each task carries
+        * ~target BYTES of small files, not target-minus-padding). */
       openCostOverride: Option[Long] = None): Planned = {
     if (files.isEmpty) return Planned(Array.empty, columnar = false)
     val schema = m.schema
@@ -1161,8 +1162,10 @@ object GraftReadPlanner {
   * INSIDE the readers (position deletes via the parquet row-index column,
   * equality deletes via executor-local key sets — ref
   * `data/.../DeleteFilter.java`), so tables with live deletes keep the
-  * columnar path; only delete shapes the readers can't express fall back to
-  * the V1 union/anti-join plan.
+  * columnar path. Every table read goes through this scan, built by
+  * [[GraftScanBuilder]]: SQL and DataFrame reads plan the snapshot's files;
+  * Scala-API and internal reads (`Reads.readTasksWithDeletes`) bring an
+  * explicit task list ([[ExplicitRead]]).
   *
   *  - `SupportsRuntimeV2Filtering`: join-driven runtime predicates (dynamic
   *    partition pruning) re-run the pruning cascade and drop whole files
@@ -1500,8 +1503,10 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
 
   /** Runtime-filterable columns: partition source columns across specs —
     * a runtime IN on them prunes via partition projection AND file metrics
-    * (ref `SparkBatchQueryScan.filterAttributes`). */
+    * (ref `SparkBatchQueryScan.filterAttributes`). None for an explicit
+    * task list: runtime filters cannot prune it. */
   override def filterAttributes(): Array[NamedReference] = {
+    if (explicitTasks.nonEmpty) return Array.empty
     val schema = table.meta.schema
     table.meta.specs.flatMap(_.fields).map(_.sourceId).distinct
       .flatMap(schema.idToName.get).map(Expressions.column).toArray
@@ -1520,5 +1525,6 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
 
   override def description(): String =
     s"GraftBatchScan(table=${table.location}, filter=$filter, " +
-      s"runtime=$runtimeExpr, deletes=${deletes.size})"
+      s"runtime=$runtimeExpr, deletes=${deletes.size})" +
+      (if (pushedV1.isEmpty) "" else pushedV1.mkString(" PushedFilters: [", ", ", "]"))
 }

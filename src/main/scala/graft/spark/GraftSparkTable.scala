@@ -5,15 +5,16 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.meta.expr.{And => GAnd, Expr => GExpr, SparkConv, TrueExpr}
-import graft.table.{IceTable, SparkFilterConv}
+import graft.meta.model.DataFileMeta
+import graft.table.{FileScanTask, IceTable, SparkFilterConv}
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
-import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan => V1TableScan}
 import org.apache.spark.sql.types.StructType
@@ -21,13 +22,14 @@ import org.apache.spark.sql.types.StructType
 /** DSv2 table facade over [[IceTable]] (ref `spark3/.../SparkTable.java`).
   * Reads push filters + column pruning into the metadata cascade
   * (manifest summaries → partition values → file metrics → residual), then
-  * execute as a V1 relation whose RDD comes from the already-pruned
-  * DataFrame — Spark's parquet reader, vectorization and codegen all apply;
-  * only PLANNING is graft's (the same division as the reference, where
+  * execute as a [[GraftBatchScan]] over Spark's own file-format readers —
+  * vectorization and codegen apply, and merge-on-read deletes are filtered
+  * inside the readers (the same division as the reference, where
   * `SparkBatchScan.planInputPartitions` wraps core's file planning).
   */
 class GraftSparkTable(val table: IceTable, fullName: String,
-    snapshotId: Option[Long] = None, asOfMillis: Option[Long] = None)
+    snapshotId: Option[Long] = None, asOfMillis: Option[Long] = None,
+    explicit: Option[ExplicitRead] = None)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
@@ -114,7 +116,7 @@ class GraftSparkTable(val table: IceTable, fullName: String,
     }
     new GraftScanBuilder(table, snap, asOf, split, skipDeletes, maxFiles,
       appendsRange, appendsEndExplicit = options.containsKey("end-snapshot-id"),
-      sample = sample)
+      sample = sample, explicit = explicit)
   }
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
@@ -197,12 +199,20 @@ object GraftSparkTable {
       metaCol(LastUpdatedCol, LongType, nullable = true))
 }
 
+/** A read of exactly `tasks` with exactly `deletes` applied, instead of a
+  * snapshot's planned files (`Reads.readTasksWithDeletes`: the Scala scan
+  * API and every internal read). Tasks pack to `splitSize`, weighing each
+  * slice at least `openCost` when given (else the table property). */
+final case class ExplicitRead(tasks: Seq[FileScanTask],
+    deletes: Seq[(DataFileMeta, Long)], splitSize: Long, openCost: Option[Long])
+
 final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     asOfMillis: Option[Long], splitSize: Option[Long] = None,
     streamSkipDeletes: Boolean = true, maxFilesPerTrigger: Option[Int] = None,
     appendsRange: Option[(Long, Long)] = None,
     appendsEndExplicit: Boolean = false,
-    sample: Option[(Double, Long)] = None)
+    sample: Option[(Double, Long)] = None,
+    explicit: Option[ExplicitRead] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {
@@ -224,7 +234,7 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     * counts over-estimate visible rows and a cap could under-deliver, so
     * the push is declined. */
   override def pushLimit(limit: Int): Boolean = {
-    if (pushedExpr == TrueExpr && plannedDeletes.isEmpty) {
+    if (explicit.isEmpty && pushedExpr == TrueExpr && plannedDeletes.isEmpty) {
       pushedLimit = Some(limit); true
     } else false
   }
@@ -293,8 +303,7 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
 
   // planned once per query: pushAggregation and build() both ask — on a
   // table with thousands of manifests a second walk doubles compile-time IO
-  private lazy val plannedContent = baseScan().planContent()
-  private def plannedDeletes = plannedContent._1
+  private lazy val plannedDeletes = baseScan().planDeletes()
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
@@ -302,8 +311,9 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     if (!table.meta.property("read.aggregate-pushdown.enabled", "true").toBoolean)
       return false
     // metadata aggregates answer over the WHOLE snapshot; an incremental
-    // scan sees only a range's appends, a sampled scan only its files
-    if (appendsRange.nonEmpty || sample.nonEmpty) return false
+    // scan sees only a range's appends, a sampled scan only its files, an
+    // explicit read only its tasks
+    if (appendsRange.nonEmpty || sample.nonEmpty || explicit.nonEmpty) return false
     // only whole-table aggregates; Spark never offers an aggregation while
     // post-scan filters remain, and we always keep filters post-scan
     if (aggregation.groupByExpressions.nonEmpty || pushedExpr != TrueExpr)
@@ -372,55 +382,22 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     true
   }
 
-  /** Merge-on-read deletes the native scan can apply in its readers:
-    * position deletes read the parquet row-index column, or — for ORC/Avro
-    * data files — synthesized whole-file row ordinals; equality probing
-    * needs hashable atomic key types. Anything else takes the V1
-    * union/anti-join plan. */
-  private def nativeMoRSupported: Boolean = {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType => SStructType}
-    val (deletes, dataFormats) = plannedContent
-    val posOk = !deletes.exists(d =>
-        graft.meta.model.FileContent.isPositional(d._1.content)) ||
-      dataFormats.subsetOf(Set("parquet", "orc", "avro"))
-    val eqOk = deletes.iterator.flatMap(_._1.equalityIds).toSeq.distinct.forall { id =>
-      table.meta.schema.fieldType(id) match {
-        case _: ArrayType | _: MapType | _: SStructType => false
-        case _ => true
-      }
-    }
-    posOk && eqOk
-  }
-
   override def build(): Scan = aggResult match {
     case Some((aggSchema, row)) => new GraftLocalAggScan(table, aggSchema, row)
     case None =>
       // native batch scan (vectorized readers, runtime file pruning,
-      // storage-partitioned joins) — including merge-on-read tables, whose
-      // deletes the readers apply in place; the V1 union/anti-join plan
-      // remains only for delete shapes the readers can't express
-      val v1Forced =
-        table.meta.property("read.v1-fallback.enabled", "false").toBoolean
-      if (appendsRange.nonEmpty)
-        // incremental: appended files only, deletes don't apply by contract
-        new GraftBatchScan(table, pushedExpr, requiredSchema, pushed.toSeq,
-          snapshotId, asOfMillis, splitSize, streamSkipDeletes, maxFilesPerTrigger,
-          deletes = Nil, pushedLimit = pushedLimit, appendsRange = appendsRange,
-          outCols = outCols, appendsEndExplicit = appendsEndExplicit,
-          sample = sample)
-      else if (v1Forced || (plannedDeletes.nonEmpty && !nativeMoRSupported)) {
-        if (metaRequested.nonEmpty) throw new UnsupportedOperationException(
-          "_file/_pos/_deleted metadata columns need the native scan; this " +
-            "read took the V1 fallback (read.v1-fallback.enabled or an " +
-            "unsupported merge-on-read delete shape)")
-        new GraftV1Scan(table, pushedExpr, requiredSchema, snapshotId,
-          asOfMillis, splitSize, streamSkipDeletes, maxFilesPerTrigger,
-          sample = sample)
-      } else
-        new GraftBatchScan(table, pushedExpr, requiredSchema, pushed.toSeq,
-          snapshotId, asOfMillis, splitSize, streamSkipDeletes, maxFilesPerTrigger,
-          deletes = plannedDeletes, pushedLimit = pushedLimit, outCols = outCols,
-          sample = sample)
+      // storage-partitioned joins); merge-on-read deletes apply inside its
+      // readers. Incremental reads see appended files only: deletes don't
+      // apply by contract. An explicit read scans its own tasks and deletes.
+      new GraftBatchScan(table, pushedExpr, requiredSchema, pushed.toSeq,
+        snapshotId, asOfMillis, explicit.map(_.splitSize).orElse(splitSize),
+        streamSkipDeletes, maxFilesPerTrigger,
+        deletes = explicit.map(_.deletes).getOrElse(
+          if (appendsRange.nonEmpty) Nil else plannedDeletes),
+        pushedLimit = pushedLimit, appendsRange = appendsRange,
+        outCols = outCols, appendsEndExplicit = appendsEndExplicit,
+        sample = sample, explicitTasks = explicit.map(_.tasks),
+        openCostOverride = explicit.flatMap(_.openCost))
   }
 }
 
@@ -432,77 +409,6 @@ final class GraftLocalAggScan(table: IceTable, aggSchema: StructType,
   override def rows(): Array[InternalRow] = Array(row)
   override def description(): String =
     s"GraftAggPushdown(table=${table.location})"
-}
-
-/** The scan: metadata pruning happens here (driver-side, like ref
-  * `SparkBatchScan.tasks()`); execution is delegated through `V1Scan` to the
-  * pruned DataFrame's RDD (internal rows, `needConversion = false`). Reports
-  * planned-size statistics so Spark's join planning (broadcast thresholds,
-  * AQE) sees post-pruning sizes, not raw table sizes. */
-final class GraftV1Scan(val table: IceTable, filter: GExpr, projection: StructType,
-    snapshotId: Option[Long], asOfMillis: Option[Long],
-    splitSize: Option[Long] = None, streamSkipDeletes: Boolean = true,
-    maxFilesPerTrigger: Option[Int] = None,
-    sample: Option[(Double, Long)] = None)
-    extends V1Scan with SupportsReportStatistics {
-
-  /** Structured Streaming entry (ref `SparkMicroBatchStream.java`): offsets
-    * are snapshot ids; each batch reads the appended files. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new graft.streaming.GraftMicroBatchStream(table, projection, filter,
-      streamSkipDeletes, maxFilesPerTrigger)
-
-  private def newGraftScan() = {
-    var s = table.newScan()
-    snapshotId.foreach(id => s = s.useSnapshot(id))
-    asOfMillis.foreach(ts => s = s.asOfTime(ts))
-    splitSize.foreach(b => s = s.option("split-size", b.toString))
-    sample.foreach { case (f, sd) => s = s.sampleFiles(f, sd) }
-    if (filter != TrueExpr) s = s.filter(filter)
-    if (projection.nonEmpty) s = s.select(projection.fieldNames.toSeq: _*)
-    s
-  }
-
-  // planned once per query: estimateStatistics and buildScan both need the
-  // task list — at millions of files re-planning doubles driver metadata work
-  private lazy val plannedTasks = newGraftScan().planFiles()
-
-  override def readSchema(): StructType = projection
-
-  override def estimateStatistics(): Statistics = {
-    val tasks = plannedTasks
-    val bytes = tasks.map(_.file.fileSizeBytes).sum
-    val rows = tasks.map(_.file.recordCount).sum
-    new Statistics {
-      override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(bytes)
-      override def numRows(): util.OptionalLong = util.OptionalLong.of(rows)
-    }
-  }
-
-  override def toV1TableScan[T <: BaseRelation with V1TableScan](
-      context: SQLContext): T = {
-    val scan = this
-    new BaseRelation with V1TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = scan.readSchema()
-      override def needConversion: Boolean = false // rows are InternalRow
-      override def buildScan(): RDD[Row] = {
-        val df =
-          if (projection.isEmpty) {
-            // COUNT(*)-style scans: no columns required — read the narrowest
-            // column and drop it (parquet reads only that column's pages)
-            val narrow = scan.table.schema.columnNames.head
-            scan.newGraftScan().select(narrow).toDF.drop(narrow)
-          } else scan.newGraftScan().toDF
-        org.apache.spark.sql.graft.ColumnBridge.toInternalRdd(df)
-          .asInstanceOf[RDD[Row]]
-      }
-    }.asInstanceOf[T]
-  }
-
-  override def description(): String =
-    s"GraftScan(table=${table.location}, filter=$filter)"
 }
 
 /** V1 write path (ref `SparkWriteBuilder`): append, truncate-overwrite,

@@ -43,7 +43,7 @@ object GraftStreamOffset {
   * ids — planned on the driver, read on executors through Spark's own
   * `FileFormat` readers (row mode).
   *
-  * Schema evolution is handled like the batch path (`Reads.readFiles`): files
+  * Schema evolution is handled like the batch scan (`GraftReadPlanner`): files
   * are grouped by writer schema, read under the writer's names/types, and
   * projected to the current schema by field ID (missing columns → null,
   * promoted types → cast, imported identity partitions → constant).

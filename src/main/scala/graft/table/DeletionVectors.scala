@@ -229,9 +229,9 @@ object DeletionVectors {
   }
 
   /** Expand DV metas back into (file_path, pos) rows — the bridge into
-    * every code path that consumes the parquet representation (DataFrame
-    * anti joins, changelog reconstruction, the `position_deletes` metadata
-    * table, rewrite/convert maintenance). Distributed: one task per blob,
+    * every code path that consumes the parquet representation (changelog
+    * reconstruction, the `position_deletes` metadata table, rewrite/convert
+    * maintenance). Distributed: one task per blob,
     * positions streamed off the bitmap iterator, never collected. */
   def positionsDf(table: IceTable, metas: Seq[DataFileMeta]): DataFrame = {
     val spark = table.spark

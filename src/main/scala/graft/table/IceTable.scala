@@ -9,7 +9,7 @@ import graft.meta.model._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{broadcast, coalesce, col}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** One planned file: the data file plus the filter residual left after
@@ -404,8 +404,9 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       skipDeleteSnapshots: Boolean = true): DataFrame = {
     val m = meta
     val files = appendedFilesBetween(m, fromId, toId, skipDeleteSnapshots)
-    Reads.readFiles(spark, this, m, files.map(FileScanTask(_, TrueExpr)),
-      m.schema.columnNames, TrueExpr)
+    // row-level deletes never apply to appended rows AS WRITTEN
+    Reads.readTasksWithDeletes(this, m, files.map(FileScanTask(_, TrueExpr)),
+      deletes = Nil, m.schema.columnNames, TrueExpr, rowPositions = false)
   }
 
   /** Row-level CDC changelog over the snapshot range (fromId, toId]: table
@@ -1149,59 +1150,24 @@ final class TableScan private[table] (table: IceTable) {
           }
         }.toSeq match {
           case planned =>
-            // encryption guard: a keyed file read (or compacted) through a
-            // manager that can't decrypt it would surface as ciphertext or
-            // garbage rows — fail at PLAN time, the one choke point every
-            // reader (native scan, V1, maintenance, import) passes through
-            if (table.io.encryption == PlaintextEncryptionManager)
-              planned.find(_.file.keyMetadata.nonEmpty).foreach { t =>
-                throw new ValidationException(
-                  s"${t.file.path} carries encryption key metadata but the " +
-                    "table's encryption manager is plaintext — configure the " +
-                    "manager that wrote this file")
-              }
-            else {
-              // a table that REQUIRES encryption must never plan a
-              // plaintext file: km-empty entries are either impossible
-              // leftovers (rotation stamps the property LAST) or forged
-              // substitutes dropped next to the sealed files
-              if (m.property(TableProperties.EncryptionRequired, "false").toBoolean)
-                planned.find(_.file.keyMetadata.isEmpty).foreach { t =>
-                  throw new ValidationException(
-                    s"${t.file.path} carries no encryption key metadata but " +
-                      "the table requires encrypted content " +
-                      s"(${TableProperties.EncryptionRequired}=true) — " +
-                      "refusing a possibly forged plaintext file")
-                }
-              // pre-r11 keyed tables: every live file keyed but the
-              // property never stamped (it didn't exist yet) — those
-              // tables get NONE of the forged-plaintext protections until
-              // rotated or stamped. Advise once per handle; never
-              // auto-stamp (a mixed table must keep reading its history).
-              if (!m.property(TableProperties.EncryptionRequired, "false").toBoolean
-                  && !table.advisedEncryptionRequired
-                  && planned.nonEmpty
-                  && planned.forall(_.file.keyMetadata.nonEmpty)) {
-                table.advisedEncryptionRequired = true
-                org.slf4j.LoggerFactory.getLogger(classOf[IceTable]).warn(
-                  s"${table.location}: every scanned file is encrypted but " +
-                    s"${TableProperties.EncryptionRequired} is not set — " +
-                    "forged-plaintext protections are OFF; stamp the " +
-                    "property (updateProperties) once fully keyed, or " +
-                    "rotate keys (rotateEncryptionKeys stamps it last)")
-              }
-              // keyed manager: a keyed file whose metadata matches NONE of
-              // this manager's derivations (a rotation handle accepts two)
-              // was written under a DIFFERENT key — fail here, not as a
-              // GCM tag error deep in a task
-              planned.find(t => t.file.keyMetadata.nonEmpty &&
-                  !table.io.encryption.accepts(t.file.path, t.file.keyMetadata))
-                .foreach { t =>
-                  throw new ValidationException(
-                    s"${t.file.path} was encrypted under a different key " +
-                      "than the table's current encryption manager derives " +
-                      "— configure the manager that wrote this file")
-                }
+            requireDecryptable(m, planned.map(_.file), "file")
+            // pre-r11 keyed tables: every live file keyed but the property
+            // never stamped (it didn't exist yet) — those tables get NONE of
+            // the forged-plaintext protections until rotated or stamped.
+            // Advise once per handle; never auto-stamp (a mixed table must
+            // keep reading its history).
+            if (table.io.encryption != PlaintextEncryptionManager
+                && !m.property(TableProperties.EncryptionRequired, "false").toBoolean
+                && !table.advisedEncryptionRequired
+                && planned.nonEmpty
+                && planned.forall(_.file.keyMetadata.nonEmpty)) {
+              table.advisedEncryptionRequired = true
+              org.slf4j.LoggerFactory.getLogger(classOf[IceTable]).warn(
+                s"${table.location}: every scanned file is encrypted but " +
+                  s"${TableProperties.EncryptionRequired} is not set — " +
+                  "forged-plaintext protections are OFF; stamp the " +
+                  "property (updateProperties) once fully keyed, or " +
+                  "rotate keys (rotateEncryptionKeys stamps it last)")
             }
             val out = maybeSample(planned)
             Listeners.notifyAll(Listeners.ScanEvent(
@@ -1215,8 +1181,9 @@ final class TableScan private[table] (table: IceTable) {
   def planDeletes(): Seq[(DataFileMeta, Long)] = planContent()._1
 
   /** One live-entries walk: (delete files with sequence numbers, the set of
-    * live data-file formats). The scan builder needs both to pick the
-    * merge-on-read read path without a second metadata pass. */
+    * live data-file formats). Refuses delete files the readers cannot apply
+    * (see [[MergeOnRead.requirePrimitiveKeys]]) and, like data files, keyed
+    * delete files this handle cannot decrypt. */
   def planContent(): (Seq[(DataFileMeta, Long)], Set[String]) = {
     // incremental mode reports appended rows AS WRITTEN: row-level deletes
     // never apply (and the planned entries carry sequence 0, which would
@@ -1228,63 +1195,61 @@ final class TableScan private[table] (table: IceTable) {
       case Some(snap) =>
         val entries = table.liveEntries(m, snap)
         val (del, data) = entries.partition(_.dataFile.content != FileContent.Data)
-        // the same plan-time encryption guard data files get: a keyed
-        // delete file under the wrong (or plaintext) manager must refuse
-        // here, not as a KeyAccessDenied deep inside a delete-probe task
-        if (table.io.encryption == PlaintextEncryptionManager)
-          del.map(_.dataFile).find(_.keyMetadata.nonEmpty).foreach { f =>
-            throw new ValidationException(
-              s"${f.path} carries encryption key metadata but the table's " +
-                "encryption manager is plaintext — configure the manager " +
-                "that wrote this file")
-          }
-        else {
-          if (m.property(TableProperties.EncryptionRequired, "false").toBoolean)
-            del.map(_.dataFile).find(_.keyMetadata.isEmpty).foreach { f =>
-              throw new ValidationException(
-                s"${f.path} carries no encryption key metadata but the " +
-                  "table requires encrypted content " +
-                  s"(${TableProperties.EncryptionRequired}=true) — " +
-                  "refusing a possibly forged plaintext delete file")
-            }
-          del.map(_.dataFile).find(f => f.keyMetadata.nonEmpty &&
-              !table.io.encryption.accepts(f.path, f.keyMetadata))
-            .foreach { f =>
-              throw new ValidationException(
-                s"${f.path} was encrypted under a different key than the " +
-                  "table's current encryption manager derives — configure " +
-                  "the manager that wrote this file")
-            }
-        }
+        requireDecryptable(m, del.map(_.dataFile), "delete file")
+        del.map(_.dataFile).filter(_.content == FileContent.EqualityDeletes)
+          .foreach(f => MergeOnRead.requirePrimitiveKeys(m.schema,
+            f.equalityIds, s"${f.path} is an equality delete"))
         (del.map(e => (e.dataFile, e.sequenceNumber)), data.map(_.dataFile.format).toSet)
+    }
+  }
+
+  /** The plan-time encryption guard every planned data and delete file
+    * passes: a keyed file read through a manager that can't decrypt it would
+    * surface as ciphertext, garbage rows or a KeyAccessDenied deep inside a
+    * task — fail at PLAN time, the one choke point every reader (native
+    * scan, maintenance, import) passes through. */
+  private def requireDecryptable(m: TableMetadata, files: Seq[DataFileMeta],
+      kind: String): Unit = {
+    def refuse(f: DataFileMeta, why: String): Nothing =
+      throw new ValidationException(s"${f.path} $why")
+    val enc = table.io.encryption
+    if (enc == PlaintextEncryptionManager)
+      files.find(_.keyMetadata.nonEmpty).foreach(refuse(_,
+        "carries encryption key metadata but the table's encryption " +
+          "manager is plaintext — configure the manager that wrote this file"))
+    else {
+      // a table that REQUIRES encryption must never plan a plaintext file:
+      // km-empty entries are either impossible leftovers (rotation stamps
+      // the property LAST) or forged substitutes dropped next to the sealed
+      // files
+      if (m.property(TableProperties.EncryptionRequired, "false").toBoolean)
+        files.find(_.keyMetadata.isEmpty).foreach(refuse(_,
+          "carries no encryption key metadata but the table requires " +
+            s"encrypted content (${TableProperties.EncryptionRequired}=true) " +
+            s"— refusing a possibly forged plaintext $kind"))
+      // a keyed file whose metadata matches NONE of this manager's
+      // derivations (a rotation handle accepts two) was written under a
+      // DIFFERENT key — fail here, not as a GCM tag error deep in a task
+      files.find(f => f.keyMetadata.nonEmpty && !enc.accepts(f.path, f.keyMetadata))
+        .foreach(refuse(_, "was encrypted under a different key than the " +
+          "table's current encryption manager derives — configure the " +
+          "manager that wrote this file"))
     }
   }
 
   def toDF: DataFrame = {
     val m = table.meta
-    val cols = projection.getOrElse(m.schema.columnNames)
-    // split planning: Spark packs files into tasks by maxPartitionBytes/
-    // openCost (same bin-pack the ref runs in TableScanUtil.planTasks); a
-    // target split size scopes those knobs to this scan via a cloned session
-    val splitSize = scanOptions.get("split-size")
-      .orElse(m.properties.get(TableProperties.SplitSize)).map(_.toLong)
-    val session = splitSize.map { bytes =>
-      require(bytes > 0, s"split-size must be positive: $bytes")
-      val s = org.apache.spark.sql.graft.ColumnBridge.cloneSession(table.spark)
-      s.conf.set("spark.sql.files.maxPartitionBytes", bytes.toString)
-      s.conf.set("spark.sql.files.openCostInBytes",
-        math.min(bytes / 4, 4L * 1024 * 1024).toString)
-      // without this Spark shrinks splits to totalBytes/parallelism,
-      // overriding the requested size on small inputs
-      s.conf.set("spark.sql.files.minPartitionNum", "1")
-      s
-    }
-    Reads.readTasksWithDeletes(table, m, planFiles(), planDeletes(), cols,
-      Binder.bind(m.schema, filterExpr), rowPositions, session)
+    Reads.readTasksWithDeletes(table, m, planFiles(), planDeletes(),
+      projection.getOrElse(m.schema.columnNames), Binder.bind(m.schema, filterExpr),
+      rowPositions,
+      splitSize = scanOptions.get("split-size")
+        .orElse(m.properties.get(TableProperties.SplitSize)).map(_.toLong))
   }
 }
 
-/** File-group reading with field-ID based schema resolution. */
+/** Table reads: every read — `TableScan.toDF`, incremental appends, row
+  * operations, maintenance rewrites, the LLM indexes — scans its planned
+  * tasks through the native DSv2 batch scan. */
 private[graft] object Reads {
 
   def statsOf(f: DataFileMeta): MetricsSource = new MetricsSource {
@@ -1296,28 +1261,21 @@ private[graft] object Reads {
     def upper(id: Int): Option[Any] = f.upperBounds.get(id)
   }
 
-  /** Group scan tasks into APPLICABILITY CLASSES: two tasks share a branch
+  /** Group scan tasks into APPLICABILITY CLASSES: two tasks share a class
     * iff the exact same set of delete files applies to them (by sequence
     * rule AND partition scope — `MergeOnRead.applies`). Deletes partition
     * the data sequence numbers into at most #delete-commits+1 classes, so
-    * the union stays bounded for long-lived tables regardless of how many
-    * distinct data sequences exist (r1 verdict scale item #5); partition
-    * scoping further drops whole delete files from branches they can't
-    * touch. */
-  /** Above this many branches, fall back to sequence-only grouping:
+    * the class count stays bounded for long-lived tables regardless of how
+    * many distinct data sequences exist; partition scoping further drops
+    * whole delete files from classes they can't touch. */
+  /** Above this many classes, fall back to sequence-only grouping:
     * partition scope multiplies classes per (partition, seq-class), and a
     * many-partition table with scoped deletes would otherwise blow up the
-    * union plan. Dropping the scope from GROUPING is semantically neutral —
+    * plan. Dropping the scope from GROUPING is semantically neutral —
     * scoped equality deletes key-cover the partition sources (out-of-scope
     * rows can't match) and position deletes match by exact file path — it
-    * only costs some extra no-op anti-join probes. */
+    * only costs some extra no-op probes. */
   private[graft] val MaxDeleteGroups = 64
-
-  /** Above this many tasks a lineage read attaches per-file implicit lineage
-    * via broadcast join instead of a literal-map lookup: `element_at` on a
-    * constant map scans keys linearly per row, so the literal route is only
-    * right when the rewrite set is small (the common compaction batch). */
-  private[graft] val MaxLineageLiteralTasks = 64
 
   private[graft] def groupTasksByDeletes(tasks: Seq[FileScanTask],
       deletes: Seq[(DataFileMeta, Long)]): Seq[(Seq[DataFileMeta], Seq[FileScanTask])] = {
@@ -1333,352 +1291,61 @@ private[graft] object Reads {
     else grouped { case ((d, dseq), t) => MergeOnRead.seqApplies(d, dseq, t) }
   }
 
-  /** Read tasks applying any merge-on-read delete files, one branch per
-    * delete-applicability class. */
+  /** The one read primitive: a DataFrame over exactly `tasks`, read by
+    * [[graft.spark.GraftBatchScan]] — the scan SQL reads use — whose readers
+    * apply the merge-on-read `deletes` in place (ref `DeleteFilter.java`) and
+    * resolve columns by field ID across schema eras. The frame is a DSv2
+    * relation ([[graft.spark.ExplicitRead]]), so Spark prunes its columns,
+    * hands `boundFilter` to the readers as pushed filters and re-applies it
+    * above the scan; the filter is dropped when every task's residual is
+    * already TRUE.
+    *
+    * Task packing: `splitSize` when given, else the inputs of Spark's own
+    * `FilePartition.maxSplitBytes` from the calling session — a rewrite's
+    * read-side bin-packing, which sizes its output files, follows the
+    * session its caller configured.
+    *
+    * `rowPositions` adds `_gf_file`/`_gf_pos`. `withLineage` adds
+    * `_gf_row_id`/`_gf_last_seq`, each row's stable lineage: the files'
+    * materialized columns (written by preserving rewrites), else the
+    * commit-assigned first-row-id + position / the entry's sequence, emitted
+    * by the readers as per-slice constants. Null when the file predates id
+    * assignment. */
   def readTasksWithDeletes(table: IceTable, m: TableMetadata, tasks: Seq[FileScanTask],
       deletes: Seq[(DataFileMeta, Long)], projection: Seq[String], boundFilter: Expr,
       rowPositions: Boolean, session: Option[SparkSession] = None,
-      /** Add `_gf_row_id`/`_gf_last_seq` output columns: each row's stable
-        * lineage, composed from the files' materialized columns (written by
-        * preserving rewrites) with the implicit per-file fallback
-        * (commit-assigned first-row-id + position / the entry's sequence).
-        * Null when the file predates id assignment. */
-      withLineage: Boolean = false): DataFrame = {
+      splitSize: Option[Long] = None, withLineage: Boolean = false): DataFrame = {
+    import graft.spark.{ExplicitRead, GraftSparkTable}
     val spark = session.getOrElse(table.spark)
-    // Native lineage route: every lineage read (rewrites, CoW/MoR merges,
-    // changelog withRowIds) scans its EXPLICIT task set through the DSv2
-    // batch readers, which emit _row_id/_last_updated_seq as per-slice
-    // CONSTANTS — materialized columns win, else commit-assigned
-    // first-row-id + position / the entry's sequence; the same semantics
-    // as lineageize below, computed where both inputs are already known
-    // instead of looked up per row above the scan (the r13 driver bench
-    // had compaction +52% from that lookup). Split size and open cost
-    // mirror Spark's own FilePartition.maxSplitBytes inputs from the
-    // calling session, so the read-side bin-packing — which sizes a
-    // rewrite's output files — matches the V1 scan this replaces.
-    if (withLineage && boundFilter == TrueExpr && tasks.nonEmpty) {
-      val bridge = org.apache.spark.sql.graft.ColumnBridge
-      val (maxPart, openCost, minPart) = bridge.fileSplitConf(spark)
-      val totalBytes = tasks.map(_.file.fileSizeBytes + openCost).sum
-      val split = math.min(maxPart,
-        math.max(openCost, totalBytes / math.max(1, minPart)))
-      val projected = StructType(projection.map(n =>
-        m.schema.struct(m.schema.struct.fieldIndex(n))))
-      val outCols = projection.indices.toArray ++
-        (if (rowPositions)
-          Array(graft.spark.GraftBatchScan.OutFile,
-            graft.spark.GraftBatchScan.OutPos)
-        else Array.empty[Int]) ++
-        Array(graft.spark.GraftBatchScan.OutRowId,
-          graft.spark.GraftBatchScan.OutLastUpdated)
-      val scan = new graft.spark.GraftBatchScan(table, TrueExpr, projected,
-        Nil, snapshotId = None, asOfMillis = None,
-        splitSize = Some(math.max(1L, split)), streamSkipDeletes = false,
-        deletes = deletes, outCols = outCols,
-        explicitTasks = Some(tasks), openCostOverride = Some(openCost))
-      val frame = bridge.v2ScanFrame(spark,
-        new graft.spark.GraftSparkTable(table, table.location), scan)
-      val out = projection.map(col) ++
-        (if (rowPositions)
-          Seq(col(graft.spark.GraftSparkTable.FileCol).as(TableScan.MetaFileCol),
-            col(graft.spark.GraftSparkTable.PosCol).as(TableScan.MetaPosCol))
-        else Nil) ++
-        Seq(col(graft.spark.GraftSparkTable.RowIdCol).as("_gf_row_id"),
-          col(graft.spark.GraftSparkTable.LastUpdatedCol).as("_gf_last_seq"))
-      return frame.select(out: _*)
+    val bridge = org.apache.spark.sql.graft.ColumnBridge
+    val (split, openCost) = splitSize match {
+      case Some(bytes) =>
+        require(bytes > 0, s"split-size must be positive: $bytes")
+        (bytes, None)
+      case None =>
+        val (maxPart, open, minPart) = bridge.fileSplitConf(spark)
+        val totalBytes = tasks.map(_.file.fileSizeBytes + open).sum
+        (math.max(1L, math.min(maxPart,
+          math.max(open, totalBytes / math.max(1, minPart)))), Some(open))
     }
-    def lineageize(df: DataFrame): DataFrame = {
-      if (!withLineage) return df
-      // Implicit lineage is a per-FILE constant lookup: path → (first-row-id,
-      // seq). The broadcast join this replaces cost every rewrite read a
-      // per-row regexp path normalization plus a codegen-breaking probe —
-      // the driver's r13 bench had compaction +52% from it. Keys are
-      // pre-expanded to every path convention the scan can report (V1
-      // `_metadata.file_path` is "file:///p"; synthesized ORC/Avro frames
-      // carry the stored path verbatim), so no per-row normalization is
-      // needed on either route below.
-      def keyed[T](value: FileScanTask => Option[T]): Seq[(String, T)] = {
-        val seen = scala.collection.mutable.HashSet.empty[String]
-        for {
-          t <- tasks
-          v <- value(t).toSeq
-          n = table.normPath(t.file.path)
-          k <- Seq(t.file.path, n, "file://" + n).distinct
-          if seen.add(k)
-        } yield k -> v
-      }
-      val firstPairs = keyed(_.file.firstRowId)
-      val seqPairs = keyed(t => Some(t.seq))
-      val file = df(TableScan.MetaFileCol)
-      val out = if (tasks.size <= Reads.MaxLineageLiteralTasks) {
-        // small rewrite sets: both lookups index a constant-folded literal
-        // map — stays inside whole-stage codegen, no exchange at all
-        def litMap(pairs: Seq[(String, Long)]): Column =
-          org.apache.spark.sql.functions.map(pairs.flatMap { case (k, v) =>
-            Seq(org.apache.spark.sql.functions.lit(k),
-              org.apache.spark.sql.functions.lit(v)) }: _*)
-        def look(pairs: Seq[(String, Long)]): Column =
-          if (pairs.isEmpty) org.apache.spark.sql.functions.lit(null).cast("long")
-          else org.apache.spark.sql.functions.element_at(litMap(pairs), file)
-        df.withColumn("_gf_row_id", coalesce(col("_gf_mat_rid"),
-            look(firstPairs) + col(TableScan.MetaPosCol)))
-          .withColumn("_gf_last_seq",
-            coalesce(col("_gf_mat_seq"), look(seqPairs)))
-      } else {
-        // large sets (literal-map lookups scan keys linearly per row):
-        // broadcast hash join on the RAW reported path against the
-        // pre-expanded keys — O(1) per row, still no per-row regexp
-        val firstByKey = firstPairs.toMap
-        val rows = seqPairs.map { case (k, s) => org.apache.spark.sql.Row(
-          k, firstByKey.get(k).map(Long.box).orNull, Long.box(s)) }
-        val lookup = spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          StructType(Seq(
-            org.apache.spark.sql.types.StructField("_gf_lk_path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("_gf_lk_first",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("_gf_lk_seq",
-              org.apache.spark.sql.types.LongType))))
-        df.join(broadcast(lookup), file === lookup("_gf_lk_path"), "left")
-          .withColumn("_gf_row_id", coalesce(col("_gf_mat_rid"),
-            col("_gf_lk_first") + col(TableScan.MetaPosCol)))
-          .withColumn("_gf_last_seq",
-            coalesce(col("_gf_mat_seq"), col("_gf_lk_seq")))
-          .drop("_gf_lk_path", "_gf_lk_first", "_gf_lk_seq")
-      }
-      out.drop("_gf_mat_rid", "_gf_mat_seq")
-    }
-    val wantMeta = rowPositions || withLineage
-    if (deletes.isEmpty || tasks.isEmpty) {
-      val base = lineageize(readFiles(spark, table, m, tasks, projection,
-        boundFilter, withMeta = wantMeta, withLineage = withLineage))
-      return if (wantMeta && !rowPositions)
-        base.drop(TableScan.MetaFileCol, TableScan.MetaPosCol)
-      else base
-    }
-    val groups = groupTasksByDeletes(tasks, deletes)
-    val needMeta = wantMeta || groups.exists(_._1.exists(d =>
-      FileContent.isPositional(d.content)))
-    val dfs = groups.map { case (applicable, group) =>
-      // every branch carries the same columns so unionByName lines up
-      val df = readFiles(spark, table, m, group, projection, boundFilter,
-        withMeta = needMeta, withLineage = withLineage)
-      MergeOnRead.applyDeletes(spark, m, df, applicable,
-        groupPaths = group.map(t => table.normPath(t.file.path)),
-        readOptions = EncryptionManagers.contentOptionsFor(
-          table.io.encryption, "parquet",
-          m.property(TableProperties.EncryptionRequired, "false").toBoolean),
-        dvPositions = DeletionVectors.positionsDf(table, _))
-    }
-    val out = lineageize(dfs.reduce(_ unionByName _))
-    if (needMeta && !rowPositions) out.drop(TableScan.MetaFileCol, TableScan.MetaPosCol)
-    else out
-  }
-
-  def readFiles(spark: SparkSession, table: IceTable, m: TableMetadata,
-      tasks: Seq[FileScanTask], projection: Seq[String], boundFilter: Expr,
-      withMeta: Boolean = false,
-      /** Also surface the files' MATERIALIZED lineage columns (written by
-        * preserving rewrites) as `_gf_mat_rid`/`_gf_mat_seq` — null when a
-        * file predates preservation or the format cannot express them
-        * (synthesized-position groups). Callers coalesce with the implicit
-        * per-file values; see [[readTasksWithDeletes]]. */
-      withLineage: Boolean = false): DataFrame = {
-    val schema = m.schema
-    val projected0 = StructType(projection.map(n => schema.struct(schema.struct.fieldIndex(n))))
-    val projected1 = if (!withMeta) projected0
-      else projected0.add(TableScan.MetaFileCol, org.apache.spark.sql.types.StringType)
-        .add(TableScan.MetaPosCol, org.apache.spark.sql.types.LongType)
-    val projected = if (!withLineage) projected1
-      else projected1.add("_gf_mat_rid", org.apache.spark.sql.types.LongType)
-        .add("_gf_mat_seq", org.apache.spark.sql.types.LongType)
-    if (tasks.isEmpty) {
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], projected)
-    }
-    val allResidualTrue = tasks.forall(_.residual == TrueExpr)
-    // imported hive-layout tables: identity partition values are not in the
-    // files — inject them as constants per partition group (ref
-    // `PartitionUtil.constantsMap`)
-    val inject = m.property(TableProperties.InjectPartitionConstants, "false").toBoolean
-    // group by writer schema (resolve columns by field ID across renames),
-    // plus the partition tuple when injecting constants
-    val groups = tasks.groupBy(t =>
-      (t.file.schemaId, t.file.format, if (inject) t.file.partition else Nil))
-    val dfs = groups.toSeq.map { case ((schemaId, format, partValues), group) =>
-      // parquet exposes real `_metadata.row_index`; ORC/Avro groups under
-      // `withMeta` get SYNTHESIZED positions: whole-file per-file readers
-      // with no pushed filters count row ordinals (ref DeleteFilter.java:111
-      // applies position deletes format-agnostically in its row readers)
-      val synthMeta = withMeta && format != "parquet"
-      val writeSchema = m.schemas.find(_.schemaId == schemaId).getOrElse(schema)
-      val spec0 = m.specById(group.head.file.specId)
-      val constants: Map[Int, Any] = if (!inject) Map.empty
-      else spec0.fields.zipWithIndex.collect {
-        case (pf, i) if pf.transform == graft.meta.transforms.IdentityTransform =>
-          pf.sourceId -> partValues.asInstanceOf[Seq[Any]](i)
-      }.toMap
-      // filter in the writer-schema name space (pushdown-friendly), then
-      // map; predicates on injected-constant columns fold against the
-      // constant first (files hold no values for them)
-      val folded =
-        if (constants.isEmpty) boundFilter
-        else foldConstants(boundFilter, constants)
-      val applyFilter = !allResidualTrue && folded != TrueExpr
-      val readOpts = EncryptionManagers.contentOptionsFor(table.io.encryption,
-        format, m.property(TableProperties.EncryptionRequired, "false").toBoolean)
-      // ORC under the plaintext-refusal flag routes through the guarded
-      // FileFormat (open-time tail probe) — Spark's own ORC reader has no
-      // per-file decryption hook and would serve a forged plaintext file
-      val fmtName =
-        if (format == "orc" && readOpts.get(
-            EncryptionManagers.PlaintextFilesAllowedKey).contains("false"))
-          "org.apache.spark.sql.graft.GraftGuardedOrcFileFormat"
-        else Writes.sparkFormat(format)
-      val lineageReadable = withLineage && format == "parquet"
-      val readSchema =
-        if (!lineageReadable) writeSchema.struct
-        else org.apache.spark.sql.types.StructType(writeSchema.struct.fields ++ Seq(
-          org.apache.spark.sql.types.StructField(
-            graft.spark.GraftReadPlanner.LineageRowIdCol,
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField(
-            graft.spark.GraftReadPlanner.LineageSeqCol,
-            org.apache.spark.sql.types.LongType)))
-      val df =
-        if (!synthMeta)
-          spark.read.schema(readSchema)
-            .options(readOpts)
-            .format(fmtName).load(group.map(_.file.path): _*)
-        else synthMetaFrame(spark, table, writeSchema, format, group,
-          neededIds = (projection.map(schema.fieldId).filterNot(constants.contains) ++
-            (if (applyFilter) referencedIds(renameToWriter(folded, writeSchema)) else Nil))
-            .distinct)
-      val mapped = projection.map { name =>
-        val id = schema.fieldId(name)
-        if (constants.contains(id)) {
-          SparkConv.internalLit(constants(id), schema.fieldType(id)).as(name)
-        } else writeSchema.idToName.get(id) match {
-          case Some(oldName) =>
-            // cast covers promoted types (int→long, float→double) in old files
-            val cur = schema.fieldType(id)
-            if (writeSchema.fieldType(id) == cur) col(oldName).as(name)
-            else col(oldName).cast(cur).as(name)
-          case None =>
-            org.apache.spark.sql.functions.lit(null)
-              .cast(schema.fieldType(id)).as(name)
-        }
-      }
-      val filtered =
-        if (!applyFilter) df
-        else df.filter(SparkConv.toColumn(renameToWriter(folded, writeSchema), writeSchema))
-      val withMetaCols =
-        if (!withMeta) mapped
-        else if (synthMeta) mapped ++ Seq(
-          col(TableScan.MetaFileCol), col(TableScan.MetaPosCol))
-        else mapped ++ Seq(
-          col("_metadata.file_path").as(TableScan.MetaFileCol),
-          col("_metadata.row_index").as(TableScan.MetaPosCol))
-      val withLineageCols =
-        if (!withLineage) withMetaCols
-        else if (lineageReadable) withMetaCols ++ Seq(
-          col(graft.spark.GraftReadPlanner.LineageRowIdCol).as("_gf_mat_rid"),
-          col(graft.spark.GraftReadPlanner.LineageSeqCol).as("_gf_mat_seq"))
-        else withMetaCols ++ Seq(
-          org.apache.spark.sql.functions.lit(null).cast("long").as("_gf_mat_rid"),
-          org.apache.spark.sql.functions.lit(null).cast("long").as("_gf_mat_seq"))
-      filtered.select(withLineageCols: _*)
-    }
-    dfs.reduce(_ unionByName _)
-  }
-
-  /** A DataFrame over non-parquet files with synthesized `_gf_file`/`_gf_pos`
-    * metadata columns: one whole-file reader per file (positions are the
-    * in-order row ordinal; filters stay ABOVE the frame so no row is
-    * skipped), distributed one file per task. `neededIds` prunes the read to
-    * the referenced writer columns. */
-  private def synthMetaFrame(spark: SparkSession, table: IceTable,
-      writeSchema: Schema,
-      format: String, group: Seq[FileScanTask], neededIds: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField}
-    import org.apache.spark.sql.catalyst.InternalRow
-    val readerFields = neededIds.flatMap(id => writeSchema.idToName.get(id)
-      .map(n => StructField(n, writeSchema.fieldType(id))))
-    val readerSchema = StructType(readerFields)
-    val reader = org.apache.spark.sql.graft.ColumnBridge.fileRowReader(
-      spark, format, writeSchema.struct, readerSchema,
-      EncryptionManagers.contentOptionsFor(table.io.encryption, format,
-        table.meta.property(TableProperties.EncryptionRequired, "false").toBoolean))
-    val files = group.map(t => (t.file.path, t.file.fileSizeBytes))
-    val par = math.max(1, math.min(files.size,
-      spark.sparkContext.defaultParallelism * 2))
-    val rdd = spark.sparkContext.parallelize(files, par).mapPartitions { it =>
-      it.flatMap { case (path, size) =>
-        val meta = new org.apache.spark.sql.catalyst.expressions.SpecificInternalRow(
-          Seq(StringType, LongType))
-        meta.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(path))
-        val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        var pos = -1L
-        reader(org.apache.spark.sql.graft.ColumnBridge.partitionedFile(path, size))
-          .map { r =>
-            pos += 1
-            meta.setLong(1, pos)
-            joined(r, meta): InternalRow
-          }
-      }
-    }
-    val synthSchema = StructType(readerFields :+
-      StructField(TableScan.MetaFileCol, StringType) :+
-      StructField(TableScan.MetaPosCol, LongType))
-    org.apache.spark.sql.graft.ColumnBridge.internalCreateDataFrame(
-      spark, rdd, synthSchema)
-  }
-
-  /** Field IDs a bound predicate references (after any renameToWriter the
-    * remaining predicates all resolve in the writer schema). */
-  private def referencedIds(e: Expr): Seq[Int] = e match {
-    case And(l, r) => referencedIds(l) ++ referencedIds(r)
-    case Or(l, r) => referencedIds(l) ++ referencedIds(r)
-    case Not(c) => referencedIds(c)
-    case p: BoundPred => Seq(p.fieldId)
-    case _ => Nil
-  }
-
-  /** Partially evaluate a bound filter against per-file constant columns. */
-  private def foldConstants(e: Expr, constants: Map[Int, Any]): Expr = e match {
-    case And(l, r) => (foldConstants(l, constants), foldConstants(r, constants)) match {
-      case (FalseExpr, _) | (_, FalseExpr) => FalseExpr
-      case (TrueExpr, b) => b
-      case (a, TrueExpr) => a
-      case (a, b) => And(a, b)
-    }
-    case Or(l, r) => (foldConstants(l, constants), foldConstants(r, constants)) match {
-      case (TrueExpr, _) | (_, TrueExpr) => TrueExpr
-      case (FalseExpr, b) => b
-      case (a, FalseExpr) => a
-      case (a, b) => Or(a, b)
-    }
-    case Not(c) => foldConstants(c, constants) match {
-      case TrueExpr => FalseExpr
-      case FalseExpr => TrueExpr
-      case b => Not(b)
-    }
-    case p: BoundPred if constants.contains(p.fieldId) =>
-      if (RowEvaluator.eval(p, constants)) TrueExpr else FalseExpr
-    case other => other
-  }
-
-  /** Rewrite bound predicate names to the writer schema's names (IDs fixed). */
-  private def renameToWriter(e: Expr, writeSchema: Schema): Expr = e match {
-    case And(l, r) => And(renameToWriter(l, writeSchema), renameToWriter(r, writeSchema))
-    case Or(l, r) => Or(renameToWriter(l, writeSchema), renameToWriter(r, writeSchema))
-    case Not(c) => Not(renameToWriter(c, writeSchema))
-    case p: BoundPred => writeSchema.idToName.get(p.fieldId) match {
-      case Some(n) => p.copy(name = n)
-      case None => TrueExpr // column didn't exist yet: value is null ⇒ conservative keep
-    }
-    case other => other
+    val relation = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+      .create(new GraftSparkTable(table, table.location,
+        explicit = Some(ExplicitRead(tasks, deletes, split, openCost))), None, None)
+    val frame = bridge.ofRows(spark, relation)
+    val filtered =
+      if (tasks.forall(_.residual == TrueExpr)) frame
+      else frame.filter(SparkConv.toColumn(boundFilter, m.schema))
+    // metadata columns of the scan, under the names this API exposes
+    val meta =
+      (if (rowPositions)
+        Seq(GraftSparkTable.FileCol -> TableScan.MetaFileCol,
+          GraftSparkTable.PosCol -> TableScan.MetaPosCol)
+      else Nil) ++
+      (if (withLineage)
+        Seq(GraftSparkTable.RowIdCol -> "_gf_row_id",
+          GraftSparkTable.LastUpdatedCol -> "_gf_last_seq")
+      else Nil)
+    filtered.select(projection.map(col) ++ meta.map { case (c, as) => col(c).as(as) }: _*)
   }
 }
 

@@ -170,7 +170,9 @@ final class Transaction private[table] (table: IceTable) {
   }
 
   /** Delete by filter inside the transaction (CoW rewrite happens now,
-    * commit is deferred). */
+    * commit is deferred). Rewritten files drop every row the table's live
+    * delete files already suppress: the copies commit at a newer sequence
+    * number, where those deletes no longer apply. */
   def delete(filter: graft.meta.expr.Expr): Transaction = {
     val m = table.meta
     val schema = m.schema
@@ -179,9 +181,10 @@ final class Transaction private[table] (table: IceTable) {
     val (whole, partial) = tasks.partition(t =>
       graft.meta.expr.StrictMetricsEvaluator.eval(bound, Reads.statsOf(t.file)))
     if (partial.nonEmpty) {
-      val df = Reads.readFiles(table.spark, table, m,
+      val df = Reads.readTasksWithDeletes(table, m,
         partial.map(_.copy(residual = graft.meta.expr.TrueExpr)),
-        schema.columnNames, graft.meta.expr.TrueExpr)
+        table.newScan().planDeletes(), schema.columnNames,
+        graft.meta.expr.TrueExpr, rowPositions = false)
       val keep = df.filter(
         !(graft.meta.expr.SparkConv.toColumn(bound, schema) <=>
           org.apache.spark.sql.functions.lit(true)))

@@ -581,7 +581,7 @@ object Maintenance {
     * manifest metadata alone: a delete file applies only to live data files
     * with an older sequence number inside its partition scope
     * (`MergeOnRead.applies`), so once compaction has re-sequenced every such
-    * file the delete is dead weight — each scan still reads and anti-joins
+    * file the delete is dead weight — each scan still reads and probes
     * it. O(deletes + data) via per-scope minimum data sequences, no file IO
     * beyond one removal commit. Returns #removed. */
   /** Master-key rotation: rewrite every live content file under the NEW
@@ -734,7 +734,7 @@ object Maintenance {
     * most one delete file per partition (ref delete-file maintenance;
     * `PositionDeleteWriter.java` shape). A CDC-heavy table accumulates one
     * small delete file per DML commit — every scan then opens and
-    * anti-joins all of them; after this action it reads one per partition.
+    * probes all of them; after this action it reads one per partition.
     * Re-sequencing is SAFE for position deletes (they match by exact file
     * path, and paths are never reused) where it would be wrong for
     * equality deletes (their strictly-older-sequence rule encodes
@@ -823,12 +823,12 @@ object Maintenance {
     * keys match and write them as position-delete files, then retire every
     * equality-delete file in ONE Replace commit. Read results are
     * unchanged by construction — the conversion materializes exactly the
-    * rows the read-side anti joins were suppressing.
+    * rows the read-side probes were suppressing.
     *
     * Why at 100 TB: applying an equality delete at read time is a
-    * key-comparison anti join against EVERY applicable data row of every
-    * scan, forever; a position delete is an exact (path, pos) probe that
-    * skips files by path prefilter and never touches key columns. A
+    * key-set probe of EVERY applicable data row of every scan, forever; a
+    * position delete is an exact (path, pos) probe that skips files by
+    * path prefilter and never touches key columns. A
     * streaming-upsert table accumulates eq-delete files continuously —
     * converting them (then `rewritePositionDeleteFiles` + compaction)
     * caps the read-side tax at one bounded probe. The conversion itself
@@ -879,7 +879,7 @@ object Maintenance {
         val kdf = if (fs.map(_.fileSizeBytes).sum < 64L * 1024 * 1024)
           broadcast(keys) else keys
         // null-safe per key column — eq-delete spec semantics (null keys
-        // match null values), same as the read-side anti join
+        // match null values), same as the read-side probe
         val cond = keyNames.map(n => rows(n) <=> kdf(n)).reduce(_ && _)
         rows.join(kdf, cond, "left_semi")
           .select(col(TableScan.MetaFileCol).as(MergeOnRead.PosPathCol),

@@ -14,10 +14,14 @@ import org.apache.spark.sql.functions._
   * `core/.../DeleteFileIndex.java:103`):
   *
   *  - equality deletes: a parquet file of key tuples; applies to data files
-  *    with sequenceNumber < delete's sequenceNumber (anti join on keys)
+  *    with sequenceNumber < delete's sequenceNumber. Keys are primitive
+  *    columns ([[requirePrimitiveKeys]])
   *  - position deletes: a parquet file of (file_path, pos); applies to data
-  *    files with sequenceNumber ≤ delete's (anti join on Spark's
-  *    `_metadata.file_path/row_index`)
+  *    files with sequenceNumber ≤ delete's
+  *
+  * Both are applied inside the native scan's readers
+  * (`graft.spark.GraftDeleteProbe`): position deletes against the row
+  * index, equality deletes as executor-local key sets.
   *
   * Delete files are PARTITION-SCOPED when the write can prove scope (ref
   * `DeleteFileIndex.java:286` partition matching): equality deletes whose
@@ -27,7 +31,7 @@ import org.apache.spark.sql.functions._
   * target data file. An all-null partition tuple means GLOBAL scope —
   * conservative and always sound. Scoped deletes let a scan group skip
   * delete files for other partitions entirely, so a table with K delete
-  * files doesn't anti-join all K on every read.
+  * files doesn't probe all K on every read.
   *
   * Writes are `newRowDelta()`-style commits: delete files are ADDED, no data
   * file is rewritten — O(changed rows), not O(affected files).
@@ -73,6 +77,7 @@ object MergeOnRead {
     val schema = m.schema
     val spec = m.spec
     val ids = keys.map(schema.fieldId)
+    requirePrimitiveKeys(schema, ids, "equality-delete keys")
     val outDir = Locations.newWriteDir(table.location, m, s"deletes-${UUID.randomUUID()}")
     val distinctKeys = keysDf.select(keys.map(col): _*).dropDuplicates(keys)
     val scoped = spec.isPartitioned &&
@@ -101,6 +106,24 @@ object MergeOnRead {
       .filter(_.recordCount > 0)
     if (metas.isEmpty) table.io.deleteRecursive(outDir) // no orphan empties
     metas
+  }
+
+  /** Equality-delete keys must be primitive columns (Iceberg's
+    * identifier-field rule): the readers probe key tuples by value, and a
+    * struct, map or array value has no stable hash equality there. Writers
+    * refuse such keys; planning refuses a table that already holds one,
+    * naming the file (`what`). */
+  private[table] def requirePrimitiveKeys(schema: graft.meta.Schema,
+      ids: Seq[Int], what: String): Unit = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    ids.flatMap(schema.idToField.get).find(_.dataType match {
+      case _: StructType | _: MapType | _: ArrayType => true
+      case _ => false
+    }).foreach { f =>
+      throw new ValidationException(s"$what: key column ${f.name} has type " +
+        s"${f.dataType.catalogString}; equality-delete keys must be primitive " +
+        "(struct, map and array keys cannot be applied)")
+    }
   }
 
   /** ONE-snapshot keyed upsert delta (ref Flink CDC writer semantics): an
@@ -435,61 +458,6 @@ object MergeOnRead {
     val global = d.partition.isEmpty || d.partition.forall(_ == null)
     global || d.specId != t.file.specId || d.partition == t.file.partition
   }
-
-  /** Apply the given (already applicability-filtered) delete files to a data
-    * DataFrame that carries meta columns when position deletes are present.
-    * `groupPaths` (the data files behind `df`) prefilters the position-delete
-    * scan so the anti join probes only relevant rows. */
-  private[table] def applyDeletes(spark: org.apache.spark.sql.SparkSession,
-      m: TableMetadata, df: DataFrame, applicable: Seq[DataFileMeta],
-      groupPaths: Seq[String] = Nil,
-      readOptions: Map[String, String] = Map.empty,
-      dvPositions: Seq[DataFileMeta] => DataFrame = null): DataFrame = {
-    var out = df
-    val posFiles = applicable.filter(_.content == FileContent.PositionDeletes)
-    // deletion vectors targeting files outside this group never reach the
-    // join at all — the metas carry the referenced path, no scan needed
-    val dvFiles = applicable.filter(_.content == FileContent.DeletionVectors)
-      .filter(d => groupPaths.isEmpty ||
-        d.referencedFile.forall(groupPaths.contains))
-    val posParquet = if (posFiles.isEmpty) None else {
-      val pos0 = spark.read.options(readOptions)
-        .parquet(posFiles.map(_.path): _*)
-        .select(col(PosPathCol), col(PosPosCol))
-      // pushes a filter into the delete-file scan: only rows targeting this
-      // group's files survive, so the anti join probes a fraction of the
-      // delete data (groupPaths are scheme-less normPaths)
-      Some(if (groupPaths.nonEmpty && groupPaths.size <= 1000)
-        pos0.filter(normPathCol(col(PosPathCol)).isin(groupPaths: _*))
-      else pos0)
-    }
-    val dvRows = if (dvFiles.isEmpty) None
-      else Some(dvPositions(dvFiles).select(col(PosPathCol), col(PosPosCol)))
-    // both sides normalized: parquet delete rows store file_path verbatim
-    // as captured (scheme-full), DV blobs store normalized referenced
-    // paths — normPathCol is idempotent across both conventions
-    (posParquet ++ dvRows).reduceOption(_ unionByName _).foreach { pos =>
-      out = out.join(broadcastIfSmall(pos, posFiles ++ dvFiles),
-        normPathCol(out(TableScan.MetaFileCol)) === normPathCol(pos(PosPathCol)) &&
-          out(TableScan.MetaPosCol) === pos(PosPosCol),
-        "left_anti")
-    }
-    val eqFiles = applicable.filter(_.content == FileContent.EqualityDeletes)
-    eqFiles.groupBy(_.equalityIds).foreach { case (ids, fs) =>
-      val keyNames = ids.map(m.schema.fieldName)
-      val keys = spark.read.options(readOptions)
-        .parquet(fs.map(_.path): _*).select(keyNames.map(col): _*)
-      // null-safe equality per key column: delete rows with null keys match
-      // target rows with nulls (ref equality-delete spec semantics)
-      val kdf = broadcastIfSmall(keys, fs)
-      val cond = keyNames.map(n => out(n) <=> kdf(n)).reduce(_ && _)
-      out = out.join(kdf, cond, "left_anti")
-    }
-    out
-  }
-
-  private def broadcastIfSmall(df: DataFrame, files: Seq[DataFileMeta]): DataFrame =
-    if (files.map(_.fileSizeBytes).sum < 64L * 1024 * 1024) broadcast(df) else df
 
   /** Strip the URI scheme from a path column (Column analogue of
     * `IceTable.normPath`). */

@@ -127,22 +127,6 @@ object ColumnBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** A DataFrame directly over an already-built DSv2 `Scan` — the
-    * post-pushdown `DataSourceV2ScanRelation` shape the planner itself
-    * produces, with output attributes from the scan's read schema. Internal
-    * rewrite reads use this to scan an EXPLICIT task set (bin-pack
-    * selection, probe-matched merge files) through the native vectorized
-    * readers, which emit row lineage as per-slice constants. */
-  def v2ScanFrame(spark: org.apache.spark.sql.SparkSession,
-      table: org.apache.spark.sql.connector.catalog.Table,
-      scan: org.apache.spark.sql.connector.read.Scan): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-    val rel = DataSourceV2Relation.create(table, None, None)
-    val output = org.apache.spark.sql.catalyst.types.DataTypeUtils
-      .toAttributes(scan.readSchema())
-    ofRows(spark, DataSourceV2ScanRelation(rel, scan, output))
-  }
-
   /** The session's file-split settings — (`maxPartitionBytes`,
     * `openCostInBytes`, `minPartitionNum` defaulting to the leaf-node
     * parallelism), the inputs of Spark's own `FilePartition.maxSplitBytes`

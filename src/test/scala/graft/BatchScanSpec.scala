@@ -47,6 +47,79 @@ class BatchScanSpec extends AnyFunSuite {
     assert(plan.contains("ColumnarToRow"), s"expected vectorized read in:\n$plan")
   }
 
+  /** The executed plan of `df` reads through the native scan and carries
+    * none of the union/anti-join read shape. */
+  private def assertNativeOnly(plan: String, what: String): Unit = {
+    assert(plan.contains("GraftBatchScan"), s"$what: expected GraftBatchScan in:\n$plan")
+    assertNoV1Shape(plan, what)
+  }
+
+  private def assertNoV1Shape(plan: String, what: String): Unit =
+    Seq("RowDataSourceScan", "LeftAnti", "regexp_replace").foreach { bad =>
+      assert(!plan.contains(bad), s"$what: unexpected $bad in:\n$plan")
+    }
+
+  test("Scala-API reads of a MoR table plan only GraftBatchScan (toDF, appendsBetween, IVF probe)") {
+    import graft.meta.expr.Exprs._
+    import graft.meta.model.TableProperties
+    import spark.implicits._
+    val loc = java.nio.file.Files.createTempDirectory("graft-bs-mor-").toString + "/t"
+    def rows(from: Long, to: Long) = spark.range(from, to)
+      .select(col("id").as("k"), (col("id") % 7).as("g"), col("id").cast("string").as("v"))
+    val t = IceTable.create(spark, loc, graft.meta.Schema.fresh(rows(0, 1).schema))
+    t.append(rows(0, 200).repartition(2))
+    t.deleteMergeOnRead(lessThan("k", 10L)) // position-delete file
+    t.updateProperties(Map(TableProperties.DeleteVectors -> "true"))
+    t.deleteMergeOnRead(and(greaterThanOrEqual("k", 10L), lessThan("k", 20L))) // DVs
+    t.addEqualityDeletes(Seq(3L).toDF("g"), Seq("g"))
+    val before = t.currentSnapshot.get.snapshotId
+    t.append(rows(200, 210))
+    val deletes = t.newScan().planDeletes().map(_._1.content).toSet
+    assert(deletes === Set(graft.meta.model.FileContent.PositionDeletes,
+      graft.meta.model.FileContent.DeletionVectors,
+      graft.meta.model.FileContent.EqualityDeletes))
+    val visible = rows(0, 200).filter(col("k") >= 20 && col("g") =!= 3).count() + 10
+
+    val all = t.newScan().toDF
+    assert(all.collect().length === visible)
+    assertNativeOnly(ColumnBridge.executedPlan(all).toString, "toDF")
+    val projected = t.newScan().filter(greaterThan("k", 100L)).select("v").toDF
+    assert(projected.collect().length ===
+      rows(101, 200).filter(col("g") =!= 3).count() + 10)
+    assertNativeOnly(ColumnBridge.executedPlan(projected).toString, "filtered toDF")
+    val appended = t.appendsBetween(before, t.currentSnapshot.get.snapshotId)
+    assert(appended.collect().length === 10)
+    assertNativeOnly(ColumnBridge.executedPlan(appended).toString, "appendsBetween")
+
+    // IVF probe over an index table carrying a position delete: the
+    // candidate read runs inside the probe, so its plan is captured
+    val embs = spark.read.parquet(s"${SparkSessionHelper.sf0001}/embeddings.parquet")
+    val ivfLoc = java.nio.file.Files.createTempDirectory("graft-bs-ivf-").toString + "/idx"
+    val idx = graft.llm.IvfIndex.build(spark, embs, "vec_id", "embedding", ivfLoc, nLists = 4)
+    val ids = embs.select("vec_id").orderBy("vec_id").limit(3).collect().map(_.getLong(0))
+    idx.table.deleteMergeOnRead(equalTo("vec_id", ids.last))
+    assert(idx.table.newScan().planDeletes().nonEmpty)
+    val plans = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, duration: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan.toString }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ex: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val hits = idx.topKQuantized(ids.take(2).toSeq, 3, nProbe = 4).collect()
+      assert(hits.nonEmpty && !hits.exists(_.getAs[Long]("neighbor_id") == ids.last))
+      // listener events are async: wait for the candidate scan's plan
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      def scanned = plans.synchronized(plans.filter(_.contains("GraftBatchScan")).toSeq)
+      while (scanned.isEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(scanned.nonEmpty, s"no GraftBatchScan among the probe's plans: $plans")
+      plans.synchronized(plans.toSeq).foreach(assertNoV1Shape(_, "IVF probe"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("a file larger than split-size fans out into multiple byte-range tasks") {
     warehouse
     spark.sql("CREATE TABLE bs.db.bigfile (k BIGINT, v STRING)")

@@ -165,7 +165,8 @@ class DmlFuzzSpec extends AnyFunSuite {
       }
     }
     if (!encrypted) {
-      // final cross-check: the native DSv2 scan agrees with the V1 path
+      // final cross-check: a DataFrame read of the path agrees with the
+      // model the Scala-API reads were checked against
       val native = spark.read.format("graft").load(loc).collect()
         .map(r => r.getLong(0) -> (r.getString(1), r.getDouble(2))).toMap
       assert(native === model.toMap, s"[$format seed=$seed] native scan mismatch")
@@ -174,7 +175,7 @@ class DmlFuzzSpec extends AnyFunSuite {
       // interleaving, the keyed table must REFUSE it — since r11 the
       // metadata itself is sealed, so the refusal fires at the metadata
       // read — and the native scan through the keyed handle must agree
-      // with the V1 path
+      // with the model
       val refusal = intercept[IllegalStateException] {
         spark.read.format("graft").load(loc).collect()
       }

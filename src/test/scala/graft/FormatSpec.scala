@@ -304,8 +304,8 @@ class FormatSpec extends AnyFunSuite {
     assert(deletes.nonEmpty &&
       deletes.forall(_._1.content == FileContent.PositionDeletes))
     assert(t.newScan().planFiles().map(_.file.path).toSet === dataPaths)
-    // V1 scan (anti join on synthesized _gf_file/_gf_pos) and the native
-    // DSv2 scan (whole-file readers counting ordinals) agree
+    // the Scala-API scan and a DataFrame read agree; both run the native
+    // DSv2 scan (whole-file readers counting ordinals)
     assert(t.toDF.count() === exp)
     assert(spark.read.format("graft").load(loc).count() === exp)
     assert(spark.read.format("graft").load(loc)

@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import graft.meta.Schema
 import graft.meta.expr.Exprs._
-import graft.table.{IceTable, TableImport}
+import graft.meta.model.{DataFileMeta, FileContent, Operation, TableProperties}
+import graft.table.{IceTable, TableImport, ValidationException}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -289,5 +290,120 @@ class MergeOnReadSpec extends AnyFunSuite {
     assert(t.toDF.count() === 20)
     t.updateProperties(Map("write.distribution-mode" -> "none"))
     assert(t.meta.property("write.distribution-mode", "hash") === "none")
+  }
+
+  // ---- equality-delete key shapes: only primitive keys can be applied
+
+  /** (id, k) rows with a nested key column `k` built by `key`. */
+  private def nestedKeyTable(key: org.apache.spark.sql.Column) = {
+    val df = spark.range(40).select(col("id"), key.as("k"))
+    val t = IceTable.create(spark, tmpLoc(), Schema.fresh(df.schema))
+    t.append(df)
+    (t, df)
+  }
+
+  private def assertKeyRefused(key: org.apache.spark.sql.Column, kind: String): Unit = {
+    val (t, df) = nestedKeyTable(key)
+    val e = intercept[ValidationException](
+      t.addEqualityDeletes(df.filter(col("id") < 4).select("k"), Seq("k")))
+    assert(e.getMessage.contains("key column k") && e.getMessage.contains(kind),
+      e.getMessage)
+    assert(t.newScan().planDeletes().isEmpty)
+    assert(t.toDF.count() === 40)
+  }
+
+  test("equality deletes refuse a struct key column") {
+    assertKeyRefused(struct((col("id") % 8).as("a"), lit("x").as("b")), "struct")
+  }
+
+  test("equality deletes refuse a map key column") {
+    assertKeyRefused(map(lit("a"), col("id") % 8), "map")
+  }
+
+  test("equality deletes refuse an array key column") {
+    assertKeyRefused(array(col("id") % 8, lit(1L)), "array")
+  }
+
+  test("planning refuses a committed struct-keyed equality delete, naming the file") {
+    val (t, df) = nestedKeyTable(struct((col("id") % 8).as("a"), lit("x").as("b")))
+    // written and committed by hand: the writers refuse this shape
+    val dir = s"${t.location}/data/hand-deletes"
+    df.filter(col("id") < 4).select("k").coalesce(1).write.parquet(dir)
+    val file = t.io.listRecursive(dir).find(_.getPath.getName.endsWith(".parquet")).get
+    val del = DataFileMeta(path = file.getPath.toString, format = "parquet",
+      specId = t.meta.defaultSpecId, partition = Nil, recordCount = 4L,
+      fileSizeBytes = file.getLen, schemaId = t.meta.currentSchemaId,
+      content = FileContent.EqualityDeletes, equalityIds = Seq(t.schema.fieldId("k")))
+    t.commitSnapshot(Operation.Delete, Seq(del), Set.empty)
+    val reads: Seq[(String, () => Any)] = Seq(
+      "toDF" -> (() => t.toDF.count()),
+      "SQL read" -> (() => spark.read.format("graft").load(t.location).count()),
+      // a rewrite would otherwise commit the deleted rows back as live data
+      "compaction" -> (() => t.rewriteDataFiles()))
+    reads.foreach { case (what, read) =>
+      val e = intercept[ValidationException](read())
+      assert(e.getMessage.contains(del.path) && e.getMessage.contains("key column k"),
+        s"$what: ${e.getMessage}")
+    }
+  }
+
+  // ---- transaction delete keeps earlier deletes applied
+
+  private def assertTransactionDeleteKeepsDeletes(props: Map[String, String])(
+      deleteFirstTen: IceTable => Unit): Unit = {
+    val df = spark.range(100).select(col("id").as("k"), (col("id") * 2).as("v"))
+    val t = IceTable.create(spark, tmpLoc(), Schema.fresh(df.schema), properties = props)
+    t.append(df.coalesce(1))
+    deleteFirstTen(t)
+    assert(t.toDF.count() === 90)
+    t.newTransaction()
+      .delete(and(greaterThanOrEqual("k", 50L), lessThan("k", 60L)))
+      .commit()
+    assert(t.toDF.count() === 80)
+    assert(t.toDF.filter(col("k") < 10).count() === 0, "earlier-deleted rows came back")
+  }
+
+  test("transaction delete does not bring back position-deleted rows") {
+    assertTransactionDeleteKeepsDeletes(Map.empty)(
+      _.deleteMergeOnRead(lessThan("k", 10L)))
+  }
+
+  test("transaction delete does not bring back deletion-vector rows") {
+    assertTransactionDeleteKeepsDeletes(Map(TableProperties.DeleteVectors -> "true")) { t =>
+      t.deleteMergeOnRead(lessThan("k", 10L))
+      assert(t.newScan().planDeletes().forall(_._1.content == FileContent.DeletionVectors))
+    }
+  }
+
+  test("transaction delete does not bring back equality-deleted rows") {
+    assertTransactionDeleteKeepsDeletes(Map.empty)(t =>
+      t.addEqualityDeletes(spark.range(10).select(col("id").as("k")), Seq("k")))
+  }
+
+  // ---- reads whose projection omits the equality-delete key
+
+  test("a projection without the equality-delete key still applies the delete") {
+    val df = spark.range(100).select(col("id").as("k"), col("id").cast("string").as("v"))
+    val t = IceTable.create(spark, tmpLoc(), Schema.fresh(df.schema))
+    t.append(df)
+    t.addEqualityDeletes(spark.range(10).select(col("id").as("k")), Seq("k"))
+    assert(t.newScan().select("v").toDF.count() === 90)
+    assert(spark.read.format("graft").load(t.location).select("v").count() === 90)
+  }
+
+  test("insert-only MERGE reads target keys past an equality delete on another column") {
+    val df = spark.range(100)
+      .select(col("id").as("k"), (col("id") % 10).as("g"), col("id").as("v"))
+    val t = IceTable.create(spark, tmpLoc(), Schema.fresh(df.schema))
+    t.append(df)
+    t.addEqualityDeletes(spark.range(1).select(col("id").as("g")), Seq("g"))
+    assert(t.toDF.count() === 90)
+    // 90 was deleted (g = 0) so it inserts again; 95..99 match; 100..104 are new
+    val src = spark.range(95, 105).union(spark.range(90, 91))
+      .select(col("id").as("k"), (col("id") % 10).as("g"), col("id").as("v"))
+    t.merge(src, Seq("k")).whenNotMatchedInsertAll().execute()
+    assert(t.toDF.count() === 96)
+    assert(t.toDF.filter(col("k") === 90).count() === 1)
+    assert(t.toDF.filter(col("k") >= 95).count() === 10)
   }
 }

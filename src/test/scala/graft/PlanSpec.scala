@@ -167,12 +167,19 @@ class PlanSpec extends AnyFunSuite {
     val pruned = scan.planFiles().size
     assert(pruned < all)
     // the physical DataFrame reads exactly the pruned files, nothing more
-    val plan = ColumnBridge.analyzedPlan(scan.toDF)
-    val relationFiles = plan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.inputFiles.length
+    val df = scan.toDF
+    df.collect()
+    val executed = ColumnBridge.executedPlan(df) match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
     }
-    assert(relationFiles.sum === pruned)
+    val scannedFiles = executed.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case s: graft.spark.GraftBatchScan =>
+      s.planInputPartitions().toSeq.flatMap {
+        case p: graft.spark.GraftInputPartition => p.files.map(_.path).toSeq
+      }
+    }.flatten.distinct
+    assert(scannedFiles.size === pruned)
   }
 }
