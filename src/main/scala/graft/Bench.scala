@@ -426,7 +426,11 @@ object Bench {
     }.mkString("{", ",", "}")
     val preceded =
       s"""{"last_test_run_secs_ago":$lastTestRunSecsAgo,"loadavg_at_launch":${fmt(loadAtLaunch)},"startup_wait_ms":$startupWaitMs,"loadavg_at_start":${fmt(loadAtStart)}}"""
-    val total = results.values.map(_.med).sum
+    // the headline `total` sums the pre-r14 entries only, so it stays
+    // comparable across rounds; the scaling tier reports its own sum
+    val (scale, core) = results.partition(_._1.startsWith("scale_"))
+    val total = core.values.map(_.med).sum
+    val scaleTotal = scale.values.map(_.med).sum
     // two lines, detail FIRST: the driver's bounded tail capture once cut
     // the headline's front when per-sample arrays pushed the single line
     // past the capture window (BENCH_r12 lost its {"metric":"total"...}
@@ -435,7 +439,7 @@ object Bench {
     // deliberately contains no "metric" key.
     println(s"""{"bench_detail":{"samples":$samples,"gc_secs":$gcSecs,"reruns":$reruns}}""")
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"preceded_by":$preceded,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","scale_total":$scaleTotal%.3f,"queries":$qs,"preceded_by":$preceded,"sf":"$sfDir"}"""
     println(compact)
     // belt-and-braces second channel (r13 verdict item 2): the same compact
     // JSON written to a file, so no stdout capture window can lose it

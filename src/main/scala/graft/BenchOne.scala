@@ -175,54 +175,6 @@ object BenchOne {
           (3L, "customer order data"))).toDF("qid", "qtext")
         run("llm_bm25", 1, 5)(() => time(consume(
           graft.llm.TextOps.bm25(docsDf, "doc_id", "text", q, "qid", "qtext", 10))))
-        // REJECTED r13 experiment, kept reproducible: a persistBarrier
-        // instead of the repartition(doc) barrier (with the corpus-stats
-        // pass folded into the same materialization — one tokenize, not
-        // two). Identical output; lost the warm-JIT A/B 0.543 vs 0.497
-        // because the shipped exchange's doc-id partitioning is
-        // load-bearing (tf and score aggregations reuse it)
-        def bm25PersistBar(): DataFrame = {
-          import org.apache.spark.sql.graft.ColumnBridge
-          def toksNE(c: org.apache.spark.sql.Column) =
-            filter(graft.llm.TextOps.tokens(c), t => t =!= "")
-          val k1 = 1.2; val b = 0.75; val k = 10
-          val qTerms = q.select(col("qid").as("query_id"),
-            explode(toksNE(col("qtext"))).as("_gf_t")).distinct()
-          val base = ColumnBridge.persistBarrier(docsDf
-            .select(col("doc_id").as("_gf_doc"), toksNE(col("text")).as("_gf_ts"))
-            .select(col("_gf_doc"), col("_gf_ts"), size(col("_gf_ts")).as("_gf_dl")))
-          val stats = base.agg(count(lit(1)).as("_gf_n"),
-            avg(col("_gf_dl")).as("_gf_avgdl")).head()
-          val (n, avgdl) = (stats.getLong(0).toDouble,
-            math.max(stats.getDouble(1), 1e-9))
-          val matched = base
-            .select(col("_gf_doc"), explode(col("_gf_ts")).as("_gf_t"), col("_gf_dl"))
-            .join(broadcast(qTerms.select("_gf_t").distinct()), Seq("_gf_t"), "left_semi")
-            .groupBy("_gf_doc", "_gf_t", "_gf_dl")
-            .agg(count(lit(1)).as("_gf_tf"))
-          val dfByTerm = matched.groupBy("_gf_t").agg(count(lit(1)).as("_gf_df"))
-          val scored = matched
-            .join(broadcast(qTerms), Seq("_gf_t"))
-            .join(broadcast(dfByTerm), Seq("_gf_t"))
-            .select(col("query_id"), col("_gf_doc"),
-              (log(lit(1.0) + (lit(n) - col("_gf_df") + 0.5) / (col("_gf_df") + 0.5)) *
-                (col("_gf_tf") * (k1 + 1.0)) /
-                (col("_gf_tf") + lit(k1) * (lit(1.0 - b) +
-                  lit(b) * col("_gf_dl") / lit(avgdl))))
-                .as("_gf_s"))
-            .groupBy("query_id", "_gf_doc")
-            .agg(round(sum("_gf_s"), 4).as("sim"))
-            .select(col("query_id"), col("_gf_doc").as("neighbor_id"), col("sim"))
-          graft.llm.Similarity.topKPerQuery(scored, k)
-            .select(col("query_id"), col("rank"), col("neighbor_id").as("doc_id"),
-              col("sim").as("score"))
-        }
-        run("llm_bm25_persistbar", 1, 5)(() => time(consume(bm25PersistBar())))
-        val shipped = graft.llm.TextOps.bm25(
-          docsDf, "doc_id", "text", q, "qid", "qtext", 10)
-        val alt = bm25PersistBar()
-        val bmDiff = shipped.exceptAll(alt).count() + alt.exceptAll(shipped).count()
-        println(s"[benchone] bm25 shipped-vs-persistbar exceptAll diff=$bmDiff (0 = identical)")
         graft.llm.Bm25Index.build(spark, docsDf, "doc_id", "text",
           s"$loc/bm25_idx", nBuckets = 8)
         val bmIdx = graft.llm.Bm25Index.load(spark, s"$loc/bm25_idx")
@@ -294,77 +246,6 @@ object BenchOne {
       "llm_cc_dedup" -> (() => run("llm_cc_dedup", 1, 5)(() => time(consume(
         graft.llm.Dedup.dedupByComponents(docsDf, "doc_id",
           graft.llm.Dedup.minHashLshPairs(docsDf, "doc_id", "text", 3, 8, 2, 0.6)))))),
-      // A/B: the r9 repartition barrier in minHashLshPairs vs persist-based
-      // barriers (OPTIMIZATION_r13 "Not yet optimized" #4 — REJECTED: the
-      // persist variants' first-run wins were JIT order bias; on a warm
-      // second pass the exchange ties or wins, and the only faster variant
-      // (CacheManager persist) cannot ship — plan-keyed cache entries make
-      // repeated calls silently reuse the first call's blocks). Timed
-      // region includes persist materialization and unpersist (that IS the
-      // alternative's cost). `kind`: "repart" = the shipped exchange shape,
-      // "persist" = CacheManager persist at `level`; the shipped-query row
-      // measures minHashLshPairs itself; llm_minhash_rddbar measures the
-      // ColumnBridge.persistBarrier (RDD-level, leak-free) variant.
-      "llm_minhash_persist" -> (() => {
-        import org.apache.spark.storage.StorageLevel
-        val n = 3; val bands = 8; val rowsPerBand = 2; val threshold = 0.6
-        val numHashes = bands * rowsPerBand
-        def pairsVia(kind: String, level: StorageLevel): (DataFrame, DataFrame) = {
-          val proj = docsDf.select(col("doc_id").as("id"),
-              graft.llm.TextOps.shingleHashes(col("text"), n).as("sh"))
-          def sig(d: DataFrame) = d.withColumn("sig",
-            graft.llm.Dedup.minHashSignatureFromHashes(col("sh"), numHashes))
-          val base = kind match {
-            case "repart" => sig(proj.repartition(col("id")))
-            case "rddbar" =>
-              org.apache.spark.sql.graft.ColumnBridge.persistBarrier(sig(proj))
-            case _ => sig(proj).persist(level)
-          }
-          val shDF = base.select(col("id"), col("sh"))
-          val allBands = base.select(col("id"),
-            posexplode(transform(sequence(lit(0), lit(bands - 1)),
-              b => xxhash64(slice(col("sig"), b * rowsPerBand + 1,
-                lit(rowsPerBand)), b))).as(Seq("band", "bucket")))
-          val a = allBands.as("a"); val bb = allBands.as("b")
-          val cands = a.join(bb,
-              col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.id") < col("b.id"))
-            .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-            .dropDuplicates("id_a", "id_b")
-          val out = cands
-            .join(shDF.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-            .join(shDF.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-            .withColumn("jaccard",
-              size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-                size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-            .filter(col("jaccard") >= threshold)
-            .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-            .orderBy("id_a", "id_b")
-          (out, base)
-        }
-        // the shipped shape (repartition barrier inside the op)
-        runQuery("llm_minhash_shipped", "llm_dedup_minhash")
-        run("llm_minhash_rddbar", 1, 5)(() => time {
-          val (q, _) = pairsVia("rddbar", StorageLevel.NONE)
-          consume(q) // blocks are reference-tracked; ContextCleaner frees them
-        })
-        Seq("disk" -> StorageLevel.DISK_ONLY,
-            "memdisk" -> StorageLevel.MEMORY_AND_DISK).foreach { case (lbl, lv) =>
-          run(s"llm_minhash_persist_$lbl", 1, 5)(() => time {
-            val (q, base) = pairsVia("persist", lv)
-            try consume(q) finally base.unpersist(true)
-          })
-        }
-        // parity: every variant must emit exactly the declared pairs
-        val cur = SparkEntry.queries("llm_dedup_minhash")(spark, sfDir)
-        Seq("rddbar", "persist").foreach { kind =>
-          val (alt, base) = pairsVia(kind, StorageLevel.DISK_ONLY)
-          val diff = cur.exceptAll(alt).count() + alt.exceptAll(cur).count()
-          if (kind == "persist") base.unpersist(true)
-          println(s"[benchone] minhash $kind-vs-shipped exceptAll diff=$diff (0 = identical)")
-        }
-      }),
       // diagnostic for OPTIMIZATION_r13 "Not yet optimized" #5: does the
       // term-IN filter actually prune postings FILES at sf0.1 shape?
       "bm25_prune_check" -> (() => {

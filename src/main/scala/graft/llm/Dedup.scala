@@ -168,13 +168,13 @@ object Dedup {
     // Shingles are hashed to longs BEFORE the barrier: the exchange carries
     // 8-byte hashes instead of shingle strings, and the exact-Jaccard verify
     // runs set ops over longs (same sets modulo 64-bit collisions).
-    // r13 A/B (BenchOne llm_minhash_persist, warm-JIT pass, identical
-    // output): this exchange 0.745 s vs an RDD-level persistBarrier 0.786 s
-    // vs a CacheManager persist 0.710 s at sf0.1 — the only variant that
-    // beats the exchange cannot ship (CacheManager entries are keyed by
-    // canonicalized plan, so repeated calls would silently REUSE the first
-    // call's blocks — cross-run result caching — and they pin executor
-    // storage for the session). First-run-order A/Bs that showed the
+    // r13 A/B (warm-JIT pass, identical output; record in
+    // OPTIMIZATION_r13.md): this exchange 0.745 s vs an RDD-level persisted
+    // barrier 0.786 s vs a CacheManager persist 0.710 s at sf0.1 — the only
+    // variant that beats the exchange cannot ship (CacheManager entries are
+    // keyed by canonicalized plan, so repeated calls would silently REUSE
+    // the first call's blocks — cross-run result caching — and they pin
+    // executor storage for the session). First-run-order A/Bs that showed the
     // persist winning by 15% were JIT bias; the barrier stays an exchange.
     val base = df.select(col(idCol).as("id"),
         TextOps.shingleHashes(col(textCol), n).as("sh"))

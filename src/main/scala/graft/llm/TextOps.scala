@@ -385,9 +385,9 @@ object TextOps {
     * barrier exchange is load-bearing, not only an optimizer fence: its
     * doc-id partitioning satisfies the tf AND score aggregations'
     * clustering, so neither re-shuffles — an r13 A/B that swapped it for
-    * a persist-based barrier (BenchOne llm_bm25 vs llm_bm25_persistbar,
-    * warm-JIT pass, identical output) measured 0.497 s (exchange) vs
-    * 0.543 s (persist) at sf0.1 and was rejected. Per-(query, doc)
+    * a persist-based barrier (warm-JIT pass, identical output; record in
+    * OPTIMIZATION_r13.md) measured 0.497 s (exchange) vs 0.543 s
+    * (persist) at sf0.1 and was rejected. Per-(query, doc)
     * partial sums aggregate map-side; the final ranking is the bounded
     * top-k aggregate
     * ([[Similarity.topKPerQuery]] — no window, no full sort). Scores are

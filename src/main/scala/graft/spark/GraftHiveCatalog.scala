@@ -1,20 +1,11 @@
 package graft.spark
 
-import java.util
+import graft.table.{CatalogStore, HiveCatalogStore}
 
-import scala.jdk.CollectionConverters._
-
-import graft.meta.Schema
-import graft.table.{HiveCatalogStore, HiveTableOperations, IceTable}
-
-import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, Table, TableCatalog}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** [[GraftCatalog]] backed by a Hive metastore (ref
-  * `hive-metastore/.../HiveCatalog.java` + `HiveTableOperations.java`):
+/** [[GraftJdbcCatalog]] with the pointer store in a Hive metastore
+  * ([[HiveCatalogStore]]; ref `hive-metastore/.../HiveCatalog.java`):
   * tables are HMS entries carrying the `metadata_location` pointer in their
   * parameters, and every commit's compare-and-swap is the reference's
   * lock → re-check → alter_table protocol. Register with:
@@ -28,184 +19,21 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * // (optionally "jdo-uri" to place the Derby db)
   * }}}
   *
-  * Namespaces are HMS DATABASES — single level, like any Hive deployment.
-  * Tables created here are visible to every other HMS client (external
-  * tables typed `table_type = GRAFT`). */
-class GraftHiveCatalog extends GraftCatalog {
+  * Everything above the store — staging, rename, drop/purge,
+  * register_table, metadata-file naming, conflict retries — is the
+  * [[GraftJdbcCatalog]] machinery. Namespaces are HMS DATABASES — single
+  * level, like any Hive deployment. Tables created here are visible to
+  * every other HMS client (external tables typed `table_type = GRAFT`,
+  * columns rewritten on every commit). */
+class GraftHiveCatalog extends GraftJdbcCatalog {
 
-  private var uri: Option[String] = None
   private var jdoUri: Option[String] = None
-  @volatile private var storeRef: HiveCatalogStore = _
-  private def store: HiveCatalogStore = {
-    if (storeRef == null) synchronized {
-      if (storeRef == null) storeRef = new HiveCatalogStore(uri, jdoUri, warehouse)
-    }
-    storeRef
-  }
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     super.initialize(name, options)
-    uri = Option(options.get("uri")).filter(_.nonEmpty)
     jdoUri = Option(options.get("jdo-uri")).filter(_.nonEmpty)
   }
 
-  private def db(namespace: Array[String]): String = {
-    require(namespace.length == 1,
-      s"Hive metastore namespaces are single-level: ${namespace.mkString(".")}")
-    namespace(0)
-  }
-
-  /** Lookup-safe: a non-single-level namespace simply holds no tables (so
-    * `db.t.snapshots`-style metadata identifiers fall through to the
-    * metadata-table resolution instead of erroring). */
-  private def dbOpt(namespace: Array[String]): Option[String] =
-    if (namespace.length == 1) Some(namespace(0)) else None
-
-  private def cacheKey(ident: Identifier): String =
-    db(ident.namespace()) + "\u0000" + ident.name()
-
-  private def hiveOps(ident: Identifier, location: String,
-      staged: Boolean = false): HiveTableOperations =
-    new HiveTableOperations(location, io, store, db(ident.namespace()),
-      ident.name(), staged)
-
-  // ---------------------------------------------------------------- tables
-
-  override def listTables(namespace: Array[String]): Array[Identifier] =
-    store.listTables(db(namespace)).map(Identifier.of(namespace, _)).toArray
-
-  override def tableExists(ident: Identifier): Boolean =
-    dbOpt(ident.namespace())
-      .exists(d => store.getPointer(d, ident.name()).isDefined)
-
-  override protected def loadIce(ident: Identifier): IceTable = {
-    val (_, _, loc) = dbOpt(ident.namespace())
-      .flatMap(d => store.getPointer(d, ident.name()))
-      .getOrElse(throw new NoSuchTableException(ident))
-    cachedIce(cacheKey(ident))(IceTable.loadWith(spark, hiveOps(ident, loc)))
-  }
-
-  override def createTable(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], properties: util.Map[String, String]): Table = {
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    store.createDatabase(db(ident.namespace()))
-    val gSchema = Schema.fresh(schema)
-    val spec = GraftCatalog.toSpec(gSchema, partitions)
-    val props = properties.asScala.toMap -- GraftCatalog.ReservedProps
-    val t = IceTable.createWith(spark, hiveOps(ident, tablePath(ident)),
-      gSchema, spec, properties = props)
-    new GraftSparkTable(t, fullName(ident))
-  }
-
-  override protected def stage(ident: Identifier, schema: StructType,
-      partitions: Array[Transform], properties: util.Map[String, String],
-      replace: Boolean, orCreate: Boolean): StagedTable = {
-    if (!replace && tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (replace && !orCreate && !tableExists(ident)) throw new NoSuchTableException(ident)
-    store.createDatabase(db(ident.namespace()))
-    val location = tablePath(ident) + "_" +
-      java.util.UUID.randomUUID().toString.take(8)
-    val gSchema = Schema.fresh(schema)
-    val spec = GraftCatalog.toSpec(gSchema, partitions)
-    val props = properties.asScala.toMap -- GraftCatalog.ReservedProps
-    val ops = hiveOps(ident, location, staged = true)
-    val t = IceTable.createWith(spark, ops, gSchema, spec, properties = props)
-    new StagedHiveTable(new GraftSparkTable(t, fullName(ident)), ops, io,
-      location, replace, () => evictIce(cacheKey(ident)))
-  }
-
-  /** Register an EXISTING table's metadata file as an HMS entry; data and
-    * metadata files stay in place (ref `HiveCatalog.registerTable`). */
-  def registerTable(ident: Identifier, metadataLocation: String)
-      : Option[graft.meta.model.TableMetadata] = {
-    val (meta, version) = graft.table.RegisterTable.parse(io, metadataLocation)
-    store.createDatabase(db(ident.namespace()))
-    if (store.insertPointer(db(ident.namespace()), ident.name(), meta.location,
-      meta.schema, version, metadataLocation)) Some(meta) else None
-  }
-
-  override def dropTable(ident: Identifier): Boolean =
-    store.getPointer(db(ident.namespace()), ident.name()) match {
-      case None => false
-      case Some((_, _, loc)) =>
-        // REGISTERED tables keep their files elsewhere: dropping the
-        // catalog entry must not destroy a location this catalog does
-        // not own (ref registerTable + non-purge drop semantics). For owned
-        // object-store-layout tables, pin metadata BEFORE the pointer drop
-        // and purge external files only AFTER it succeeds.
-        val norm = loc.stripPrefix("file:")
-        val owned = norm.startsWith(warehouse.stripPrefix("file:"))
-        val pinned = if (owned) pinDropPurge(loadIce(ident)) else None
-        val ok = store.dropPointer(db(ident.namespace()), ident.name())
-        if (ok) {
-          evictIce(cacheKey(ident))
-          if (owned) { purgePinned(pinned); io.deleteRecursive(loc) }
-        }
-        ok
-    }
-
-  override def renameTable(from: Identifier, to: Identifier): Unit = {
-    if (!tableExists(from)) throw new NoSuchTableException(from)
-    if (tableExists(to)) throw new TableAlreadyExistsException(to)
-    store.renamePointer(db(from.namespace()), from.name(),
-      db(to.namespace()), to.name())
-    evictIce(cacheKey(from))
-  }
-
-  // ------------------------------------------------------------ namespaces
-
-  override def listNamespaces(): Array[Array[String]] =
-    store.listDatabases().map(Array(_)).toArray
-
-  override def listNamespaces(namespace: Array[String]): Array[Array[String]] = {
-    if (namespace.isEmpty) return listNamespaces()
-    if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(namespace)
-    Array.empty // single-level
-  }
-
-  override def namespaceExists(namespace: Array[String]): Boolean =
-    namespace.length == 1 && store.databaseExists(namespace(0))
-
-  override def createNamespace(namespace: Array[String],
-      metadata: util.Map[String, String]): Unit =
-    store.createDatabase(db(namespace))
-
-  override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean = {
-    if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(namespace)
-    if (!cascade && listTables(namespace).nonEmpty)
-      throw new org.apache.spark.sql.catalyst.analysis.NonEmptyNamespaceException(namespace)
-    if (cascade) listTables(namespace).foreach(dropTable)
-    store.dropDatabase(db(namespace))
-    true
-  }
-}
-
-/** Staged CTAS/RTAS table for the Hive catalog: commit publishes by
-  * creating (or re-pointing) the HMS entry, abort deletes the staged files
-  * — the metastore entry IS the atomic publish, no directory rename. */
-final class StagedHiveTable(delegate: GraftSparkTable, ops: HiveTableOperations,
-    io: graft.table.FileIO, location: String, replace: Boolean,
-    evict: () => Unit)
-    extends StagedTable
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-
-  override def name(): String = delegate.name()
-  override def schema(): StructType = delegate.schema()
-  override def partitioning(): Array[Transform] = delegate.partitioning()
-  override def properties(): util.Map[String, String] = delegate.properties()
-  override def capabilities(): util.Set[org.apache.spark.sql.connector.catalog.TableCapability] =
-    delegate.capabilities()
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder =
-    delegate.newWriteBuilder(info)
-
-  private def stagedMeta = ops.current()._2
-
-  override def commitStagedChanges(): Unit =
-    if (replace) { ops.publishReplace(stagedMeta).foreach(io.deleteRecursive); evict() }
-    else if (!ops.publish(stagedMeta))
-      throw new TableAlreadyExistsException(
-        Identifier.of(Array.empty[String], name()))
-
-  override def abortStagedChanges(): Unit = io.deleteRecursive(location)
+  override protected def newStore(): CatalogStore =
+    new HiveCatalogStore(Option(uri).filter(_.nonEmpty), jdoUri, warehouse)
 }

@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import graft.meta.Schema
-import graft.table.{CatalogStore, IceTable, JdbcCatalogStore, JdbcTableOperations}
+import graft.table.{CatalogStore, IceTable, JdbcCatalogStore, PointerTableOperations}
 
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, Table, TableCatalog}
@@ -13,11 +13,14 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** [[GraftCatalog]] with the table POINTER in a SQL database instead of
-  * filesystem rename-CAS (ref `core/.../jdbc/JdbcCatalog.java`): listing,
-  * existence, rename, and every commit's compare-and-swap go through
-  * database rows, which is the production-safe protocol on object stores
-  * (no atomic rename). Data/metadata files still live under `warehouse`.
+/** [[GraftCatalog]] with the table POINTER in a [[CatalogStore]] instead
+  * of filesystem rename-CAS (ref `core/.../jdbc/JdbcCatalog.java`):
+  * listing, existence, rename, and every commit's compare-and-swap go
+  * through the store, which is the production-safe protocol on object
+  * stores (no atomic rename). Data/metadata files still live under
+  * `warehouse`. This is the one pointer catalog: this class uses a SQL
+  * database ([[JdbcCatalogStore]], row CAS), and [[GraftRestCatalog]] and
+  * [[GraftHiveCatalog]] only swap in their store through [[newStore]].
   * Register with:
   *
   * {{{
@@ -27,11 +30,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * }}}
   *
   * Differences from the filesystem catalog, by design:
-  *  - RENAME is one row UPDATE — table files never move, no relocation.
+  *  - RENAME is one pointer update — table files never move, no
+  *    relocation.
   *  - CTAS/RTAS staging needs no hidden-directory rename: the staged table
-  *    is built at its FINAL files location and the pointer-row insert is
-  *    the atomic publish.
-  *  - Namespaces are rows, not directories. */
+  *    is built at its FINAL files location and the pointer insert is the
+  *    atomic publish.
+  *  - Namespaces are store entries, not directories. */
 class GraftJdbcCatalog extends GraftCatalog {
 
   protected var uri: String = _
@@ -44,14 +48,16 @@ class GraftJdbcCatalog extends GraftCatalog {
     storeRef
   }
 
-  /** The pointer backend; [[GraftRestCatalog]] swaps in the HTTP store. */
-  protected def newStore(): CatalogStore = new JdbcCatalogStore(uri, catalogName)
+  /** The pointer backend, built on first use; subclasses swap in theirs. */
+  protected def newStore(): CatalogStore = {
+    require(uri != null && uri.nonEmpty, s"Catalog $catalogName requires " +
+      s"spark.sql.catalog.$catalogName.uri (a JDBC connection string)")
+    new JdbcCatalogStore(uri, catalogName)
+  }
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     super.initialize(name, options)
     uri = options.get("uri")
-    require(uri != null && uri.nonEmpty,
-      s"Catalog $name requires spark.sql.catalog.$name.uri (a JDBC connection string)")
   }
 
   private def ns(namespace: Array[String]): String = namespace.mkString(".")
@@ -59,9 +65,9 @@ class GraftJdbcCatalog extends GraftCatalog {
   private def cacheKey(ident: Identifier): String =
     ns(ident.namespace()) + "\u0000" + ident.name()
 
-  private def jdbcOps(ident: Identifier, location: String,
-      staged: Boolean = false): JdbcTableOperations =
-    new JdbcTableOperations(location, io, store, ns(ident.namespace()),
+  private def pointerOps(ident: Identifier, location: String,
+      staged: Boolean = false): PointerTableOperations =
+    new PointerTableOperations(location, io, store, ns(ident.namespace()),
       ident.name(), staged)
 
   // ---------------------------------------------------------------- tables
@@ -76,9 +82,10 @@ class GraftJdbcCatalog extends GraftCatalog {
     val (_, _, loc) = store.getPointer(ns(ident.namespace()), ident.name())
       .getOrElse(throw new NoSuchTableException(ident))
     // keyed by IDENT, not location: the ops inside the handle query the
-    // row by identifier, so rename/drop must evict (a replaced table gets
-    // a fresh location AND a fresh row, handled by the same eviction)
-    cachedIce(cacheKey(ident))(IceTable.loadWith(spark, jdbcOps(ident, loc)))
+    // pointer by identifier, so rename/drop must evict (a replaced table
+    // gets a fresh location AND a fresh pointer, handled by the same
+    // eviction)
+    cachedIce(cacheKey(ident))(IceTable.loadWith(spark, pointerOps(ident, loc)))
   }
 
   override def createTable(ident: Identifier, schema: StructType,
@@ -87,7 +94,7 @@ class GraftJdbcCatalog extends GraftCatalog {
     val gSchema = Schema.fresh(schema)
     val spec = GraftCatalog.toSpec(gSchema, partitions)
     val props = properties.asScala.toMap -- GraftCatalog.ReservedProps
-    val t = IceTable.createWith(spark, jdbcOps(ident, tablePath(ident)),
+    val t = IceTable.createWith(spark, pointerOps(ident, tablePath(ident)),
       gSchema, spec, properties = props)
     new GraftSparkTable(t, fullName(ident))
   }
@@ -105,9 +112,9 @@ class GraftJdbcCatalog extends GraftCatalog {
     val gSchema = Schema.fresh(schema)
     val spec = GraftCatalog.toSpec(gSchema, partitions)
     val props = properties.asScala.toMap -- GraftCatalog.ReservedProps
-    val ops = jdbcOps(ident, location, staged = true)
+    val ops = pointerOps(ident, location, staged = true)
     val t = IceTable.createWith(spark, ops, gSchema, spec, properties = props)
-    new StagedJdbcTable(new GraftSparkTable(t, fullName(ident)), ops, io,
+    new StagedPointerTable(new GraftSparkTable(t, fullName(ident)), ops, io,
       location, replace, () => evictIce(cacheKey(ident)))
   }
 
@@ -119,7 +126,7 @@ class GraftJdbcCatalog extends GraftCatalog {
       : Option[graft.meta.model.TableMetadata] = {
     val (meta, version) = graft.table.RegisterTable.parse(io, metadataLocation)
     if (store.insertPointer(ns(ident.namespace()), ident.name(), meta.location,
-      version, metadataLocation)) Some(meta) else None
+      meta.schema, version, metadataLocation)) Some(meta) else None
   }
 
   override def dropTable(ident: Identifier): Boolean =
@@ -182,11 +189,11 @@ class GraftJdbcCatalog extends GraftCatalog {
   }
 }
 
-/** Staged CTAS/RTAS table for the JDBC catalog: the staged write already
-  * produced a complete table at its final files location; commit publishes
-  * it by inserting (or swapping) the pointer row, abort deletes the files.
-  * No directory rename exists in the commit path at all. */
-final class StagedJdbcTable(delegate: GraftSparkTable, ops: JdbcTableOperations,
+/** Staged CTAS/RTAS table for the pointer catalog: the staged write
+  * already produced a complete table at its final files location; commit
+  * publishes it by inserting (or swapping) the store's pointer, abort
+  * deletes the files. No directory rename exists in the commit path at all. */
+final class StagedPointerTable(delegate: GraftSparkTable, ops: PointerTableOperations,
     io: graft.table.FileIO, location: String, replace: Boolean,
     evict: () => Unit)
     extends StagedTable

@@ -5,10 +5,11 @@ import graft.table.{CatalogStore, RestCatalogStore}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** [[GraftJdbcCatalog]] with the pointer store behind an HTTP catalog
-  * service instead of a direct database connection — the service-fronted
-  * commit-protocol class (the direction REST catalog services took after
-  * the incubator reference's file/JDBC/Hive pointers; see
-  * `core/.../jdbc/JdbcCatalog.java` for the row-CAS this fronts). The
+  * service ([[RestCatalogStore]]) instead of a direct database
+  * connection — the service-fronted commit-protocol class (the direction
+  * REST catalog services took after the incubator reference's
+  * file/JDBC/Hive pointers; see `core/.../jdbc/JdbcCatalog.java` for the
+  * row-CAS this fronts). The
   * service owns authentication and the commit point; Spark clusters talk
   * to it with a handful of small pointer requests per query or commit and
   * never hold database credentials. Register with:
@@ -20,9 +21,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * spark.conf.set("spark.sql.catalog.grc.token", "…")   // optional bearer
   * }}}
   *
-  * Everything above the store — staging, rename-as-row-update, drop/purge,
-  * register_table, metadata-file naming, conflict retries — is the
-  * [[GraftJdbcCatalog]] machinery verbatim; the one semantic addition is
+  * Everything above the store — staging, rename-as-pointer-update,
+  * drop/purge, register_table, metadata-file naming, conflict retries — is
+  * the [[GraftJdbcCatalog]] machinery; the one semantic addition is
   * [[graft.table.CommitStateUnknownException]] on transport failures
   * during a pointer swap, which MUST NOT be retried as a clean conflict
   * (the swap may have landed server-side). */
@@ -32,7 +33,7 @@ class GraftRestCatalog extends GraftJdbcCatalog {
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     super.initialize(name, options)
-    require(uri.startsWith("http://") || uri.startsWith("https://"),
+    require(uri != null && (uri.startsWith("http://") || uri.startsWith("https://")),
       s"Catalog $name requires spark.sql.catalog.$name.uri to be the " +
         s"catalog service's http(s) address (got: $uri)")
     token = Option(options.get("token")).filter(_.nonEmpty)

@@ -369,10 +369,10 @@ object GraftSqlParser {
           val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
             parts.drop(1).dropRight(1).toArray, parts.last)
           val registered = spark.sessionState.catalogManager.catalog(parts.head) match {
-            case j: GraftJdbcCatalog => j.registerTable(ident, loc)
-            case h: GraftHiveCatalog => h.registerTable(ident, loc)
+            case p: GraftJdbcCatalog => p.registerTable(ident, loc)
             case other => throw new UnsupportedOperationException(
-              "register_table needs a pointer-backed catalog (jdbc or hive-metastore); " +
+              "register_table needs a pointer-backed catalog " +
+                "(jdbc, rest or hive-metastore); " +
                 s"the filesystem catalog derives tables from their paths: ${other.getClass.getName}")
           }
           val m = registered.getOrElse(throw new IllegalStateException(

@@ -2,35 +2,7 @@ package graft.table
 
 import java.sql.{Connection, DriverManager, SQLException}
 
-import graft.meta.model.{JsonCodecs, MetadataLogEntry, TableMetadata}
-
-/** The catalog's pointer store: one (namespace, name) row per table holding
-  * the current metadata-file location, CAS'd on commit. Implementations:
-  * a SQL database ([[JdbcCatalogStore]]) and an HTTP catalog service
-  * ([[RestCatalogStore]]) — both drive the same [[JdbcTableOperations]]
-  * commit protocol, so every backend shares one tested CAS path. */
-trait CatalogStore {
-  /** (pointer version, metadata location, table location) for one table. */
-  def getPointer(namespace: String, name: String): Option[(Int, String, String)]
-  /** Create the pointer row — the atomic publish of a new table. False when
-    * the name is already taken. */
-  def insertPointer(namespace: String, name: String, tableLocation: String,
-      version: Int, metadataLocation: String): Boolean
-  /** CAS the pointer: true only if it still points at `expected`. */
-  def casPointer(namespace: String, name: String, expectedMetadataLocation: String,
-      newVersion: Int, newMetadataLocation: String): Boolean
-  /** Point an EXISTING row at a replacement table (RTAS publish). */
-  def replacePointer(namespace: String, name: String, tableLocation: String,
-      version: Int, metadataLocation: String): Boolean
-  def dropPointer(namespace: String, name: String): Boolean
-  def renamePointer(fromNs: String, fromName: String, toNs: String,
-      toName: String): Boolean
-  def listTables(namespace: String): Seq[String]
-  def createNamespace(namespace: String): Boolean
-  def dropNamespace(namespace: String): Boolean
-  def namespaceExists(namespace: String): Boolean
-  def listNamespaces(): Seq[String]
-}
+import graft.meta.Schema
 
 /** SQL-backed catalog store (ref `core/.../jdbc/JdbcCatalog.java` +
   * `JdbcUtil.java`): one row per table holding the current metadata-file
@@ -39,7 +11,8 @@ trait CatalogStore {
   * production-safe commit protocol on object stores, where the filesystem
   * backend's atomic-rename CAS does not exist — the database row, not a
   * file, is the table's source of truth. Namespaces are explicit rows
-  * (ref's `jdbc/JdbcNamespace` shape).
+  * (ref's `jdbc/JdbcNamespace` shape). The row carries only the pointer,
+  * so the `schema` argument of the pointer writes is ignored.
   *
   * One JVM-wide connection per URI, serialized: catalog traffic is
   * driver-side metadata traffic (a handful of point reads/updates per
@@ -101,7 +74,7 @@ final class JdbcCatalogStore(uri: String, val catalogName: String)
   /** Create the pointer row — the atomic "publish" of a new table. False
     * when the table already exists (duplicate key = lost the race). */
   def insertPointer(namespace: String, name: String, tableLocation: String,
-      version: Int, metadataLocation: String): Boolean = conn.synchronized {
+      schema: Schema, version: Int, metadataLocation: String): Boolean = conn.synchronized {
     val ps = conn.prepareStatement(
       s"INSERT INTO $TablesTable (catalog_name, table_namespace, table_name," +
         " table_location, pointer_version, metadata_location) VALUES (?,?,?,?,?,?)")
@@ -115,7 +88,7 @@ final class JdbcCatalogStore(uri: String, val catalogName: String)
   /** CAS the pointer: succeeds only if the row still points at
     * `expectedMetadataLocation` (ref `JdbcTableOperations.doCommit`). */
   def casPointer(namespace: String, name: String, expectedMetadataLocation: String,
-      newVersion: Int, newMetadataLocation: String): Boolean = conn.synchronized {
+      schema: Schema, newVersion: Int, newMetadataLocation: String): Boolean = conn.synchronized {
     val ps = conn.prepareStatement(
       s"UPDATE $TablesTable SET pointer_version = ?, metadata_location = ?," +
         " previous_metadata_location = ? WHERE catalog_name = ? AND" +
@@ -131,7 +104,7 @@ final class JdbcCatalogStore(uri: String, val catalogName: String)
 
   /** Point an EXISTING row at a replacement table (RTAS publish). */
   def replacePointer(namespace: String, name: String, tableLocation: String,
-      version: Int, metadataLocation: String): Boolean = conn.synchronized {
+      schema: Schema, version: Int, metadataLocation: String): Boolean = conn.synchronized {
     val ps = conn.prepareStatement(
       s"UPDATE $TablesTable SET table_location = ?, pointer_version = ?," +
         " metadata_location = ?, previous_metadata_location = NULL" +
@@ -242,92 +215,4 @@ object JdbcCatalogStore {
       c.setAutoCommit(true)
       c
     })
-}
-
-/** [[TableOps]] whose current-pointer CAS is a database row instead of an
-  * atomically-renamed file (ref `core/.../jdbc/JdbcTableOperations.java`).
-  * Metadata JSON files still live under `<location>/metadata/`, but with
-  * UNIQUE names (`v{N}-{uuid}.metadata.json`): two racing committers write
-  * two distinct files and the row CAS picks the winner; the loser deletes
-  * its own file. A crashed pre-CAS committer leaves only an unreferenced
-  * file (cleaned by orphan maintenance), never a wedged table.
-  *
-  * `staged = true` keeps every commit local (files written, pointer held in
-  * memory) until [[publish]]/[[publishReplace]] pushes the final pointer
-  * row — the row insert IS the atomic CTAS/RTAS publish. */
-final class JdbcTableOperations(val location: String, val io: FileIO,
-    store: CatalogStore, namespace: String, tableName: String,
-    staged: Boolean = false) extends TableOps {
-
-  @volatile private var local: Option[(Int, String)] = None
-  @volatile private var cached: (String, TableMetadata) = _
-
-  private def metadataDir = s"$location/metadata"
-
-  private def pointer: Option[(Int, String)] =
-    if (staged) local
-    else store.getPointer(namespace, tableName).map(p => (p._1, p._2))
-
-  override def exists: Boolean = pointer.isDefined
-
-  override def current(): (Int, TableMetadata) = {
-    val (v, loc) = pointer.getOrElse(
-      throw new NoSuchTableException(s"No table $namespace.$tableName at $location"))
-    val c = cached
-    val meta =
-      if (c != null && c._1 == loc) c._2
-      else {
-        val m = JsonCodecs.tableMetadataFromJson(io.readString(loc))
-        cached = (loc, m)
-        m
-      }
-    (v, meta)
-  }
-
-  override def commit(expectedVersion: Int, meta: TableMetadata): Boolean = {
-    val prev = pointer
-    if (prev.map(_._1).getOrElse(0) != expectedVersion) return false
-    val withLog = prev match {
-      case Some((_, prevLoc)) => meta.copy(metadataLog = meta.metadataLog :+
-        MetadataLogEntry(System.currentTimeMillis(), prevLoc))
-      case None => meta
-    }
-    val (trimmed, dropped) = MetadataHousekeeping.trim(withLog)
-    io.mkdirs(metadataDir)
-    val ext =
-      if (meta.property("write.metadata.compression-codec", "none") == "gzip")
-        ".gz.metadata.json"
-      else ".metadata.json"
-    val file = s"$metadataDir/v${expectedVersion + 1}-" +
-      s"${java.util.UUID.randomUUID().toString.take(8)}$ext"
-    if (!io.writeAtomic(file, JsonCodecs.tableMetadataToJson(trimmed))) return false
-    val ok =
-      if (staged) synchronized {
-        // single-writer staging: plain check-and-set on the local pointer
-        if (local == prev) { local = Some((expectedVersion + 1, file)); true } else false
-      }
-      else if (prev.isEmpty) store.insertPointer(namespace, tableName, location, 1, file)
-      else store.casPointer(namespace, tableName, prev.get._2, expectedVersion + 1, file)
-    if (!ok) io.delete(file) // uniquely named — always ours to discard
-    else MetadataHousekeeping.deleteQuietly(io, dropped)
-    ok
-  }
-
-  /** Publish a staged table as a NEW row; false if the name was taken. */
-  def publish(): Boolean = local.exists { case (v, loc) =>
-    store.insertPointer(namespace, tableName, location, v, loc)
-  }
-
-  /** Publish a staged table over an existing row (RTAS), or insert if the
-    * row vanished. Returns the replaced table's location for cleanup. */
-  def publishReplace(): Option[String] = local.flatMap { case (v, loc) =>
-    val old = store.getPointer(namespace, tableName)
-    val ok = old match {
-      case Some(_) => store.replacePointer(namespace, tableName, location, v, loc)
-      case None => store.insertPointer(namespace, tableName, location, v, loc)
-    }
-    if (!ok) throw new CommitFailedException(
-      s"Could not publish replacement for $namespace.$tableName")
-    old.map(_._3).filter(_ != location)
-  }
 }

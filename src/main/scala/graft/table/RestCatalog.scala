@@ -11,6 +11,7 @@ import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.meta.Schema
 import graft.meta.model.JsonCodecs
 
 /** A commit whose outcome the client cannot know: the request may have been
@@ -40,6 +41,9 @@ class CommitStateUnknownException(msg: String, cause: Throwable = null)
   *    [[CommitStateUnknownException]] — the server may have applied the
   *    swap, so neither "failed" nor "committed" can be assumed;
   *  - 401 is a loud configuration error (bad/missing bearer token).
+  *
+  * The wire carries only the pointer: the `schema` argument of the pointer
+  * writes is not sent.
   */
 final class RestCatalogStore(baseUri: String, token: Option[String] = None)
     extends CatalogStore {
@@ -121,7 +125,7 @@ final class RestCatalogStore(baseUri: String, token: Option[String] = None)
     }
 
   override def insertPointer(ns: String, name: String, tableLocation: String,
-      version: Int, metadataLocation: String): Boolean =
+      schema: Schema, version: Int, metadataLocation: String): Boolean =
     mutate("POST", s"/v1/namespaces/${enc(ns)}/tables",
       pointerJson(tableLocation, version, metadataLocation) match {
         case j => // carry the table name alongside the pointer fields
@@ -130,12 +134,12 @@ final class RestCatalogStore(baseUri: String, token: Option[String] = None)
       })
 
   override def casPointer(ns: String, name: String, expected: String,
-      newVersion: Int, newMetadataLocation: String): Boolean =
+      schema: Schema, newVersion: Int, newMetadataLocation: String): Boolean =
     mutate("POST", tablePath(ns, name),
       pointerJson("", newVersion, newMetadataLocation, Some(expected)))
 
   override def replacePointer(ns: String, name: String, tableLocation: String,
-      version: Int, metadataLocation: String): Boolean =
+      schema: Schema, version: Int, metadataLocation: String): Boolean =
     mutate("POST", tablePath(ns, name) + "/replace",
       pointerJson(tableLocation, version, metadataLocation))
 
@@ -180,11 +184,14 @@ final class RestCatalogStore(baseUri: String, token: Option[String] = None)
   * tests it runs in-process on an ephemeral port. The server is stateless
   * above its backing store: every request maps to exactly one store call,
   * so horizontal replicas stay correct as long as the store's CAS is (the
-  * same argument the reference makes for its metastore pointer). */
+  * same argument the reference makes for its metastore pointer). The wire
+  * carries no schema, so the backing store's pointer writes get an empty
+  * one: front a store that ignores it (JDBC). */
 final class GraftRestCatalogServer(backing: CatalogStore,
     token: Option[String] = None) {
 
   private var server: HttpServer = _
+  private val NoSchema = Schema(new org.apache.spark.sql.types.StructType())
 
   def start(port: Int = 0): Int = {
     server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
@@ -260,7 +267,7 @@ final class GraftRestCatalogServer(backing: CatalogStore,
         case ("POST", "v1" :: "namespaces" :: ns :: "tables" :: Nil) =>
           val b = readBody(x)
           val ok = backing.insertPointer(dec(ns), b.get("name").asText,
-            b.get("table-location").asText, b.get("pointer-version").asInt,
+            b.get("table-location").asText, NoSchema, b.get("pointer-version").asInt,
             b.get("metadata-location").asText)
           if (ok) send(x, 200) else send(x, 409, """{"error":"table exists"}""")
 
@@ -272,13 +279,13 @@ final class GraftRestCatalogServer(backing: CatalogStore,
         case ("POST", "v1" :: "namespaces" :: ns :: "tables" :: t :: Nil) =>
           val b = readBody(x)
           val ok = backing.casPointer(dec(ns), dec(t),
-            b.get("expected-metadata-location").asText,
+            b.get("expected-metadata-location").asText, NoSchema,
             b.get("pointer-version").asInt, b.get("metadata-location").asText)
           if (ok) send(x, 200) else send(x, 409, """{"error":"commit conflict"}""")
         case ("POST", "v1" :: "namespaces" :: ns :: "tables" :: t :: "replace" :: Nil) =>
           val b = readBody(x)
           val ok = backing.replacePointer(dec(ns), dec(t),
-            b.get("table-location").asText, b.get("pointer-version").asInt,
+            b.get("table-location").asText, NoSchema, b.get("pointer-version").asInt,
             b.get("metadata-location").asText)
           if (ok) send(x, 200) else send(x, 404, """{"error":"no such table"}""")
         case ("DELETE", "v1" :: "namespaces" :: ns :: "tables" :: t :: Nil) =>

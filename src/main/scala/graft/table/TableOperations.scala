@@ -11,8 +11,9 @@ class NoSuchTableException(msg: String) extends RuntimeException(msg)
 /** A table's versioned metadata pointer: read the current (version,
   * metadata) and CAS-commit a successor. Where the pointer lives is the
   * backend's choice — an atomically-renamed file ([[TableOperations]]) or a
-  * database row ([[JdbcTableOperations]]); metadata JSON files themselves
-  * always live under `<location>/metadata/`. */
+  * catalog store's entry ([[PointerTableOperations]]: a database row, a
+  * catalog service or a Hive metastore table); metadata JSON files
+  * themselves always live under `<location>/metadata/`. */
 trait TableOps {
   def location: String
   def io: FileIO

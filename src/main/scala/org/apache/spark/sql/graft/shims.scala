@@ -67,37 +67,6 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema, isStreaming)
 
-  /** Optimizer barrier over MATERIALIZED rows (r13 optimization round): the
-    * plan's physical rows, row-copied (`toRdd` reuses per-partition UnsafeRow
-    * buffers — caching uncopied rows would alias every row in a partition to
-    * the last one) and RDD-level persisted, re-anchored as a `LogicalRDD`
-    * leaf. Downstream consumers share ONE evaluation of the input plan with
-    * no exchange — the persist-flavored alternative to the repartition
-    * barrier idiom (`minHashLshPairs`/`bm25`). Lazy (materializes on the
-    * first action), lineage-preserving (NOT a localCheckpoint — block loss
-    * recomputes), and leak-free: RDD-level persistence is reference-tracked,
-    * so the ContextCleaner drops the blocks once the returned frame becomes
-    * unreachable (a CacheManager `persist` would pin them for the session
-    * AND dedup by canonicalized plan, silently reusing the first call's
-    * blocks across calls). Partitioning follows the INPUT plan (e.g. scan
-    * splits) — callers that relied on the repartition for post-barrier
-    * clustering must re-establish it.
-    *
-    * Measured (BenchOne llm_minhash_persist / llm_bm25, warm-JIT passes,
-    * identical outputs): LOSES to the repartition barrier on local[32] at
-    * sf0.1 — minhash 0.786 s vs 0.745 s, bm25 0.543 s vs 0.497 s (row-object
-    * block reads vs in-memory shuffle; bm25's exchange is additionally
-    * load-bearing for downstream clustering). Kept as the reproducible
-    * experiment harness for re-evaluation on network-bound clusters, where
-    * the exchange crosses the NIC and block reads stay node-local. NOT used
-    * by any production operator. */
-  def persistBarrier(df: org.apache.spark.sql.DataFrame,
-      level: org.apache.spark.storage.StorageLevel =
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK): org.apache.spark.sql.DataFrame = {
-    val rdd = toInternalRdd(df).map(_.copy()).persist(level)
-    internalCreateDataFrame(df.sparkSession, rdd, df.schema)
-  }
-
   /** `CatalogV2Util.v2ColumnsToStructType` is `private[sql]`. */
   def v2ColumnsToStructType(
       cols: Array[org.apache.spark.sql.connector.catalog.Column]): org.apache.spark.sql.types.StructType =

@@ -2,7 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import graft.table.{FileIO, HiveCatalogStore, HiveTableOperations, IceTable}
+import graft.table.{FileIO, HiveCatalogStore, IceTable, PointerTableOperations}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * in-process metastore over embedded Derby (all jars ship with Spark)
   * plays the metastore, locks included — the same client/thrift API a
   * remote deployment would serve. */
-class HiveCatalogSpec extends AnyFunSuite {
+class HiveCatalogSpec extends AnyFunSuite with PointerCatalogBehaviors {
 
   lazy val spark = SparkSessionHelper.spark
 
@@ -54,7 +54,7 @@ class HiveCatalogSpec extends AnyFunSuite {
     catalog
     spark.sql("CREATE TABLE hv.db.cc (id BIGINT)")
     val Some((_, _, loc)) = store.getPointer("db", "cc")
-    def ops = new HiveTableOperations(loc, io, store, "db", "cc")
+    def ops = new PointerTableOperations(loc, io, store, "db", "cc")
     val a = IceTable.loadWith(spark, ops)
     val b = IceTable.loadWith(spark, ops)
     import spark.implicits._
@@ -62,7 +62,8 @@ class HiveCatalogSpec extends AnyFunSuite {
     b.append(Seq(2L).toDF("id"))
     assert(spark.sql("SELECT count(*) c FROM hv.db.cc").head().getLong(0) === 2L)
     val Some((v, mloc, _)) = store.getPointer("db", "cc")
-    assert(!store.casPointer("db", "cc", "not-the-current-location", v + 1, "x"))
+    assert(!store.casPointer("db", "cc", "not-the-current-location", anySchema,
+      v + 1, "x"))
     assert(store.getPointer("db", "cc").get._2 === mloc)
   }
 
@@ -79,6 +80,24 @@ class HiveCatalogSpec extends AnyFunSuite {
     assert(store.getPointer("db", "ctas_fail").isEmpty)
     spark.sql("REPLACE TABLE hv.db.ctas AS SELECT id FROM hv.db.src WHERE id < 7")
     assert(spark.sql("SELECT count(*) c FROM hv.db.ctas").head().getLong(0) === 7L)
+  }
+
+  test("HMS columns follow the table schema after ADD COLUMN and RTAS") {
+    catalog
+    def cols = store.getTable("db", "cols").get.getSd.getCols.asScala
+      .map(c => (c.getName, c.getType)).toSeq
+    spark.sql("CREATE TABLE hv.db.cols (id BIGINT, name STRING)")
+    spark.sql("INSERT INTO hv.db.cols VALUES (1, 'a'), (2, 'b')")
+    assert(cols === Seq(("id", "bigint"), ("name", "string")))
+    // a schema change is a commit: every other metastore client must see it
+    spark.sql("ALTER TABLE hv.db.cols ADD COLUMN score DOUBLE")
+    assert(cols === Seq(("id", "bigint"), ("name", "string"), ("score", "double")))
+    // RTAS swaps to a new schema, including a type Hive deems incompatible
+    // (string -> bigint at the same position)
+    spark.sql("REPLACE TABLE hv.db.cols AS SELECT id, id * 10 AS name FROM hv.db.cols")
+    assert(cols === Seq(("id", "bigint"), ("name", "bigint")))
+    assert(spark.sql("SELECT name FROM hv.db.cols ORDER BY id").collect()
+      .map(_.getLong(0)).toSeq === Seq(10L, 20L))
   }
 
   test("RENAME is an HMS alter: no files move, data stays readable") {
@@ -134,6 +153,8 @@ class HiveCatalogSpec extends AnyFunSuite {
       org.apache.spark.sql.connector.catalog.Identifier.of(
         Array("a", "b"), "nested_t")))
   }
+
+  objectStoreDropPurges(catalog, base, io, store)
 
   test("DML and time travel work through the hive catalog") {
     catalog
@@ -191,7 +212,7 @@ class HiveCatalogSpec extends AnyFunSuite {
     io.writeString(s"$loc/metadata/v${v + 1}-deadbeef.metadata.json",
       io.readString(mloc))
     import spark.implicits._
-    IceTable.loadWith(spark, new HiveTableOperations(loc, io, store, "db", "orphan"))
+    IceTable.loadWith(spark, new PointerTableOperations(loc, io, store, "db", "orphan"))
       .append(Seq(7L).toDF("id"))
     assert(spark.sql("SELECT id FROM hv.db.orphan").head().getLong(0) === 7L)
     assert(store.getPointer("db", "orphan").get._1 === v + 1)

@@ -1,6 +1,6 @@
 package graft
 
-import graft.table.{FileIO, IceTable, JdbcCatalogStore, JdbcTableOperations}
+import graft.table.{FileIO, IceTable, JdbcCatalogStore, PointerTableOperations}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `UPDATE ... WHERE metadata_location = ?` — the commit protocol that
   * survives object stores with no atomic rename. Embedded Derby (shipped
   * with Spark) plays the database. */
-class JdbcCatalogSpec extends AnyFunSuite {
+class JdbcCatalogSpec extends AnyFunSuite with PointerCatalogBehaviors {
 
   lazy val spark = SparkSessionHelper.spark
 
@@ -48,7 +48,7 @@ class JdbcCatalogSpec extends AnyFunSuite {
     catalog
     spark.sql("CREATE TABLE grj.db.cc (id BIGINT)")
     val Some((_, _, loc)) = store.getPointer("db", "cc")
-    def ops = new JdbcTableOperations(loc, io, store, "db", "cc")
+    def ops = new PointerTableOperations(loc, io, store, "db", "cc")
     val a = IceTable.loadWith(spark, ops)
     val b = IceTable.loadWith(spark, ops)
     import spark.implicits._
@@ -59,7 +59,8 @@ class JdbcCatalogSpec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) c FROM grj.db.cc").head().getLong(0) === 2L)
     // a raw stale CAS (old metadata_location) must fail, not clobber
     val Some((v, mloc, _)) = store.getPointer("db", "cc")
-    assert(!store.casPointer("db", "cc", "not-the-current-location", v + 1, "x"))
+    assert(!store.casPointer("db", "cc", "not-the-current-location", anySchema,
+      v + 1, "x"))
     assert(store.getPointer("db", "cc").get._2 === mloc)
   }
 
@@ -109,20 +110,7 @@ class JdbcCatalogSpec extends AnyFunSuite {
       .map(_.getString(0)).toSet.contains("nsx"))
   }
 
-  test("DROP of an object-store-layout table purges the hashed files") {
-    catalog
-    val bucket = s"$base/objbucket"
-    spark.sql("CREATE TABLE grj.db.objdrop (k INT) TBLPROPERTIES (" +
-      "'write.object-storage.enabled' = 'true', " +
-      s"'write.object-storage.path' = '$bucket')")
-    spark.sql("INSERT INTO grj.db.objdrop VALUES (1), (2)")
-    assert(io.listRecursive(bucket).nonEmpty, "files should land in the bucket")
-    spark.sql("DROP TABLE grj.db.objdrop")
-    assert(store.getPointer("db", "objdrop").isEmpty)
-    assert(io.listRecursive(bucket).isEmpty,
-      "hashed data files must not leak after DROP")
-    assert(!io.exists(s"$base/wh/db/objdrop"))
-  }
+  objectStoreDropPurges(catalog, base, io, store)
 
   test("DML and time travel work through the jdbc catalog") {
     catalog
@@ -161,7 +149,7 @@ class JdbcCatalogSpec extends AnyFunSuite {
     io.writeString(s"$loc/metadata/v${v + 1}-deadbeef.metadata.json",
       io.readString(mloc))
     import spark.implicits._
-    IceTable.loadWith(spark, new JdbcTableOperations(loc, io, store, "db", "orphan"))
+    IceTable.loadWith(spark, new PointerTableOperations(loc, io, store, "db", "orphan"))
       .append(Seq(7L).toDF("id"))
     assert(spark.sql("SELECT id FROM grj.db.orphan").head().getLong(0) === 7L)
     assert(store.getPointer("db", "orphan").get._1 === v + 1)

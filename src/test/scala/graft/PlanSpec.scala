@@ -29,25 +29,6 @@ class PlanSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.codegen.fallback", old)
   }
 
-  test("persistBarrier preserves every row (copies the reused UnsafeRow buffer)") {
-    // toRdd reuses per-partition row buffers: persisting UNCOPIED rows would
-    // alias every cached row in a partition to the last one. The barrier
-    // must copy — this pins it with >1 row per partition and verifies both
-    // the barrier fence (LogicalRDD leaf) and repeated consumption.
-    val src = spark.range(0, 1000, 1, numPartitions = 4)
-      .select(col("id"), (col("id") * 7).as("v"))
-    val barred = ColumnBridge.persistBarrier(src)
-    assert(barred.queryExecution.analyzed.collect {
-      case _: org.apache.spark.sql.execution.LogicalRDD => 1 }.sum == 1,
-      "barrier must re-anchor as a LogicalRDD leaf")
-    val expected = src.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // consume twice: the second read comes from the persisted blocks
-    (1 to 2).foreach { _ =>
-      val got = barred.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(got == expected, "persisted rows must equal the source rows")
-    }
-  }
-
   test("merge rewrite join is broadcastable (no SortMergeJoin for a small source)") {
     val loc = java.nio.file.Files.createTempDirectory("graft-plan-").toString
     val t = IceTable.create(spark, s"$loc/t",

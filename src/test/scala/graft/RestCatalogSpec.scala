@@ -1,6 +1,7 @@
 package graft
 
-import graft.table.{CatalogStore, CommitStateUnknownException, FileIO, GraftRestCatalogServer, IceTable, JdbcCatalogStore, JdbcTableOperations, RestCatalogStore}
+import graft.meta.Schema
+import graft.table.{CatalogStore, CommitStateUnknownException, FileIO, GraftRestCatalogServer, IceTable, JdbcCatalogStore, PointerTableOperations, RestCatalogStore}
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,10 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * service (embedded pure-JDK server fronting the JDBC store — the
   * production deployment shape: one service owning auth + the commit point,
   * many Spark clusters doing small pointer requests). Everything above the
-  * pointer is the shared [[JdbcTableOperations]] CAS protocol, so this
+  * pointer is the shared [[PointerTableOperations]] CAS protocol, so this
   * suite focuses on the REST-specific seams: auth, clean-conflict vs
   * commit-state-UNKNOWN, and wire round-trips of awkward names. */
-class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll
+    with PointerCatalogBehaviors {
 
   lazy val spark = SparkSessionHelper.spark
 
@@ -26,14 +28,15 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     * mid-commit and observe the service answer 500. */
   private final class FlakyStore(d: CatalogStore) extends CatalogStore {
     @volatile var failCas = false
-    override def casPointer(ns: String, n: String, e: String, v: Int, m: String): Boolean =
+    override def casPointer(ns: String, n: String, e: String, s: Schema, v: Int,
+        m: String): Boolean =
       if (failCas) throw new RuntimeException("backing store down")
-      else d.casPointer(ns, n, e, v, m)
+      else d.casPointer(ns, n, e, s, v, m)
     override def getPointer(ns: String, n: String) = d.getPointer(ns, n)
-    override def insertPointer(ns: String, n: String, tl: String, v: Int, ml: String) =
-      d.insertPointer(ns, n, tl, v, ml)
-    override def replacePointer(ns: String, n: String, tl: String, v: Int, ml: String) =
-      d.replacePointer(ns, n, tl, v, ml)
+    override def insertPointer(ns: String, n: String, tl: String, s: Schema, v: Int,
+        ml: String) = d.insertPointer(ns, n, tl, s, v, ml)
+    override def replacePointer(ns: String, n: String, tl: String, s: Schema, v: Int,
+        ml: String) = d.replacePointer(ns, n, tl, s, v, ml)
     override def dropPointer(ns: String, n: String) = d.dropPointer(ns, n)
     override def renamePointer(fns: String, fn: String, tns: String, tn: String) =
       d.renamePointer(fns, fn, tns, tn)
@@ -94,7 +97,7 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     catalog
     spark.sql("CREATE TABLE grc.db.cc (id BIGINT)")
     val Some((_, _, loc)) = store.getPointer("db", "cc")
-    def ops = new JdbcTableOperations(loc, io, store, "db", "cc")
+    def ops = new PointerTableOperations(loc, io, store, "db", "cc")
     val a = IceTable.loadWith(spark, ops)
     val b = IceTable.loadWith(spark, ops)
     import spark.implicits._
@@ -103,7 +106,8 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT count(*) c FROM grc.db.cc").head().getLong(0) === 2L)
     // a stale CAS answers 409 → clean false, pointer untouched
     val Some((v, mloc, _)) = store.getPointer("db", "cc")
-    assert(!store.casPointer("db", "cc", "not-the-current-location", v + 1, "x"))
+    assert(!store.casPointer("db", "cc", "not-the-current-location", anySchema,
+      v + 1, "x"))
     assert(store.getPointer("db", "cc").get._2 === mloc)
   }
 
@@ -111,7 +115,7 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     catalog
     spark.sql("CREATE TABLE grc.db.unk (id BIGINT)")
     val Some((v0, mloc0, loc)) = store.getPointer("db", "unk")
-    val t = IceTable.loadWith(spark, new JdbcTableOperations(loc, io, store, "db", "unk"))
+    val t = IceTable.loadWith(spark, new PointerTableOperations(loc, io, store, "db", "unk"))
     import spark.implicits._
     backing.failCas = true
     try {
@@ -176,6 +180,8 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getString(0)).toSet.contains("nsx"))
   }
 
+  objectStoreDropPurges(catalog, base, io, store)
+
   test("DML and time travel work through the service catalog") {
     catalog
     spark.sql("CREATE TABLE grc.db.dml (id BIGINT, v STRING)")
@@ -210,7 +216,7 @@ class RestCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ns = "wiré"
     assert(store.createNamespace(ns))
     assert(store.namespaceExists(ns))
-    assert(store.insertPointer(ns, "t 1+x", s"$base/wh/wire/t1", 1,
+    assert(store.insertPointer(ns, "t 1+x", s"$base/wh/wire/t1", anySchema, 1,
       s"$base/wh/wire/t1/metadata/v1-abc.metadata.json"))
     assert(store.getPointer(ns, "t 1+x").map(_._1) === Some(1))
     assert(store.listTables(ns) === Seq("t 1+x"))
