@@ -841,6 +841,41 @@ object GraftReadPlanner {
 
   final case class Planned(partitions: Array[GraftInputPartition], columnar: Boolean)
 
+  /** Readers built by [[ReaderMemo]]s — lets tests pin how many readers a
+    * scan builds. */
+  private[graft] val readerBuilds = new java.util.concurrent.atomic.AtomicLong()
+
+  type FileReader = PartitionedFile => Iterator[InternalRow]
+
+  /** One reader per distinct (format, write schema, required schema,
+    * filters, vectorized, options): `ColumnBridge.fileReader` may clone the
+    * session and broadcasts a Hadoop conf on every call, 10–14 ms a build.
+    * Groups differ mostly by partition tuple (key-grouped scans split per
+    * partition, so a 200k-file table is thousands of groups) and a
+    * merge-on-read scan plans once per applicability class; one memo per
+    * scan makes that one build per schema era and delete-key family. */
+  final class ReaderMemo {
+    private val built = scala.collection.mutable.HashMap.empty[
+      (String, StructType, StructType, Seq[Filter], Boolean, Map[String, String]),
+      (FileReader, Boolean)]
+
+    def apply(spark: SparkSession, format: String, writeSchema: StructType,
+        required: StructType, filters: Seq[Filter], vectorized: Boolean,
+        options: Map[String, String]): (FileReader, Boolean) = synchronized {
+      built.getOrElseUpdate(
+        (format, writeSchema, required, filters, vectorized, options), {
+          readerBuilds.incrementAndGet()
+          ColumnBridge.fileReader(spark, format, writeSchema, required,
+            filters, vectorized, options)
+        })
+    }
+
+    /** A row reader (delete files). */
+    def rows(spark: SparkSession, format: String, schema: StructType,
+        options: Map[String, String]): FileReader =
+      apply(spark, format, schema, schema, Nil, vectorized = false, options)._1
+  }
+
   /** @param wantKeys group per partition tuple and attach partition keys
     *                 (caller guarantees a single all-identity spec)
     * @param pushedV1 data-source filters in CURRENT-schema names; forwarded
@@ -863,7 +898,8 @@ object GraftReadPlanner {
         * read-side bin-packing follows the session the caller configured
         * (binPack compaction packs with open cost 0: each task carries
         * ~target BYTES of small files, not target-minus-padding). */
-      openCostOverride: Option[Long] = None): Planned = {
+      openCostOverride: Option[Long] = None,
+      readers: ReaderMemo = new ReaderMemo): Planned = {
     if (files.isEmpty) return Planned(Array.empty, columnar = false)
     val schema = m.schema
     val inject = m.property(TableProperties.InjectPartitionConstants, "false").toBoolean
@@ -1008,14 +1044,12 @@ object GraftReadPlanner {
         encryption, "parquet",
         m.property(TableProperties.EncryptionRequired, "false").toBoolean)
       val posReader = if (posDeletes.isEmpty) null
-        else ColumnBridge.fileRowReader(spark, "parquet", posSchema, posSchema,
-          delOpts)
+        else readers.rows(spark, "parquet", posSchema, delOpts)
       val eqGroups = eqMetaGroups.map { case (ids, fs) =>
         val keySchema = StructType(ids.map(id =>
           StructField(schema.fieldName(id), schema.fieldType(id))))
         GraftEqDeletes(fs.map(whole).toArray,
-          ColumnBridge.fileRowReader(spark, "parquet", keySchema, keySchema,
-            delOpts),
+          readers.rows(spark, "parquet", keySchema, delOpts),
           ids.map(id => extNames.indexOf(schema.fieldName(id))).toArray,
           ids.map(id => schema.fieldType(id): DataType).toArray)
       }
@@ -1045,24 +1079,11 @@ object GraftReadPlanner {
     // disk-coordinate, the container syncs within the decrypted stream),
     // parquet through modular decryption (factory + manager on the conf)
     def build(vectorized: Boolean): Option[Planned] = {
-      // ONE reader per distinct (format, write schema, required, filters):
-      // groups differ mostly by PARTITION TUPLE (wantKeys splits per
-      // partition — a 200k-file table is thousands of groups), and
-      // fileReader clones the session + broadcasts a conf per call. Without
-      // this memo a plan at that scale spent ~9 ms × groups (~29 s at 200k
-      // files, measured — PlanScaleHarness/BASELINE r13); with it, one
-      // build per schema era.
-      val readerCache = scala.collection.mutable.HashMap.empty[
-        (String, StructType, StructType, Seq[Filter]),
-        (org.apache.spark.sql.execution.datasources.PartitionedFile =>
-          Iterator[InternalRow], Boolean)]
       val partitions = plans.flatMap { p =>
-        val (reader, batches) = readerCache.getOrElseUpdate(
-          (p.format, p.writeSchema, p.required, p.filters),
-          ColumnBridge.fileReader(spark, p.format,
-            p.writeSchema, p.required, p.filters, vectorized,
-            graft.table.EncryptionManagers.contentOptionsFor(encryption, p.format,
-              m.property(TableProperties.EncryptionRequired, "false").toBoolean)))
+        val (reader, batches) = readers(spark, p.format, p.writeSchema,
+          p.required, p.filters, vectorized,
+          graft.table.EncryptionManagers.contentOptionsFor(encryption, p.format,
+            m.property(TableProperties.EncryptionRequired, "false").toBoolean))
         if (vectorized && !batches) return None
         // synthesized positions need the whole file in one slice (a byte
         // range's first-row ordinal is unknown without reading the file);
@@ -1185,9 +1206,13 @@ object GraftBatchScan {
   val OutLastUpdated: Int = -5
 }
 
-final class GraftBatchScan(val table: IceTable, filter: GExpr,
+final class GraftBatchScan(val table: IceTable,
+    /** The builder's scan: its pinned metadata answers every metadata
+      * question of this scan, and it plans the tasks (snapshot selection
+      * already applied; filter, range and sampling applied here). */
+    scan: graft.table.TableScan,
+    filter: GExpr,
     projection: StructType, pushedV1: Seq[Filter],
-    snapshotId: Option[Long], asOfMillis: Option[Long],
     splitSize: Option[Long], streamSkipDeletes: Boolean,
     maxFilesPerTrigger: Option[Int] = None,
     deletes: Seq[(DataFileMeta, Long)] = Nil,
@@ -1213,18 +1238,16 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
   private var runtimeV1: Seq[Filter] = Nil
   @transient private var cachedTasks: Seq[FileScanTask] = _
   @transient private var cachedPlan: GraftReadPlanner.Planned = _
+  // one reader per distinct reader shape for the whole scan: every
+  // applicability class, the delete readers and the row fallback share it
+  @transient private lazy val readers = new GraftReadPlanner.ReaderMemo
 
-  private def newGraftScan() = {
-    var s = table.newScan()
-    snapshotId.foreach(id => s = s.useSnapshot(id))
-    asOfMillis.foreach(ts => s = s.asOfTime(ts))
-    appendsRange.foreach { case (from, to) => s = s.appendsBetween(from, to) }
-    sample.foreach { case (f, sd) => s = s.sampleFiles(f, sd) }
-    val combined = GAnd(filter, runtimeExpr)
-    if (combined != TrueExpr) s = s.filter(combined)
-    if (projection.nonEmpty) s = s.select(projection.fieldNames.toSeq: _*)
-    s
-  }
+  appendsRange.foreach { case (from, to) => scan.appendsBetween(from, to) }
+  sample.foreach { case (f, sd) => scan.sampleFiles(f, sd) }
+  if (filter != TrueExpr) scan.filter(filter)
+
+  /** The scan's pinned metadata. */
+  private def meta: TableMetadata = scan.meta
 
   /** LIMIT n file cap: every planned row is visible (builder pushes a limit
     * only with no filter and no deletes), so the shortest file prefix whose
@@ -1247,7 +1270,7 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
 
   private def tasks: Seq[FileScanTask] = synchronized {
     if (cachedTasks == null) cachedTasks =
-      explicitTasks.getOrElse(capByLimit(newGraftScan().planFiles()))
+      explicitTasks.getOrElse(capByLimit(scan.planFiles()))
     cachedTasks
   }
 
@@ -1287,14 +1310,6 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
       startSnapshotId = appendsRange.map(_._1))
   }
 
-  /** The snapshot this scan reads (explicit pin > time travel > current). */
-  private def effectiveSnapshotId: Option[Long] = {
-    val m = table.meta
-    snapshotId
-      .orElse(asOfMillis.flatMap(ts => m.snapshotAsOf(ts).map(_.snapshotId)))
-      .orElse(m.currentSnapshotId)
-  }
-
   /** Column stats from the snapshot-pinned stats file (if ANALYZE ran for
     * exactly this snapshot) for the projected columns, keyed the way
     * `DataSourceV2Relation.transformV2Stats` matches attributes. NDV /
@@ -1305,11 +1320,11 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
     val out = new java.util.HashMap[NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
     for {
-      snap <- effectiveSnapshotId
+      snap <- scan.snapshot.map(_.snapshotId)
       if appendsRange.isEmpty // range reads see a subset of the profile
-      stats <- graft.table.TableStats.forSnapshot(table, snap)
+      stats <- graft.table.TableStats.forSnapshot(table.io, meta, snap)
     } {
-      val schema = table.meta.schema
+      val schema = meta.schema
       val idToName = schema.idToName
       val projected = projection.fieldNames.toSet
       // bounds ride as Catalyst-INTERNAL values (ColumnStat's contract):
@@ -1394,7 +1409,7 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
       case YearTransform | MonthTransform | DayTransform | HourTransform => true
       case _ => false
     }
-    val s = table.meta.spec
+    val s = meta.spec
     if (deletes.isEmpty && s.isPartitioned && s.fields.forall(f => spjAble(f.transform)) &&
       tasks.nonEmpty && tasks.forall(_.file.specId == s.specId)) Some(s)
     else None
@@ -1403,7 +1418,7 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
   override def outputPartitioning(): Partitioning = keyedSpec match {
     case Some(spec) =>
       import graft.meta.transforms._
-      val schema = table.meta.schema
+      val schema = meta.schema
       val keys = spec.fields.map { f =>
         val name = schema.idToName(f.sourceId)
         f.transform match {
@@ -1444,7 +1459,7 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
   override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions => VE,
       NullOrdering, SortDirection}
-    val m = table.meta
+    val m = meta
     val order = m.sortOrder
     if (order.fields.isEmpty || deletes.nonEmpty || outCols != null ||
         appendsRange.nonEmpty) return Array.empty
@@ -1469,7 +1484,7 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
 
   override def planInputPartitions(): Array[InputPartition] = synchronized {
     if (cachedPlan == null) {
-      val m = table.meta
+      val m = meta
       val split = splitSize
         .orElse(m.properties.get(TableProperties.SplitSize).map(_.toLong))
         .getOrElse(TableProperties.SplitSizeDefault)
@@ -1490,7 +1505,7 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
           encryption = table.io.encryption,
           seqs = if (!wantLineage) Map.empty
             else group.map(t => t.file.path -> t.seq).toMap,
-          openCostOverride = openCostOverride)
+          openCostOverride = openCostOverride, readers = readers)
       }
       cachedPlan = GraftReadPlanner.Planned(
         planned.flatMap(_.partitions).toArray,
@@ -1507,8 +1522,9 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
     * task list: runtime filters cannot prune it. */
   override def filterAttributes(): Array[NamedReference] = {
     if (explicitTasks.nonEmpty) return Array.empty
-    val schema = table.meta.schema
-    table.meta.specs.flatMap(_.fields).map(_.sourceId).distinct
+    val m = meta
+    val schema = m.schema
+    m.specs.flatMap(_.fields).map(_.sourceId).distinct
       .flatMap(schema.idToName.get).map(Expressions.column).toArray
   }
 
@@ -1517,7 +1533,10 @@ final class GraftBatchScan(val table: IceTable, filter: GExpr,
     val conv = v1.flatMap(f => SparkFilterConv.fromV1(f).map(f -> _))
     if (conv.nonEmpty) synchronized {
       runtimeV1 = runtimeV1 ++ conv.map(_._1)
-      runtimeExpr = conv.map(_._2).foldLeft(runtimeExpr)(GAnd(_, _))
+      val added = conv.map(_._2).reduce(GAnd(_, _))
+      runtimeExpr = GAnd(runtimeExpr, added)
+      // re-plans from the same pinned metadata
+      scan.filter(added)
       cachedTasks = null
       cachedPlan = null
     }

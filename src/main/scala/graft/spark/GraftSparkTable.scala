@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.meta.expr.{And => GAnd, Expr => GExpr, SparkConv, TrueExpr}
 import graft.meta.model.DataFileMeta
-import graft.table.{FileScanTask, IceTable, SparkFilterConv}
+import graft.table.{FileScanTask, IceTable, SparkFilterConv, TableScan}
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext}
@@ -35,6 +35,10 @@ class GraftSparkTable(val table: IceTable, fullName: String,
 
   override def name(): String = fullName
 
+  /** The metadata an explicit read's tasks came from, else the current. */
+  private def meta: graft.meta.model.TableMetadata =
+    explicit.map(_.meta).getOrElse(table.meta)
+
   /** Row-lineage metadata columns (ref `core/.../MetadataColumns.java:35-39`
     * `_file`/`_pos`): the data file a row came from (the manifest path) and
     * its ordinal within that file — the coordinates position deletes use.
@@ -42,7 +46,7 @@ class GraftSparkTable(val table: IceTable, fullName: String,
     * metadata column. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] = {
-    val dataNames = table.schema.struct.fieldNames.toSet
+    val dataNames = meta.schema.struct.fieldNames.toSet
     GraftSparkTable.MetaCols.filterNot(c => dataNames.contains(c.name()))
   }
 
@@ -59,13 +63,15 @@ class GraftSparkTable(val table: IceTable, fullName: String,
     table.delete(expr)
   }
 
-  override def schema(): StructType = table.schema.struct
+  override def schema(): StructType = meta.schema.struct
 
-  override def partitioning(): Array[Transform] =
-    GraftCatalog.toTransforms(table.schema, table.spec)
+  override def partitioning(): Array[Transform] = {
+    val m = meta
+    GraftCatalog.toTransforms(m.schema, m.spec)
+  }
 
   override def properties(): util.Map[String, String] =
-    table.meta.properties.asJava
+    meta.properties.asJava
 
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(
@@ -83,12 +89,13 @@ class GraftSparkTable(val table: IceTable, fullName: String,
     * `VERSION/TIMESTAMP AS OF` arrives through the constructor instead; an
     * explicit option wins. */
   override def newScanBuilder(options: org.apache.spark.sql.util.CaseInsensitiveStringMap): ScanBuilder = {
+    lazy val m = meta
     val refSnap = Option(options.get("branch")).orElse(Option(options.get("tag")))
       .map { name =>
         if (name == graft.meta.model.SnapshotRefMeta.MainBranch)
-          table.meta.currentSnapshotId.getOrElse(throw new graft.table.ValidationException(
+          m.currentSnapshotId.getOrElse(throw new graft.table.ValidationException(
             "Table has no current snapshot"))
-        else table.meta.refs.getOrElse(name,
+        else m.refs.getOrElse(name,
           throw new graft.table.ValidationException(s"Unknown ref: $name")).snapshotId
       }
     val snap = Option(options.get("snapshot-id")).map(_.toLong)
@@ -102,7 +109,7 @@ class GraftSparkTable(val table: IceTable, fullName: String,
     // plan only the files appended in (start, end]
     val appendsRange = Option(options.get("start-snapshot-id")).map(_.toLong).map { from =>
       val to = Option(options.get("end-snapshot-id")).map(_.toLong)
-        .orElse(table.meta.currentSnapshotId).getOrElse(
+        .orElse(m.currentSnapshotId).getOrElse(
           throw new graft.table.ValidationException("Table has no snapshot"))
       (from, to)
     }
@@ -202,9 +209,13 @@ object GraftSparkTable {
 /** A read of exactly `tasks` with exactly `deletes` applied, instead of a
   * snapshot's planned files (`Reads.readTasksWithDeletes`: the Scala scan
   * API and every internal read). Tasks pack to `splitSize`, weighing each
-  * slice at least `openCost` when given (else the table property). */
+  * slice at least `openCost` when given (else the table property). `meta`
+  * is the metadata the tasks were planned from: the read resolves its
+  * schema, properties and field IDs against it, never re-reading the
+  * table pointer. */
 final case class ExplicitRead(tasks: Seq[FileScanTask],
-    deletes: Seq[(DataFileMeta, Long)], splitSize: Long, openCost: Option[Long])
+    deletes: Seq[(DataFileMeta, Long)], splitSize: Long, openCost: Option[Long],
+    meta: graft.meta.model.TableMetadata)
 
 final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     asOfMillis: Option[Long], splitSize: Option[Long] = None,
@@ -217,9 +228,22 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {
 
+  /** The query's one scan: planned deletes here, then tasks in the batch
+    * scan, all from the metadata it pins at its first planning call (an
+    * explicit read's scan is pinned to its tasks' metadata and never
+    * plans). */
+  private val scan: TableScan = explicit match {
+    case Some(e) => table.newScan(e.meta)
+    case None =>
+      var s = table.newScan()
+      snapshotId.foreach(id => s = s.useSnapshot(id))
+      asOfMillis.foreach(ts => s = s.asOfTime(ts))
+      s
+  }
+
   private var pushedExpr: GExpr = TrueExpr
   private var pushed: Array[Filter] = Array.empty
-  private var requiredSchema: StructType = table.schema.struct
+  private var requiredSchema: StructType = scan.meta.schema.struct
   // requested _file/_pos metadata columns, in their requested positions
   // relative to the data columns (Spark appends them after data columns;
   // the permutation keeps us correct either way)
@@ -256,7 +280,7 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
 
   override def pruneColumns(requiredSchema: StructType): Unit = {
     // resolve against the table schema to keep field-ID metadata
-    val byName = table.schema.struct.fields.map(f => f.name -> f).toMap
+    val byName = scan.meta.schema.struct.fields.map(f => f.name -> f).toMap
     val (meta, data) = requiredSchema.fields.zipWithIndex.partition {
       case (f, _) => !byName.contains(f.name) &&
         GraftSparkTable.MetaColNames.contains(f.name)
@@ -294,21 +318,14 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
       out
     }
 
-  private def baseScan() = {
-    var s = table.newScan()
-    snapshotId.foreach(id => s = s.useSnapshot(id))
-    asOfMillis.foreach(ts => s = s.asOfTime(ts))
-    s
-  }
-
-  // planned once per query: pushAggregation and build() both ask — on a
-  // table with thousands of manifests a second walk doubles compile-time IO
-  private lazy val plannedDeletes = baseScan().planDeletes()
+  // planned once per query: pushLimit, pushAggregation and build() all ask
+  private lazy val plannedDeletes = scan.planDeletes()
 
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     import org.apache.spark.sql.connector.expressions.aggregate.{Count, CountStar, Max, Min}
     import org.apache.spark.sql.types._
-    if (!table.meta.property("read.aggregate-pushdown.enabled", "true").toBoolean)
+    val m = scan.meta
+    if (!m.property("read.aggregate-pushdown.enabled", "true").toBoolean)
       return false
     // metadata aggregates answer over the WHOLE snapshot; an incremental
     // scan sees only a range's appends, a sampled scan only its files, an
@@ -318,7 +335,7 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     // post-scan filters remain, and we always keep filters post-scan
     if (aggregation.groupByExpressions.nonEmpty || pushedExpr != TrueExpr)
       return false
-    val schema = table.meta.schema
+    val schema = m.schema
     def fieldIdOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[Int] =
       e match {
         case nr: org.apache.spark.sql.connector.expressions.NamedReference
@@ -343,7 +360,7 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
     }
     if (!supported) return false
     if (plannedDeletes.nonEmpty) return false // MoR deletes hide rows
-    val files = baseScan().planFiles().map(_.file)
+    val files = scan.planFiles().map(_.file)
     def allNull(f: graft.meta.model.DataFileMeta, id: Int): Boolean =
       f.nullCounts.get(id).contains(f.recordCount)
     def bound(id: Int, lower: Boolean): Option[(DataType, Any)] = {
@@ -389,8 +406,8 @@ final class GraftScanBuilder(table: IceTable, snapshotId: Option[Long],
       // storage-partitioned joins); merge-on-read deletes apply inside its
       // readers. Incremental reads see appended files only: deletes don't
       // apply by contract. An explicit read scans its own tasks and deletes.
-      new GraftBatchScan(table, pushedExpr, requiredSchema, pushed.toSeq,
-        snapshotId, asOfMillis, explicit.map(_.splitSize).orElse(splitSize),
+      new GraftBatchScan(table, scan, pushedExpr, requiredSchema, pushed.toSeq,
+        explicit.map(_.splitSize).orElse(splitSize),
         streamSkipDeletes, maxFilesPerTrigger,
         deletes = explicit.map(_.deletes).getOrElse(
           if (appendsRange.nonEmpty) Nil else plannedDeletes),

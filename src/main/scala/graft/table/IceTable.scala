@@ -65,6 +65,10 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
 
   def newScan(): TableScan = new TableScan(this)
 
+  /** A scan pinned to `m` instead of the metadata current at its first
+    * planning call (reads of tasks already planned from `m`). */
+  private[graft] def newScan(m: TableMetadata): TableScan = new TableScan(this, Some(m))
+
   /** Current-snapshot DataFrame (all columns). */
   def toDF: DataFrame = newScan().toDF
 
@@ -525,10 +529,9 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       snap: SnapshotMeta): Seq[ManifestFileMeta] =
     JsonCodecs.manifestListFromJson(io.readString(snap.manifestList), m.schema, m.specById)
 
-  private[table] def liveEntries(m: TableMetadata, snap: SnapshotMeta,
-      manifestFilter: ManifestFileMeta => Boolean = _ => true): Seq[ManifestEntry] =
-    ManifestIO.readAll(io, readManifestList(m, snap).filter(m0 =>
-        m0.hasLiveFiles && manifestFilter(m0)), m.schema, m.specById)
+  private[table] def liveEntries(m: TableMetadata, snap: SnapshotMeta): Seq[ManifestEntry] =
+    ManifestIO.readAll(io, readManifestList(m, snap).filter(_.hasLiveFiles),
+        m.schema, m.specById)
       .flatMap(_._2).filter(_.status != EntryStatus.Deleted)
 
   private[table] def newSnapshotId(): Long =
@@ -1014,7 +1017,15 @@ object IceTable {
 /** Scan builder (ref `api/.../TableScan.java`): filter + projection +
   * snapshot selection, planned through the pruning cascade
   * manifest-summaries → partition values → file metrics → residual
-  * (SURVEY §3.1). */
+  * (SURVEY §3.1).
+  *
+  * A scan plans from the table metadata current at its FIRST planning call
+  * (`planFiles`, `planDeletes`, `toDF`, `useRef`): that one pointer read
+  * pins the snapshot, so data files and delete files always come from the
+  * same snapshot even when a commit lands between the calls. The calls
+  * share one read of the manifest list and one read of each manifest; the
+  * parsed entries are dropped once both files and deletes are planned. A
+  * commit after the pin is seen by a new scan, not by this one. */
 object TableScan {
   /** Metadata columns exposed by `withRowPositions()` (ref
     * `core/.../MetadataColumns.java` `_file`/`_pos`). */
@@ -1022,7 +1033,8 @@ object TableScan {
   val MetaPosCol = "_gf_pos"
 }
 
-final class TableScan private[table] (table: IceTable) {
+final class TableScan private[table] (table: IceTable,
+    pinned: Option[TableMetadata] = None) {
   private var filterExpr: Expr = TrueExpr
   private var projection: Option[Seq[String]] = None
   private var snapshotId: Option[Long] = None
@@ -1089,9 +1101,47 @@ final class TableScan private[table] (table: IceTable) {
   /** Scan the head of a named ref (branch or tag); `main` is a no-op. */
   def useRef(name: String): TableScan =
     if (name == SnapshotRefMeta.MainBranch) this
-    else useSnapshot(table.meta.refs.getOrElse(name,
+    else useSnapshot(meta.refs.getOrElse(name,
       throw new ValidationException(s"Unknown ref: $name")).snapshotId)
   def asOfTime(timestampMillis: Long): TableScan = { asOfMillis = Some(timestampMillis); this }
+
+  private var pin: TableMetadata = pinned.orNull
+  // the chosen snapshot's manifest list, and parsed live entries per
+  // manifest path shared by planFiles and planDeletes
+  private var manifests: (Long, Seq[ManifestFileMeta]) = _
+  private val parsed = scala.collection.mutable.HashMap.empty[String, Seq[ManifestEntry]]
+  private var filesPlanned = false
+  private var deletesPlanned = false
+
+  /** The metadata this scan plans from: read once, at the first planning
+    * call. */
+  private[graft] def meta: TableMetadata = synchronized {
+    if (pin == null) pin = table.meta
+    pin
+  }
+
+  /** The snapshot this scan reads (explicit id > time travel > current). */
+  private[graft] def snapshot: Option[SnapshotMeta] = chooseSnapshot(meta)
+
+  /** Live entries of the manifests of `snap` that pass `keep`; each
+    * manifest is read at most once while this scan plans. */
+  private def liveEntries(m: TableMetadata, snap: SnapshotMeta,
+      keep: ManifestFileMeta => Boolean): Seq[ManifestEntry] = synchronized {
+    if (manifests == null || manifests._1 != snap.snapshotId)
+      manifests = (snap.snapshotId, table.readManifestList(m, snap))
+    val wanted = manifests._2.filter(mf => mf.hasLiveFiles && keep(mf))
+    ManifestIO.readAll(table.io, wanted.filterNot(mf => parsed.contains(mf.path)),
+        m.schema, m.specById)
+      .foreach { case (mf, es) => parsed(mf.path) = es.filter(_.status != EntryStatus.Deleted) }
+    wanted.flatMap(mf => parsed(mf.path))
+  }
+
+  /** Marks one planning half done; once both have run, the parsed entries
+    * go (a plan cached by Spark keeps its tasks, not the manifests). */
+  private def planned(files: Boolean): Unit = synchronized {
+    if (files) filesPlanned = true else deletesPlanned = true
+    if (filesPlanned && deletesPlanned) parsed.clear()
+  }
 
   private def chooseSnapshot(m: TableMetadata): Option[SnapshotMeta] =
     snapshotId.map(id => m.snapshot(id).getOrElse(
@@ -1100,8 +1150,11 @@ final class TableScan private[table] (table: IceTable) {
         throw new ValidationException(s"No snapshot as of $ts"))))
       .orElse(m.currentSnapshot)
 
-  def planFiles(): Seq[FileScanTask] = {
-    val m = table.meta
+  def planFiles(): Seq[FileScanTask] =
+    try planFiles0() finally planned(files = true)
+
+  private def planFiles0(): Seq[FileScanTask] = {
+    val m = meta
     val schema = m.schema
     chooseSnapshot(m) match {
       case None => Nil
@@ -1122,7 +1175,7 @@ final class TableScan private[table] (table: IceTable) {
             table.appendedFilesBetween(m, from, to, skipDeleteSnapshots = true)
               .map(f => ManifestEntry(EntryStatus.Added, 0L, 0L, f))
           case None =>
-            table.liveEntries(m, snap, manifestOk)
+            liveEntries(m, snap, manifestOk)
               .filter(_.dataFile.content == FileContent.Data)
         }
         // per-spec caches of the projected partition predicate + residuals
@@ -1177,31 +1230,31 @@ final class TableScan private[table] (table: IceTable) {
     }
   }
 
-  /** Live delete files of the scanned snapshot with their sequence numbers. */
-  def planDeletes(): Seq[(DataFileMeta, Long)] = planContent()._1
-
-  /** One live-entries walk: (delete files with sequence numbers, the set of
-    * live data-file formats). Refuses delete files the readers cannot apply
-    * (see [[MergeOnRead.requirePrimitiveKeys]]) and, like data files, keyed
+  /** Live delete files of the scanned snapshot with their sequence numbers.
+    * Refuses delete files the readers cannot apply (see
+    * [[MergeOnRead.requirePrimitiveKeys]]) and, like data files, keyed
     * delete files this handle cannot decrypt. */
-  def planContent(): (Seq[(DataFileMeta, Long)], Set[String]) = {
-    // incremental mode reports appended rows AS WRITTEN: row-level deletes
-    // never apply (and the planned entries carry sequence 0, which would
-    // otherwise make EVERY live delete file look newer and strip rows)
-    if (appendsRange.nonEmpty) return (Nil, Set.empty)
-    val m = table.meta
-    chooseSnapshot(m) match {
-      case None => (Nil, Set.empty)
-      case Some(snap) =>
-        val entries = table.liveEntries(m, snap)
-        val (del, data) = entries.partition(_.dataFile.content != FileContent.Data)
-        requireDecryptable(m, del.map(_.dataFile), "delete file")
-        del.map(_.dataFile).filter(_.content == FileContent.EqualityDeletes)
-          .foreach(f => MergeOnRead.requirePrimitiveKeys(m.schema,
-            f.equalityIds, s"${f.path} is an equality delete"))
-        (del.map(e => (e.dataFile, e.sequenceNumber)), data.map(_.dataFile.format).toSet)
-    }
-  }
+  def planDeletes(): Seq[(DataFileMeta, Long)] =
+    try {
+      // incremental mode reports appended rows AS WRITTEN: row-level deletes
+      // never apply (and the planned entries carry sequence 0, which would
+      // otherwise make EVERY live delete file look newer and strip rows)
+      if (appendsRange.nonEmpty) Nil
+      else {
+        val m = meta
+        chooseSnapshot(m) match {
+          case None => Nil
+          case Some(snap) =>
+            val del = liveEntries(m, snap, _ => true)
+              .filter(_.dataFile.content != FileContent.Data)
+            requireDecryptable(m, del.map(_.dataFile), "delete file")
+            del.map(_.dataFile).filter(_.content == FileContent.EqualityDeletes)
+              .foreach(f => MergeOnRead.requirePrimitiveKeys(m.schema,
+                f.equalityIds, s"${f.path} is an equality delete"))
+            del.map(e => (e.dataFile, e.sequenceNumber))
+        }
+      }
+    } finally planned(files = false)
 
   /** The plan-time encryption guard every planned data and delete file
     * passes: a keyed file read through a manager that can't decrypt it would
@@ -1238,7 +1291,7 @@ final class TableScan private[table] (table: IceTable) {
   }
 
   def toDF: DataFrame = {
-    val m = table.meta
+    val m = meta
     Reads.readTasksWithDeletes(table, m, planFiles(), planDeletes(),
       projection.getOrElse(m.schema.columnNames), Binder.bind(m.schema, filterExpr),
       rowPositions,
@@ -1330,7 +1383,7 @@ private[graft] object Reads {
     }
     val relation = org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
       .create(new GraftSparkTable(table, table.location,
-        explicit = Some(ExplicitRead(tasks, deletes, split, openCost))), None, None)
+        explicit = Some(ExplicitRead(tasks, deletes, split, openCost, m))), None, None)
     val frame = bridge.ofRows(spark, relation)
     val filtered =
       if (tasks.forall(_.residual == TrueExpr)) frame

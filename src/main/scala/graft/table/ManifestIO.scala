@@ -142,12 +142,15 @@ object ManifestIO {
         c
       }
     }
+    import org.apache.parquet.crypto.DecryptionPropertiesFactory
+    import org.apache.parquet.example.data.Group
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.api.ReadSupport
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    import org.apache.parquet.schema.MessageTypeParser
+    import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
     private val EntryType = MessageTypeParser.parseMessageType(
       """message graft_manifest_entry {
@@ -189,12 +192,44 @@ object ManifestIO {
       hPath.getFileSystem(io.conf).getFileStatus(hPath).getLen
     }
 
+    /** Manifest reader over a [[HadoopInputFile]] carrying the crypto conf:
+      * `ParquetReader.builder(support, path)` builds and loads a fresh
+      * Hadoop `Configuration` (core-default/core-site parse plus a search
+      * of every classpath jar) on each call — ~13 ms per manifest opened. */
+    private final class ManifestReaderBuilder(file: HadoopInputFile,
+        support: ReadSupport[Group]) extends ParquetReader.Builder[Group](file) {
+      override protected def getReadSupport(): ReadSupport[Group] = support
+    }
+
+    /** Group read support over a fixed projection (None = every column),
+      * instead of `PARQUET_READ_SCHEMA` on a per-call conf copy. */
+    private final class ProjectedGroupSupport(projection: Option[MessageType])
+        extends GroupReadSupport {
+      override def init(conf: org.apache.hadoop.conf.Configuration,
+          keyValueMetaData: java.util.Map[String, String],
+          fileSchema: MessageType): ReadSupport.ReadContext =
+        new ReadSupport.ReadContext(projection
+          .map(ReadSupport.getSchemaForRead(fileSchema, _)).getOrElse(fileSchema))
+    }
+
+    private def openReader(io: FileIO, path: String,
+        projection: Option[MessageType]): ParquetReader[Group] = {
+      val conf = cryptoConf(io)
+      val hPath = new org.apache.hadoop.fs.Path(path)
+      val builder = new ManifestReaderBuilder(HadoopInputFile.fromPath(hPath, conf),
+        new ProjectedGroupSupport(projection))
+      // an InputFile builder's options never see the file path, so they
+      // derive no decryption properties: ask the conf's crypto factory, as
+      // the path builder's options do — modular decryption and the
+      // sealed-manifest refusal follow the latched conf as before
+      Option(DecryptionPropertiesFactory.loadFactory(conf)).foreach(f =>
+        builder.withDecryption(f.getFileDecryptionProperties(conf, hPath)))
+      builder.build()
+    }
+
     def read(io: FileIO, path: String, schema: Schema,
         specById: Int => PartitionSpec): Seq[ManifestEntry] = {
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(),
-          new org.apache.hadoop.fs.Path(path))
-        .withConf(cryptoConf(io)).build()
+      val reader = openReader(io, path, None)
       val out = scala.collection.mutable.ArrayBuffer[ManifestEntry]()
       try {
         var g = reader.read()
@@ -212,12 +247,7 @@ object ManifestIO {
     }
 
     def readPaths(io: FileIO, path: String): Seq[String] = {
-      val conf = new org.apache.hadoop.conf.Configuration(cryptoConf(io))
-      conf.set(org.apache.parquet.hadoop.api.ReadSupport.PARQUET_READ_SCHEMA,
-        PathOnlyType.toString)
-      val reader = ParquetReader
-        .builder(new GroupReadSupport(), new org.apache.hadoop.fs.Path(path))
-        .withConf(conf).build()
+      val reader = openReader(io, path, Some(PathOnlyType))
       val out = scala.collection.mutable.ArrayBuffer[String]()
       try {
         var g = reader.read()

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.meta.model.{ColumnStatMeta, JsonCodecs, StatsFileMeta}
+import graft.meta.model.{ColumnStatMeta, JsonCodecs, StatsFileMeta, TableMetadata}
 
 /** Table-level column statistics for the cost-based optimizer.
   *
@@ -149,7 +149,10 @@ object TableStats {
 
   /** Stats for reads of exactly `snapshotId`, or None. Metadata-sized IO. */
   def forSnapshot(table: IceTable, snapshotId: Long): Option[Seq[ColumnStatMeta]] =
-    table.meta.statsFiles.find(_.snapshotId == snapshotId).map(f => read(table.io, f.path)._2)
+    forSnapshot(table.io, table.meta, snapshotId)
+
+  def forSnapshot(io: FileIO, m: TableMetadata, snapshotId: Long): Option[Seq[ColumnStatMeta]] =
+    m.statsFiles.find(_.snapshotId == snapshotId).map(f => read(io, f.path)._2)
 
   // ------------------------------------------------------------------- codec
 

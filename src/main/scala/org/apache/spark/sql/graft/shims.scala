@@ -107,24 +107,16 @@ object ColumnBridge {
       c.filesMinPartitionNum.getOrElse(s.leafNodeDefaultParallelism))
   }
 
-  /** A serializable per-file row reader built from Spark's own `FileFormat`
+  /** A serializable per-file reader built from Spark's own `FileFormat`
     * implementations (`buildReaderWithPartitionValues`, the same factory
-    * `FileSourceScanExec` ships to executors). Vectorized reading is disabled
-    * so the iterator yields `InternalRow`s, which is what a DSv2
-    * `PartitionReader` must produce (the micro-batch streaming path; ref
-    * `RowDataReader.java` reads row-at-a-time for the same reason). */
-  def fileRowReader(spark: org.apache.spark.sql.SparkSession, format: String,
-      dataSchema: org.apache.spark.sql.types.StructType,
-      requiredSchema: org.apache.spark.sql.types.StructType,
-      extraOptions: Map[String, String] = Map.empty)
-      : org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow] =
-    fileReader(spark, format, dataSchema, requiredSchema, Nil,
-      vectorized = false, extraOptions)._1
-
-  /** Like [[fileRowReader]] but optionally vectorized: when `vectorized` and
-    * the format supports whole-batch reads for this schema, the returned
-    * iterator yields `ColumnarBatch`es (cast to `InternalRow`, the same
-    * contract `FileSourceScanExec` relies on) and the second element is true.
+    * `FileSourceScanExec` ships to executors). Without `vectorized` the
+    * iterator yields `InternalRow`s, which is what a row-based DSv2
+    * `PartitionReader` must produce (delete files, the micro-batch
+    * streaming path; ref `RowDataReader.java` reads row-at-a-time for the
+    * same reason). When `vectorized` and the format supports whole-batch
+    * reads for this schema, the returned iterator yields `ColumnarBatch`es
+    * (cast to `InternalRow`, the same contract `FileSourceScanExec` relies
+    * on) and the second element is true.
     * `filters` are data-source filters in the file's own column names —
     * parquet row-group/dictionary pruning and ORC SArg pushdown apply, and
     * columns absent from a given file are skipped by the format itself. */
@@ -135,10 +127,20 @@ object ColumnBridge {
       vectorized: Boolean,
       extraOptions: Map[String, String] = Map.empty)
       : (org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[org.apache.spark.sql.catalyst.InternalRow], Boolean) = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .cloneSession()
-    classic.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized.toString)
-    classic.conf.set("spark.sql.orc.enableVectorizedReader", vectorized.toString)
+    // the formats read their vectorized flags from the session: use the
+    // caller's when both already hold the requested value, else a clone
+    // (~1 ms) with the flags set
+    val caller = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val callerConf = caller.sessionState.conf
+    val classic =
+      if (callerConf.parquetVectorizedReaderEnabled == vectorized &&
+          callerConf.orcVectorizedReaderEnabled == vectorized) caller
+      else {
+        val c = caller.cloneSession()
+        c.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized.toString)
+        c.conf.set("spark.sql.orc.enableVectorizedReader", vectorized.toString)
+        c
+      }
     val fmt: org.apache.spark.sql.execution.datasources.FileFormat = format match {
       case "parquet" => new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
       // the guarded subclass enforces the plaintext-refusal flag at task

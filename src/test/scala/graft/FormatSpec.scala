@@ -783,8 +783,8 @@ class FormatSpec extends AnyFunSuite {
         "write.avro.sync-interval-bytes" -> "2000"))
     t.append(data)
     val f = t.newScan().planFiles().map(_.file).head
-    val reader = org.apache.spark.sql.graft.ColumnBridge.fileRowReader(
-      spark, "avro", data.schema, data.schema)
+    val reader = org.apache.spark.sql.graft.ColumnBridge.fileReader(
+      spark, "avro", data.schema, data.schema, Nil, vectorized = false)._1
     def rowsIn(start: Long, len: Long): Long =
       org.apache.spark.sql.graft.ColumnBridge.withDriverTaskContext {
         reader(org.apache.spark.sql.graft.ColumnBridge.partitionedFile(
@@ -1115,7 +1115,7 @@ class FormatSpec extends AnyFunSuite {
     val rotT = IceTable.loadWith(spark, new TableOperations(loc,
       new FileIO(conf, new KeyRotationManager(keyB, keyA))))
     rotT.rewriteDataFiles(minFileSizeBytes = Long.MaxValue / 2, minInputFiles = 1)
-    val (dels, _) = rotT.newScan().planContent()
+    val dels = rotT.newScan().planDeletes()
     assert(dels.nonEmpty, "crash-window setup needs live old-key delete files")
     assert(dels.forall(_._1.keyMetadata != keyB.keyMetadata(dels.head._1.path)))
     rotT.newScan().planFiles().foreach(f =>
@@ -1291,6 +1291,29 @@ class FormatSpec extends AnyFunSuite {
     assert(mentionsPlaintext(orphanRefusal), orphanRefusal.toString)
     val fio = new FileIO(conf)
     liveFiles.foreach(p => assert(fio.exists(p), s"live file deleted: $p"))
+  }
+
+  test("PME-sealed parquet manifest: readPaths reads the sealed path column") {
+    import graft.table.{AesGcmEncryptionManager, FileIO, ManifestIO, TableOperations}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val manager = new AesGcmEncryptionManager(
+      "mfpaths-mfpaths-mfpaths-mfpaths-".getBytes("UTF-8"), "mfpaths")
+    val loc = Files.createTempDirectory("graft-mfp-").toString + "/t"
+    val data = orders.limit(20)
+    val t = IceTable.createWith(spark,
+      new TableOperations(loc, new FileIO(conf, manager)),
+      Schema.fresh(data.schema))
+    t.append(data.repartition(2))
+    val manifest = t.metadataTable("manifests").collect().map(_.getString(0)).head
+    assert(manifest.endsWith(".parquet"))
+    val bytes = rawBytes(conf, manifest)
+    assert(new String(bytes.take(4), "UTF-8") === "PARE")
+    assert(new String(bytes.takeRight(4), "UTF-8") === "PARE")
+    val entries = ManifestIO.read(t.io, manifest, t.schema, t.meta.specById)
+    assert(entries.size === 2)
+    assert(ManifestIO.readPaths(t.io, manifest) === entries.map(_.dataFile.path))
+    // without the table's key the sealed path column stays unreadable
+    intercept[Exception](ManifestIO.readPaths(new FileIO(conf), manifest))
   }
 
   test("encryption-required ORC table refuses forged plaintext ORC content at open") {
@@ -1566,8 +1589,8 @@ class FormatSpec extends AnyFunSuite {
     // forces whole-file slices for encrypted avro)
     val encOpt = Map(graft.table.EncryptionManagers.OptionKey ->
       graft.table.EncryptionManagers.serialize(manager))
-    val reader = org.apache.spark.sql.graft.ColumnBridge.fileRowReader(
-      spark, "avro", data.schema, data.schema, encOpt)
+    val reader = org.apache.spark.sql.graft.ColumnBridge.fileReader(
+      spark, "avro", data.schema, data.schema, Nil, vectorized = false, encOpt)._1
     def rowsIn(start: Long, len: Long): Long =
       org.apache.spark.sql.graft.ColumnBridge.withDriverTaskContext {
         reader(org.apache.spark.sql.graft.ColumnBridge.partitionedFile(

@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * planning never opens data files) and measures what the DRIVER pays:
   * planFiles wall + retained heap, filtered planning (partition pruning +
   * metrics eval under the per-spec caches), SPJ key grouping, and the
-  * sealed-manifest delta. Run with
+  * sealed-manifest delta. Each stage prints its wall time and the
+  * manifests it opened. Spark runs `local[<cores>]` with one shuffle
+  * partition per core. Run with
   * `sbt "Test/runMain graft.PlanScaleHarness [files] [sealed]"` idle.
   *
   * Layout: spec = (identity(d), bucket(16, k)); 200k files spread over
@@ -29,13 +31,22 @@ object PlanScaleHarness {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(200000)
     val enc = args.drop(1).headOption.exists(_.toBoolean)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cores = Runtime.getRuntime.availableProcessors()
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+    }
+    /** Times one planning stage and counts the manifests it opened. */
+    def stage[A](name: String)(f: => A): (A, Double) = {
+      val opened0 = graft.table.ManifestIO.readCounter.get()
+      val (a, secs) = time(f)
+      println(f"stage $name%-28s $secs%7.2f s  manifests_opened=" +
+        s"${graft.table.ManifestIO.readCounter.get() - opened0}")
+      (a, secs)
     }
     def heapMb(): Long = {
       val rt = Runtime.getRuntime
@@ -107,36 +118,41 @@ object PlanScaleHarness {
     // cold planning (fresh table handle — caches empty), then warm
     def freshT() = IceTable.loadWith(spark,
       new TableOperations(loc, io))
-    val (all, tCold) = time(freshT().newScan().planFiles())
+    val (all, _) = stage("planFiles cold")(freshT().newScan().planFiles())
     require(all.size == nFiles, s"planned ${all.size}")
     val hAfter = heapMb()
     val warmT = freshT()
-    val (_, tWarm0) = time(warmT.newScan().planFiles())
-    val (_, tWarm) = time(warmT.newScan().planFiles())
-    println(f"planFiles cold $tCold%.2f s, warm-handle first $tWarm0%.2f s, " +
-      f"repeat $tWarm%.2f s; retained heap ≈ ${hAfter - h0} MB for $nFiles metas")
+    stage("planFiles warm-handle first")(warmT.newScan().planFiles())
+    stage("planFiles repeat")(warmT.newScan().planFiles())
+    println(s"retained heap ≈ ${hAfter - h0} MB for $nFiles metas")
+    // one scan: files then deletes share the pin and the manifest reads
+    val both = warmT.newScan()
+    stage("planFiles+planDeletes")((both.planFiles(), both.planDeletes()))
 
     // filtered planning: partition prune (one date) + metrics prune (k range)
     val oneDate = java.time.LocalDate.ofEpochDay(19000)
-    val (pruned, tPrune) = time(freshT().newScan()
+    val (pruned, _) = stage("partition-pruned planFiles")(freshT().newScan()
       .filter(equalTo("d", oneDate)).planFiles())
-    val (metr, tMetr) = time(freshT().newScan()
+    val (metr, _) = stage("metrics-pruned planFiles")(freshT().newScan()
       .filter(and(greaterThanOrEqual("k", 1000000L), lessThan("k", 2000000L)))
       .planFiles())
-    println(f"partition-pruned plan $tPrune%.2f s -> ${pruned.size} files; " +
-      f"metrics-pruned plan $tMetr%.2f s -> ${metr.size} files")
+    println(s"partition-pruned -> ${pruned.size} files; " +
+      s"metrics-pruned -> ${metr.size} files")
 
     // SPJ key grouping: the DSv2 scan's reported partitioning is built from
     // every planned file's partition tuple — time the whole plan+group pass
-    val (_, tSpj) = time {
+    val (df, _) = stage("DSv2 executedPlan (SPJ keys)") {
       val rd = spark.read.format("graft")
       val df = (if (!enc) rd else rd
         .option("encryption", graft.table.EncryptionManagers.serialize(
           io.encryption))
         .option("encryption-required", "true")).load(loc)
       df.queryExecution.executedPlan // forces planInputPartitions + keys
+      df
     }
-    println(f"DSv2 executedPlan (incl. SPJ key grouping) $tSpj%.2f s")
+    // a plan Spark keeps holds its tasks, not the parsed manifests
+    println(s"heap with the executed plan held ≈ ${heapMb() - h0} MB")
+    require(df.queryExecution.executedPlan != null)
     spark.stop()
   }
 }
