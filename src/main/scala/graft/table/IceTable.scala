@@ -235,9 +235,6 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
 
   // ------------------------------------------------------- merge-on-read
 
-  /** Row-delta commit of equality-delete keys: rows whose `keys` match any
-    * row of `keysDf` disappear from reads, no data rewrite (format v2
-    * merge-on-read; ref `EqualityDeleteWriter`). */
   /** Equality deletes keyed by the schema's identifier fields
     * (`SET IDENTIFIER FIELDS`). */
   def addEqualityDeletes(keysDf: DataFrame): Unit = {
@@ -247,6 +244,9 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
     addEqualityDeletes(keysDf, keys)
   }
 
+  /** Row-delta commit of equality-delete keys: rows whose `keys` match any
+    * row of `keysDf` disappear from reads, no data rewrite (format v2
+    * merge-on-read; ref `EqualityDeleteWriter`). */
   def addEqualityDeletes(keysDf: DataFrame, keys: Seq[String]): Unit =
     MergeOnRead.addEqualityDeletes(this, keysDf, keys)
 
@@ -479,13 +479,22 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
 
   // ------------------------------------------------------------- internals
 
-  /** Serializable-isolation conflict check (ref `BaseOverwriteFiles.java:98`
-    * validateNoConflictingAppends + `IsolationLevel.java`): any file ADDED by
-    * a snapshot committed after the operation started that MIGHT contain rows
-    * matching the operation's conflict filter fails the commit. Under
-    * snapshot isolation this check is skipped — only deletes of files the
-    * operation rewrites conflict (the removal validation below). */
-  private def validateNoConflicts(base: TableMetadata, v: ConflictValidation): Unit = {
+  /** Commit-time conflict checks against the commit's base (ref
+    * `BaseOverwriteFiles.java:98`, `IsolationLevel.java`). Under every
+    * isolation level:
+    *  - the files the operation's position deletes reference must still be
+    *    live;
+    *  - no delete file committed after the start snapshot may apply
+    *    (`MergeOnRead.applies`) to a data file of `rewritten` — the files
+    *    whose rows this commit copies into new files, at a path and sequence
+    *    that delete no longer reaches, which would bring its rows back (ref
+    *    `MergingSnapshotProducer.validateNoNewDeletesForDataFiles`).
+    * Under serializable isolation also: any file ADDED after the start
+    * snapshot that MIGHT contain rows matching the conflict filter fails the
+    * commit (ref validateNoConflictingAppends). Removal of a file that is no
+    * longer live fails in [[commitSnapshot]] itself. */
+  private def validateNoConflicts(base: TableMetadata, v: ConflictValidation,
+      rewritten: Seq[DataFileMeta]): Unit = {
     if (v.requiredLivePaths.nonEmpty) {
       val live: Set[String] = base.currentSnapshot.map(snap =>
         liveEntries(base, snap).map(e => normPath(e.dataFile.path)).toSet)
@@ -496,12 +505,28 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
           s"this operation's position deletes are no longer live: " +
           gone.take(3).mkString(", "))
     }
-    if (v.isolation != TableProperties.IsolationSerializable) return
-    val bound = Binder.bind(base.schema, v.conflictFilter)
     val newSnaps = Iterator.iterate(base.currentSnapshot)(s =>
         s.flatMap(_.parentId).flatMap(base.snapshot))
       .takeWhile(s => s.isDefined && !v.startSnapshotId.contains(s.get.snapshotId))
       .flatten.toSeq
+    if (rewritten.nonEmpty && newSnaps.nonEmpty) {
+      // a rewritten file was live at the start snapshot, so its data
+      // sequence is at most the start's and every later delete passes the
+      // sequence rule; partition scope (and a vector's one target) decide
+      val startSeq = v.startSnapshotId.flatMap(base.snapshot)
+        .map(_.sequenceNumber).getOrElse(0L)
+      val tasks = rewritten.map(f => FileScanTask(f, TrueExpr, startSeq))
+      val applying = newSnaps.flatMap(s => addedFiles(base, s)
+          .filter(_.content != FileContent.Data).map(_ -> s.sequenceNumber))
+        .collect { case (d, dseq) if tasks.exists(t => MergeOnRead.applies(d, dseq, t) &&
+            d.referencedFile.forall(r => normPath(r) == normPath(t.file.path))) => d.path }
+      if (applying.nonEmpty) throw new ValidationException(
+        s"Concurrent delete conflict: ${applying.size} delete file(s) committed " +
+          s"after snapshot ${v.startSnapshotId.getOrElse("<none>")} apply to data " +
+          s"files this operation rewrites: ${applying.take(3).mkString(", ")}")
+    }
+    if (v.isolation != TableProperties.IsolationSerializable) return
+    val bound = Binder.bind(base.schema, v.conflictFilter)
     val conflicting = newSnaps
       .filter(s => s.operation != Operation.Delete) // pure deletes add no rows
       .flatMap(s => addedFiles(base, s))
@@ -539,13 +564,6 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
 
   private[table] def normPath(p: String): String = new Path(p).toUri.getPath
 
-  /** Core commit: new snapshot = (current live files − removedPaths) ∪ added.
-    * Carried manifests are kept untouched when they lose no files; touched
-    * ones are compacted into a rewrite manifest (ref
-    * `ManifestFilterManager.java:167`). Under concurrency, removal of a file
-    * that no longer exists fails validation (serializable isolation for
-    * overwrites; ref `BaseOverwriteFiles.java:98`).
-    */
   /** Conservative manifest-level prune for removal commits (ref
     * `ManifestFilterManager.java:167` canContainDeletedFiles): a manifest
     * cannot contain a removed file unless their spec ids match AND the
@@ -637,11 +655,20 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
     }
   }
 
-  /** @param removedMeta the full metadata of the removed files when the
+  /** Core commit: new snapshot = (current live files − removedPaths) ∪ added.
+    * Carried manifests are kept untouched when they lose no files; touched
+    * ones are compacted into a rewrite manifest (ref
+    * `ManifestFilterManager.java:167`). Under concurrency, removal of a file
+    * that no longer exists fails validation (serializable isolation for
+    * overwrites; ref `BaseOverwriteFiles.java:98`).
+    *
+    * @param removedMeta the full metadata of the removed files when the
     *                    caller has it: enables partition-summary pruning so
     *                    a removal commit opens only the manifests that can
     *                    contain the removed files (must cover every path in
-    *                    `removedPaths`, else ignored). */
+    *                    `removedPaths`, else ignored), and lets `validate`
+    *                    find concurrent deletes against the data files whose
+    *                    rows this commit rewrites (required then). */
   private[graft] def commitSnapshot(op: String, added: Seq[DataFileMeta],
       removedPaths: Set[String], extraSummary: Map[String, String] = Map.empty,
       metaTransform: Option[TableMetadata => TableMetadata] = None,
@@ -654,9 +681,18 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
         removedNorm.subsetOf(removedMeta.map(f => normPath(f.path)).toSet))
         removedMeta
       else Nil
+    // the data files whose rows this commit carries into its added files
+    val rewritten =
+      if (validate.isEmpty || removedNorm.isEmpty ||
+          !added.exists(_.content == FileContent.Data)) Nil
+      else {
+        require(pruneMeta.nonEmpty,
+          "a validated commit that rewrites rows needs removedMeta for every removed path")
+        pruneMeta.filter(_.content == FileContent.Data)
+      }
     ops.commitWithRetry(retries(meta)) { base0 =>
       val base = metaTransform.map(_(base0)).getOrElse(base0)
-      validate.foreach(validateNoConflicts(base, _))
+      validate.foreach(validateNoConflicts(base, _, rewritten))
       val nowMs = System.currentTimeMillis()
       val snapId = newSnapshotId()
       val seq = base.lastSequenceNumber + 1
@@ -1314,13 +1350,6 @@ private[graft] object Reads {
     def upper(id: Int): Option[Any] = f.upperBounds.get(id)
   }
 
-  /** Group scan tasks into APPLICABILITY CLASSES: two tasks share a class
-    * iff the exact same set of delete files applies to them (by sequence
-    * rule AND partition scope — `MergeOnRead.applies`). Deletes partition
-    * the data sequence numbers into at most #delete-commits+1 classes, so
-    * the class count stays bounded for long-lived tables regardless of how
-    * many distinct data sequences exist; partition scoping further drops
-    * whole delete files from classes they can't touch. */
   /** Above this many classes, fall back to sequence-only grouping:
     * partition scope multiplies classes per (partition, seq-class), and a
     * many-partition table with scoped deletes would otherwise blow up the
@@ -1330,6 +1359,13 @@ private[graft] object Reads {
     * only costs some extra no-op probes. */
   private[graft] val MaxDeleteGroups = 64
 
+  /** Group scan tasks into APPLICABILITY CLASSES: two tasks share a class
+    * iff the exact same set of delete files applies to them (by sequence
+    * rule AND partition scope — `MergeOnRead.applies`). Deletes partition
+    * the data sequence numbers into at most #delete-commits+1 classes, so
+    * the class count stays bounded for long-lived tables regardless of how
+    * many distinct data sequences exist; partition scoping further drops
+    * whole delete files from classes they can't touch. */
   private[graft] def groupTasksByDeletes(tasks: Seq[FileScanTask],
       deletes: Seq[(DataFileMeta, Long)]): Seq[(Seq[DataFileMeta], Seq[FileScanTask])] = {
     def grouped(applies: ((DataFileMeta, Long), FileScanTask) => Boolean) =
@@ -1667,12 +1703,12 @@ private[table] object Writes {
     collectDataFiles(spark, table, m, outDir, format)
   }
 
-  private def sortCols(m: TableMetadata, schema: Schema): Seq[Column] =
+  /** The sort columns of `m`'s sort order, on its TRANSFORMED terms. */
+  private[table] def sortCols(m: TableMetadata, schema: Schema): Seq[Column] =
     m.sortOrder.fields.map { sf =>
       val src = schema.fieldName(sf.sourceId)
       val t = graft.meta.transforms.Transform.parse(sf.transform)
       val c = t.toColumn(col(src), schema.fieldType(sf.sourceId))
-      val dir = if (sf.ascending) c.asc else c.desc
       if (sf.nullsFirst) (if (sf.ascending) c.asc_nulls_first else c.desc_nulls_first)
       else (if (sf.ascending) c.asc_nulls_last else c.desc_nulls_last)
     }

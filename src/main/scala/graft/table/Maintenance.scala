@@ -1,10 +1,9 @@
 package graft.table
 
-import java.util.UUID
-
+import graft.meta.expr.TrueExpr
 import graft.meta.model._
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Table-maintenance actions implemented as Spark DataFrame programs, like
@@ -292,17 +291,175 @@ object Maintenance {
     } finally orphansDF.unpersist()
   }
 
-  // ------------------------------------------------------------ compaction
+  // ------------------------------------------------------------ rewrites
+
+  /** How a data-file rewrite lays its rows out in the new files. */
+  private sealed trait Layout
+  /** Packed on the READ side: the rewrite scan plans target-size byte-range
+    * splits (maxPartitionBytes = target, no open-cost padding, no minimum
+    * partition count), so undersized files coalesce into one task and
+    * oversized ones fan out across several, and the write emits right-sized
+    * files with NO shuffle — a repartition would move every rewritten byte
+    * through a full exchange and serialize small compactions onto one
+    * writer. */
+  private case object Packed extends Layout
+  /** Clustered on `order`: one range exchange on the order's TRANSFORMED
+    * terms (`bucket(4, id)` clusters by bucket value), then the write's local
+    * sort; a partitioned table range-shuffles once in `writeDataFiles`, on
+    * partition + sort columns. */
+  private final case class Sorted(order: SortOrderMeta) extends Layout
+  /** Clustered on a z-value computed from the rows read: one range exchange
+    * on it, then a local sort. The table sort order is suppressed for the
+    * write — a declared lexicographic order would destroy the clustering. */
+  private final case class ZOrdered(zValue: DataFrame => Column) extends Layout
+
+  /** Live data-file entries of `m`'s current snapshot. */
+  private def liveDataEntries(table: IceTable, m: TableMetadata): Seq[ManifestEntry] =
+    m.currentSnapshot.map(s => table.liveEntries(m, s)
+      .filter(_.dataFile.content == FileContent.Data)).getOrElse(Nil)
+
+  /** The one data-file rewrite (ref `BaseRewriteDataFilesSparkAction.java:120`
+    * with its pluggable strategies): compaction and key rotation differ only
+    * in the file groups they select from `m` and the [[Layout]] they write.
+    * The groups are spread over up to `batches` independent Replace commits
+    * (partial progress, ref partial-progress.max-commits), so a huge rewrite
+    * neither holds one giant conflict window nor loses everything to a late
+    * failure. Each batch reads its files with the deletes planned from `m`
+    * applied, CARRYING each file's data sequence number (equality deletes
+    * apply only to strictly older sequences; a defaulted 0 would make every
+    * delete apply and drop rows a same-sequence upsert kept live) and, on a
+    * preserving table, every row's `_row_id`/`_last_updated_seq` into the new
+    * files. The commit fails when a delete committed after `m` applies to a
+    * file it removes: the rewritten copy would bring the deleted rows back.
+    * Returns (#rewritten, #added). */
+  private def rewrite(table: IceTable, m: TableMetadata,
+      groups: Seq[Seq[ManifestEntry]], layout: Layout, targetSizeBytes: Long,
+      batches: Int, summary: Map[String, String]): (Int, Int) = {
+    if (groups.isEmpty) return (0, 0)
+    val spark = table.spark
+    val session = org.apache.spark.sql.graft.ColumnBridge.cloneSession(spark)
+    layout match {
+      case Packed =>
+        session.conf.set("spark.sql.files.maxPartitionBytes", targetSizeBytes.toString)
+        session.conf.set("spark.sql.files.openCostInBytes", "0")
+        session.conf.set("spark.sql.files.minPartitionNum", "1")
+      case _ =>
+        // AQE coalescing would merge the ranges back into few fat tasks
+        session.conf.set("spark.sql.adaptive.enabled", "false")
+    }
+    val deletes = table.newScan(m).planDeletes()
+    val preserve = Writes.lineagePreserve(m)
+    val validate = ConflictValidation(m.currentSnapshotId, TrueExpr,
+      TableProperties.IsolationSnapshot)
+    val nBatches = math.max(1, math.min(batches, groups.size))
+    val perBatch = math.ceil(groups.size.toDouble / nBatches).toInt
+    groups.grouped(perBatch).map { batch =>
+      val entries = batch.flatten
+      val files = entries.map(_.dataFile)
+      val df = Reads.readTasksWithDeletes(table, m,
+        entries.map(e => FileScanTask(e.dataFile, TrueExpr, e.sequenceNumber)),
+        deletes, m.schema.columnNames, TrueExpr, rowPositions = false,
+        session = Some(session), withLineage = preserve)
+      // clustered layouts: one range exchange sized so each output task
+      // carries ~targetSize bytes
+      val nOut = math.max(1, math.ceil(
+        files.map(_.fileSizeBytes).sum.toDouble / targetSizeBytes).toInt)
+      if (layout != Packed) session.conf.set("spark.sql.shuffle.partitions", nOut.toString)
+      val (wm, out, distribution) = layout match {
+        case Packed => (m, df, None)
+        case Sorted(order) =>
+          val sm = m.copy(sortOrders = Seq(order), defaultSortOrderId = order.orderId)
+          if (m.spec.isUnpartitioned)
+            (sm, df.repartitionByRange(nOut, Writes.sortCols(sm, sm.schema): _*), Some("none"))
+          else (sm, df, Some("range"))
+        case ZOrdered(zValue) =>
+          val zm = m.copy(sortOrders = Seq(SortOrderMeta.unsorted), defaultSortOrderId = 0)
+          (zm, df.withColumn("_gf_z", zValue(df)).repartitionByRange(nOut, col("_gf_z"))
+            .sortWithinPartitions("_gf_z"), Some("none"))
+      }
+      val written = Writes.writeDataFiles(spark, table, wm, out,
+        overrides = Map(TableProperties.TargetFileSize -> targetSizeBytes.toString) ++
+          distribution.map(TableProperties.DistributionMode -> _),
+        lineageCols = preserve)
+        .filter(_.recordCount > 0)
+      table.commitSnapshot(Operation.Replace, written, files.map(_.path).toSet,
+        summary, validate = Some(validate), removedMeta = files)
+      (files.size, written.size)
+    }.foldLeft((0, 0)) { case ((r, a), (r1, a1)) => (r + r1, a + a1) }
+  }
 
   /** Bin-pack compaction (ref `BinPackStrategy.java:134`): per partition,
     * candidates are files below `minFileSize` (too small — pack together) or
     * above `maxFileSize` (too large — split), mirroring the ref's
     * MIN_FILE_SIZE_BYTES (0.75×target) / MAX_FILE_SIZE_BYTES (1.8×target)
-    * defaults. Packing and splitting both happen in the read planner: the
-    * rewrite scan uses target-size byte-range splits, so undersized files
-    * coalesce into one task and oversized files fan out across several, with
-    * no shuffle either way. A group must have `minInputFiles` small files or
-    * any oversized file to be rewritten. Returns (#rewritten, #added). */
+    * defaults. Packing and splitting both happen in the read planner
+    * ([[Packed]]), with no shuffle either way. A group must have
+    * `minInputFiles` small files or any oversized file to be rewritten;
+    * `partialProgressCommits` bounds the number of Replace commits. Returns
+    * (#rewritten, #added). */
+  def rewriteDataFiles(table: IceTable,
+      targetSizeBytes: Long = TableProperties.TargetFileSizeDefault,
+      minInputFiles: Int = 2,
+      minFileSizeBytes: Long = -1,
+      maxFileSizeBytes: Long = -1,
+      filter: graft.meta.expr.Expr = TrueExpr,
+      partialProgressCommits: Int = 1): (Int, Int) = {
+    val minSize = if (minFileSizeBytes > 0) minFileSizeBytes
+      else (targetSizeBytes * 0.75).toLong // ref BinPackStrategy.java:96
+    val maxSize = if (maxFileSizeBytes > 0) maxFileSizeBytes
+      else (targetSizeBytes * 1.80).toLong // ref BinPackStrategy.java:107
+    val m = table.meta
+    // scoped compaction: `filter` restricts candidates to files that MAY
+    // hold matching rows, through the same partition/metrics pruning
+    // cascade as reads — at scale you compact the hot partition, not the
+    // table. File-level granularity: a selected file is rewritten whole.
+    val inScope: DataFileMeta => Boolean =
+      if (filter == TrueExpr) _ => true
+      else {
+        val paths = table.newScan(m).filter(filter).planFiles().map(_.file.path).toSet
+        f => paths.contains(f.path)
+      }
+    val groups = liveDataEntries(table, m).filter(e => inScope(e.dataFile))
+      .groupBy(e => (e.dataFile.specId, e.dataFile.partition))
+      .values.map { es =>
+        val small = es.filter(_.dataFile.fileSizeBytes < minSize)
+        val big = es.filter(_.dataFile.fileSizeBytes > maxSize)
+        if (small.size >= minInputFiles || big.nonEmpty) small ++ big else Nil
+      }
+      .filter(_.nonEmpty)
+      .toSeq
+    rewrite(table, m, groups, Packed, targetSizeBytes, partialProgressCommits,
+      Map("compaction" -> "bin-pack"))
+  }
+
+  /** Sort-strategy rewrite (ref `core/.../actions/SortStrategy.java` +
+    * `Spark3SortStrategy`): rewrite ALL live data files re-clustered on a
+    * sort order — the table's declared order, or an explicit
+    * `"col [ASC|DESC] [NULLS FIRST|LAST], ..."` spec. Global clustering
+    * comes from ONE range exchange sized to emit ~target-size outputs
+    * (range distribution + local sort, the same plan
+    * `DistributionAndOrderingUtils` injects for sorted writes); min/max
+    * column bounds then make the rewritten files metrics-prunable on the
+    * sort key. Returns (#rewritten, #added). */
+  def rewriteDataFilesSorted(table: IceTable,
+      targetSizeBytes: Long = TableProperties.TargetFileSizeDefault,
+      sortOrderSpec: Option[String] = None): (Int, Int) = {
+    val m = table.meta
+    if (m.currentSnapshot.isEmpty) return (0, 0)
+    val order: SortOrderMeta = sortOrderSpec match {
+      case Some(spec) =>
+        // same grammar as WRITE ORDERED BY, incl. transform terms
+        // (`bucket(4, id) ASC`); transient order: files record sortOrderId 0
+        SortOrderMeta(0, graft.meta.SortSpec.parseFields(m.schema, spec))
+      case None =>
+        require(m.sortOrder.fields.nonEmpty,
+          "Sort rewrite needs a table sort order (WRITE ORDERED BY) or an explicit sort_order")
+        m.sortOrder
+    }
+    rewrite(table, m, Seq(liveDataEntries(table, m)).filter(_.nonEmpty), Sorted(order),
+      targetSizeBytes, 1, Map("compaction" -> "sort"))
+  }
+
   /** Z-ORDER rewrite: cluster files on the bit-interleaving of several
     * columns' ranks, so file metrics prune on EVERY z-ordered column rather
     * than only a lexicographic sort's leading column. Each column is scaled
@@ -315,12 +472,11 @@ object Maintenance {
     * later versions' zorder rewrite strategy. */
   def rewriteDataFilesZOrder(table: IceTable, zCols: Seq[String],
       targetSizeBytes: Long = TableProperties.TargetFileSizeDefault): (Int, Int) = {
-    import org.apache.spark.sql.Column
     import org.apache.spark.sql.types._
     require(zCols.size >= 2, s"z-order needs >= 2 columns, got $zCols")
     val m = table.meta
     val schema = m.schema
-    val snap = m.currentSnapshot.getOrElse(return (0, 0))
+    if (m.currentSnapshot.isEmpty) return (0, 0)
     zCols.foreach { c =>
       schema.fieldType(schema.fieldId(c)) match {
         case _: NumericType | DateType | TimestampType | TimestampNTZType => ()
@@ -329,24 +485,8 @@ object Maintenance {
             "(numeric/date/timestamp only)")
       }
     }
-    val toRewriteEntries = table.liveEntries(m, snap)
-      .filter(_.dataFile.content == FileContent.Data)
-    val toRewrite = toRewriteEntries.map(_.dataFile)
-    if (toRewrite.isEmpty) return (0, 0)
-    val spark = table.spark
-
-    val nOut = math.max(1, math.ceil(
-      toRewrite.map(_.fileSizeBytes).sum.toDouble / targetSizeBytes).toInt)
-    val rangeSession = org.apache.spark.sql.graft.ColumnBridge.cloneSession(spark)
-    rangeSession.conf.set("spark.sql.shuffle.partitions", nOut.toString)
-    rangeSession.conf.set("spark.sql.adaptive.enabled", "false")
-    val preserve = Writes.lineagePreserve(m)
-    val df = Reads.readTasksWithDeletes(table, m,
-      toRewriteEntries.map(e =>
-        FileScanTask(e.dataFile, graft.meta.expr.TrueExpr, e.sequenceNumber)),
-      table.newScan().planDeletes(), m.schema.columnNames,
-      graft.meta.expr.TrueExpr, rowPositions = false, session = Some(rangeSession),
-      withLineage = preserve)
+    val entries = liveDataEntries(table, m)
+    val files = entries.map(_.dataFile)
 
     // numeric view of a metrics bound value (internal repr per type)
     def toD(v: Any): Option[Double] = v match {
@@ -359,15 +499,14 @@ object Maintenance {
       case _ => None
     }
     // bounds per column: file metrics when every file has them, else one agg
-    val ids = zCols.map(schema.fieldId)
-    val metricBounds: Seq[Option[(Double, Double)]] = ids.map { id =>
-      val los = toRewrite.map(f => f.lowerBounds.get(id).flatMap(toD))
-      val his = toRewrite.map(f => f.upperBounds.get(id).flatMap(toD))
+    val metricBounds: Seq[Option[(Double, Double)]] = zCols.map(schema.fieldId).map { id =>
+      val los = files.map(f => f.lowerBounds.get(id).flatMap(toD))
+      val his = files.map(f => f.upperBounds.get(id).flatMap(toD))
       if (los.forall(_.isDefined) && his.forall(_.isDefined))
         Some((los.flatten.min, his.flatten.max))
       else None
     }
-    val bounds: Seq[(Double, Double)] =
+    def bounds(df: DataFrame): Seq[(Double, Double)] =
       if (metricBounds.forall(_.isDefined)) metricBounds.flatten
       else {
         val aggs = zCols.flatMap(c => Seq(
@@ -389,201 +528,19 @@ object Maintenance {
         least(lit(maxRank.toLong), greatest(lit(0L),
           (((col(c).cast("double") - lo) / span) * maxRank).cast("long"))))
     }
-    val n = zCols.size
-    val ranks = zCols.zip(bounds).map { case (c, (lo, hi)) => rank(c, lo, hi) }
-    val zval = (0 until bitsPer).flatMap { i =>
-      ranks.zipWithIndex.map { case (r, j) =>
-        shiftleft(shiftright(r, i).bitwiseAND(lit(1L)), i * n + j)
-      }
-    }.reduce(_ bitwiseOR _)
-
-    // suppress the table sort order for this write: the z-clustering IS the
-    // layout, a declared lexicographic order would destroy it
-    val mm = m.copy(sortOrders = Seq(SortOrderMeta.unsorted), defaultSortOrderId = 0)
-    val zc = df.withColumn("_gf_z", zval)
-    val clustered = zc.repartitionByRange(nOut, col("_gf_z"))
-      .sortWithinPartitions("_gf_z")
-    val written = Writes.writeDataFiles(spark, table, mm, clustered,
-      overrides = Map(TableProperties.DistributionMode -> "none",
-        TableProperties.TargetFileSize -> targetSizeBytes.toString),
-      lineageCols = preserve)
-      .filter(_.recordCount > 0)
-    table.commitSnapshot(Operation.Replace, written,
-      toRewrite.map(_.path).toSet,
-      Map("compaction" -> "zorder", "zorder-columns" -> zCols.mkString(",")),
-      removedMeta = toRewrite)
-    (toRewrite.size, written.size)
+    def zValue(df: DataFrame): Column = {
+      val ranks = zCols.zip(bounds(df)).map { case (c, (lo, hi)) => rank(c, lo, hi) }
+      (0 until bitsPer).flatMap { i =>
+        ranks.zipWithIndex.map { case (r, j) =>
+          shiftleft(shiftright(r, i).bitwiseAND(lit(1L)), i * zCols.size + j)
+        }
+      }.reduce(_ bitwiseOR _)
+    }
+    rewrite(table, m, Seq(entries).filter(_.nonEmpty), ZOrdered(zValue),
+      targetSizeBytes, 1,
+      Map("compaction" -> "zorder", "zorder-columns" -> zCols.mkString(",")))
   }
 
-  def rewriteDataFiles(table: IceTable,
-      targetSizeBytes: Long = TableProperties.TargetFileSizeDefault,
-      minInputFiles: Int = 2,
-      minFileSizeBytes: Long = -1,
-      maxFileSizeBytes: Long = -1,
-      filter: graft.meta.expr.Expr = graft.meta.expr.TrueExpr,
-      partialProgressCommits: Int = 1): (Int, Int) = {
-    val minSize = if (minFileSizeBytes > 0) minFileSizeBytes
-      else (targetSizeBytes * 0.75).toLong // ref BinPackStrategy.java:96
-    val maxSize = if (maxFileSizeBytes > 0) maxFileSizeBytes
-      else (targetSizeBytes * 1.80).toLong // ref BinPackStrategy.java:107
-    val m = table.meta
-    val snap = m.currentSnapshot.getOrElse(return (0, 0))
-    // scoped compaction: `filter` restricts candidates to files that MAY
-    // hold matching rows, through the same partition/metrics pruning
-    // cascade as reads — at scale you compact the hot partition, not the
-    // table. File-level granularity: a selected file is rewritten whole.
-    val inScope: DataFileMeta => Boolean =
-      if (filter == graft.meta.expr.TrueExpr) _ => true
-      else {
-        val paths = table.newScan().useSnapshot(snap.snapshotId).filter(filter)
-          .planFiles().map(_.file.path).toSet
-        f => paths.contains(f.path)
-      }
-    val entries = table.liveEntries(m, snap)
-      .filter(e => e.dataFile.content == FileContent.Data && inScope(e.dataFile))
-    val groups = entries.groupBy(e => (e.dataFile.specId, e.dataFile.partition))
-      .values.map { es =>
-        val small = es.filter(_.dataFile.fileSizeBytes < minSize)
-        val big = es.filter(_.dataFile.fileSizeBytes > maxSize)
-        if (small.size >= minInputFiles || big.nonEmpty) small ++ big else Nil
-      }
-      .filter(_.nonEmpty)
-      .toSeq
-    if (groups.isEmpty) return (0, 0)
-    val spark = table.spark
-    // bin-pack on the READ side: plan the rewrite scan with target-size
-    // splits (maxPartitionBytes = target, no open-cost padding, no minimum
-    // partition count), so each read task carries ~targetSize bytes of small
-    // files and the write emits right-sized files with NO shuffle — the
-    // repartition this replaces moved every rewritten byte through a full
-    // exchange and serialized small compactions onto one writer
-    val packSession = org.apache.spark.sql.graft.ColumnBridge.cloneSession(spark)
-    packSession.conf.set("spark.sql.files.maxPartitionBytes", targetSizeBytes.toString)
-    packSession.conf.set("spark.sql.files.openCostInBytes", "0")
-    packSession.conf.set("spark.sql.files.minPartitionNum", "1")
-    val deletes = table.newScan().planDeletes()
-    // partial progress (ref partial-progress.max-commits): spread the group
-    // set over up to N independent Replace commits so a huge compaction
-    // neither holds one giant conflict window nor loses everything to a
-    // late failure — each committed batch is durable on its own
-    val nBatches = math.max(1, math.min(partialProgressCommits, groups.size))
-    val perBatch = math.ceil(groups.size.toDouble / nBatches).toInt
-    var rewritten = 0
-    var added = 0
-    groups.grouped(perBatch).foreach { batch =>
-      val toRewriteEntries = batch.flatten
-      val toRewrite = toRewriteEntries.map(_.dataFile)
-      // CARRY each file's data sequence number: equality deletes apply only
-      // to STRICTLY older sequences, and a defaulted seq=0 would make every
-      // delete apply — silently dropping rows a same-sequence upsert delta
-      // (eq delete + data in one snapshot) legitimately kept live
-      // preserving rewrite: every surviving row carries its ORIGINAL
-      // _row_id and _last_updated_seq into the new files as materialized
-      // columns, so compaction no longer severs row identity
-      val preserve = Writes.lineagePreserve(m)
-      val df = Reads.readTasksWithDeletes(table, m,
-        toRewriteEntries.map(e =>
-          FileScanTask(e.dataFile, graft.meta.expr.TrueExpr, e.sequenceNumber)),
-        deletes, m.schema.columnNames,
-        graft.meta.expr.TrueExpr, rowPositions = false, session = Some(packSession),
-        withLineage = preserve)
-      val written = Writes.writeDataFiles(spark, table, m, df,
-        overrides = Map(TableProperties.TargetFileSize -> targetSizeBytes.toString),
-        lineageCols = preserve)
-        .filter(_.recordCount > 0)
-      table.commitSnapshot(Operation.Replace, written,
-        toRewrite.map(_.path).toSet, Map("compaction" -> "bin-pack"),
-        removedMeta = toRewrite)
-      rewritten += toRewrite.size
-      added += written.size
-    }
-    (rewritten, added)
-  }
-
-  /** Sort-strategy rewrite (ref `core/.../actions/SortStrategy.java` +
-    * `Spark3SortStrategy`): rewrite ALL live data files re-clustered on a
-    * sort order — the table's declared order, or an explicit
-    * `"col [ASC|DESC] [NULLS FIRST|LAST], ..."` spec. Global clustering
-    * comes from ONE range exchange sized to emit ~target-size outputs
-    * (range distribution + local sort, the same plan
-    * `DistributionAndOrderingUtils` injects for sorted writes); min/max
-    * column bounds then make the rewritten files metrics-prunable on the
-    * sort key. Returns (#rewritten, #added). */
-  def rewriteDataFilesSorted(table: IceTable,
-      targetSizeBytes: Long = TableProperties.TargetFileSizeDefault,
-      sortOrderSpec: Option[String] = None): (Int, Int) = {
-    val m = table.meta
-    val snap = m.currentSnapshot.getOrElse(return (0, 0))
-    val order: SortOrderMeta = sortOrderSpec match {
-      case Some(spec) =>
-        // same grammar as WRITE ORDERED BY, incl. transform terms
-        // (`bucket(4, id) ASC`); transient order: files record sortOrderId 0
-        SortOrderMeta(0, graft.meta.SortSpec.parseFields(m.schema, spec))
-      case None =>
-        require(m.sortOrder.fields.nonEmpty,
-          "Sort rewrite needs a table sort order (WRITE ORDERED BY) or an explicit sort_order")
-        m.sortOrder
-    }
-    val toRewriteEntries = table.liveEntries(m, snap)
-      .filter(_.dataFile.content == FileContent.Data)
-    val toRewrite = toRewriteEntries.map(_.dataFile)
-    if (toRewrite.isEmpty) return (0, 0)
-    val spark = table.spark
-    // one range exchange sized so each output task carries ~targetSize bytes
-    val nOut = math.max(1, math.ceil(
-      toRewrite.map(_.fileSizeBytes).sum.toDouble / targetSizeBytes).toInt)
-    val rangeSession = org.apache.spark.sql.graft.ColumnBridge.cloneSession(spark)
-    rangeSession.conf.set("spark.sql.shuffle.partitions", nOut.toString)
-    // AQE coalescing would merge the ranges back into few fat tasks
-    rangeSession.conf.set("spark.sql.adaptive.enabled", "false")
-    // real data sequence numbers — see rewriteDataFiles
-    val preserve = Writes.lineagePreserve(m)
-    val df = Reads.readTasksWithDeletes(table, m,
-      toRewriteEntries.map(e =>
-        FileScanTask(e.dataFile, graft.meta.expr.TrueExpr, e.sequenceNumber)),
-      table.newScan().planDeletes(), m.schema.columnNames,
-      graft.meta.expr.TrueExpr, rowPositions = false, session = Some(rangeSession),
-      withLineage = preserve)
-    // write under the chosen order with range distribution; writeDataFiles
-    // adds the local sort (partitioned tables range-shuffle on
-    // partition+sort cols, unpartitioned on the sort cols alone)
-    val mm = m.copy(sortOrders = Seq(order), defaultSortOrderId = order.orderId)
-    // range-cluster on the TRANSFORMED sort terms (bucket(4, id) clusters by
-    // bucket value) — the same columns writeDataFiles' local sort uses
-    val sortCols = order.fields.map { sf =>
-      val t = graft.meta.transforms.Transform.parse(sf.transform)
-      val c = t.toColumn(
-        org.apache.spark.sql.functions.col(m.schema.fieldName(sf.sourceId)),
-        m.schema.fieldType(sf.sourceId))
-      if (sf.nullsFirst) (if (sf.ascending) c.asc_nulls_first else c.desc_nulls_first)
-      else (if (sf.ascending) c.asc_nulls_last else c.desc_nulls_last)
-    }
-    val clustered =
-      if (m.spec.isUnpartitioned) df.repartitionByRange(nOut, sortCols: _*)
-      else df // partitioned: writeDataFiles' range mode shuffles once
-    val written = Writes.writeDataFiles(spark, table, mm, clustered,
-      overrides = Map(
-        TableProperties.DistributionMode -> (
-          if (m.spec.isUnpartitioned) "none" else "range"),
-        TableProperties.TargetFileSize -> targetSizeBytes.toString),
-      lineageCols = preserve)
-      .filter(_.recordCount > 0)
-      .map(f => f.copy(sortOrderId = order.orderId))
-    table.commitSnapshot(Operation.Replace, written,
-      toRewrite.map(_.path).toSet, Map("compaction" -> "sort"),
-      removedMeta = toRewrite)
-    (toRewrite.size, written.size)
-  }
-
-  // ------------------------------------------------------- delete files
-
-  /** Drop delete files that can no longer suppress anything, decided from
-    * manifest metadata alone: a delete file applies only to live data files
-    * with an older sequence number inside its partition scope
-    * (`MergeOnRead.applies`), so once compaction has re-sequenced every such
-    * file the delete is dead weight — each scan still reads and probes
-    * it. O(deletes + data) via per-scope minimum data sequences, no file IO
-    * beyond one removal commit. Returns #removed. */
   /** Master-key rotation: rewrite every live content file under the NEW
     * key (no reference counterpart — the incubator-era reference ships only
     * the `EncryptionManager` interface; see [[KeyRotationManager]] for the
@@ -614,41 +571,14 @@ object Maintenance {
           other.getClass.getSimpleName)
     }
     val m = table.meta
-    val spark = table.spark
-    var rewritten = 0
-    var added = 0
-    m.currentSnapshot.foreach { snap =>
-      // stale = any live DATA file not already keyed under the primary
-      // (plaintext files included — rotating FROM plaintext encrypts them)
-      val stale = table.liveEntries(m, snap).filter(e =>
-        e.dataFile.content == FileContent.Data &&
-          e.dataFile.keyMetadata != rot.primary.keyMetadata(e.dataFile.path))
-      if (stale.nonEmpty) {
-        val packSession = org.apache.spark.sql.graft.ColumnBridge.cloneSession(spark)
-        packSession.conf.set("spark.sql.files.maxPartitionBytes", targetSizeBytes.toString)
-        packSession.conf.set("spark.sql.files.openCostInBytes", "0")
-        packSession.conf.set("spark.sql.files.minPartitionNum", "1")
-        val deletes = table.newScan().planDeletes()
-        val nBatches = math.max(1, math.min(partialProgressCommits, stale.size))
-        val perBatch = math.ceil(stale.size.toDouble / nBatches).toInt
-        stale.grouped(perBatch).foreach { batch =>
-          val toRewrite = batch.map(_.dataFile)
-          val df = Reads.readTasksWithDeletes(table, m,
-            batch.map(e => FileScanTask(e.dataFile, graft.meta.expr.TrueExpr,
-              e.sequenceNumber)),
-            deletes, m.schema.columnNames,
-            graft.meta.expr.TrueExpr, rowPositions = false,
-            session = Some(packSession))
-          val written = Writes.writeDataFiles(spark, table, m, df,
-            overrides = Map(TableProperties.TargetFileSize -> targetSizeBytes.toString))
-            .filter(_.recordCount > 0)
-          table.commitSnapshot(Operation.Replace, written,
-            toRewrite.map(_.path).toSet,
-            Map("key-rotation" -> "rewrite"), removedMeta = toRewrite)
-          rewritten += toRewrite.size
-          added += written.size
-        }
-      }
+    // stale = any live DATA file not already keyed under the primary
+    // (plaintext files included — rotating FROM plaintext encrypts them);
+    // one group per file, so the batches split the files evenly
+    val stale = liveDataEntries(table, m).filter(e =>
+      e.dataFile.keyMetadata != rot.primary.keyMetadata(e.dataFile.path))
+    val result = rewrite(table, m, stale.map(Seq(_)), Packed, targetSizeBytes,
+      partialProgressCommits, Map("key-rotation" -> "rewrite"))
+    if (m.currentSnapshot.nonEmpty) {
       // all stale data files now carry sequence numbers newer than every
       // delete file (and their deletes were applied in the rewrite): the
       // delete files are dangling — drop them so the table's live content
@@ -677,9 +607,18 @@ object Maintenance {
         (TableProperties.EncryptionRequired -> "true"),
         lastUpdatedMillis = System.currentTimeMillis())
     }
-    (rewritten, added)
+    result
   }
 
+  // ------------------------------------------------------- delete files
+
+  /** Drop delete files that can no longer suppress anything, decided from
+    * manifest metadata alone: a delete file applies only to live data files
+    * with an older sequence number inside its partition scope
+    * (`MergeOnRead.applies`), so once compaction has re-sequenced every such
+    * file the delete is dead weight — each scan still reads and probes
+    * it. O(deletes + data) via per-scope minimum data sequences, no file IO
+    * beyond one removal commit. Returns #removed. */
   def removeDanglingDeletes(table: IceTable): Int = {
     val m = table.meta
     val snap = m.currentSnapshot.getOrElse(return 0)
@@ -729,6 +668,38 @@ object Maintenance {
     dangling.size
   }
 
+  /** Delete files are parquet, read with the table's content-encryption
+    * options. */
+  private def readDeleteFiles(table: IceTable, m: TableMetadata,
+      files: Seq[DataFileMeta]): DataFrame =
+    table.spark.read
+      .options(EncryptionManagers.contentOptionsFor(table.io.encryption,
+        "parquet", m.property(TableProperties.EncryptionRequired, "false").toBoolean))
+      .parquet(files.map(_.path): _*)
+
+  /** The (file_path, pos) rows of the given parquet position-delete files
+    * and deletion vectors whose target data file is still live in
+    * `entries`; rows aimed at files compacted away are dropped. */
+  private def livePositionRows(table: IceTable, m: TableMetadata,
+      entries: Seq[ManifestEntry], posDeletes: Seq[DataFileMeta],
+      dvDeletes: Seq[DataFileMeta]): DataFrame = {
+    val spark = table.spark
+    import spark.implicits._
+    val liveDf = spark.createDataset(entries
+      .filter(_.dataFile.content == FileContent.Data)
+      .map(e => table.normPath(e.dataFile.path))).toDF("_gf_live")
+    val pathPos = Seq(col(MergeOnRead.PosPathCol), col(MergeOnRead.PosPosCol))
+    val parquetRows =
+      if (posDeletes.isEmpty) None
+      else Some(readDeleteFiles(table, m, posDeletes).select(pathPos: _*))
+    val dvRows =
+      if (dvDeletes.isEmpty) None
+      else Some(DeletionVectors.positionsDf(table, dvDeletes).select(pathPos: _*))
+    (parquetRows ++ dvRows).reduce(_ unionByName _)
+      .join(liveDf, MergeOnRead.normPathCol(col(MergeOnRead.PosPathCol)) ===
+        col("_gf_live"), "left_semi")
+  }
+
   /** Compact the live position-delete files: read them all, drop rows whose
     * target data file is no longer live, and rewrite the survivors as at
     * most one delete file per partition (ref delete-file maintenance;
@@ -749,25 +720,10 @@ object Maintenance {
     val dvDeletes = entries
       .filter(_.dataFile.content == FileContent.DeletionVectors).map(_.dataFile)
     if (posDeletes.isEmpty && dvDeletes.isEmpty) return (0, 0)
-    val spark = table.spark
-    import spark.implicits._
-    val livePaths = entries.filter(_.dataFile.content == FileContent.Data)
-      .map(e => table.normPath(e.dataFile.path))
-    val liveDf = spark.createDataset(livePaths).toDF("_gf_live")
     // both representations in, one compacted representation out (the table
     // property picks parquet rows or DV sidecars) — so this action is also
     // the DV-merge step: several blobs targeting one file become one bitmap
-    val parquetRows = if (posDeletes.isEmpty) None else Some(spark.read
-      .options(EncryptionManagers.contentOptionsFor(table.io.encryption,
-        "parquet", m.property(TableProperties.EncryptionRequired, "false").toBoolean))
-      .parquet(posDeletes.map(_.path): _*)
-      .select(col(MergeOnRead.PosPathCol), col(MergeOnRead.PosPosCol)))
-    val dvRows = if (dvDeletes.isEmpty) None
-      else Some(DeletionVectors.positionsDf(table, dvDeletes)
-        .select(col(MergeOnRead.PosPathCol), col(MergeOnRead.PosPosCol)))
-    val rows = (parquetRows ++ dvRows).reduce(_ unionByName _)
-      .join(liveDf, MergeOnRead.normPathCol(col(MergeOnRead.PosPathCol)) ===
-        col("_gf_live"), "left_semi")
+    val rows = livePositionRows(table, m, entries, posDeletes, dvDeletes)
     val (newFiles, _) = MergeOnRead.writePositionDeleteFiles(table, m, rows,
       compact = true, wantRefs = false)
     val oldFiles = posDeletes ++ dvDeletes
@@ -795,18 +751,7 @@ object Maintenance {
     val posDeletes = entries
       .filter(_.dataFile.content == FileContent.PositionDeletes).map(_.dataFile)
     if (posDeletes.isEmpty) return (0, 0)
-    val spark = table.spark
-    import spark.implicits._
-    val livePaths = entries.filter(_.dataFile.content == FileContent.Data)
-      .map(e => table.normPath(e.dataFile.path))
-    val liveDf = spark.createDataset(livePaths).toDF("_gf_live")
-    val rows = spark.read
-      .options(EncryptionManagers.contentOptionsFor(table.io.encryption,
-        "parquet", m.property(TableProperties.EncryptionRequired, "false").toBoolean))
-      .parquet(posDeletes.map(_.path): _*)
-      .select(col(MergeOnRead.PosPathCol), col(MergeOnRead.PosPosCol))
-      .join(liveDf, MergeOnRead.normPathCol(col(MergeOnRead.PosPathCol)) ===
-        col("_gf_live"), "left_semi")
+    val rows = livePositionRows(table, m, entries, posDeletes, Nil)
     val (newFiles, _) = DeletionVectors.writeSidecars(table, m, rows, None)
     table.commitSnapshot(Operation.Replace, newFiles,
       posDeletes.map(_.path).toSet,
@@ -853,11 +798,9 @@ object Maintenance {
       .filter(e => FileContent.isPositional(e.dataFile.content))
       .map(e => (e.dataFile, e.sequenceNumber))
     val dataTasks = entries.filter(_.dataFile.content == FileContent.Data)
-      .map(e => FileScanTask(e.dataFile, graft.meta.expr.TrueExpr,
+      .map(e => FileScanTask(e.dataFile, TrueExpr,
         e.sequenceNumber))
     val spark = table.spark
-    val readOpts = EncryptionManagers.contentOptionsFor(table.io.encryption,
-      "parquet", m.property(TableProperties.EncryptionRequired, "false").toBoolean)
     // group data files by WHICH eq deletes reach them — the read path's own
     // applicability classes, so conversion can never disagree with a scan
     val groups = Reads.groupTasksByDeletes(dataTasks, eqPairs)
@@ -872,10 +815,9 @@ object Maintenance {
         .map { case (ids, fs) => (ids.map(m.schema.fieldName), fs) }
       val projection = keyNameSets.flatMap(_._1).distinct
       val rows = Reads.readTasksWithDeletes(table, m, tasks, posPairs,
-        projection, graft.meta.expr.TrueExpr, rowPositions = true)
+        projection, TrueExpr, rowPositions = true)
       keyNameSets.map { case (keyNames, fs) =>
-        val keys = spark.read.options(readOpts)
-          .parquet(fs.map(_.path): _*).select(keyNames.map(col): _*)
+        val keys = readDeleteFiles(table, m, fs).select(keyNames.map(col): _*)
         val kdf = if (fs.map(_.fileSizeBytes).sum < 64L * 1024 * 1024)
           broadcast(keys) else keys
         // null-safe per key column — eq-delete spec semantics (null keys

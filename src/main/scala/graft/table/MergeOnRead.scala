@@ -51,10 +51,6 @@ object MergeOnRead {
       Map("equality-delete-files" -> files.size.toString))
   }
 
-  /** Write (but do NOT commit) equality-delete files for `keysDf`'s key
-    * tuples — the building block the streaming upsert sink combines with a
-    * data append in ONE snapshot (ref `EqualityDeleteWriter.java` used by
-    * the Flink CDC writer). */
   /** Delete files are always parquet: a non-plaintext manager that cannot
     * drive Parquet Modular Encryption (stream-only, not
     * [[KeyedFileEncryption]]) would silently write equality-delete key
@@ -70,6 +66,10 @@ object MergeOnRead {
           "plaintext delete content into an encrypted table is refused")
   }
 
+  /** Write (but do NOT commit) equality-delete files for `keysDf`'s key
+    * tuples — the building block the streaming upsert sink combines with a
+    * data append in ONE snapshot (ref `EqualityDeleteWriter.java` used by
+    * the Flink CDC writer). */
   private[graft] def writeEqualityDeleteFiles(table: IceTable, m: TableMetadata,
       keysDf: DataFrame, keys: Seq[String]): Seq[DataFileMeta] = {
     Writes.requireEncryptionSatisfied(table, m)
@@ -443,16 +443,16 @@ object MergeOnRead {
       }
   }
 
-  /** A delete file's applicability to one data file (ref
-    * `DeleteFileIndex.java:103,286`): sequence rule per content type, then
-    * partition scope — all-null partition = global; a different spec can't
-    * prove disjointness, so scoped deletes still apply across specs. */
   /** Sequence rule alone (partition scope ignored) — used when branch-count
     * capping merges applicability classes; see `IceTable.MaxDeleteGroups`. */
   private[table] def seqApplies(d: DataFileMeta, dseq: Long, t: FileScanTask): Boolean =
     if (FileContent.isPositional(d.content)) dseq >= t.seq
     else dseq > t.seq
 
+  /** A delete file's applicability to one data file (ref
+    * `DeleteFileIndex.java:103,286`): sequence rule per content type, then
+    * partition scope — all-null partition = global; a different spec can't
+    * prove disjointness, so scoped deletes still apply across specs. */
   private[table] def applies(d: DataFileMeta, dseq: Long, t: FileScanTask): Boolean = {
     if (!seqApplies(d, dseq, t)) return false
     val global = d.partition.isEmpty || d.partition.forall(_ == null)

@@ -102,10 +102,6 @@ private[table] object RowOps {
       removedMeta = removedFiles)
   }
 
-  /** UPDATE SET: single-job rewrite of affected files with
-    * `If(cond, newValue, oldValue)` projections (ref
-    * `RewriteUpdate.scala:55`). `rowCond` as in [[overwrite]]: the exact
-    * condition when `filter` is only a weaker pruning bound. */
   /** `a.b.c` path → the nested field's type in `t`. */
   private def nestedType(t: org.apache.spark.sql.types.DataType,
       path: Seq[String]): org.apache.spark.sql.types.DataType =
@@ -142,6 +138,10 @@ private[table] object RowOps {
     }: _*)
   }
 
+  /** UPDATE SET: single-job rewrite of affected files with
+    * `If(cond, newValue, oldValue)` projections (ref
+    * `RewriteUpdate.scala:55`). `rowCond` as in [[overwrite]]: the exact
+    * condition when `filter` is only a weaker pruning bound. */
   def update(table: IceTable, filter: Expr, assignments: Map[String, Column],
       rowCond: Option[Column] = None,
       extraSummary: Map[String, String] = Map.empty): Unit = {

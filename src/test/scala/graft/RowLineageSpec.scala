@@ -86,25 +86,35 @@ class RowLineageSpec extends AnyFunSuite {
     afterDv.foreach { case (k, id) => assert(before(k) === id) }
   }
 
-  test("preserving rewrites: compaction keeps id AND seq, twice over") {
-    val wh = freshCatalog("rl4")
-    spark.sql("CREATE TABLE rl4.db.t (k BIGINT, v STRING)")
-    spark.sql("INSERT INTO rl4.db.t SELECT id, concat('v', id) FROM range(0, 80)")
-    spark.sql("INSERT INTO rl4.db.t SELECT id, concat('v', id) FROM range(80, 160)")
-    def state() = spark.sql("SELECT k, _row_id, _last_updated_seq FROM rl4.db.t")
+  // every compaction layout: bin-pack (read-side packing), sort and z-order
+  // (a range exchange that moves rows between files)
+  for ((layout, suffix, compact) <- Seq[(String, String, IceTable => (Int, Int))](
+      ("rl4", "", t => graft.table.Maintenance.rewriteDataFiles(t, minInputFiles = 2)),
+      ("rl4s", " (sort)", t => graft.table.Maintenance.rewriteDataFilesSorted(t,
+        sortOrderSpec = Some("n DESC"))),
+      ("rl4z", " (z-order)", t => graft.table.Maintenance.rewriteDataFilesZOrder(t,
+        Seq("k", "n")))))
+  test(s"preserving rewrites: compaction keeps id AND seq, twice over$suffix") {
+    val wh = freshCatalog(layout)
+    def insert(from: Int, until: Int): Unit = spark.sql(s"INSERT INTO $layout.db.t " +
+      s"SELECT id, concat('v', id), CAST(id % 7 AS INT) FROM range($from, $until)")
+    spark.sql(s"CREATE TABLE $layout.db.t (k BIGINT, v STRING, n INT)")
+    insert(0, 80)
+    insert(80, 160)
+    def state() = spark.sql(s"SELECT k, _row_id, _last_updated_seq FROM $layout.db.t")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val before = state()
     val t = IceTable.load(spark, s"$wh/db/t")
-    val (rewritten, _) = graft.table.Maintenance.rewriteDataFiles(t)
+    val (rewritten, _) = compact(t)
     assert(rewritten > 0)
     assert(state() === before, "first compaction severed lineage")
     // SECOND compaction must read the materialized columns back (small
     // file appended to force another rewrite)
-    spark.sql("INSERT INTO rl4.db.t SELECT id, concat('v', id) FROM range(160, 165)")
+    insert(160, 165)
     val withNew = state()
     assert(withNew.keySet.diff(before.keySet).size === 5)
     val t2 = IceTable.load(spark, s"$wh/db/t")
-    val (rw2, _) = graft.table.Maintenance.rewriteDataFiles(t2, minInputFiles = 2)
+    val (rw2, _) = compact(t2)
     assert(rw2 > 0, "second compaction did not engage")
     assert(state() === withNew, "second compaction lost materialized lineage")
     // ids remain unique after every rewrite
