@@ -7,7 +7,12 @@ import graft.meta.{PartitionSpec, Schema}
   * `api/.../ManifestFile.java`). Persisted as JSON ([[JsonCodecs]]):
   *  - `v{N}.metadata.json` — the table metadata tree (small)
   *  - `snap-{id}.manifestlist.json` — manifest list with partition summaries
-  *  - `manifest-{uuid}.jsonl` — one JSON line per file entry
+  *  - `manifest-{uuid}.parquet` (or `.jsonl`, one JSON line per entry) —
+  *    the file entries
+  *  - `stats-{snapshotId}-{uuid}.json` — table column statistics
+  * Orphan removal collects the last three kinds when no snapshot or stats
+  * entry references them; it never touches metadata JSON or the version
+  * hint.
   * Avro→JSON is a deliberate re-expression (semantics, not format, are the
   * contract); entries stay streamable line-per-file for big metadata.
   */

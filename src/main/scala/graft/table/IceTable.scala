@@ -30,6 +30,18 @@ final case class ConflictValidation(startSnapshotId: Option[Long],
       * paths are structurally protected by their removedPaths check). */
     requiredLivePaths: Set[String] = Set.empty)
 
+/** Where [[IceTable.commitSnapshot]] lands the snapshot it produces. */
+private[graft] sealed trait SnapshotTarget
+private[graft] object SnapshotTarget {
+  /** Becomes the current snapshot, with a snapshot-log entry. */
+  case object Main extends SnapshotTarget
+  /** Builds on the branch head and moves only that ref; main is untouched. */
+  final case class Branch(name: String) extends SnapshotTarget
+  /** Recorded on top of main, but no ref or snapshot-log entry moves (the
+    * write-audit-publish stage; ref `SnapshotProducer.stageOnly`). */
+  case object Staged extends SnapshotTarget
+}
+
 /** A graft table: immutable parquet data files + snapshot-tree JSON metadata,
   * executed by Spark (SURVEY §1.4 rebuild mapping). All reads/writes are
   * DataFrame programs; only planning/commit is driver-side Scala, and the
@@ -99,32 +111,9 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
   def stageAppend(df: DataFrame, wapId: String,
       summary: Map[String, String] = Map.empty,
       writeOverrides: Map[String, String] = Map.empty): Long = {
-    val m = meta
-    val files = Writes.writeDataFiles(spark, this, m, df, writeOverrides)
-    var staged = 0L
-    ops.commitWithRetry(retries(m)) { base =>
-      val nowMs = System.currentTimeMillis()
-      val snapId = newSnapshotId()
-      staged = snapId
-      val seq = base.lastSequenceNumber + 1
-      val mdir = s"$location/metadata"
-      val entries = files.map(f => ManifestEntry(EntryStatus.Added, snapId, seq, f))
-      val manifest = ManifestIO.write(io,
-        ManifestIO.newPath(mdir, base, io), entries, base.schema, base.spec)
-      val current = base.currentSnapshot.map(readManifestList(base, _)).getOrElse(Nil)
-      val listPath = s"$mdir/snap-$snapId.manifestlist.json"
-      io.writeString(listPath,
-        JsonCodecs.manifestListToJson(manifest +: current, base.schema, base.specById))
-      // snapshot recorded but NOT made current; no snapshot-log entry
-      base.copy(
-        lastSequenceNumber = seq,
-        lastUpdatedMillis = nowMs,
-        snapshots = base.snapshots :+ SnapshotMeta(snapId, base.currentSnapshotId,
-          seq, nowMs, Operation.Append,
-          summary ++ Map("wap.id" -> wapId,
-            "added-data-files" -> files.size.toString), listPath))
-    }
-    staged
+    val files = Writes.writeDataFiles(spark, this, meta, df, writeOverrides)
+    commitSnapshot(Operation.Append, files, Set.empty, summary + ("wap.id" -> wapId),
+      target = SnapshotTarget.Staged).snapshotId
   }
 
   // ---------------------------------------------------------- maintenance
@@ -393,7 +382,7 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       summary: Map[String, String] = Map.empty): Unit = {
     val files = Writes.writeDataFiles(spark, this, meta, df)
     commitSnapshot(Operation.Append, files, Set.empty, summary,
-      branch = Some(name))
+      target = SnapshotTarget.Branch(name))
   }
 
   // ---------------------------------------------------------- incremental
@@ -606,16 +595,23 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
     * `commit.manifest.min-count-to-merge` manifests pile up, so recent
     * commits aren't rewritten on every append. Carried entries keep their
     * snapshot and sequence numbers; foreign `Added` entries become
-    * `Existing` and the merged manifest is stamped with the committing
+    * `Existing` and `write` stamps the merged manifest with the committing
     * snapshot id, which keeps [[addedFiles]]' manifest-level
     * `addedSnapshotId` pruning and entry-level status filter exact (ref
-    * `ManifestMergeManager.createManifest`). */
+    * `ManifestMergeManager.createManifest`).
+    *
+    * `rewriteAll` (manifest rewrite, ref `BaseRewriteManifestsSparkAction`)
+    * packs every manifest of a spec into one bin and rewrites it whatever
+    * its size, entries clustered by partition. */
   private def mergeSmallManifests(base: TableMetadata,
-      manifests: Seq[ManifestFileMeta], snapId: Long,
-      mdir: String): Seq[ManifestFileMeta] = {
-    if (manifests.size < 2) return manifests
-    val targetSize = base.property(TableProperties.ManifestTargetSizeBytes,
-      TableProperties.ManifestTargetSizeBytesDefault.toString).toLong
+      manifests: Seq[ManifestFileMeta], snapId: Long, rewriteAll: Boolean)(
+      write: (Seq[ManifestEntry], PartitionSpec) => ManifestFileMeta)
+      : Seq[ManifestFileMeta] = {
+    if (manifests.isEmpty || (manifests.size < 2 && !rewriteAll)) return manifests
+    val targetSize =
+      if (rewriteAll) Long.MaxValue
+      else base.property(TableProperties.ManifestTargetSizeBytes,
+        TableProperties.ManifestTargetSizeBytesDefault.toString).toLong
     val minCount = base.property(TableProperties.ManifestMinMergeCount,
       TableProperties.ManifestMinMergeCountDefault.toString).toInt
     // min-count protects the bin holding the head of the fresh-first list
@@ -637,30 +633,68 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       }
       if (cur.nonEmpty) bins += cur
       bins.reverseIterator.flatMap { bin =>
-        val merge = bin.size > 1 &&
-          !(bin.exists(_.path == firstPath) && bin.size < minCount)
+        val merge = rewriteAll || (bin.size > 1 &&
+          !(bin.exists(_.path == firstPath) && bin.size < minCount))
         if (!merge) bin
         else {
-          val entries = ManifestIO.readAll(io, bin, base.schema, base.specById)
+          val live = ManifestIO.readAll(io, bin, base.schema, base.specById)
             .flatMap(_._2)
             .filter(_.status != EntryStatus.Deleted)
             .map(e =>
               if (e.status == EntryStatus.Added && e.snapshotId == snapId) e
               else e.copy(status = EntryStatus.Existing))
-          if (entries.isEmpty) Nil
-          else Seq(ManifestIO.write(io, ManifestIO.newPath(mdir, base, io), entries,
-            base.schema, base.specById(specId), addedSnapshotId = Some(snapId)))
+          val entries =
+            if (rewriteAll) live.sortBy(_.dataFile.partition.map(String.valueOf).mkString("/"))
+            else live
+          if (entries.isEmpty) Nil else Seq(write(entries, base.specById(specId)))
         }
       }
     }
   }
 
-  /** Core commit: new snapshot = (current live files − removedPaths) ∪ added.
-    * Carried manifests are kept untouched when they lose no files; touched
-    * ones are compacted into a rewrite manifest (ref
-    * `ManifestFilterManager.java:167`). Under concurrency, removal of a file
-    * that no longer exists fails validation (serializable isolation for
-    * overwrites; ref `BaseOverwriteFiles.java:98`).
+  /** Per-content counts of one side of a commit (ref
+    * `SnapshotSummary.java:256-264`): record counters are per content (a MoR
+    * DELETE of N rows must NOT move total-records), bytes cover every
+    * content. A deletion-vector blob counts its own bytes, not the sidecar
+    * it shares with other blobs. */
+  private final class Tally(files: Seq[DataFileMeta]) {
+    private val (data, deletes) = files.partition(_.content == FileContent.Data)
+    private def bytesOf(fs: Seq[DataFileMeta]): Long =
+      fs.map(f => f.contentSize.getOrElse(f.fileSizeBytes)).sum
+    val dataFiles: Int = data.size
+    val records: Long = data.map(_.recordCount).sum
+    val deleteFiles: Int = deletes.size
+    val deleteBytes: Long = bytesOf(deletes)
+    val bytes: Long = bytesOf(data) + deleteBytes
+    val posDeletes: Long =
+      deletes.filter(f => FileContent.isPositional(f.content)).map(_.recordCount).sum
+    val eqDeletes: Long =
+      deletes.filter(_.content == FileContent.EqualityDeletes).map(_.recordCount).sum
+  }
+
+  /** The snapshot producer (ref `SnapshotProducer.java:270`), the one code
+    * path that writes manifests and manifest lists and creates a snapshot:
+    * (head's live files − removedPaths) ∪ added. Carried manifests that lose
+    * no file stay untouched; touched ones are rewritten with the files they
+    * keep (ref `ManifestFilterManager.java:167`), then small manifests merge.
+    * Removing a file that is no longer live fails validation (ref
+    * `BaseOverwriteFiles.java:98`).
+    *
+    * Each retry attempt builds from a fresh base: snapshot id, sequence
+    * number, row-id spans, manifests and running totals. The attempt record
+    * lists every manifest and manifest list any attempt wrote (fresh UUID
+    * and snapshot-id names: attempts never share a file). Cleanup (ref
+    * `cleanUncommitted`):
+    *  - success: every recorded file the committed snapshot does not
+    *    reference is deleted — the files of lost attempts, and manifests of
+    *    the winning attempt that the merge folded into another;
+    *  - definite failure (this closure threw, or every CAS returned false
+    *    until the retries ran out): every recorded file is deleted;
+    *  - any other exception once an attempt has reached `ops.commit`
+    *    ([[CommitStateUnknownException]], a JDBC, metastore or IO error):
+    *    the pointer may already reference the files, so all are kept.
+    * Data files the caller wrote are not in the record; orphan removal
+    * collects those.
     *
     * @param removedMeta the full metadata of the removed files when the
     *                    caller has it: enables partition-summary pruning so
@@ -668,13 +702,18 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
     *                    contain the removed files (must cover every path in
     *                    `removedPaths`, else ignored), and lets `validate`
     *                    find concurrent deletes against the data files whose
-    *                    rows this commit rewrites (required then). */
+    *                    rows this commit rewrites (required then).
+    * @param target where the snapshot lands: main, a branch, or staged.
+    * @param rewriteManifests rewrite every live manifest into one per spec
+    *                    (see [[mergeSmallManifests]]).
+    * @return the committed snapshot. */
   private[graft] def commitSnapshot(op: String, added: Seq[DataFileMeta],
       removedPaths: Set[String], extraSummary: Map[String, String] = Map.empty,
       metaTransform: Option[TableMetadata => TableMetadata] = None,
       validate: Option[ConflictValidation] = None,
       removedMeta: Seq[DataFileMeta] = Nil,
-      branch: Option[String] = None): Unit = {
+      target: SnapshotTarget = SnapshotTarget.Main,
+      rewriteManifests: Boolean = false): SnapshotMeta = {
     val removedNorm = removedPaths.map(normPath)
     val pruneMeta =
       if (removedMeta.nonEmpty &&
@@ -690,39 +729,42 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
           "a validated commit that rewrites rows needs removedMeta for every removed path")
         pruneMeta.filter(_.content == FileContent.Data)
       }
-    ops.commitWithRetry(retries(meta)) { base0 =>
+    val mdir = s"$location/metadata"
+    // the attempt record, and what the latest attempt produced
+    val attempts = scala.collection.mutable.ArrayBuffer.empty[String]
+    var produced: (SnapshotMeta, Seq[String]) = null
+    // set once an attempt hands its metadata to the CAS
+    var casPending = false
+    try ops.commitWithRetry(retries(meta)) { base0 =>
+      casPending = false
       val base = metaTransform.map(_(base0)).getOrElse(base0)
+      def writeManifest(entries: Seq[ManifestEntry], spec: PartitionSpec,
+          stamp: Option[Long] = None): ManifestFileMeta = {
+        val path = ManifestIO.newPath(mdir, base, io)
+        attempts += path
+        ManifestIO.write(io, path, entries, base.schema, spec, addedSnapshotId = stamp)
+      }
       validate.foreach(validateNoConflicts(base, _, rewritten))
       val nowMs = System.currentTimeMillis()
       val snapId = newSnapshotId()
       val seq = base.lastSequenceNumber + 1
       val schema = base.schema
-      val mdir = s"$location/metadata"
       // a branch commit builds on the BRANCH head, not the main head, and
       // advances only that ref at publish
-      val headSnap: Option[SnapshotMeta] = branch match {
-        case Some(b) =>
+      val headSnap: Option[SnapshotMeta] = target match {
+        case SnapshotTarget.Branch(b) =>
           val r = base.refs.getOrElse(b,
             throw new ValidationException(s"Unknown branch: $b"))
           if (r.refType != SnapshotRefMeta.Branch)
             throw new ValidationException(s"Cannot commit to tag: $b")
           base.snapshot(r.snapshotId)
-        case None => base.currentSnapshot
+        case _ => base.currentSnapshot
       }
       val currentManifests: Seq[ManifestFileMeta] =
         headSnap.map(readManifestList(base, _)).getOrElse(Nil)
 
-      var removedCount = 0 // all content types (validation + delta counters)
-      // removal is validated by PATH: one deletion-vector sidecar path can
-      // carry several blob entries, so the count check compares path sets
-      val removedSeen = scala.collection.mutable.Set.empty[String]
-      var removedBytes = 0L
-      var removedDataCount = 0
-      var removedDataRows = 0L
-      var removedDeleteFiles = 0
-      var removedDeleteBytes = 0L
-      var removedPosDeletes = 0L
-      var removedEqDeletes = 0L
+      // every removed entry (DV blobs sharing a sidecar are separate entries)
+      val removedFiles = scala.collection.mutable.ArrayBuffer.empty[DataFileMeta]
       val keptManifests: Seq[ManifestFileMeta] =
         if (removedNorm.isEmpty) currentManifests
         else {
@@ -737,45 +779,20 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
           currentManifests.flatMap { mf =>
             readEntries.get(mf.path) match {
               case None => Some(mf) // pruned: cannot contain a removed file
-              case Some(entries0) =>
-                val entries = entries0.filter(_.status != EntryStatus.Deleted)
-                val (rm, keep) = entries.partition(e =>
-                  removedNorm.contains(normPath(e.dataFile.path)))
+              case Some(entries) =>
+                val (rm, keep) = entries.filter(_.status != EntryStatus.Deleted)
+                  .partition(e => removedNorm.contains(normPath(e.dataFile.path)))
+                removedFiles ++= rm.map(_.dataFile)
                 if (rm.isEmpty) Some(mf)
-                else {
-                  removedCount += rm.size
-                  removedSeen ++= rm.map(e => normPath(e.dataFile.path))
-                  // DV blobs share a sidecar: count each blob's own bytes,
-                  // not the whole sidecar per entry
-                  removedBytes += rm.map(e =>
-                    e.dataFile.contentSize.getOrElse(e.dataFile.fileSizeBytes)).sum
-                  rm.foreach { e =>
-                    e.dataFile.content match {
-                      case FileContent.Data =>
-                        removedDataCount += 1
-                        removedDataRows += e.dataFile.recordCount
-                      case c if FileContent.isPositional(c) =>
-                        removedDeleteFiles += 1
-                        removedDeleteBytes += e.dataFile.contentSize
-                          .getOrElse(e.dataFile.fileSizeBytes)
-                        removedPosDeletes += e.dataFile.recordCount
-                      case _ =>
-                        removedDeleteFiles += 1
-                        removedDeleteBytes += e.dataFile.fileSizeBytes
-                        removedEqDeletes += e.dataFile.recordCount
-                    }
-                  }
-                  if (keep.isEmpty) None
-                  else {
-                    val spec = base.specById(mf.specId)
-                    val path = ManifestIO.newPath(mdir, base, io)
-                    val kept = keep.map(e => e.copy(status = EntryStatus.Existing))
-                    Some(ManifestIO.write(io, path, kept, schema, spec))
-                  }
-                }
+                else if (keep.isEmpty) None
+                else Some(writeManifest(keep.map(e => e.copy(status = EntryStatus.Existing)),
+                  base.specById(mf.specId)))
             }
           }
         }
+      // removal is validated by PATH: one deletion-vector sidecar path can
+      // carry several blob entries, so the check compares path sets
+      val removedSeen = removedFiles.map(f => normPath(f.path)).toSet
       if (removedNorm.nonEmpty && removedSeen != removedNorm)
         throw new ValidationException(
           s"Missing required files to delete: expected ${removedNorm.size} " +
@@ -795,39 +812,28 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
           a
         }
       }
-      val addedManifest: Option[ManifestFileMeta] = if (added1.isEmpty) None else {
-        val spec = base.spec
-        val path = ManifestIO.newPath(mdir, base, io)
-        val entries = added1.map(f => ManifestEntry(EntryStatus.Added, snapId, seq, f))
-        Some(ManifestIO.write(io, path, entries, schema, spec))
-      }
+      val addedManifest: Option[ManifestFileMeta] =
+        if (added1.isEmpty) None
+        else Some(writeManifest(
+          added1.map(f => ManifestEntry(EntryStatus.Added, snapId, seq, f)), base.spec))
 
       val unmerged = addedManifest.toSeq ++ keptManifests
       val allManifests =
-        if (base.property(TableProperties.ManifestMergeEnabled,
+        if (rewriteManifests || base.property(TableProperties.ManifestMergeEnabled,
             TableProperties.ManifestMergeEnabledDefault).toBoolean)
-          mergeSmallManifests(base, unmerged, snapId, mdir)
+          mergeSmallManifests(base, unmerged, snapId, rewriteManifests)(
+            writeManifest(_, _, Some(snapId)))
         else unmerged
       val listPath = s"$mdir/snap-$snapId.manifestlist.json"
+      attempts += listPath
       io.writeString(listPath, JsonCodecs.manifestListToJson(allManifests, schema, base.specById))
 
       // running totals (ref SnapshotSummary total-records/total-files-size):
       // carried forward from the head so writes can derive the table's
       // on-disk row width without reading any manifest. A pre-counter head
       // snapshot has no baseline — totals resume once history rolls over.
-      // split by content like ref SnapshotSummary.java:256-264: record
-      // counters are per-content (a MoR DELETE of N rows must NOT raise
-      // total-records by N), file sizes cover every content type
-      val addedBytes = added1.map(_.fileSizeBytes).sum
-      val addedData = added1.filter(_.content == FileContent.Data)
-      val addedRecords = addedData.map(_.recordCount).sum
-      val addedDeleteFiles = added1.size - addedData.size
-      val addedDeleteBytes = added1.filter(_.content != FileContent.Data)
-        .map(f => f.contentSize.getOrElse(f.fileSizeBytes)).sum
-      val addedPosDeletes = added1.filter(f => FileContent.isPositional(f.content))
-        .map(_.recordCount).sum
-      val addedEqDeletes = added1.filter(_.content == FileContent.EqualityDeletes)
-        .map(_.recordCount).sum
+      val add = new Tally(added1)
+      val rem = new Tally(removedFiles.toSeq)
       def carried(key: String, delta: Long): Option[(String, String)] = headSnap match {
         case None => Some(key -> delta.toString)
         case Some(h) => h.summary.get(key).flatMap(_.toLongOption)
@@ -839,7 +845,8 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       // must not bloat every future metadata read with 10k summary entries
       val partLimit = base.property("write.summary.partition-limit", "0").toInt
       val partitionSummaries: Map[String, String] = {
-        val byPart = addedData.filter(_.partition.nonEmpty).groupBy(_.partition)
+        val byPart = added1.filter(f => f.content == FileContent.Data && f.partition.nonEmpty)
+          .groupBy(_.partition)
         if (partLimit <= 0 || byPart.isEmpty || byPart.size > partLimit) Map.empty
         else byPart.map { case (tuple, fs) =>
           s"partitions.${tuple.mkString("/")}" ->
@@ -852,17 +859,13 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       // assuming 0 — a 0 seed on a table that already holds MoR delete
       // files would undercount total-data-files and make the O(1)
       // delete-presence checks (e.g. IvfIndex.fetchByIds) trust a lie
-      lazy val legacySeed: (Long, Long, Long, Long) = headSnap match {
-        case None => (0L, 0L, 0L, 0L)
+      lazy val legacySeed: Tally = new Tally(headSnap match {
+        case None => Nil
         case Some(_) =>
-          val live = ManifestIO.readAll(io, currentManifests, schema, base.specById)
+          ManifestIO.readAll(io, currentManifests, schema, base.specById)
             .flatMap(_._2).filter(_.status != EntryStatus.Deleted)
             .map(_.dataFile).filter(_.content != FileContent.Data)
-          (live.size.toLong,
-            live.filter(f => FileContent.isPositional(f.content)).map(_.recordCount).sum,
-            live.filter(_.content == FileContent.EqualityDeletes).map(_.recordCount).sum,
-            live.map(f => f.contentSize.getOrElse(f.fileSizeBytes)).sum)
-      }
+      })
       def carriedOrSeed(key: String, delta: Long, seed: => Long): (String, String) = {
         val base0 = headSnap.flatMap(_.summary.get(key)).flatMap(_.toLongOption)
           .getOrElse(seed)
@@ -870,62 +873,69 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       }
       def ifPos(key: String, v: Long): Option[(String, String)] =
         if (v > 0) Some(key -> v.toString) else None
-      val totalDeleteFiles =
-        carriedOrSeed("total-delete-files", (addedDeleteFiles - removedDeleteFiles).toLong,
-          legacySeed._1)
+      val totalDeleteFiles = carriedOrSeed("total-delete-files",
+        (add.deleteFiles - rem.deleteFiles).toLong, legacySeed.deleteFiles.toLong)
       // manifest live-entry counts include delete-file entries; subtract the
       // running delete-file total to keep total-data-files data-only
       val manifestLive = allManifests.map(f =>
         (f.addedFilesCount + f.existingFilesCount).toLong).sum
       val summary = Map(
-        "added-data-files" -> addedData.size.toString,
-        "added-records" -> addedRecords.toString,
-        "added-files-size" -> addedBytes.toString,
-        "deleted-data-files" -> removedDataCount.toString,
-        "deleted-records" -> removedDataRows.toString,
-        "removed-files-size" -> removedBytes.toString,
+        "added-data-files" -> add.dataFiles.toString,
+        "added-records" -> add.records.toString,
+        "added-files-size" -> add.bytes.toString,
+        "deleted-data-files" -> rem.dataFiles.toString,
+        "deleted-records" -> rem.records.toString,
+        "removed-files-size" -> rem.bytes.toString,
         "total-data-files" ->
           math.max(0L, manifestLive - totalDeleteFiles._2.toLong).toString) ++
-        ifPos("added-delete-files", addedDeleteFiles.toLong) ++
-        ifPos("removed-delete-files", removedDeleteFiles.toLong) ++
-        ifPos("added-position-deletes", addedPosDeletes) ++
-        ifPos("removed-position-deletes", removedPosDeletes) ++
-        ifPos("added-equality-deletes", addedEqDeletes) ++
-        ifPos("removed-equality-deletes", removedEqDeletes) ++
+        ifPos("added-delete-files", add.deleteFiles.toLong) ++
+        ifPos("removed-delete-files", rem.deleteFiles.toLong) ++
+        ifPos("added-position-deletes", add.posDeletes) ++
+        ifPos("removed-position-deletes", rem.posDeletes) ++
+        ifPos("added-equality-deletes", add.eqDeletes) ++
+        ifPos("removed-equality-deletes", rem.eqDeletes) ++
         Seq(totalDeleteFiles,
           carriedOrSeed("total-position-deletes",
-            addedPosDeletes - removedPosDeletes, legacySeed._2),
+            add.posDeletes - rem.posDeletes, legacySeed.posDeletes),
           carriedOrSeed("total-equality-deletes",
-            addedEqDeletes - removedEqDeletes, legacySeed._3),
+            add.eqDeletes - rem.eqDeletes, legacySeed.eqDeletes),
           // delete-file BYTES, so the write-sizing row-width estimate can
           // subtract tombstone bytes from total-files-size
           carriedOrSeed("total-delete-files-size",
-            addedDeleteBytes - removedDeleteBytes, legacySeed._4)) ++
+            add.deleteBytes - rem.deleteBytes, legacySeed.deleteBytes)) ++
         partitionSummaries ++
-        carried("total-records", addedRecords - removedDataRows) ++
-        carried("total-files-size", addedBytes - removedBytes) ++ extraSummary
+        carried("total-records", add.records - rem.records) ++
+        carried("total-files-size", add.bytes - rem.bytes) ++
+        (if (rewriteManifests) Some("rewritten-manifests" -> allManifests.size.toString)
+         else None) ++ extraSummary
 
       val snap = SnapshotMeta(snapId, headSnap.map(_.snapshotId), seq, nowMs,
         op, summary, listPath)
-      (branch match {
-        case Some(b) => base.copy(
-          lastSequenceNumber = math.max(base.lastSequenceNumber, seq),
-          lastUpdatedMillis = nowMs,
+      produced = (snap, listPath +: allManifests.map(_.path))
+      val next = target match {
+        case SnapshotTarget.Main => base.withSnapshot(snap, nowMs)
+        // the snapshot log stays main-lineage only (time travel by
+        // timestamp resolves against main, like the published format spec)
+        case t => base.copy(lastSequenceNumber = seq, lastUpdatedMillis = nowMs,
           snapshots = base.snapshots :+ snap,
-          // snapshot-log stays main-lineage only (time travel by timestamp
-          // resolves against main, like the published format spec)
-          refs = base.refs.updated(b, base.refs(b).copy(snapshotId = snapId)))
-        case None => base.withSnapshot(snap, nowMs)
-      }).copy(nextRowId = nextRid)
+          refs = t match {
+            case SnapshotTarget.Branch(b) =>
+              base.refs.updated(b, base.refs(b).copy(snapshotId = snapId))
+            case _ => base.refs
+          })
+      }
+      casPending = true
+      next.copy(nextRowId = nextRid)
+    } catch { case e: Throwable =>
+      if (!casPending || e.isInstanceOf[CommitRetriesExhaustedException])
+        MetadataHousekeeping.deleteQuietly(io, attempts.toSeq)
+      throw e
     }
-    val committed = branch match {
-      case Some(b) => meta.refs.get(b).flatMap(r => meta.snapshot(r.snapshotId))
-      case None => meta.currentSnapshot
-    }
-    committed.foreach { s =>
-      Listeners.notifyAll(Listeners.CreateSnapshotEvent(
-        location, s.operation, s.snapshotId, s.sequenceNumber, s.summary))
-    }
+    val (snap, referenced) = produced
+    MetadataHousekeeping.deleteQuietly(io, attempts.filterNot(referenced.toSet).toSeq)
+    Listeners.notifyAll(Listeners.CreateSnapshotEvent(
+      location, snap.operation, snap.snapshotId, snap.sequenceNumber, snap.summary))
+    snap
   }
 }
 

@@ -90,7 +90,7 @@ object Maintenance {
     if (expired.isEmpty) return (0, 0L, 0L)
 
     val after = table.meta
-    val beforeManifests = manifestsOf(table, before, before.snapshots)
+    val beforeManifests = manifestsOf(table, before, before.snapshots, skipUnreadable = true)
     val afterManifests = manifestsOf(table, after, after.snapshots)
 
     // data files referenced only by expired snapshots: distributed except
@@ -126,7 +126,7 @@ object Maintenance {
     * decide). */
   private[graft] def deleteReachableFiles(table: IceTable,
       m: TableMetadata): (Long, Long) = {
-    val manifests = manifestsOf(table, m, m.snapshots)
+    val manifests = manifestsOf(table, m, m.snapshots, skipUnreadable = true)
     val dataDeleted = bulkDelete(table, validDataFileDF(table, m, manifests))
     var metaDeleted = 0L
     manifests.map(_.path).distinct.foreach(p =>
@@ -147,10 +147,15 @@ object Maintenance {
       s"Cannot $action: gc.enabled is false (data files may be shared)")
   }
 
+  /** The manifests of `snaps`. A manifest list that fails to read fails
+    * the call: taken as empty, its files would look unreferenced.
+    * `skipUnreadable` is only for sets whose loss makes an action delete
+    * LESS (expiry's before-set, a purge). */
   private[graft] def manifestsOf(table: IceTable, m: TableMetadata,
-      snaps: Seq[SnapshotMeta]): Seq[ManifestFileMeta] =
+      snaps: Seq[SnapshotMeta], skipUnreadable: Boolean = false): Seq[ManifestFileMeta] =
     snaps.flatMap { s =>
-      try table.readManifestList(m, s) catch { case _: Exception => Nil }
+      try table.readManifestList(m, s)
+      catch { case _: Exception if skipUnreadable => Nil }
     }.distinctBy(_.path)
 
   /** One-column (`path`) DataFrame of every data/delete file referenced by
@@ -214,7 +219,10 @@ object Maintenance {
     * (ref `BaseDeleteOrphanFilesSparkAction.java:164`: actual-files LEFT ANTI
     * valid-files on normalized path). Listing is parallelized per
     * subdirectory (`:184` listDirRecursively on executors); only the final
-    * orphan list (the result) reaches the driver. */
+    * orphan list (the result) reaches the driver. The valid set is every
+    * data and delete file of every snapshot's manifests, those manifests,
+    * the manifest lists and the stats files; a manifest or manifest list
+    * that fails to read fails the action before anything is deleted. */
   def removeOrphanFiles(table: IceTable, olderThanMillis: Long): Seq[String] = {
     requireGcEnabled(table, "remove orphan files")
     val spark = table.spark
@@ -223,10 +231,12 @@ object Maintenance {
     // Scan the default data dir plus — under the HASHED object-store layout
     // only — the storage root, restricted to this table's db/table context
     // segment: a shared bucket holds OTHER tables' live files, which must
-    // never look like our orphans. The table's own metadata tree is
-    // excluded explicitly (a storage root that is an ancestor of the table
-    // location would otherwise reach it, and manifests list only data
-    // files — every metadata JSON would "look orphaned").
+    // never look like our orphans. In the table's own metadata dir only
+    // manifests, manifest lists and stats files are candidates: metadata
+    // JSON and the version hint are never touched (which metadata file is
+    // current is the pointer's to say). The same rule holds when a storage
+    // root that is an ancestor of the table location reaches the metadata
+    // dir.
     // An UNHASHED write.folder-storage.path is NOT auto-scanned: that
     // layout carries no table context, so a shared root is unscopable —
     // like the ref's action, cleaning a custom folder location is an
@@ -234,6 +244,7 @@ object Maintenance {
     val ctx = table.location.stripSuffix("/").split('/')
       .filter(_.nonEmpty).takeRight(2).mkString("/")
     val defaultRoot = s"${table.location}/data"
+    val metaDir = s"${table.location.stripSuffix("/")}/metadata"
     val objEnabled = m.property("write.object-storage.enabled", "false").toBoolean
     val hashedRoot =
       if (objEnabled)
@@ -241,50 +252,49 @@ object Maintenance {
           Locations.dataRoot(table.location, m)).stripSuffix("/"))
       else None
     val roots = (Seq(defaultRoot) ++ hashedRoot).distinct
+    def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val inScope: String => Boolean = {
-      def stripScheme(s: String) =
-        new org.apache.hadoop.fs.Path(s).toUri.getPath
-      val defaultNorm = stripScheme(defaultRoot)
-      val metaPrefix = stripScheme(table.location).stripSuffix("/") + "/metadata/"
+      val defaultNorm = norm(defaultRoot)
+      val metaPrefix = norm(metaDir) + "/"
       val ctxSeg = s"/$ctx/"
-      p => !p.startsWith(metaPrefix) &&
-        (p.startsWith(defaultNorm) || p.contains(ctxSeg))
+      p => if (p.startsWith(metaPrefix))
+          p.substring(metaPrefix.length).matches("(manifest|snap|stats)-[^/]+")
+        else p.startsWith(defaultNorm) || p.contains(ctxSeg)
     }
-    val top = roots.flatMap(table.io.list)
-    if (top.isEmpty) return Nil
-    val (dirs, files) = top.partition(_.isDirectory)
+    val (dirs, files) = roots.flatMap(table.io.list).partition(_.isDirectory)
     val confB = spark.sparkContext.broadcast(
       new org.apache.spark.util.SerializableConfiguration(
         spark.sparkContext.hadoopConfiguration))
-    def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
     val topFiles = files.filter(_.getModificationTime < olderThanMillis)
       .map(s => norm(s.getPath.toString))
       .filter(inScope)
     val actualDF = {
-      val dirPaths = dirs.map(_.getPath.toString)
-      val listed =
-        if (dirPaths.isEmpty) spark.emptyDataset[String]
-        else {
-          val nPart = math.max(1,
-            math.min(dirPaths.size, spark.sparkContext.defaultParallelism))
-          val scopeF = inScope
-          spark.createDataset(dirPaths).repartition(nPart).mapPartitions { it =>
-            val io = new FileIO(confB.value.value)
-            it.flatMap(d => io.listRecursive(d)
-              .filter(_.getModificationTime < olderThanMillis)
-              .map(s => new org.apache.hadoop.fs.Path(s.getPath.toString).toUri.getPath)
-              .filter(scopeF))
-          }
-        }
+      val dirPaths = dirs.map(_.getPath.toString) :+ metaDir
+      val nPart = math.max(1,
+        math.min(dirPaths.size, spark.sparkContext.defaultParallelism))
+      val scopeF = inScope
+      val listed = spark.createDataset(dirPaths).repartition(nPart).mapPartitions { it =>
+        val io = new FileIO(confB.value.value)
+        it.flatMap(d => io.listRecursive(d)
+          .filter(_.getModificationTime < olderThanMillis)
+          .map(s => new org.apache.hadoop.fs.Path(s.getPath.toString).toUri.getPath)
+          .filter(scopeF))
+      }
       // distinct: a hashed root that is an ancestor of the table location
-      // lists the default data dir a second time
+      // lists the default data dir and the metadata dir a second time
       listed.toDF("path").union(spark.createDataset(topFiles).toDF("path"))
         .distinct()
     }
-    val valid = validDataFileDF(table, m, manifestsOf(table, m, m.snapshots))
+    val manifests = manifestsOf(table, m, m.snapshots)
+    val validMeta = (manifests.map(_.path) ++ m.snapshots.map(_.manifestList) ++
+      m.statsFiles.map(_.path)).map(norm)
+    val valid = validDataFileDF(table, m, manifests)
       .select(regexp_replace(col("path"), "^[a-zA-Z0-9.+-]+:/+", "/").as("path"))
+      .union(spark.createDataset(validMeta).toDF("path"))
     val orphansDF = actualDF.join(valid, Seq("path"), "left_anti").cache()
     try {
+      // the whole valid set is computed (and any unreadable manifest has
+      // failed the action) before the first delete
       val orphans = orphansDF.as[String].collect().toSeq // the action's result
       bulkDelete(table, orphansDF)
       orphans
@@ -950,34 +960,12 @@ object Maintenance {
       manifests, expired, orphans)
   }
 
-  /** Rewrite all live manifests into one per partition spec, clustering
-    * entries (ref `BaseRewriteManifestsSparkAction`). */
+  /** Rewrite all live manifests into one per partition spec, entries
+    * clustered by partition (ref `BaseRewriteManifestsSparkAction`): a
+    * Replace that adds and removes nothing, so running totals carry on. */
   def rewriteManifests(table: IceTable): Int = {
-    val m = table.meta
-    val snap = m.currentSnapshot.getOrElse(return 0)
-    table.ops.commitWithRetry(4) { base =>
-      val cur = base.currentSnapshot.get
-      val entries = table.liveEntries(base, cur)
-      val nowMs = System.currentTimeMillis()
-      val snapId = table.newSnapshotId()
-      val seq = base.lastSequenceNumber + 1
-      val mdir = s"${table.location}/metadata"
-      val bySpec = entries.groupBy(_.dataFile.specId)
-      val manifests = bySpec.toSeq.sortBy(_._1).map { case (specId, es) =>
-        val spec = base.specById(specId)
-        val sorted = es.sortBy(_.dataFile.partition.map(String.valueOf).mkString("/"))
-          .map(_.copy(status = EntryStatus.Existing))
-        ManifestIO.write(table.io, ManifestIO.newPath(mdir, base, table.io),
-          sorted, base.schema, spec)
-      }
-      val listPath = s"$mdir/snap-$snapId.manifestlist.json"
-      table.io.writeString(listPath,
-        JsonCodecs.manifestListToJson(manifests, base.schema, base.specById))
-      base.withSnapshot(SnapshotMeta(snapId, base.currentSnapshotId, seq, nowMs,
-        Operation.Replace, Map("rewritten-manifests" -> manifests.size.toString),
-        listPath), nowMs)
-    }
-    table.meta.currentSnapshot.map(s =>
-      table.readManifestList(table.meta, s).size).getOrElse(0)
+    if (table.meta.currentSnapshot.isEmpty) return 0
+    table.commitSnapshot(Operation.Replace, Nil, Set.empty, rewriteManifests = true)
+      .summary("rewritten-manifests").toInt
   }
 }

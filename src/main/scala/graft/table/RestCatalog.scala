@@ -21,7 +21,10 @@ import graft.meta.model.JsonCodecs
   * could double-apply, and the already-written metadata file must be left in
   * place (it may be the current pointer). The retry loop in
   * [[TableOps.commitWithRetry]] propagates it by construction (only a
-  * `false` return retries). */
+  * `false` return retries), and the snapshot producer
+  * ([[IceTable.commitSnapshot]]) keeps every manifest and manifest list its
+  * attempts wrote, as it does for any exception out of the CAS; orphan
+  * removal collects them if the commit did not land. */
 class CommitStateUnknownException(msg: String, cause: Throwable = null)
     extends RuntimeException(msg, cause)
 

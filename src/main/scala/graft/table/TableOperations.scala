@@ -5,6 +5,10 @@ import graft.meta.model.{JsonCodecs, MetadataLogEntry, TableMetadata}
 import org.apache.hadoop.conf.Configuration
 
 class CommitFailedException(msg: String) extends RuntimeException(msg)
+/** Every CAS of [[TableOps.commitWithRetry]] returned false: a definite
+  * failure, nothing an attempt wrote is referenced. */
+private[table] final class CommitRetriesExhaustedException(msg: String)
+    extends CommitFailedException(msg)
 class ValidationException(msg: String) extends RuntimeException(msg)
 class NoSuchTableException(msg: String) extends RuntimeException(msg)
 
@@ -34,7 +38,7 @@ trait TableOps {
       if (commit(version, newMeta)) return newMeta
       attempt += 1
       if (attempt > retries)
-        throw new CommitFailedException(
+        throw new CommitRetriesExhaustedException(
           s"Commit failed after $retries retries at $location (version $version)")
       // exponential backoff with jitter (ref util/Tasks.java:423 —
       // `commit.retry.min-wait-ms` / `max-wait-ms`): without the random

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * protocol run. NOT part of the driver contract — BENCH numbers come from
   * [[Bench]] only.
   *
-  * Usage: SPARK_DRIVER_MEM=90g sbt "runMain graft.BenchOne <entry> [entry...]"
+  * Usage: SPARK_DRIVER_MEM=90g sbt "Test/runMain graft.BenchOne <entry> [entry...]"
   */
 object BenchOne {
   private def median(xs: Seq[Double]): Double = { val s = xs.sorted; s(s.size / 2) }

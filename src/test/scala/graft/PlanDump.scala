@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths}
   * declared query (or a comma-separated subset) to `<outDir>/<name>_<tag>.txt`
   * so plan claims in OPTIMIZATION_r*.md are checkable without running Spark.
   *
-  * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> [names]
+  * Usage: sbt "Test/runMain graft.PlanDump <sfDir> <outDir> <tag> [names]"
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
