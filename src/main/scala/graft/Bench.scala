@@ -438,8 +438,9 @@ object Bench {
     // tail keeps it whole; the detail line carries samples/gc/reruns and
     // deliberately contains no "metric" key.
     println(s"""{"bench_detail":{"samples":$samples,"gc_secs":$gcSecs,"reruns":$reruns}}""")
+    val heapMb = Runtime.getRuntime.maxMemory / (1L << 20)
     val compact =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","scale_total":$scaleTotal%.3f,"queries":$qs,"preceded_by":$preceded,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","scale_total":$scaleTotal%.3f,"queries":$qs,"preceded_by":$preceded,"sf":"$sfDir","cpus":$cpus,"heap_mb":$heapMb}"""
     println(compact)
     // belt-and-braces second channel (r13 verdict item 2): the same compact
     // JSON written to a file, so no stdout capture window can lose it

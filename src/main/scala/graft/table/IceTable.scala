@@ -8,7 +8,6 @@ import graft.meta.model._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
@@ -1448,21 +1447,18 @@ private[graft] object Reads {
   }
 }
 
-/** Data-file writing: hidden-partition routing via derived `_p_*` columns +
-  * `partitionBy` (files keep every table column), distribution/ordering from
-  * the table spec (ref `SparkPartitionedWriter`,
-  * `DistributionAndOrderingUtils.scala:75`), metrics from parquet footers.
+/** Content-file writing: hidden-partition routing via derived `_p_*`
+  * columns that become the partition directories (files keep every table
+  * column), distribution/ordering from the table spec (ref
+  * `SparkPartitionedWriter`, `DistributionAndOrderingUtils.scala:75`), and
+  * file metadata returned by the write tasks themselves
+  * ([[writeContentFiles]]; ref `SparkWrite` tasks return `DataFile`s).
   */
 private[table] object Writes {
 
   val HelperPrefix = "_p_"
+  /** Above this many files, [[TableImport]] reads footers as a Spark job. */
   val DistributedMetricsThreshold = 64
-
-  /** Table metadata keeps the public format name; Spark needs the registered
-    * source for formats with no built-in module (`avro` → the graft
-    * `FileFormat`, since the runtime has avro-core but not spark-avro). */
-  def sparkFormat(format: String): String =
-    if (format == "avro") "graft-avro" else format
 
   /** The [[TableProperties.EncryptionRequired]] gate, checked before EVERY
     * content write (data files here, delete files in [[MergeOnRead]]): a
@@ -1556,22 +1552,6 @@ private[table] object Writes {
         col(graft.spark.GraftReadPlanner.LineageSeqCol).cast("long")))).toIndexedSeq: _*)
     val outDir = Locations.newWriteDir(table.location, m, UUID.randomUUID().toString)
     val format = prop(TableProperties.DefaultFileFormat, "parquet")
-    Writes.requireEncryptionSatisfied(table, m)
-    // real encryption on every format: avro through library-owned streams,
-    // parquet through Parquet Modular Encryption, ORC through its
-    // KeyProvider SPI (r11 — Spark's writer goes through
-    // `org.apache.orc.mapred.OrcOutputFormat.buildOptions`, which reads
-    // `orc.encrypt` from the per-write conf). Parquet and ORC both need a
-    // key-exposing manager; a stream-only custom manager there would
-    // silently write plaintext, so refuse up front
-    if (table.io.encryption != PlaintextEncryptionManager && format != "avro" &&
-        !table.io.encryption.isInstanceOf[KeyedFileEncryption])
-      throw new UnsupportedOperationException(
-        s"encryption manager ${table.io.encryption.getClass.getSimpleName} " +
-          s"cannot encrypt '$format' data files — avro streams are " +
-          "library-owned; parquet and ORC need a KeyedFileEncryption " +
-          "manager (set write.format.default accordingly or use the " +
-          "plaintext manager)")
     // Roll output files at ~write.target-file-size-bytes (ref rolling file
     // writers, `TableProperties.java:145`): Spark rolls by RECORD count, so
     // convert the byte target through the table's observed on-disk row width
@@ -1680,24 +1660,10 @@ private[table] object Writes {
             EncryptionManagers.serialize(table.io.encryption)))
       case _ => Map.empty
     }
-    def withRolling(w: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) =
-      maxRecords.fold(w)(n => w.option("maxRecordsPerFile", n)).options(fileOptions)
-        // no _SUCCESS markers: manifests are the commit record, and the
-        // zero-byte files would be unreachable orphans under purge
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-
-    if (spec.isUnpartitioned) {
-      withRolling(sorted(m, schema, aligned, Nil).write.format(sparkFormat(format)))
-        .save(outDir)
-    } else {
-      val helperCols = spec.fields.map { pf =>
-        val srcName = schema.fieldName(pf.sourceId)
-        pf.transform.toColumn(col(srcName), schema.fieldType(pf.sourceId))
-          .as(HelperPrefix + pf.name)
-      }
-      val helperNames = spec.fields.map(pf => HelperPrefix + pf.name)
-      val withHelpers = aligned.withColumns(
-        helperNames.zip(helperCols).toMap)
+    val options = fileOptions ++ maxRecords.map(n => "maxRecordsPerFile" -> n.toString)
+    val (rows, helperNames) = if (spec.isUnpartitioned) (sorted(m, schema, aligned, Nil), Nil)
+    else {
+      val (withHelpers, helperNames) = withPartitionColumns(aligned, m)
       val mode = prop(TableProperties.DistributionMode, "hash")
       val fanout = prop(TableProperties.FanoutEnabled, "false").toBoolean
       val distributed = mode match {
@@ -1707,10 +1673,20 @@ private[table] object Writes {
           (helperNames.map(col) ++ sortCols(m, schema)): _*)
         case _ => withHelpers
       }
-      withRolling(sorted(m, schema, distributed, helperNames)
-        .write.partitionBy(helperNames: _*).format(sparkFormat(format))).save(outDir)
+      (sorted(m, schema, distributed, helperNames), helperNames)
     }
-    collectDataFiles(spark, table, m, outDir, format)
+    writeContentFiles(table, m, rows, helperNames, outDir, format, options)._1
+  }
+
+  /** `df` plus one `_p_<field>` column per partition field of `m`'s spec,
+    * computed with the codegen'd transform expressions, and their names. */
+  private[table] def withPartitionColumns(df: DataFrame,
+      m: TableMetadata): (DataFrame, Seq[String]) = {
+    val names = m.spec.fields.map(pf => HelperPrefix + pf.name)
+    (df.withColumns(names.zip(m.spec.fields.map { pf =>
+      pf.transform.toColumn(col(m.schema.fieldName(pf.sourceId)),
+        m.schema.fieldType(pf.sourceId))
+    }).toMap), names)
   }
 
   /** The sort columns of `m`'s sort order, on its TRANSFORMED terms. */
@@ -1730,96 +1706,202 @@ private[table] object Writes {
     else df.sortWithinPartitions((helperNames.map(col) ++ sc): _*)
   }
 
-  /** List written files, parse partition values from hive-style paths, read
-    * footers for metrics. */
-  def collectDataFiles(spark: SparkSession, table: IceTable, m: TableMetadata,
-      outDir: String, format: String = "parquet"): Seq[DataFileMeta] = {
+  /** Name of the SQL execution a content-file write runs as. */
+  val ExecutionName = "graft.write"
+
+  /** The one content-file writer (data, position-delete and equality-delete
+    * files). `rows` holds the file columns plus `partitionCols`, one typed
+    * column per partition field (none: unpartitioned or global scope).
+    * Spark's file writer keeps the plan's distribution and local sort, adds
+    * the partition sort when missing, rolls at `maxRecordsPerFile` and names
+    * hive-style directories under `outDir`. Each file is written once at
+    * its final path ([[DirectCommitProtocol]]) and reported by its own task
+    * ([[ContentFileTracker]]), so nothing is listed and no footer is opened
+    * on the driver. Returns the files that hold rows (Spark writes one even
+    * for an empty input; empty ones are deleted, and a write of no rows
+    * leaves no directory) and, for position deletes, the referenced paths. */
+  private[table] def writeContentFiles(table: IceTable, m: TableMetadata,
+      rows: DataFrame, partitionCols: Seq[String], outDir: String,
+      format: String, options: Map[String, String],
+      content: Int = FileContent.Data,
+      equalityIds: Seq[Int] = Nil): (Seq[DataFileMeta], Set[String]) = {
+    requireEncryptionSatisfied(table, m)
+    // avro encrypts through library-owned streams; parquet (modular
+    // encryption) and ORC (its KeyProvider SPI) need a key-exposing manager,
+    // and a stream-only one would silently write them plaintext
+    val e = table.io.encryption
+    if (e != PlaintextEncryptionManager && format != "avro" &&
+        !e.isInstanceOf[KeyedFileEncryption])
+      throw new ValidationException(
+        s"${table.location}: encryption manager ${e.getClass.getSimpleName} is " +
+          s"stream-only — it cannot encrypt '$format' files (avro streams are " +
+          "library-owned; parquet and ORC need a KeyedFileEncryption manager), " +
+          "and writing plaintext content into an encrypted table is refused")
     val schema = m.schema
     val spec = m.spec
+    val conf = table.spark.sparkContext.hadoopConfiguration
+    val root = new Path(outDir)
+    val dir = root.getFileSystem(conf).makeQualified(root).toString
+    val tracker = new ContentFileTracker(
+      new org.apache.spark.util.SerializableConfiguration(conf), format, schema,
+      Some(e).filter(_ != PlaintextEncryptionManager),
+      partitionCols.map(n => rows.schema(n).dataType),
+      trackRefs = content == FileContent.PositionDeletes)
+    org.apache.spark.sql.graft.ColumnBridge.writeFiles(rows, format, dir,
+      partitionCols, options, new DirectCommitProtocol(dir), Seq(tracker), ExecutionName)
     val modeOf = MetricsModes.forTable(m)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = table.io.listRecursive(outDir)
-      .filter(s => s.getPath.getName.endsWith("." + format) ||
-        s.getPath.getName.endsWith("." + format + ".snappy") ||
-        s.getPath.getName.contains("." + format))
-      .filter(s => !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
-    // footer metrics: small commits read on a driver pool; large commits as
-    // a Spark job (executor-side, like the ref collects metrics in the
-    // writers — the driver never becomes the bottleneck at scale)
-    val enc = Some(table.io.encryption).filter(_ != PlaintextEncryptionManager)
-    val metricsByPath: Map[String, ParquetMetrics.FileMetrics] = {
-      val paths = files.map(_.getPath.toString)
-      if (paths.size > DistributedMetricsThreshold) {
-        val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-        val fmt = format
-        val serEnc = enc // EncryptionManager is Serializable by contract
-        val bcSchema = spark.sparkContext.broadcast(schema)
-        spark.sparkContext.parallelize(paths, math.max(1, paths.size / 16))
-          .map(p => p -> fileMetrics(serConf.value, fmt, p, bcSchema.value, serEnc))
-          .collect().toMap
-      } else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ManifestIO.ioPool
-        Await.result(Future.sequence(paths.map(p => Future {
-          p -> fileMetrics(conf, format, p, schema, enc)
-        })), Duration.Inf).toMap
+    val tasks = tracker.committed.toSeq
+    val (written, empty) = tasks.flatMap(_.files).partition(_.metrics.recordCount > 0)
+    if (written.isEmpty) table.io.deleteRecursive(outDir)
+    else empty.foreach(f => table.io.delete(f.path))
+    val files = written.map { f =>
+      val base = DataFileMeta(path = f.path, format = format, specId = spec.specId,
+        partition = if (partitionCols.isEmpty) spec.fields.map(_ => null) else f.partition,
+        recordCount = f.metrics.recordCount, fileSizeBytes = f.sizeBytes,
+        schemaId = m.currentSchemaId, content = content, equalityIds = equalityIds,
+        // the manifest's key slot, derived from the final file name exactly
+        // as the write task derived it (the keyMetadata purity contract)
+        keyMetadata = e.keyMetadata(f.path))
+      // delete files keep their record count only
+      if (content != FileContent.Data) base
+      else {
+        val mm = MetricsModes.apply(f.metrics, schema, modeOf)
+        base.copy(valueCounts = mm.valueCounts, nullCounts = mm.nullCounts,
+          nanCounts = mm.nanCounts, lowerBounds = mm.lowerBounds,
+          upperBounds = mm.upperBounds, splitOffsets = mm.splitOffsets,
+          sortOrderId = m.defaultSortOrderId)
       }
     }
-    files.map { st =>
-      val path = st.getPath.toString
-      val rel = path.stripPrefix(outDir).stripPrefix("/")
-      val partValues: Seq[Any] = if (spec.isUnpartitioned) Nil else {
-        val dirs = rel.split('/').dropRight(1)
-          .filter(_.contains('='))
-          .map { seg =>
-            val Array(k, v) = seg.split("=", 2)
-            k.stripPrefix(HelperPrefix) -> ExternalCatalogUtils.unescapePathName(v)
-          }.toMap
-        spec.fields.map { pf =>
-          val raw = dirs.getOrElse(pf.name,
-            throw new IllegalStateException(s"No partition dir for ${pf.name} in $rel"))
-          if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-          else parsePartitionValue(raw, spec.fieldType(schema, pf))
-        }
-      }
-      val metrics = MetricsModes.apply(metricsByPath(path), schema, modeOf)
-      DataFileMeta(
-        path = path,
-        format = format,
-        specId = spec.specId,
-        partition = partValues,
-        recordCount = metrics.recordCount,
-        fileSizeBytes = st.getLen,
-        valueCounts = metrics.valueCounts,
-        nullCounts = metrics.nullCounts,
-        nanCounts = metrics.nanCounts,
-        lowerBounds = metrics.lowerBounds,
-        upperBounds = metrics.upperBounds,
-        splitOffsets = metrics.splitOffsets,
-        sortOrderId = m.defaultSortOrderId,
-        schemaId = m.currentSchemaId,
-        // the manifest's key slot — derived driver-side, identical to what
-        // the write task derived (the keyMetadata purity contract)
-        keyMetadata = table.io.encryption.keyMetadata(path))
-    }
+    (files, tasks.flatMap(_.refs).toSet)
   }
 
-  private[table] def parsePartitionValue(raw: String, t: org.apache.spark.sql.types.DataType): Any = {
-    import org.apache.spark.sql.types._
-    t match {
-      case IntegerType => raw.toInt
-      case LongType => raw.toLong
-      case StringType => raw
-      case BooleanType => raw.toBoolean
-      case FloatType => raw.toFloat
-      case DoubleType => raw.toDouble
-      case DateType => java.time.LocalDate.parse(raw).toEpochDay.toInt
-      case TimestampType | TimestampNTZType =>
-        graft.meta.expr.Literals.convert(raw.replace(' ', 'T')
-          .replaceAll("(?i)\\.0$", ""), t)
-      case dt: DecimalType => new java.math.BigDecimal(raw).setScale(dt.scale)
-      case other => throw new IllegalArgumentException(s"Cannot parse partition value: $other")
+  /** A partition value between Catalyst's internal form and the
+    * [[DataFileMeta]] form (string → String, decimal → java BigDecimal;
+    * dates, timestamps and the rest share one representation). */
+  private[table] def fromCatalyst(v: Any): Any = v match {
+    case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+    case d: org.apache.spark.sql.types.Decimal => d.toJavaBigDecimal
+    case x => x
+  }
+
+  private[table] def toCatalyst(v: Any): Any = v match {
+    case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    case d: java.math.BigDecimal => org.apache.spark.sql.types.Decimal(d)
+    case x => x
+  }
+
+  /** One file as its write task saw it. */
+  private[table] final case class WrittenFile(path: String, partition: Seq[Any],
+      metrics: ParquetMetrics.FileMetrics, sizeBytes: Long)
+
+  /** What one committed write task reports. */
+  private[table] final case class TaskFiles(files: Seq[WrittenFile], refs: Set[String])
+      extends org.apache.spark.sql.execution.datasources.WriteTaskStats
+
+  /** Records, in each write task, what the table needs of every file it
+    * wrote; the driver side keeps the reports of the committed tasks. A
+    * file's partition tuple is the row Spark announced in `newPartition`
+    * before the first file of its directory (later files of the directory,
+    * rolled or reopened by a concurrent writer, map through the directory).
+    * Footer metrics are read right after `closeFile`, with the table's
+    * encryption manager. With `trackRefs` the first column is a data-file
+    * path (position deletes): a path unlike the previous row's is recorded. */
+  private final class ContentFileTracker(
+      conf: org.apache.spark.util.SerializableConfiguration, format: String,
+      schema: Schema, enc: Option[EncryptionManager],
+      partitionTypes: Seq[org.apache.spark.sql.types.DataType], trackRefs: Boolean)
+      extends org.apache.spark.sql.execution.datasources.WriteJobStatsTracker {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{WriteTaskStats, WriteTaskStatsTracker}
+    import org.apache.spark.unsafe.types.UTF8String
+
+    @transient lazy val committed = scala.collection.mutable.ArrayBuffer[TaskFiles]()
+
+    override def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
+      private var announced: Option[Seq[Any]] = None
+      private val dirPartition = scala.collection.mutable.HashMap[String, Seq[Any]]()
+      private val files = scala.collection.mutable.ArrayBuffer[WrittenFile]()
+      private val refs = scala.collection.mutable.HashSet[String]()
+      private var lastRef: UTF8String = null
+
+      override def newPartition(values: InternalRow): Unit =
+        announced = Some(partitionTypes.indices.map(i =>
+          if (values.isNullAt(i)) null else fromCatalyst(values.get(i, partitionTypes(i)))))
+
+      private def dirOf(path: String) = path.substring(0, path.lastIndexOf('/'))
+
+      override def newFile(path: String): Unit = {
+        announced.foreach(dirPartition(dirOf(path)) = _)
+        announced = None
+      }
+
+      override def closeFile(path: String): Unit = {
+        val p = new Path(path)
+        files += WrittenFile(path, dirPartition.getOrElse(dirOf(path), Nil),
+          fileMetrics(conf.value, format, path, schema, enc),
+          p.getFileSystem(conf.value).getFileStatus(p).getLen)
+      }
+
+      override def newRow(filePath: String, row: InternalRow): Unit =
+        if (trackRefs && !row.isNullAt(0)) {
+          val ref = row.getUTF8String(0)
+          if (ref != lastRef) {
+            lastRef = ref.clone()
+            refs += lastRef.toString
+          }
+        }
+
+      override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+        TaskFiles(files.toSeq, refs.toSet)
     }
+
+    override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =
+      committed ++= stats.map(_.asInstanceOf[TaskFiles])
+  }
+
+  /** Writes every file at its final path and renames nothing: the table
+    * commits through its metadata (as Delta Lake's `DelayedCommitProtocol`
+    * does). `abortTask` deletes its own attempt's files, `abortJob` those of
+    * the committed tasks; a file a lost executor leaves is unreferenced, and
+    * orphan removal collects it. */
+  private final class DirectCommitProtocol(root: String)
+      extends org.apache.spark.internal.io.FileCommitProtocol with Serializable {
+    import org.apache.hadoop.mapreduce.{JobContext, TaskAttemptContext}
+    import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+    import org.apache.spark.internal.io.FileNameSpec
+
+    @transient private var taskFiles: scala.collection.mutable.ArrayBuffer[String] = _
+    @transient private lazy val committedFiles = scala.collection.mutable.ArrayBuffer[String]()
+
+    private def deleteAll(paths: Iterable[String], conf: org.apache.hadoop.conf.Configuration): Unit =
+      paths.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(conf).delete(p, false)
+      }
+
+    override def setupJob(jobContext: JobContext): Unit = ()
+    override def commitJob(jobContext: JobContext, taskCommits: Seq[TaskCommitMessage]): Unit = ()
+    override def abortJob(jobContext: JobContext): Unit =
+      deleteAll(committedFiles, jobContext.getConfiguration)
+    override def onTaskCommit(taskCommit: TaskCommitMessage): Unit =
+      committedFiles ++= taskCommit.obj.asInstanceOf[Seq[String]]
+
+    override def setupTask(taskContext: TaskAttemptContext): Unit =
+      taskFiles = scala.collection.mutable.ArrayBuffer[String]()
+
+    override def newTaskTempFile(taskContext: TaskAttemptContext, dir: Option[String],
+        spec: FileNameSpec): String = {
+      val split = taskContext.getTaskAttemptID.getTaskID.getId
+      val name = f"${spec.prefix}part-$split%05d-${UUID.randomUUID()}${spec.suffix}"
+      val path = new Path(dir.fold(new Path(root))(new Path(root, _)), name).toString
+      taskFiles += path
+      path
+    }
+
+    override def commitTask(taskContext: TaskAttemptContext): TaskCommitMessage =
+      new TaskCommitMessage(taskFiles.toSeq)
+
+    override def abortTask(taskContext: TaskAttemptContext): Unit =
+      deleteAll(taskFiles, taskContext.getConfiguration)
   }
 }

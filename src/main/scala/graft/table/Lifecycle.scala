@@ -189,7 +189,6 @@ final class Transaction private[table] (table: IceTable) {
         !(graft.meta.expr.SparkConv.toColumn(bound, schema) <=>
           org.apache.spark.sql.functions.lit(true)))
       added ++= Writes.writeDataFiles(table.spark, table, m, keep)
-        .filter(_.recordCount > 0)
     }
     removed ++= tasks.map(_.file.path)
     ops :+= Operation.Delete

@@ -68,6 +68,11 @@ object Maintenance {
         !before.currentSnapshotId.contains(s.snapshotId))
     if (expired.isEmpty && deadRefs.isEmpty) return (0, 0L, 0L)
     val expiredIds = expired.map(_.snapshotId).toSet
+    // the retained snapshots' manifests, read strictly BEFORE the commit: an
+    // unreadable list fails the action while the expired snapshots still
+    // reference their files
+    val retainedManifests = if (expired.isEmpty) Nil
+      else manifestsOf(table, before, before.snapshots.filterNot(s => expiredIds(s.snapshotId)))
 
     // stats files are snapshot-pinned: expire the entry with its snapshot.
     // Collected INSIDE the retry closure from the commit's actual base — a
@@ -91,7 +96,10 @@ object Maintenance {
 
     val after = table.meta
     val beforeManifests = manifestsOf(table, before, before.snapshots, skipUnreadable = true)
-    val afterManifests = manifestsOf(table, after, after.snapshots)
+    // after the commit, only snapshots a concurrent commit added are new
+    val known = before.snapshots.map(_.snapshotId).toSet
+    val afterManifests = (retainedManifests ++ manifestsOf(table, after,
+      after.snapshots.filterNot(s => known(s.snapshotId)))).distinctBy(_.path)
 
     // data files referenced only by expired snapshots: distributed except
     val orphanData = validDataFileDF(table, before, beforeManifests)
@@ -391,7 +399,6 @@ object Maintenance {
         overrides = Map(TableProperties.TargetFileSize -> targetSizeBytes.toString) ++
           distribution.map(TableProperties.DistributionMode -> _),
         lineageCols = preserve)
-        .filter(_.recordCount > 0)
       table.commitSnapshot(Operation.Replace, written, files.map(_.path).toSet,
         summary, validate = Some(validate), removedMeta = files)
       (files.size, written.size)
@@ -735,7 +742,7 @@ object Maintenance {
     // the DV-merge step: several blobs targeting one file become one bitmap
     val rows = livePositionRows(table, m, entries, posDeletes, dvDeletes)
     val (newFiles, _) = MergeOnRead.writePositionDeleteFiles(table, m, rows,
-      compact = true, wantRefs = false)
+      compact = true)
     val oldFiles = posDeletes ++ dvDeletes
     table.commitSnapshot(Operation.Replace, newFiles,
       oldFiles.map(_.path).toSet,
@@ -845,7 +852,7 @@ object Maintenance {
         // several eq classes still yields one delete row
         val (files, _) = MergeOnRead.writePositionDeleteFiles(table, m,
           posRows.reduce(_ unionByName _), affected = Some(affected),
-          compact = true, wantRefs = false)
+          compact = true)
         files
       }
     table.commitSnapshot(Operation.Replace, newFiles,

@@ -5,7 +5,7 @@ import java.util.UUID
 import graft.meta.model._
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 
 /** Merge-on-read row deletes via delete FILES (format v2; ref
@@ -51,29 +51,12 @@ object MergeOnRead {
       Map("equality-delete-files" -> files.size.toString))
   }
 
-  /** Delete files are always parquet: a non-plaintext manager that cannot
-    * drive Parquet Modular Encryption (stream-only, not
-    * [[KeyedFileEncryption]]) would silently write equality-delete key
-    * VALUES and position paths plaintext into an encrypted table — refuse,
-    * mirroring `Writes.writeDataFiles`' stream-only-on-parquet refusal. */
-  private def requireDeleteFilesEncryptable(table: IceTable): Unit = {
-    val e = table.io.encryption
-    if (e != PlaintextEncryptionManager && !e.isInstanceOf[KeyedFileEncryption])
-      throw new ValidationException(
-        s"${table.location}: delete files are written as parquet, but " +
-          s"encryption manager ${e.getClass.getSimpleName} is stream-only " +
-          "— it cannot drive Parquet Modular Encryption, and writing " +
-          "plaintext delete content into an encrypted table is refused")
-  }
-
   /** Write (but do NOT commit) equality-delete files for `keysDf`'s key
     * tuples — the building block the streaming upsert sink combines with a
     * data append in ONE snapshot (ref `EqualityDeleteWriter.java` used by
     * the Flink CDC writer). */
   private[graft] def writeEqualityDeleteFiles(table: IceTable, m: TableMetadata,
       keysDf: DataFrame, keys: Seq[String]): Seq[DataFileMeta] = {
-    Writes.requireEncryptionSatisfied(table, m)
-    requireDeleteFilesEncryptable(table)
     val schema = m.schema
     val spec = m.spec
     val ids = keys.map(schema.fieldId)
@@ -82,30 +65,15 @@ object MergeOnRead {
     val distinctKeys = keysDf.select(keys.map(col): _*).dropDuplicates(keys)
     val scoped = spec.isPartitioned &&
       spec.fields.forall(pf => ids.contains(pf.sourceId))
-    if (scoped) {
-      // derive the partition tuple from the key values with the same
-      // codegen'd transform expressions the data writer uses
-      val helperNames = spec.fields.map(pf => Writes.HelperPrefix + pf.name)
-      val helperCols = spec.fields.map { pf =>
-        val srcName = schema.fieldName(pf.sourceId)
-        pf.transform.toColumn(col(srcName), schema.fieldType(pf.sourceId))
-      }
-      // key VALUES are row data: encrypted tables encrypt their equality
-      // deletes too (keyed managers → Parquet Modular Encryption)
-      distinctKeys.withColumns(helperNames.zip(helperCols).toMap)
-        .write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .options(EncryptionManagers.parquetCryptoOptions(table.io.encryption))
-        .partitionBy(helperNames: _*).parquet(outDir)
-    } else {
-      distinctKeys.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .options(EncryptionManagers.parquetCryptoOptions(table.io.encryption))
-        .parquet(outDir)
-    }
-    val metas = deleteFileMetas(table, m, outDir, FileContent.EqualityDeletes, ids,
-      scoped = scoped)
-      .filter(_.recordCount > 0)
-    if (metas.isEmpty) table.io.deleteRecursive(outDir) // no orphan empties
-    metas
+    // scoped: derive the partition tuple from the key values the way the
+    // data writer does
+    val (rows, helperNames) =
+      if (scoped) Writes.withPartitionColumns(distinctKeys, m) else (distinctKeys, Nil)
+    // key VALUES are row data: encrypted tables encrypt their equality
+    // deletes too (keyed managers → Parquet Modular Encryption)
+    Writes.writeContentFiles(table, m, rows, helperNames, outDir, "parquet",
+      EncryptionManagers.parquetCryptoOptions(table.io.encryption),
+      FileContent.EqualityDeletes, ids)._1
   }
 
   /** Equality-delete keys must be primitive columns (Iceberg's
@@ -138,7 +106,6 @@ object MergeOnRead {
     val eqFiles = writeEqualityDeleteFiles(table, m,
       rows.select(keys.map(col): _*), keys)
     val dataFiles = Writes.writeDataFiles(table.spark, table, m, rows)
-      .filter(_.recordCount > 0)
     table.commitSnapshot(Operation.Overwrite, eqFiles ++ dataFiles, Set.empty,
       extraSummary ++ Map(
         "equality-delete-files" -> eqFiles.size.toString,
@@ -158,7 +125,6 @@ object MergeOnRead {
     val m = table.meta
     val eqFiles = writeEqualityDeleteFiles(table, m, keysDf, keys)
     val dataFiles = Writes.writeDataFiles(table.spark, table, m, rows)
-      .filter(_.recordCount > 0)
     if (eqFiles.isEmpty && dataFiles.isEmpty) return
     table.commitSnapshot(Operation.Overwrite, eqFiles ++ dataFiles, Set.empty,
       extraSummary ++ Map(
@@ -197,87 +163,58 @@ object MergeOnRead {
     * each partition emits exactly ONE delete file (the
     * rewritePositionDeleteFiles contract); DML writes skip it — their
     * delete sets are small and an extra shuffle per commit isn't worth it.
-    * `wantRefs = false` skips the referenced-path read-back job for callers
-    * that discard the set. */
+    *
+    * The referenced paths come from the write tasks themselves (each
+    * records the distinct `file_path` values it wrote), so they cost no
+    * second job. */
   private[table] def writePositionDeleteFiles(table: IceTable, m: TableMetadata,
       posDf: DataFrame,
       affected: Option[Seq[FileScanTask]] = None,
-      compact: Boolean = false,
-      wantRefs: Boolean = true): (Seq[DataFileMeta], Set[String]) = {
+      compact: Boolean = false): (Seq[DataFileMeta], Set[String]) = {
     // deletion-vector mode: same inputs, bitmap sidecars out — every DML
     // caller (DELETE/UPDATE/MERGE merge-on-read, streaming upsert compose,
     // rewrite/convert maintenance) switches representation with the table
-    // property, no call-site changes. The writer returns referenced paths
-    // from its blob descriptors, so `wantRefs` costs no extra job here.
+    // property, no call-site changes
     if (m.property(TableProperties.DeleteVectors, "false").toBoolean)
       return DeletionVectors.writeSidecars(table, m, posDf, affected)
-    Writes.requireEncryptionSatisfied(table, m)
-    requireDeleteFilesEncryptable(table)
     val spec = m.spec
     val outDir = Locations.newWriteDir(table.location, m, s"deletes-${UUID.randomUUID()}")
     val rows0 = posDf.select(col(PosPathCol).cast("string"), col(PosPosCol).cast("long"))
       .dropDuplicates(PosPathCol, PosPosCol)
     val rows = if (compact && !spec.isPartitioned) rows0.coalesce(1) else rows0
-    val scoped = spec.isPartitioned
-    if (scoped) {
-      // path -> stringified partition tuple of the live default-spec files;
-      // files under other specs (or unknown paths) stay global (all-marker)
+    val helperNames = spec.fields.map(pf => Writes.HelperPrefix + pf.name)
+    val out = if (!spec.isPartitioned) rows else {
+      // path -> partition tuple of the live default-spec files; files under
+      // other specs (or unknown paths) stay global (all-null)
+      import org.apache.spark.sql.types.{StringType, StructField, StructType}
       val schema = m.schema
-      val spark = table.spark
-      val helperNames = spec.fields.map(pf => Writes.HelperPrefix + pf.name)
+      val types = spec.fields.map(spec.fieldType(schema, _))
       val lookupRows = affected.getOrElse(table.newScan().planFiles())
         .filter(_.file.specId == spec.specId)
         .map { t =>
-          val parts = spec.fields.zipWithIndex.map { case (pf, i) =>
-            partValueToString(t.file.partition(i), spec.fieldType(schema, pf))
-          }
-          org.apache.spark.sql.Row.fromSeq(table.normPath(t.file.path) +: parts)
+          org.apache.spark.sql.Row.fromSeq(table.normPath(t.file.path) +:
+            t.file.partition.zip(types).map { case (v, dt) =>
+              CatalystTypeConverters.convertToScala(Writes.toCatalyst(v), dt)
+            })
         }
-      val lookupSchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("_gp_path",
-          org.apache.spark.sql.types.StringType) +:
-        helperNames.map(n => org.apache.spark.sql.types.StructField(n,
-          org.apache.spark.sql.types.StringType)))
+      val lookupSchema = StructType(StructField("_gp_path", StringType) +:
+        helperNames.zip(types).map { case (n, dt) => StructField(n, dt) })
       // local rows -> LocalRelation (metadata-sized; broadcast-friendly,
       // no single-partition RDD job)
-      val lookup = spark.createDataFrame(
+      val lookup = table.spark.createDataFrame(
         java.util.Arrays.asList(lookupRows: _*), lookupSchema)
       // normalize URI schemes: _metadata.file_path is "file:///p", Hadoop
       // listings are "file:/p", lookup keys are scheme-less normPath
       val joined = rows.join(broadcast(lookup),
           normPathCol(rows(PosPathCol)) === lookup("_gp_path"), "left")
         .drop("_gp_path")
-      val filled = helperNames.foldLeft(joined)((df, n) =>
-        df.withColumn(n, coalesce(col(n),
-          lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))))
       // compact: hash-exchange on the partition tuple puts every row of one
       // partition in one task → exactly one file per partition dir
-      val out = if (compact) filled.repartition(helperNames.map(col): _*) else filled
-      out.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .options(EncryptionManagers.parquetCryptoOptions(table.io.encryption))
-        .partitionBy(helperNames: _*).parquet(outDir)
-    } else {
-      rows.write.option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .options(EncryptionManagers.parquetCryptoOptions(table.io.encryption))
-        .parquet(outDir)
+      if (compact) joined.repartition(helperNames.map(col): _*) else joined
     }
-    val metas = deleteFileMetas(table, m, outDir, FileContent.PositionDeletes, Nil,
-      scoped = scoped)
-      .filter(_.recordCount > 0)
-    if (metas.isEmpty) {
-      table.io.deleteRecursive(outDir) // nothing matched: no orphan files
-      (Nil, Set.empty)
-    } else if (!wantRefs) {
-      (metas, Set.empty)
-    } else {
-      // distinct referenced targets, read back from the (small) delete files
-      val referenced = table.spark.read
-        .options(EncryptionManagers.contentOptionsFor(table.io.encryption,
-          "parquet", m.property(TableProperties.EncryptionRequired, "false").toBoolean))
-        .parquet(metas.map(_.path): _*)
-        .select(PosPathCol).distinct().collect().map(_.getString(0)).toSet
-      (metas, referenced)
-    }
+    Writes.writeContentFiles(table, m, out, helperNames, outDir, "parquet",
+      EncryptionManagers.parquetCryptoOptions(table.io.encryption),
+      FileContent.PositionDeletes)
   }
 
   /** Merge-on-read DELETE WHERE (ref TableProperties DELETE_MODE
@@ -364,7 +301,6 @@ object MergeOnRead {
           assignments, lit(true), keepCols = Seq("_gf_row_id", "_gf_last_seq"))
       val dataFiles = Writes.writeDataFiles(table.spark, table, m, updated,
           lineageCols = preserve)
-        .filter(_.recordCount > 0)
       table.commitSnapshot(Operation.Overwrite, posFiles ++ dataFiles, Set.empty,
         Map("position-delete-files" -> posFiles.size.toString,
           "updated-data-files" -> dataFiles.size.toString),
@@ -373,74 +309,6 @@ object MergeOnRead {
             TableProperties.IsolationSerializable),
           requiredLivePaths = refPaths)))
     } finally matching.unpersist()
-  }
-
-  /** Inverse of `Writes.parsePartitionValue` for internal-repr values. */
-  private[table] def partValueToString(v: Any,
-      t: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    if (v == null) return ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-    t match {
-      case DateType => java.time.LocalDate.ofEpochDay(
-        v.asInstanceOf[Int].toLong).toString
-      case TimestampType | TimestampNTZType =>
-        val micros = v.asInstanceOf[Long]
-        java.time.LocalDateTime.ofEpochSecond(
-          Math.floorDiv(micros, 1000000L),
-          (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-          java.time.ZoneOffset.UTC).toString
-      case _: DecimalType => v.asInstanceOf[java.math.BigDecimal].toPlainString
-      case _ => v.toString
-    }
-  }
-
-  private def deleteFileMetas(table: IceTable, m: TableMetadata, outDir: String,
-      content: Int, equalityIds: Seq[Int], scoped: Boolean): Seq[DataFileMeta] = {
-    val spec = m.spec
-    val schema = m.schema
-    table.io.listRecursive(outDir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map { st =>
-        val path = st.getPath.toString
-        val conf = EncryptionManagers.parquetCryptoConf(
-          table.spark.sparkContext.hadoopConfiguration,
-          Some(table.io.encryption))
-        val rc = ParquetMetrics.read(conf, path, m.schema).recordCount
-        val partValues: Seq[Any] =
-          if (!scoped || spec.isUnpartitioned) spec.fields.map(_ => null)
-          else {
-            val rel = path.stripPrefix(outDir).stripPrefix("/")
-            val dirs = rel.split('/').dropRight(1).filter(_.contains('='))
-              .map { seg =>
-                val Array(k, v2) = seg.split("=", 2)
-                k.stripPrefix(Writes.HelperPrefix) ->
-                  ExternalCatalogUtils.unescapePathName(v2)
-              }.toMap
-            spec.fields.map { pf =>
-              dirs.get(pf.name) match {
-                case Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME) | None => null
-                case Some(raw) =>
-                  Writes.parsePartitionValue(raw, spec.fieldType(schema, pf))
-              }
-            }
-          }
-        DataFileMeta(
-          path = path, format = "parquet",
-          specId = m.defaultSpecId,
-          partition = partValues,
-          recordCount = rc, fileSizeBytes = st.getLen,
-          schemaId = m.currentSchemaId, content = content,
-          equalityIds = equalityIds,
-          // delete files are encrypted like data files when the manager
-          // drives parquet modular encryption: stamp the same derived key
-          // slot so the plan-time wrong-key guard covers them too (a
-          // stream-only manager never reaches here —
-          // requireDeleteFilesEncryptable refuses it up front)
-          keyMetadata = table.io.encryption match {
-            case k: KeyedFileEncryption => k.keyMetadata(path)
-            case _ => None
-          })
-      }
   }
 
   /** Sequence rule alone (partition scope ignored) — used when branch-count

@@ -62,7 +62,6 @@ private[table] object RowOps {
         val keep = df.filter(!(cond <=> lit(true)))
         Writes.writeDataFiles(table.spark, table, m, keep,
             lineageCols = preserve)
-          .filter(_.recordCount > 0)
       }
     val added = rewritten ++
       replacement.map(r => Writes.writeDataFiles(table.spark, table, m, r)).getOrElse(Nil)
@@ -166,7 +165,6 @@ private[table] object RowOps {
       keepCols = if (preserve) Seq("_gf_row_id", "_gf_last_seq") else Nil)
     val written = Writes.writeDataFiles(table.spark, table, m, updated,
         lineageCols = preserve)
-      .filter(_.recordCount > 0)
     table.commitSnapshot(Operation.Overwrite, written, tasks.map(_.file.path).toSet,
       extraSummary,
       validate = Some(ConflictValidation(m.currentSnapshotId, filter,
@@ -271,9 +269,8 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
     // file-filter probe, then rewrite join — so materialize it once (ref
     // RewriteRowLevelOperationHelper buildScanPlan caches the source too);
     // skipped for insert-only merges, which evaluate the source once.
-    val src0 = source.columns.foldLeft(source) { (df, c) =>
-      df.withColumn(MergeBuilder.SourcePrefix + c, col(c))
-    }
+    val src0 = source.select(source.columns.map(col) ++
+      source.columns.map(c => col(c).as(MergeBuilder.SourcePrefix + c)): _*)
 
     // Insert-only MERGE (ref RewriteMergeInto.scala:81,99): LEFT ANTI join of
     // the source against a key-only target scan — no target files are
@@ -292,7 +289,6 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
       val rows = notMatched.filter(keepCol)
         .select(schema.columnNames.map(insProjection): _*)
       val written = Writes.writeDataFiles(spark, table, m, rows)
-        .filter(_.recordCount > 0)
       if (written.nonEmpty)
         table.commitSnapshot(Operation.Append, written, Set.empty,
           Map("merge-insert-only" -> "true"))
@@ -443,7 +439,6 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
             else Seq(col("_gf_row_id"),
               lit(null).cast("long").as("_gf_last_seq")))): _*),
           lineageCols = preserve)
-          .filter(_.recordCount > 0)
         if (posFiles.nonEmpty || dataFiles.nonEmpty)
           table.commitSnapshot(Operation.Overwrite, posFiles ++ dataFiles,
             Set.empty,
@@ -491,7 +486,6 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
     // 5. write + atomic swap of the affected files
     val written = try {
       Writes.writeDataFiles(spark, table, m, result, lineageCols = preserve)
-        .filter(_.recordCount > 0)
     } catch {
       case e: Throwable if MergeBuilder.isCardinalityError(e) =>
         throw new ValidationException(MergeBuilder.CardinalityMsg)
@@ -539,9 +533,8 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
 
     // source with every column _s_-prefixed (raw names dropped — the join is
     // an expression join, so only the prefixed names may be visible)
-    val srcPlan = source.columns.foldLeft(source) { (df, c) =>
-      df.withColumn(MergeBuilder.SourcePrefix + c, col(c))
-    }.drop(source.columns.filterNot(_.startsWith(MergeBuilder.SourcePrefix)): _*)
+    val srcPlan = source.select(
+      source.columns.map(c => col(c).as(MergeBuilder.SourcePrefix + c)): _*)
 
     // Insert-only: LEFT ANTI of the source against the cond-column target scan
     if (matchedClauses.isEmpty && bySourceClauses.isEmpty) {
@@ -558,7 +551,6 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
       val rows = notMatched.filter(keepCol)
         .select(schema.columnNames.map(insProjection): _*)
       val written = Writes.writeDataFiles(spark, table, m, rows)
-        .filter(_.recordCount > 0)
       if (written.nonEmpty)
         table.commitSnapshot(Operation.Append, written, Set.empty,
           Map("merge-insert-only" -> "true"))
@@ -706,7 +698,6 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
             else Seq(col("_gf_row_id"),
               lit(null).cast("long").as("_gf_last_seq")))): _*),
           lineageCols = preserve)
-          .filter(_.recordCount > 0)
         if (posFiles.nonEmpty || dataFiles.nonEmpty)
           table.commitSnapshot(Operation.Overwrite, posFiles ++ dataFiles,
             Set.empty,
@@ -749,7 +740,6 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
 
     val written = try {
       Writes.writeDataFiles(spark, table, m, result, lineageCols = preserve)
-        .filter(_.recordCount > 0)
     } catch {
       case e: Throwable if MergeBuilder.isCardinalityError(e) =>
         throw new ValidationException(MergeBuilder.CardinalityMsg)

@@ -78,6 +78,7 @@ object TableImport {
     val schema = m.schema
     val spec = m.spec
     val conf = spark.sparkContext.hadoopConfiguration
+    val zone = spark.conf.get("spark.sql.session.timeZone")
 
     // explicit mapping → a synthetic schema version: current types/IDs with
     // the mapped physical names (commit registers it; reads then resolve
@@ -125,7 +126,7 @@ object TableImport {
           val raw = dirs.getOrElse(pf.name,
             throw new IllegalArgumentException(s"No partition dir ${pf.name} in $p"))
           if (raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-          else Writes.parsePartitionValue(raw, spec.fieldType(schema, pf))
+          else parsePartitionValue(raw, spec.fieldType(schema, pf), zone)
         }
       }
       val (schemaId, raw, len) = resolved(p)
@@ -151,6 +152,15 @@ object TableImport {
     table.commitSnapshot(Operation.Append, metas, Set.empty,
       Map("imported-files" -> metas.size.toString),
       metaTransform = registerMapped)
+  }
+
+  /** A hive-style directory value as the partition type's internal repr,
+    * parsed by Spark's own cast as partition discovery does: timestamps in
+    * the session zone `zone`, the zone Spark names the directories in. */
+  private[table] def parsePartitionValue(raw: String,
+      t: org.apache.spark.sql.types.DataType, zone: String): Any = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
+    Writes.fromCatalyst(Cast(Literal(raw), t, Some(zone), EvalMode.ANSI).eval())
   }
 
   private def relPath(base: String, full: String): String = {

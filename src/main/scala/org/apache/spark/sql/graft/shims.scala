@@ -141,14 +141,7 @@ object ColumnBridge {
         c.conf.set("spark.sql.orc.enableVectorizedReader", vectorized.toString)
         c
       }
-    val fmt: org.apache.spark.sql.execution.datasources.FileFormat = format match {
-      case "parquet" => new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-      // the guarded subclass enforces the plaintext-refusal flag at task
-      // open (encryption-required tables); a no-op when the flag is absent
-      case "orc" => new GraftGuardedOrcFileFormat
-      case "avro" => new graft.sources.GraftAvroFileFormat
-      case other => throw new IllegalArgumentException(s"No file reader for format: $other")
-    }
+    val fmt = fileFormat(format)
     val batches = vectorized && fmt.supportBatch(classic, requiredSchema)
     // Spark 4 requires the caller to declare whether batches are expected
     val options = extraOptions ++ Map(
@@ -162,6 +155,42 @@ object ColumnBridge {
       org.apache.spark.sql.types.StructType(Nil), requiredSchema, filters.toSeq,
       options, hadoopConf)
     (reader, batches)
+  }
+
+  private def fileFormat(format: String): org.apache.spark.sql.execution.datasources.FileFormat =
+    format match {
+      case "parquet" => new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      // the guarded subclass enforces the plaintext-refusal flag at task
+      // open (encryption-required tables); a no-op when the flag is absent,
+      // and its writer is ORC's own
+      case "orc" => new GraftGuardedOrcFileFormat
+      case "avro" => new graft.sources.GraftAvroFileFormat
+      case other => throw new IllegalArgumentException(s"No file format: $other")
+    }
+
+  /** Write `df` as `format` files under `outDir` through Spark's file writer
+    * (`FileFormatWriter.write`, the engine of `DataFrameWriter.save`) with
+    * the caller's commit protocol and stats trackers; `partitionCols` become
+    * hive-style directories, `options` reach the format and the per-write
+    * Hadoop conf. It runs as a SQL execution named `executionName`, so
+    * Spark and query-execution listeners see it like any other action. */
+  def writeFiles(df: org.apache.spark.sql.DataFrame, format: String,
+      outDir: String, partitionCols: Seq[String], options: Map[String, String],
+      committer: org.apache.spark.internal.io.FileCommitProtocol,
+      trackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker],
+      executionName: String): Unit = {
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(executionName)) {
+      val plan = qe.executedPlan
+      val output = plan.output
+      FileFormatWriter.write(spark, plan, fileFormat(format), committer,
+        FileFormatWriter.OutputSpec(outDir, Map.empty, output),
+        spark.sessionState.newHadoopConfWithOptions(options),
+        partitionCols.map(n => output.find(_.name == n).get), None, trackers, options)
+    }
   }
 
   /** Driver-side synthetic task attempt ids: NEGATIVE and decrementing.

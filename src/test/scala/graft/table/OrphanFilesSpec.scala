@@ -67,5 +67,7 @@ class OrphanFilesSpec extends AnyFunSuite {
     t.io.writeString(t.currentSnapshot.get.manifestList, "garbage")
     intercept[Exception](t.expireSnapshots(System.currentTimeMillis() + 1000))
     assert(a.nonEmpty && a.forall(t.io.exists))
+    // nothing was committed: snapshot 1 still references its files
+    assert(IceTable.load(spark, t.location).snapshots.size === 2)
   }
 }

@@ -12,7 +12,6 @@ import graft.meta.model.{TableMetadata, TableProperties}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -71,7 +70,7 @@ class RewriteSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // reported asynchronously) are not the rewrite's
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution, duration: Long): Unit =
-        if (qe.executedPlan.isInstanceOf[DataWritingCommandExec] && (qe.sparkSession ne spark))
+        if (funcName == Writes.ExecutionName && (qe.sparkSession ne spark))
           plans.add(qe.executedPlan)
       override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
     }
