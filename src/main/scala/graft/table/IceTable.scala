@@ -1457,12 +1457,11 @@ private[graft] object Reads {
 private[table] object Writes {
 
   val HelperPrefix = "_p_"
-  /** Above this many files, [[TableImport]] reads footers as a Spark job. */
-  val DistributedMetricsThreshold = 64
 
   /** The [[TableProperties.EncryptionRequired]] gate, checked before EVERY
-    * content write (data files here, delete files in [[MergeOnRead]]): a
-    * plaintext-manager handle of a table that requires encryption must
+    * content write: once in [[writeContentFiles]] for data, position-delete
+    * and equality-delete files, and by the deletion-vector sidecar writer.
+    * A plaintext-manager handle of a table that requires encryption must
     * refuse to write — per-file key metadata guards every read, but a pure
     * append plans no files, so this property is the only thing standing
     * between a misconfigured writer and plaintext rows in an encrypted
@@ -1800,12 +1799,16 @@ private[table] object Writes {
 
   /** Records, in each write task, what the table needs of every file it
     * wrote; the driver side keeps the reports of the committed tasks. A
-    * file's partition tuple is the row Spark announced in `newPartition`
-    * before the first file of its directory (later files of the directory,
-    * rolled or reopened by a concurrent writer, map through the directory).
-    * Footer metrics are read right after `closeFile`, with the table's
-    * encryption manager. With `trackRefs` the first column is a data-file
-    * path (position deletes): a path unlike the previous row's is recorded. */
+    * file takes its partition tuple per path when it opens: the row Spark
+    * announced in `newPartition` just before, else (a file rolled at
+    * `maxRecordsPerFile`, opened right after its predecessor closed) the
+    * tuple of the file closed last. Never per directory: two timestamps in
+    * a DST fall-back hour share one, and concurrent writers hold both files
+    * open. Footer metrics are read at `closeFile`, with the table's
+    * encryption manager, or at task commit for a file never reported closed
+    * (as Spark's `BasicWriteTaskStatsTracker` does). With `trackRefs` the
+    * first column is a data-file path (position deletes): a path unlike the
+    * previous row's is recorded. */
   private final class ContentFileTracker(
       conf: org.apache.spark.util.SerializableConfiguration, format: String,
       schema: Schema, enc: Option[EncryptionManager],
@@ -1819,7 +1822,8 @@ private[table] object Writes {
 
     override def newTaskInstance(): WriteTaskStatsTracker = new WriteTaskStatsTracker {
       private var announced: Option[Seq[Any]] = None
-      private val dirPartition = scala.collection.mutable.HashMap[String, Seq[Any]]()
+      private var lastClosed: Seq[Any] = Nil
+      private val open = scala.collection.mutable.LinkedHashMap[String, Seq[Any]]()
       private val files = scala.collection.mutable.ArrayBuffer[WrittenFile]()
       private val refs = scala.collection.mutable.HashSet[String]()
       private var lastRef: UTF8String = null
@@ -1828,16 +1832,15 @@ private[table] object Writes {
         announced = Some(partitionTypes.indices.map(i =>
           if (values.isNullAt(i)) null else fromCatalyst(values.get(i, partitionTypes(i)))))
 
-      private def dirOf(path: String) = path.substring(0, path.lastIndexOf('/'))
-
       override def newFile(path: String): Unit = {
-        announced.foreach(dirPartition(dirOf(path)) = _)
+        open(path) = announced.getOrElse(lastClosed)
         announced = None
       }
 
-      override def closeFile(path: String): Unit = {
+      override def closeFile(path: String): Unit = open.remove(path).foreach { partition =>
         val p = new Path(path)
-        files += WrittenFile(path, dirPartition.getOrElse(dirOf(path), Nil),
+        lastClosed = partition
+        files += WrittenFile(path, partition,
           fileMetrics(conf.value, format, path, schema, enc),
           p.getFileSystem(conf.value).getFileStatus(p).getLen)
       }
@@ -1851,8 +1854,10 @@ private[table] object Writes {
           }
         }
 
-      override def getFinalStats(taskCommitTime: Long): WriteTaskStats =
+      override def getFinalStats(taskCommitTime: Long): WriteTaskStats = {
+        open.keys.toSeq.foreach(closeFile)
         TaskFiles(files.toSeq, refs.toSet)
+      }
     }
 
     override def processStats(stats: Seq[WriteTaskStats], jobCommitTime: Long): Unit =

@@ -17,6 +17,9 @@ import org.apache.spark.sql.types.StructType
   */
 object TableImport {
 
+  /** Above this many files, [[addFiles]] reads footers as a Spark job. */
+  val DistributedMetricsThreshold = 64
+
   /** Snapshot an existing parquet directory (flat or hive-partitioned) into
     * a new graft table at `location`. */
   def importParquet(spark: SparkSession, sourceDir: String, location: String,
@@ -59,7 +62,7 @@ object TableImport {
     * overrides the match for files whose naming never appeared in the
     * table's history; it is registered as a new immutable schema version.
     *
-    * Footer reads run as a Spark job above [[Writes.DistributedMetricsThreshold]]
+    * Footer reads run as a Spark job above [[DistributedMetricsThreshold]]
     * files (ref `SparkTableUtil.java:117-236` runs imports as Spark jobs) —
     * a 100k-file migrate is executor-parallel, the driver only collects
     * metadata-sized [[DataFileMeta]]s.
@@ -97,7 +100,7 @@ object TableImport {
     // (schemaId, metrics, length) per file — one footer open each,
     // distributed for big imports, driver IO pool for small ones
     val resolved: Map[String, (Int, ParquetMetrics.FileMetrics, Long)] =
-      if (paths.size > Writes.DistributedMetricsThreshold) {
+      if (paths.size > DistributedMetricsThreshold) {
         val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
         val bcSchemas = spark.sparkContext.broadcast(candidates)
         val prefId = preferredId

@@ -122,10 +122,23 @@ class ContentFileWriterSpec extends AnyFunSuite {
     }
   }
 
+  /** Runs `body` with the session conf `key` set to `value`. */
+  private def withConf[A](key: String, value: String)(body: => A): A = {
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def withZone[A](zone: String)(body: => A): A =
+    withConf("spark.sql.session.timeZone", zone)(body)
+
+  /** An unsorted partitioned write then keeps up to `n` files open per task
+    * instead of sorting its rows by partition first. */
+  private def withConcurrentWriters[A](n: Int)(body: => A): A =
+    withConf("spark.sql.maxConcurrentOutputFileWriters", n.toString)(body)
+
   test("identity timestamps under a non-UTC session zone keep their rows") {
-    val zone = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    try {
+    withZone("America/Los_Angeles") {
       val df = spark.sql("SELECT 1L AS k, timestamp'2020-01-01 12:00:00' AS ts")
       val micros = df.collect().head.getTimestamp(1).getTime * 1000L
       val schema = Schema.fresh(df.schema)
@@ -135,13 +148,11 @@ class ContentFileWriterSpec extends AnyFunSuite {
       assert(t.newScan().planFiles().map(_.file.partition) === Seq(Seq(micros)))
       assert(t.newScan().filter(equalTo("ts", micros)).planFiles().size === 1)
       assert(t.toDF.filter(col("ts") === lit(new java.sql.Timestamp(micros / 1000))).count() === 1L)
-    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+    }
   }
 
   test("imported timestamp partition directories parse in the session zone") {
-    val zone = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    try {
+    withZone("America/Los_Angeles") {
       val base = Files.createTempDirectory("graft-cfw-imp-").toString
       val df = spark.sql("SELECT 1L AS k, timestamp'2020-01-01 12:00:00' AS ts")
       val micros = df.collect().head.getTimestamp(1).getTime * 1000L
@@ -149,7 +160,64 @@ class ContentFileWriterSpec extends AnyFunSuite {
       val t = TableImport.importParquet(spark, s"$base/ext", s"$base/t")
       assert(t.newScan().planFiles().map(_.file.partition) === Seq(Seq(micros)))
       assert(t.toDF.filter(col("ts") === lit(new java.sql.Timestamp(micros / 1000))).count() === 1L)
-    } finally spark.conf.set("spark.sql.session.timeZone", zone)
+    }
+  }
+
+  Seq(2, 8).foreach { n =>
+    test(s"an unsorted partitioned append through $n concurrent writers keeps every row") {
+      val schema = Schema.fresh(sample.schema)
+      val t = IceTable.create(spark, tmpLoc(), schema,
+        PartitionSpec.builderFor(schema).identity("p").build(),
+        properties = Map(TableProperties.DistributionMode -> "none"))
+      withConcurrentWriters(n) {
+        // one task, rows of all five partitions interleaved; two writers
+        // fall back to sorting the rest, eight hold all five files open
+        t.append(sample.coalesce(1))
+        val s = t.currentSnapshot.get.summary
+        val width = s("total-files-size").toLong / s("total-records").toLong
+        // the second append also rolls every partition at ~20 rows a file
+        t.append(sample.coalesce(1), Map.empty,
+          writeOverrides = Map(TableProperties.TargetFileSize -> (width * 20).toString))
+      }
+      val files = t.newScan().planFiles().map(_.file)
+      assert(files.map(_.recordCount).sum === 600L)
+      assert(files.size > 10, "the second append rolls its files")
+      // every file holds the rows of the partition it is recorded under
+      val byPath = files.map(f => new Path(f.path).toUri.getPath -> f.partition).toMap
+      // (no partition discovery: the files carry `p` themselves)
+      spark.read.option("recursiveFileLookup", "true").parquet(files.map(_.path): _*)
+        .select(col("_metadata.file_path").as("f"), col("p")).distinct().collect()
+        .foreach(r => assert(byPath(new Path(r.getString(0)).toUri.getPath) === Seq(r.getInt(1))))
+      (0 until 5).foreach { p =>
+        assert(t.newScan().filter(equalTo("p", p)).planFiles()
+          .map(_.file.recordCount).sum === 120L)
+        assert(t.toDF.filter(col("p") === p).count() === 120L)
+      }
+    }
+  }
+
+  test("two timestamps that render to one directory keep their own partitions") {
+    // 01:30 PDT and 01:30 PST on the fall-back day: one directory name in
+    // the session zone, two files held open at once by concurrent writers
+    val (pdt, pst) = (1604219400L, 1604223000L)
+    withZone("America/Los_Angeles") {
+      withConcurrentWriters(4) {
+        val df = spark.range(0, 10, 1, 1).select(col("id").as("k"),
+          timestamp_seconds(when(col("id") % 2 === 0, pdt).otherwise(pst)).as("ts"))
+        val schema = Schema.fresh(df.schema)
+        val t = IceTable.create(spark, tmpLoc(), schema,
+          PartitionSpec.builderFor(schema).identity("ts").build(),
+          properties = Map(TableProperties.DistributionMode -> "none"))
+        t.append(df)
+        val files = t.newScan().planFiles().map(_.file)
+        assert(files.map(f => new Path(f.path).getParent.toString).distinct.size === 1)
+        assert(files.map(_.partition).toSet === Set(Seq(pdt * 1000000L), Seq(pst * 1000000L)))
+        Seq(pdt, pst).foreach { sec =>
+          assert(t.newScan().filter(equalTo("ts", sec * 1000000L)).planFiles().size === 1)
+          assert(t.toDF.filter(col("ts") === timestamp_seconds(lit(sec))).count() === 5L)
+        }
+      }
+    }
   }
 
   /** Names of the SQL executions `body` runs (listener events are async). */

@@ -69,7 +69,7 @@ class ImportSpec extends AnyFunSuite {
       Schema.fresh(Seq.empty[Long].toDF("k").schema))
     val paths = t.io.listRecursive(ext).map(_.getPath.toString)
       .filter(_.endsWith(".parquet"))
-    assert(paths.size > Writes.DistributedMetricsThreshold)
+    assert(paths.size > TableImport.DistributedMetricsThreshold)
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
