@@ -4,7 +4,7 @@ import graft.meta.PartitionSpec
 import graft.meta.expr.{And => GAnd, Expr => GExpr, SparkConv, TrueExpr}
 import graft.meta.model.{DataFileMeta, FileContent, TableMetadata, TableProperties}
 import graft.meta.transforms.IdentityTransform
-import graft.table.{FileScanTask, IceTable, Reads, SparkFilterConv}
+import graft.table.{FileScanTask, GraftPaths, IceTable, Reads, SparkFilterConv}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -68,10 +68,6 @@ final case class GraftDvSet(blobs: Array[GraftDvBlob],
     encryption: graft.table.EncryptionManager)
 
 object GraftDeleteApply {
-  /** Same normalization as `IceTable.normPath`/`MergeOnRead.normPathCol`:
-    * stored paths may be "file:///p" or "file:/p", probes compare "/p". */
-  def normPath(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
-
   /** Hash-key normalization for probe values: null-safe `<=>` equality
     * semantics (NaN equals NaN via boxing; -0.0 equals 0.0 by normalizing;
     * binary wrapped for structural equality). Keys are primitive
@@ -140,7 +136,7 @@ private object GraftDeleteCache {
   * loaded through [[GraftDeleteCache]] (once per executor per class, shared
   * read-only across that class's tasks). */
 final class GraftDeleteProbe(d: GraftDeleteApply) {
-  import GraftDeleteApply.{keyValue, normPath}
+  import GraftDeleteApply.keyValue
 
   // deleted positions per data file, two shapes behind one probe interface:
   //  - parquet (path, pos) delete files build SORTED PRIMITIVE long arrays
@@ -158,7 +154,7 @@ final class GraftDeleteProbe(d: GraftDeleteApply) {
           d.posReader(ColumnBridge.partitionedFile(s.path, s.start, s.length, s.fileSize)))
           .foreach { r =>
             if (!r.isNullAt(0) && !r.isNullAt(1)) {
-              val p = normPath(r.getUTF8String(0).toString)
+              val p = GraftPaths.norm(r.getUTF8String(0).toString)
               var list = grow.get(p)
               if (list == null) {
                 list = new GraftDeleteProbe.LongList
@@ -189,7 +185,7 @@ final class GraftDeleteProbe(d: GraftDeleteApply) {
             keyMetadata = b.keyMetadata)
           val bm = graft.table.DeletionVectors.readBitmap(
             d.dvs.conf.value, d.dvs.encryption, meta)
-          val key = normPath(b.referencedPath)
+          val key = GraftPaths.norm(b.referencedPath)
           m.get(key) match {
             case prior: GraftDeleteProbe.BmIdx => prior.bm.or(bm)
             case _ => m.put(key, new GraftDeleteProbe.BmIdx(bm))
@@ -237,7 +233,7 @@ final class GraftDeleteProbe(d: GraftDeleteApply) {
 
   /** Deleted-position index for one data file (null = none). */
   def posSetFor(slicePath: String): GraftDeleteProbe.PosIdx =
-    posByPath.get(normPath(slicePath))
+    posByPath.get(GraftPaths.norm(slicePath))
 
   /** Any non-empty equality-delete set in scope? When false the columnar
     * path probes the row-index vector directly and never materializes rows. */

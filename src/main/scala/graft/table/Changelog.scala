@@ -125,8 +125,8 @@ object Changelog {
       entryCache.keysIterator.filterNot(paths).toSeq.foreach(entryCache.remove)
       val (del, data) = mfs.flatMap(mf => entryCache(mf.path))
         .partition(_.dataFile.content != FileContent.Data)
-      (data.map(e => table.normPath(e.dataFile.path) -> (e.dataFile, e.sequenceNumber)).toMap,
-        del.map(e => table.normPath(e.dataFile.path) -> (e.dataFile, e.sequenceNumber)).toMap)
+      (data.map(e => GraftPaths.norm(e.dataFile.path) -> (e.dataFile, e.sequenceNumber)).toMap,
+        del.map(e => GraftPaths.norm(e.dataFile.path) -> (e.dataFile, e.sequenceNumber)).toMap)
     }
 
     var (prevData, prevDeletes) =
@@ -247,7 +247,7 @@ object Changelog {
     // referenced paths: metadata-scale collect (bounded by files the DML
     // touched), lets the reconstitution read only those files
     val posPaths: Set[String] = posTuples
-      .map(_.select(MergeOnRead.normPathCol(col(MergeOnRead.PosPathCol)))
+      .map(_.select(GraftPaths.normCol(col(MergeOnRead.PosPathCol)))
         .distinct().collect().map(_.getString(0)).toSet)
       .getOrElse(Set.empty)
 
@@ -295,8 +295,8 @@ object Changelog {
         // normalized on both sides: parquet tuples store file_path verbatim,
         // DV tuples store normalized referenced paths
         matched :+= visible.join(broadcast(pos),
-          MergeOnRead.normPathCol(visible(TableScan.MetaFileCol)) ===
-            MergeOnRead.normPathCol(pos(MergeOnRead.PosPathCol)) &&
+          GraftPaths.normCol(visible(TableScan.MetaFileCol)) ===
+            GraftPaths.normCol(pos(MergeOnRead.PosPathCol)) &&
             visible(TableScan.MetaPosCol) === pos(MergeOnRead.PosPosCol),
           "left_semi")
       }

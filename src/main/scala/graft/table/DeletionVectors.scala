@@ -120,7 +120,7 @@ object DeletionVectors {
     val partByPath: Map[String, Seq[Any]] =
       affected.getOrElse(table.newScan().planFiles())
         .filter(_.file.specId == spec.specId)
-        .map(t => table.normPath(t.file.path) -> t.file.partition).toMap
+        .map(t => GraftPaths.norm(t.file.path) -> t.file.partition).toMap
     val metas = descs.map { d =>
       DataFileMeta(
         path = d.sidecarPath, format = "gdv",
@@ -272,10 +272,4 @@ object DeletionVectors {
       }
       .toDF(MergeOnRead.PosPathCol, MergeOnRead.PosPosCol, "_gf_dv_path")
   }
-}
-
-/** Path normalization shared with executor-side probes (object so the
-  * closure ships no table handle). */
-private[graft] object GraftPaths {
-  def norm(p: String): String = new Path(p).toUri.getPath
 }

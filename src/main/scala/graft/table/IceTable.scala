@@ -197,13 +197,18 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       MergeOnRead.updateWhere(this, filter, assignments)
     else RowOps.update(this, filter, assignments)
 
-  /** MERGE INTO builder, equi-joined on `keys` (ref `RewriteMergeInto.scala`). */
+  /** MERGE INTO builder, equi-joined on `keys` (ref `RewriteMergeInto.scala`):
+    * a USING join on columns both sides name alike. Its file probe counts
+    * source rows per key, and without the probe the cardinality guard is a
+    * window over the source keys. Same executor as [[mergeOn]]. */
   def merge(source: DataFrame, keys: Seq[String]): MergeBuilder =
     new MergeBuilder(this, source, keys)
 
   /** MERGE INTO with an arbitrary ON condition (ref `RewriteMergeInto.scala:162`):
-    * reference target columns by name, source columns as `_s_<name>`. Also the
-    * only mode supporting WHEN NOT MATCHED BY SOURCE clauses. */
+    * reference target columns by name, source columns as `_s_<name>`. Its
+    * file probe and cardinality guard count matches per target row
+    * identity (file, position). Also the only mode supporting WHEN NOT
+    * MATCHED BY SOURCE clauses. Same executor as [[merge]]. */
   def mergeOn(source: DataFrame, cond: Column): MergeBuilder =
     new MergeBuilder(this, source, Nil, onCond = Some(cond))
 
@@ -485,9 +490,9 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       rewritten: Seq[DataFileMeta]): Unit = {
     if (v.requiredLivePaths.nonEmpty) {
       val live: Set[String] = base.currentSnapshot.map(snap =>
-        liveEntries(base, snap).map(e => normPath(e.dataFile.path)).toSet)
+        liveEntries(base, snap).map(e => GraftPaths.norm(e.dataFile.path)).toSet)
         .getOrElse(Set.empty)
-      val gone = v.requiredLivePaths.map(normPath) -- live
+      val gone = v.requiredLivePaths.map(GraftPaths.norm) -- live
       if (gone.nonEmpty) throw new ValidationException(
         s"Concurrent rewrite conflict: ${gone.size} file(s) referenced by " +
           s"this operation's position deletes are no longer live: " +
@@ -507,7 +512,7 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       val applying = newSnaps.flatMap(s => addedFiles(base, s)
           .filter(_.content != FileContent.Data).map(_ -> s.sequenceNumber))
         .collect { case (d, dseq) if tasks.exists(t => MergeOnRead.applies(d, dseq, t) &&
-            d.referencedFile.forall(r => normPath(r) == normPath(t.file.path))) => d.path }
+            d.referencedFile.forall(r => GraftPaths.norm(r) == GraftPaths.norm(t.file.path))) => d.path }
       if (applying.nonEmpty) throw new ValidationException(
         s"Concurrent delete conflict: ${applying.size} delete file(s) committed " +
           s"after snapshot ${v.startSnapshotId.getOrElse("<none>")} apply to data " +
@@ -549,8 +554,6 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
 
   private[table] def newSnapshotId(): Long =
     math.abs(UUID.randomUUID().getMostSignificantBits)
-
-  private[table] def normPath(p: String): String = new Path(p).toUri.getPath
 
   /** Conservative manifest-level prune for removal commits (ref
     * `ManifestFilterManager.java:167` canContainDeletedFiles): a manifest
@@ -713,10 +716,10 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
       removedMeta: Seq[DataFileMeta] = Nil,
       target: SnapshotTarget = SnapshotTarget.Main,
       rewriteManifests: Boolean = false): SnapshotMeta = {
-    val removedNorm = removedPaths.map(normPath)
+    val removedNorm = removedPaths.map(GraftPaths.norm)
     val pruneMeta =
       if (removedMeta.nonEmpty &&
-        removedNorm.subsetOf(removedMeta.map(f => normPath(f.path)).toSet))
+        removedNorm.subsetOf(removedMeta.map(f => GraftPaths.norm(f.path)).toSet))
         removedMeta
       else Nil
     // the data files whose rows this commit carries into its added files
@@ -780,7 +783,7 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
               case None => Some(mf) // pruned: cannot contain a removed file
               case Some(entries) =>
                 val (rm, keep) = entries.filter(_.status != EntryStatus.Deleted)
-                  .partition(e => removedNorm.contains(normPath(e.dataFile.path)))
+                  .partition(e => removedNorm.contains(GraftPaths.norm(e.dataFile.path)))
                 removedFiles ++= rm.map(_.dataFile)
                 if (rm.isEmpty) Some(mf)
                 else if (keep.isEmpty) None
@@ -791,7 +794,7 @@ final class IceTable private (val spark: SparkSession, val ops: TableOps)
         }
       // removal is validated by PATH: one deletion-vector sidecar path can
       // carry several blob entries, so the check compares path sets
-      val removedSeen = removedFiles.map(f => normPath(f.path)).toSet
+      val removedSeen = removedFiles.map(f => GraftPaths.norm(f.path)).toSet
       if (removedNorm.nonEmpty && removedSeen != removedNorm)
         throw new ValidationException(
           s"Missing required files to delete: expected ${removedNorm.size} " +
@@ -1024,10 +1027,9 @@ object IceTable {
     if (oldLoc == newLocation) return
     // stored paths may carry a URI scheme (file:/…) while locations are
     // scheme-less — compare scheme-normalized forms
-    def norm(p: String): String = new Path(p).toUri.getPath
-    val oldNorm = norm(oldLoc)
+    val oldNorm = GraftPaths.norm(oldLoc)
     def remap(p: String): String = {
-      val pn = norm(p)
+      val pn = GraftPaths.norm(p)
       if (pn.startsWith(oldNorm)) newLocation + pn.substring(oldNorm.length) else p
     }
     // each manifest can appear in several manifest lists — rewrite once

@@ -2,6 +2,9 @@ package graft.table
 
 import graft.meta.model.TableMetadata
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.regexp_replace
+
 /** Data-file location selection (ref `core/.../LocationProviders.java:34`).
   *
   * Default layout writes under `<table>/data` (or
@@ -49,4 +52,14 @@ object Locations {
       val ctx = strip(location).split('/').filter(_.nonEmpty).takeRight(2).mkString("/")
       f"$storage/$hash%08x/$ctx/$name"
     } else s"${dataRoot(location, m)}/$name"
+}
+
+/** Path normalization: stored paths may be "file:///p" or "file:/p", and
+  * every comparison of two paths uses the scheme-less "/p". An object, so
+  * executor-side closures that call it ship no table handle. */
+private[graft] object GraftPaths {
+  def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+
+  /** The Column form of [[norm]]: strips the URI scheme in a query. */
+  def normCol(c: Column): Column = regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
 }

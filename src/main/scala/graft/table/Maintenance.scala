@@ -260,7 +260,7 @@ object Maintenance {
           Locations.dataRoot(table.location, m)).stripSuffix("/"))
       else None
     val roots = (Seq(defaultRoot) ++ hashedRoot).distinct
-    def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    import GraftPaths.norm
     val inScope: String => Boolean = {
       val defaultNorm = norm(defaultRoot)
       val metaPrefix = norm(metaDir) + "/"
@@ -285,7 +285,7 @@ object Maintenance {
         val io = new FileIO(confB.value.value)
         it.flatMap(d => io.listRecursive(d)
           .filter(_.getModificationTime < olderThanMillis)
-          .map(s => new org.apache.hadoop.fs.Path(s.getPath.toString).toUri.getPath)
+          .map(s => GraftPaths.norm(s.getPath.toString))
           .filter(scopeF))
       }
       // distinct: a hashed root that is an ancestor of the table location
@@ -297,7 +297,7 @@ object Maintenance {
     val validMeta = (manifests.map(_.path) ++ m.snapshots.map(_.manifestList) ++
       m.statsFiles.map(_.path)).map(norm)
     val valid = validDataFileDF(table, m, manifests)
-      .select(regexp_replace(col("path"), "^[a-zA-Z0-9.+-]+:/+", "/").as("path"))
+      .select(GraftPaths.normCol(col("path")).as("path"))
       .union(spark.createDataset(validMeta).toDF("path"))
     val orphansDF = actualDF.join(valid, Seq("path"), "left_anti").cache()
     try {
@@ -652,7 +652,7 @@ object Maintenance {
     val minBySpec = dataEntries.groupBy(_.dataFile.specId)
       .view.mapValues(_.map(_.sequenceNumber).min).toMap
     val liveDataPaths: Set[String] =
-      dataEntries.map(e => table.normPath(e.dataFile.path)).toSet
+      dataEntries.map(e => GraftPaths.norm(e.dataFile.path)).toSet
     val dangling = delEntries.filter { e =>
       val d = e.dataFile
       // a deletion vector names its ONE target file: it dangles exactly
@@ -694,17 +694,21 @@ object Maintenance {
         "parquet", m.property(TableProperties.EncryptionRequired, "false").toBoolean))
       .parquet(files.map(_.path): _*)
 
+  /** The live data files among `entries`, as scan tasks. */
+  private def dataTasksOf(entries: Seq[ManifestEntry]): Seq[FileScanTask] =
+    entries.filter(_.dataFile.content == FileContent.Data)
+      .map(e => FileScanTask(e.dataFile, TrueExpr, e.sequenceNumber))
+
   /** The (file_path, pos) rows of the given parquet position-delete files
-    * and deletion vectors whose target data file is still live in
-    * `entries`; rows aimed at files compacted away are dropped. */
+    * and deletion vectors whose target data file is among the live
+    * `dataTasks`; rows aimed at files compacted away are dropped. */
   private def livePositionRows(table: IceTable, m: TableMetadata,
-      entries: Seq[ManifestEntry], posDeletes: Seq[DataFileMeta],
+      dataTasks: Seq[FileScanTask], posDeletes: Seq[DataFileMeta],
       dvDeletes: Seq[DataFileMeta]): DataFrame = {
     val spark = table.spark
     import spark.implicits._
-    val liveDf = spark.createDataset(entries
-      .filter(_.dataFile.content == FileContent.Data)
-      .map(e => table.normPath(e.dataFile.path))).toDF("_gf_live")
+    val liveDf = spark.createDataset(dataTasks
+      .map(t => GraftPaths.norm(t.file.path))).toDF("_gf_live")
     val pathPos = Seq(col(MergeOnRead.PosPathCol), col(MergeOnRead.PosPosCol))
     val parquetRows =
       if (posDeletes.isEmpty) None
@@ -713,7 +717,7 @@ object Maintenance {
       if (dvDeletes.isEmpty) None
       else Some(DeletionVectors.positionsDf(table, dvDeletes).select(pathPos: _*))
     (parquetRows ++ dvRows).reduce(_ unionByName _)
-      .join(liveDf, MergeOnRead.normPathCol(col(MergeOnRead.PosPathCol)) ===
+      .join(liveDf, GraftPaths.normCol(col(MergeOnRead.PosPathCol)) ===
         col("_gf_live"), "left_semi")
   }
 
@@ -740,9 +744,12 @@ object Maintenance {
     // both representations in, one compacted representation out (the table
     // property picks parquet rows or DV sidecars) — so this action is also
     // the DV-merge step: several blobs targeting one file become one bitmap
-    val rows = livePositionRows(table, m, entries, posDeletes, dvDeletes)
+    // the live data files scope the rows and give the writer its
+    // partition lookup, so it plans no second scan
+    val dataTasks = dataTasksOf(entries)
+    val rows = livePositionRows(table, m, dataTasks, posDeletes, dvDeletes)
     val (newFiles, _) = MergeOnRead.writePositionDeleteFiles(table, m, rows,
-      compact = true)
+      affected = Some(dataTasks), compact = true)
     val oldFiles = posDeletes ++ dvDeletes
     table.commitSnapshot(Operation.Replace, newFiles,
       oldFiles.map(_.path).toSet,
@@ -768,8 +775,10 @@ object Maintenance {
     val posDeletes = entries
       .filter(_.dataFile.content == FileContent.PositionDeletes).map(_.dataFile)
     if (posDeletes.isEmpty) return (0, 0)
-    val rows = livePositionRows(table, m, entries, posDeletes, Nil)
-    val (newFiles, _) = DeletionVectors.writeSidecars(table, m, rows, None)
+    val dataTasks = dataTasksOf(entries)
+    val rows = livePositionRows(table, m, dataTasks, posDeletes, Nil)
+    val (newFiles, _) = DeletionVectors.writeSidecars(table, m, rows,
+      Some(dataTasks))
     table.commitSnapshot(Operation.Replace, newFiles,
       posDeletes.map(_.path).toSet,
       Map("converted-position-delete-files" -> posDeletes.size.toString,
@@ -814,9 +823,7 @@ object Maintenance {
     val posPairs = entries
       .filter(e => FileContent.isPositional(e.dataFile.content))
       .map(e => (e.dataFile, e.sequenceNumber))
-    val dataTasks = entries.filter(_.dataFile.content == FileContent.Data)
-      .map(e => FileScanTask(e.dataFile, TrueExpr,
-        e.sequenceNumber))
+    val dataTasks = dataTasksOf(entries)
     val spark = table.spark
     // group data files by WHICH eq deletes reach them — the read path's own
     // applicability classes, so conversion can never disagree with a scan

@@ -192,7 +192,7 @@ object MergeOnRead {
       val lookupRows = affected.getOrElse(table.newScan().planFiles())
         .filter(_.file.specId == spec.specId)
         .map { t =>
-          org.apache.spark.sql.Row.fromSeq(table.normPath(t.file.path) +:
+          org.apache.spark.sql.Row.fromSeq(GraftPaths.norm(t.file.path) +:
             t.file.partition.zip(types).map { case (v, dt) =>
               CatalystTypeConverters.convertToScala(Writes.toCatalyst(v), dt)
             })
@@ -204,9 +204,9 @@ object MergeOnRead {
       val lookup = table.spark.createDataFrame(
         java.util.Arrays.asList(lookupRows: _*), lookupSchema)
       // normalize URI schemes: _metadata.file_path is "file:///p", Hadoop
-      // listings are "file:/p", lookup keys are scheme-less normPath
+      // listings are "file:/p", lookup keys are scheme-less GraftPaths.norm
       val joined = rows.join(broadcast(lookup),
-          normPathCol(rows(PosPathCol)) === lookup("_gp_path"), "left")
+          GraftPaths.normCol(rows(PosPathCol)) === lookup("_gp_path"), "left")
         .drop("_gp_path")
       // compact: hash-exchange on the partition tuple puts every row of one
       // partition in one task → exactly one file per partition dir
@@ -326,10 +326,5 @@ object MergeOnRead {
     val global = d.partition.isEmpty || d.partition.forall(_ == null)
     global || d.specId != t.file.specId || d.partition == t.file.partition
   }
-
-  /** Strip the URI scheme from a path column (Column analogue of
-    * `IceTable.normPath`). */
-  private[table] def normPathCol(c: Column): Column =
-    regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
 }
 

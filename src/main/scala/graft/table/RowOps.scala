@@ -4,6 +4,7 @@ import graft.meta.expr._
 import graft.meta.model._
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Copy-on-write row-level operations as DataFrame programs
@@ -175,9 +176,14 @@ private[table] object RowOps {
 }
 
 /** MERGE INTO as a DataFrame program (ref `RewriteMergeInto.scala:65-174`,
-  * `MergeIntoExec.scala:78`): dynamic file filter → join by key → first-
-  * matching-clause-wins projection → CoW commit. Source columns are exposed
-  * to clause conditions/values as `_s_<name>`.
+  * `MergeIntoExec.scala:78`): dynamic file filter → join → first-matching-
+  * clause-wins projection → copy-on-write rewrite, or merge-on-read
+  * position deletes plus appended rows, in one commit. One executor serves
+  * both ways of describing the join: by `keys` ([[IceTable.merge]], a
+  * USING join) or by an ON condition ([[IceTable.mergeOn]], an expression
+  * join and the only form that takes WHEN NOT MATCHED BY SOURCE). Source
+  * columns are exposed to the ON condition and to clause conditions/values
+  * as `_s_<name>`.
   *
   * {{{
   * table.merge(source, keys = Seq("id"))
@@ -189,36 +195,30 @@ private[table] object RowOps {
   */
 final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
     keys: Seq[String], onCond: Option[Column] = None) {
+  import MergeBuilder._
 
-  private sealed trait Clause { def cond: Option[Column] }
+  private sealed trait Clause { def cond: Option[Column]; def bySource: Boolean }
   private case class UpdateClause(cond: Option[Column], set: Map[String, Column],
       bySource: Boolean = false) extends Clause
   private case class DeleteClause(cond: Option[Column],
       bySource: Boolean = false) extends Clause
-  private case class InsertClause(cond: Option[Column], values: Map[String, Column]) extends Clause
+  private case class InsertClause(cond: Option[Column], values: Map[String, Column])
+      extends Clause { def bySource = false }
 
   private var clauses: Vector[Clause] = Vector.empty
 
-  private def srcCol(n: String): Column = col(MergeBuilder.SourcePrefix + n)
+  private def srcCol(n: String): Column = col(SourcePrefix + n)
 
-  /** The shared tail of the dynamic-file-filter probe: `maxMatchesByFile`
-    * is a two-column frame (file path, max per-target-row source-match
-    * count for that file) — one row per file with ≥1 match. Collects it
-    * (one row per MATCHED file, never per row), enforces the MERGE
-    * cardinality guard, and prunes `allTasks` to the matched files. The
-    * two call sites differ only in how the frame is built: the equi-key
-    * path pre-aggregates source counts per key (a key's count IS every
-    * matching target row's count), the arbitrary-ON path counts per
-    * (_gf_file, _gf_pos) row identity before the per-file max. */
-  private def probeAffectedTasks(allTasks: Seq[FileScanTask],
-      maxMatchesByFile: DataFrame): Seq[FileScanTask] = {
-    val probe = maxMatchesByFile.collect()
-    if (probe.exists(_.getLong(1) > 1))
-      throw new ValidationException(MergeBuilder.CardinalityMsg)
-    val matchedFiles: Set[String] =
-      probe.map(r => table.normPath(r.getString(0))).toSet
-    allTasks.filter(t => matchedFiles.contains(table.normPath(t.file.path)))
-  }
+  /** First-matching-clause-wins CASE over the clauses in declaration order:
+    * a clause fires on a row when its row kind (`kind`) and its own
+    * condition hold, and the first clause to fire yields `value`; a row no
+    * clause fires on yields `otherwise`. Keep, emit, fired, updated and
+    * every column's projection are this one fold. */
+  private def firstMatch(kind: Clause => Column, otherwise: Column)(
+      value: Clause => Column): Column =
+    clauses.foldLeft(when(lit(false), otherwise)) { (acc, c) =>
+      acc.when(c.cond.fold(kind(c))(kind(c) && _), value(c))
+    }.otherwise(otherwise)
 
   def whenMatchedUpdate(set: Map[String, Column], cond: Option[Column] = None): MergeBuilder = {
     clauses :+= UpdateClause(cond, set); this
@@ -251,43 +251,51 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
   }
 
   def execute(): Unit = {
-    if (onCond.nonEmpty) { executeOn(onCond.get); return }
-    require(keys.nonEmpty, "merge requires join keys (use merge(source, keys))")
-    require(!clauses.exists {
-      case UpdateClause(_, _, true) | DeleteClause(_, true) => true
-      case _ => false
-    }, "NOT MATCHED BY SOURCE clauses require mergeOn(source, cond)")
+    val keyed = onCond.isEmpty
+    if (keyed) {
+      require(keys.nonEmpty, "merge requires join keys (use merge(source, keys))")
+      require(!clauses.exists(_.bySource),
+        "NOT MATCHED BY SOURCE clauses require mergeOn(source, cond)")
+    }
     val spark = table.spark
     val m = table.meta
     val schema = m.schema
-    val matchedClauses = clauses.collect { case c: UpdateClause => c; case c: DeleteClause => c }
-    val insertClauses = clauses.collect { case c: InsertClause => c }
-    val insertOnly = matchedClauses.isEmpty
+    val hasInserts = clauses.exists(_.isInstanceOf[InsertClause])
 
-    // source with non-key columns prefixed; key columns present both raw (for
-    // the join) and prefixed (for projections). The source plan runs twice —
-    // file-filter probe, then rewrite join — so materialize it once (ref
-    // RewriteRowLevelOperationHelper buildScanPlan caches the source too);
-    // skipped for insert-only merges, which evaluate the source once.
-    val src0 = source.select(source.columns.map(col) ++
-      source.columns.map(c => col(c).as(MergeBuilder.SourcePrefix + c)): _*)
+    // The join, described once. Keyed: a USING join on the keys. ON: an
+    // expression join; Catalyst still extracts any equi-conjuncts for
+    // hash/sort-merge join planning, and a pure non-equi ON degrades to a
+    // nested-loop join, as in the reference. `joinCols` are the target
+    // columns the join reads (what the probe and the anti-join project).
+    val joinCols: Seq[String] = onCond.fold(keys) { cond =>
+      val refs = org.apache.spark.sql.graft.ColumnBridge.referencedNames(cond)
+      val cols = schema.columnNames.filter(refs.contains(_))
+      require(cols.nonEmpty, s"ON condition references no target column: $cond")
+      cols
+    }
+    def join(l: DataFrame, r: DataFrame, how: String): DataFrame =
+      onCond.fold(l.join(r, keys, how))(l.join(r, _, how))
+    def project(kind: Clause => Column, otherwise: String => Column)(n: String): Column =
+      firstMatch(kind, otherwise(n)) {
+        case UpdateClause(_, set, _) => set.getOrElse(n, col(n))
+        case _: DeleteClause => col(n)
+        case InsertClause(_, values) => values.getOrElse(n, lit(null))
+      }.cast(schema.fieldType(schema.fieldId(n))).as(n)
+
+    // every source column as `_s_<name>`; a keyed merge also keeps its raw
+    // key columns, the USING join's columns (an ON join sees only the
+    // prefixed names, so none can clash with a target column)
+    val srcPlan = source.select((if (keyed) keys.map(col) else Nil) ++
+      source.columns.map(c => col(c).as(SourcePrefix + c)): _*)
 
     // Insert-only MERGE (ref RewriteMergeInto.scala:81,99): LEFT ANTI join of
-    // the source against a key-only target scan — no target files are
-    // rewritten, so this is a pure append of the not-matched source rows.
-    if (insertOnly) {
-      val targetKeys = table.newScan().select(keys: _*).toDF
-      val notMatched = src0.join(targetKeys, keys, "left_anti")
-      val keepCol = insertClauses
-        .foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-          acc.when(c.cond.getOrElse(lit(true)), lit(true))
-        }.otherwise(lit(false))
-      def insProjection(n: String): Column =
-        insertClauses.foldLeft(when(lit(false), lit(null))) { (acc, c) =>
-          acc.when(c.cond.getOrElse(lit(true)), c.values.getOrElse(n, lit(null)))
-        }.cast(schema.fieldType(schema.fieldId(n))).as(n)
-      val rows = notMatched.filter(keepCol)
-        .select(schema.columnNames.map(insProjection): _*)
+    // the source against a join-column-only target scan — no target files
+    // are rewritten, so this is a pure append of the not-matched source rows.
+    if (clauses.forall(_.isInstanceOf[InsertClause])) {
+      val always: Clause => Column = _ => lit(true)
+      val rows = join(srcPlan, table.newScan().select(joinCols: _*).toDF, "left_anti")
+        .filter(firstMatch(always, lit(false))(_ => lit(true)))
+        .select(schema.columnNames.map(project(always, _ => lit(null))): _*)
       val written = Writes.writeDataFiles(spark, table, m, rows)
       if (written.nonEmpty)
         table.commitSnapshot(Operation.Append, written, Set.empty,
@@ -295,44 +303,56 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
       return
     }
 
-    val src = src0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The source plan runs twice — file-filter probe, then rewrite join —
+    // so materialize it once (ref RewriteRowLevelOperationHelper
+    // buildScanPlan caches the source too).
+    val src = srcPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-    val srcKeyed = src.drop(source.columns.filterNot(keys.contains): _*)
-
-    // 1+2. dynamic file filter + cardinality check, folded into ONE key-only
-    // probe job (ref DynamicFileFilterExec + RewriteRowLevelOperationHelper:115):
-    // group probe matches by file; any source key count > 1 on a matched row
-    // means a target row matches more than one source row.
+    // 1+2. dynamic file filter + cardinality check, folded into ONE probe
+    // job (ref DynamicFileFilterExec + RewriteRowLevelOperationHelper:115):
+    // the per-file max of the per-target-row source-match counts. Keyed: a
+    // key's source count IS every matching target row's count, so the
+    // source is pre-aggregated per key. ON: matches are counted per
+    // (_gf_file, _gf_pos) row identity.
     //
     // The probe only pays off when it can EXCLUDE files from the rewrite: on
     // a table with few live files it is a full extra pass for nothing, so
     // below `write.merge.probe.min-files` we rewrite every pruned-in file
-    // and move the cardinality guard into the rewrite join itself (a window
-    // count over the small source side + a codegen'd assert that is free on
-    // clean data). At warehouse scale the file count crosses the threshold
-    // and the probe engages automatically.
+    // and move the cardinality guard into the rewrite join itself (a
+    // codegen'd assert that is free on clean data). At warehouse scale the
+    // file count crosses the threshold and the probe engages automatically.
+    // NOT MATCHED BY SOURCE clauses touch every file, so they skip it too.
     val allTasks = table.newScan().planFiles()
     val probeMinFiles = m.property(TableProperties.MergeProbeMinFiles,
       TableProperties.MergeProbeMinFilesDefault).toInt
-    val skipProbe = allTasks.size <= probeMinFiles
+    val skipProbe = clauses.exists(_.bySource) || allTasks.size <= probeMinFiles
+    val rowId = Seq(col(TableScan.MetaFileCol), col(TableScan.MetaPosCol))
     val affectedTasks = if (skipProbe) allTasks else {
       // _gf_file via withRowPositions, NOT input_file_name(): rows of
       // synthesized-position groups (ORC/Avro under pos deletes) come from
       // an internal-RDD frame where input_file_name() is empty
-      val targetKeys = table.newScan().select(keys: _*).withRowPositions().toDF
-      val srcKeyCounts = srcKeyed.select(keys.map(col): _*)
-        .groupBy(keys.map(col): _*).agg(count(lit(1)).as("_gf_src_cnt"))
-      probeAffectedTasks(allTasks,
-        targetKeys.join(srcKeyCounts, keys, "inner")
-          .groupBy(col(TableScan.MetaFileCol))
-          .agg(max(col("_gf_src_cnt")).as("_gf_max_cnt")))
+      val probeT = table.newScan().select(joinCols: _*).withRowPositions().toDF
+      val rowCounts =
+        if (keyed) join(probeT,
+          src.groupBy(keys.map(col): _*).agg(count(lit(1)).as(MatchCnt)), "inner")
+        else join(probeT, src, "inner").groupBy(rowId: _*)
+          .agg(count(lit(1)).as(MatchCnt))
+      // collected: one row per MATCHED file (path, max count), never per row
+      val probe = rowCounts.groupBy(col(TableScan.MetaFileCol))
+        .agg(max(col(MatchCnt))).collect()
+      if (probe.exists(_.getLong(1) > 1))
+        throw new ValidationException(CardinalityMsg)
+      val matchedFiles = probe.map(r => GraftPaths.norm(r.getString(0))).toSet
+      allTasks.filter(t => matchedFiles.contains(GraftPaths.norm(t.file.path)))
     }
+    if (affectedTasks.isEmpty && !hasInserts) return
 
     // merge-on-read mode suppresses changed target rows with position
     // deletes and appends only updated/inserted rows (O(changed rows));
     // copy-on-write (default) rewrites the affected files. Positions come
     // from the parquet row-index column or, for ORC/Avro files, synthesized
-    // whole-file row ordinals — every format supports merge-on-read.
+    // whole-file row ordinals — deterministic across task retries, so every
+    // format supports merge-on-read and the row-identity guard below.
     val mor = m.property(TableProperties.MergeMode,
       TableProperties.RowLevelCopyOnWrite) == TableProperties.RowLevelMergeOnRead
 
@@ -343,417 +363,103 @@ final class MergeBuilder private[table] (table: IceTable, source: DataFrame,
     val affected = Reads.readTasksWithDeletes(table, m,
       affectedTasks.map(_.copy(residual = TrueExpr)),
       table.newScan().planDeletes(), schema.columnNames, TrueExpr,
-      rowPositions = mor, withLineage = preserve)
-    val t = affected.withColumn(MergeBuilder.FromTarget, lit(true))
-    val s0 = srcKeyed.withColumn(MergeBuilder.FromSource, lit(true))
-    val s = if (!skipProbe) s0 else s0.withColumn("_gf_src_cnt",
-      count(lit(1)).over(org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*)))
+      rowPositions = mor || (skipProbe && !keyed), withLineage = preserve)
+    val t = affected.withColumn(FromTarget, lit(true))
+    // With the probe skipped, the cardinality guard rides in the join as a
+    // per-target-row match count. Keyed: a window count over the keys on
+    // the small source side, so a copy-on-write merge reads no _pos. ON: a
+    // window over the row identity on the left branch only, so insert rows
+    // don't funnel into one null-identity window partition.
+    val s0 = src.withColumn(FromSource, lit(true))
+    val s = if (!(keyed && skipProbe)) s0 else s0.withColumn(MatchCnt,
+      count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
     // Spark never broadcast-hashes a FULL OUTER join; LEFT (matched +
     // unmatched target) ∪ LEFT ANTI (source-only) is equivalent under the
     // cardinality guarantee and lets AQE broadcast a small source side.
     // Without insert clauses the source-only branch is dead — skip its join.
-    val leftPart = t.join(s, keys, "left")
+    val left0 = join(t, s, "left")
+    val leftPart = if (keyed || !skipProbe) left0 else left0.withColumn(MatchCnt,
+      count(when(col(FromSource).isNotNull, lit(1))).over(Window.partitionBy(rowId: _*)))
     val joined =
-      if (insertClauses.isEmpty) leftPart
+      if (!hasInserts) leftPart
       else leftPart.unionByName(
-        s.join(t.select(keys.map(col): _*), keys, "left_anti"),
+        join(s, affected.select(joinCols.map(col): _*), "left_anti"),
         allowMissingColumns = true)
-    val matched = col(MergeBuilder.FromTarget).isNotNull && col(MergeBuilder.FromSource).isNotNull
-    val sourceOnly = col(MergeBuilder.FromTarget).isNull && col(MergeBuilder.FromSource).isNotNull
 
-    // 4. first-matching-clause-wins dispatch: keep? and per-column projection
-    def clauseCond(c: Clause, base: Column): Column =
-      c.cond.map(base && _).getOrElse(base)
-    val keepCol = {
-      val mk = matchedClauses.foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-        c match {
-          case DeleteClause(_, _) => acc.when(clauseCond(c, matched), lit(false))
-          case _: UpdateClause => acc.when(clauseCond(c, matched), lit(true))
-          case _ => acc
-        }
-      }
-      val withInsert = insertClauses.foldLeft(mk) { (acc, c) =>
-        acc.when(clauseCond(c, sourceOnly), lit(true))
-      }
-      // unmatched target rows pass through; unmatched-by-clause source rows drop
-      withInsert.otherwise(col(MergeBuilder.FromTarget).isNotNull)
+    // 4. first-matching-clause-wins dispatch
+    val matched = col(FromTarget).isNotNull && col(FromSource).isNotNull
+    val kind: Clause => Column = {
+      case _: InsertClause => col(FromTarget).isNull && col(FromSource).isNotNull
+      case c if c.bySource => col(FromTarget).isNotNull && col(FromSource).isNull
+      case _ => matched
     }
-    def colProjection(n: String): Column = {
-      val base = matchedClauses.foldLeft(when(lit(false), lit(null))) { (acc, c) =>
-        c match {
-          case UpdateClause(_, set, _) =>
-            acc.when(clauseCond(c, matched), set.getOrElse(n, col(n)))
-          case DeleteClause(_, _) => acc.when(clauseCond(c, matched), col(n))
-          case _ => acc
-        }
-      }
-      val withInsert = insertClauses.foldLeft(base) { (acc, c) =>
-        acc.when(clauseCond(c, sourceOnly),
-          c.asInstanceOf[InsertClause].values.getOrElse(n, lit(null)))
-      }
-      withInsert.otherwise(col(n))
-        .cast(schema.fieldType(schema.fieldId(n))).as(n)
-    }
-    // merge-on-read: changed target rows (any fired matched clause) become
-    // position-delete entries; emitted rows are updated copies + inserts;
-    // pass-through rows stay in place untouched. ONE snapshot commits
-    // delete files + appended data files — no target file is rewritten.
-    if (mor) {
-      val firedRaw = matchedClauses.foldLeft(when(lit(false), lit(false))) {
-        (acc, c) => acc.when(clauseCond(c, matched), lit(true))
-      }.otherwise(lit(false))
-      // probe-skipped cardinality guard rides the fired VALUE (computed for
-      // every row of the cached plan, same rationale as keepGuarded below)
-      val fired = if (!skipProbe) firedRaw else
-        when(matched && col("_gf_src_cnt") > 1,
-          raise_error(lit(MergeBuilder.CardinalityMsg)).cast("boolean"))
-          .otherwise(firedRaw)
-      val emitCol = {
-        val mk = matchedClauses.foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-          c match {
-            case _: UpdateClause => acc.when(clauseCond(c, matched), lit(true))
-            case DeleteClause(_, _) => acc.when(clauseCond(c, matched), lit(false))
-            case _ => acc
-          }
-        }
-        insertClauses.foldLeft(mk) { (acc, c) =>
-          acc.when(clauseCond(c, sourceOnly), lit(true))
-        }.otherwise(lit(false))
-      }
-      val marked = joined.withColumn("_gf_fired", fired)
-        .withColumn(MergeBuilder.Keep, emitCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (posFiles, refPaths) = MergeOnRead.writePositionDeleteFiles(table, m,
-          marked
-          .filter(col("_gf_fired") && col(MergeBuilder.FromTarget).isNotNull)
-          .select(col(TableScan.MetaFileCol).as(MergeOnRead.PosPathCol),
-            col(TableScan.MetaPosCol).as(MergeOnRead.PosPosCol)),
-          affected = Some(affectedTasks))
-        // emitted rows are all updated-or-inserted NOW: preserved id
-        // (null for inserts), null materialized seq (inherit this commit)
-        val dataFiles = Writes.writeDataFiles(spark, table, m, marked
-          .filter(col(MergeBuilder.Keep))
-          .select((schema.columnNames.map(colProjection) ++ (if (!preserve) Nil
-            else Seq(col("_gf_row_id"),
-              lit(null).cast("long").as("_gf_last_seq")))): _*),
-          lineageCols = preserve)
-        if (posFiles.nonEmpty || dataFiles.nonEmpty)
-          table.commitSnapshot(Operation.Overwrite, posFiles ++ dataFiles,
-            Set.empty,
-            Map("merge-matched-files" -> affectedTasks.size.toString,
-              "position-delete-files" -> posFiles.size.toString),
-            validate = Some(ConflictValidation(m.currentSnapshotId, TrueExpr,
-              m.property(TableProperties.MergeIsolationLevel,
-                TableProperties.IsolationSerializable),
-              // concurrent rewrites of referenced files would orphan the
-              // position deletes; only the referenced files must stay live
-              requiredLivePaths = refPaths)))
-      } catch {
-        case e: Throwable if MergeBuilder.isCardinalityError(e) =>
-          throw new ValidationException(MergeBuilder.CardinalityMsg)
-      } finally marked.unpersist()
-      return
-    }
+    // With the probe skipped, a matched row with more than one source match
+    // raises during the write job, before anything commits. The guard is
+    // the CASE branch of the guarded VALUE itself (not an AND conjunct,
+    // which Catalyst may split off and short-circuit past for rows whose
+    // value is already false, e.g. WHEN MATCHED DELETE)
+    def guarded(v: Column): Column = if (!skipProbe) v else
+      when(matched && col(MatchCnt) > 1,
+        raise_error(lit(CardinalityMsg)).cast("boolean")).otherwise(v)
+    // emitted rows: updated target rows and inserts; `otherwise` decides
+    // the rows no clause fires on (kept by copy-on-write, not re-emitted
+    // by merge-on-read)
+    def emit(otherwise: Column): Column =
+      firstMatch(kind, otherwise) { case _: DeleteClause => lit(false); case _ => lit(true) }
+    // updated rows' materialized seq resets to null, so the implicit
+    // fallback reports THIS commit
+    val updated =
+      firstMatch(kind, lit(false)) { case _: UpdateClause => lit(true); case _ => lit(false) }
+    def write(marked: DataFrame): Seq[DataFileMeta] =
+      Writes.writeDataFiles(spark, table, m, marked.filter(col(Keep))
+        .select((schema.columnNames.map(project(kind, col)) ++ (if (!preserve) Nil
+          else Seq(col("_gf_row_id"),
+            when(updated, lit(null)).otherwise(col("_gf_last_seq"))
+              .cast("long").as("_gf_last_seq")))): _*),
+        lineageCols = preserve)
 
-    // with the probe skipped, the cardinality guard rides in the keep
-    // predicate: a matched row whose source key count exceeds 1 raises
-    // during the rewrite job, before anything commits. The guard is the
-    // CASE branch of the keep VALUE itself (not an AND conjunct, which
-    // Catalyst may split off and short-circuit past for rows whose keepCol
-    // is already false, e.g. WHEN MATCHED DELETE)
-    val keepGuarded = if (!skipProbe) keepCol else
-      when(matched && col("_gf_src_cnt") > 1,
-        raise_error(lit(MergeBuilder.CardinalityMsg)).cast("boolean"))
-        .otherwise(keepCol)
-    // which rows were UPDATED (fired update clause) — their materialized
-    // seq resets to null so the implicit fallback reports THIS commit
-    val updatedCol = matchedClauses.foldLeft(when(lit(false), lit(false))) {
-      (acc, c) => c match {
-        case _: UpdateClause => acc.when(clauseCond(c, matched), lit(true))
-        case _ => acc
-      }
-    }.otherwise(lit(false))
-    val result = joined
-      .withColumn(MergeBuilder.Keep, keepGuarded)
-      .filter(col(MergeBuilder.Keep))
-      .select((schema.columnNames.map(colProjection) ++ (if (!preserve) Nil
-        else Seq(col("_gf_row_id"),
-          when(updatedCol, lit(null)).otherwise(col("_gf_last_seq"))
-            .cast("long").as("_gf_last_seq")))): _*)
-
-    // 5. write + atomic swap of the affected files
-    val written = try {
-      Writes.writeDataFiles(spark, table, m, result, lineageCols = preserve)
+    // 5. write, then ONE commit. Merge-on-read: target rows a matched or
+    // by-source clause fired on become position-delete entries, emitted
+    // rows are appended, pass-through rows stay in place untouched — no
+    // target file is rewritten. Copy-on-write: the affected files are
+    // swapped for their rewritten rows.
+    val (added, removed, extraSummary, refPaths) = try {
+      if (mor) {
+        // the probe-skipped guard rides the fired value, computed for every
+        // row of the cached plan
+        val fired = firstMatch(kind, lit(false)) {
+          case _: InsertClause => lit(false); case _ => lit(true)
+        }
+        val marked = joined.withColumn(Fired, guarded(fired))
+          .withColumn(Keep, emit(lit(false)))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val (posFiles, refs) = MergeOnRead.writePositionDeleteFiles(table, m,
+            marked
+            .filter(col(Fired) && col(FromTarget).isNotNull)
+            .select(col(TableScan.MetaFileCol).as(MergeOnRead.PosPathCol),
+              col(TableScan.MetaPosCol).as(MergeOnRead.PosPosCol)),
+            affected = Some(affectedTasks))
+          (posFiles ++ write(marked), Nil,
+            Map("position-delete-files" -> posFiles.size.toString), refs)
+        } finally marked.unpersist()
+      } else (write(joined.withColumn(Keep, guarded(emit(col(FromTarget).isNotNull)))),
+        affectedTasks.map(_.file), Map.empty[String, String], Set.empty[String])
     } catch {
-      case e: Throwable if MergeBuilder.isCardinalityError(e) =>
-        throw new ValidationException(MergeBuilder.CardinalityMsg)
+      case e: Throwable if isCardinalityError(e) =>
+        throw new ValidationException(CardinalityMsg)
     }
-    table.commitSnapshot(Operation.Overwrite, written,
-      affectedTasks.map(_.file.path).toSet,
-      Map("merge-matched-files" -> affectedTasks.size.toString),
-      validate = Some(ConflictValidation(m.currentSnapshotId, TrueExpr,
-        m.property(TableProperties.MergeIsolationLevel,
-          TableProperties.IsolationSerializable))),
-      removedMeta = affectedTasks.map(_.file))
+    if (added.nonEmpty || removed.nonEmpty)
+      table.commitSnapshot(Operation.Overwrite, added, removed.map(_.path).toSet,
+        Map("merge-matched-files" -> affectedTasks.size.toString) ++ extraSummary,
+        validate = Some(ConflictValidation(m.currentSnapshotId, TrueExpr,
+          m.property(TableProperties.MergeIsolationLevel,
+            TableProperties.IsolationSerializable),
+          // merge-on-read: a concurrent rewrite of a referenced file would
+          // orphan the position deletes; only those files must stay live
+          requiredLivePaths = refPaths)),
+        removedMeta = removed)
     } finally src.unpersist(false)
-  }
-
-  /** General-ON-condition MERGE (ref `RewriteMergeInto.scala:162` supports
-    * full expressions): `cond` references target columns by name and source
-    * columns as `_s_<name>`. Catalyst still extracts any equi-conjuncts for
-    * hash/sort-merge join planning, so an equality-shaped ON plans like the
-    * key path; a pure non-equi ON degrades to a nested-loop join, same as
-    * the reference. */
-  private def executeOn(cond: Column): Unit = {
-    val spark = table.spark
-    val m = table.meta
-    val schema = m.schema
-    val matchedClauses = clauses.collect {
-      case c @ UpdateClause(_, _, false) => c
-      case c @ DeleteClause(_, false) => c
-    }
-    val bySourceClauses = clauses.collect {
-      case c @ UpdateClause(_, _, true) => c
-      case c @ DeleteClause(_, true) => c
-    }
-    val insertClauses = clauses.collect { case c: InsertClause => c }
-
-    // target columns the ON condition reads (probe scan projection)
-    val condTargetCols = {
-      val refs = org.apache.spark.sql.graft.ColumnBridge.expression(cond).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.length == 1 => a.nameParts.head
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference => a.name
-      }
-      schema.columnNames.filter(refs.contains(_))
-    }
-    require(condTargetCols.nonEmpty, s"ON condition references no target column: $cond")
-
-    // source with every column _s_-prefixed (raw names dropped — the join is
-    // an expression join, so only the prefixed names may be visible)
-    val srcPlan = source.select(
-      source.columns.map(c => col(c).as(MergeBuilder.SourcePrefix + c)): _*)
-
-    // Insert-only: LEFT ANTI of the source against the cond-column target scan
-    if (matchedClauses.isEmpty && bySourceClauses.isEmpty) {
-      val targetKeys = table.newScan().select(condTargetCols: _*).toDF
-      val notMatched = srcPlan.join(targetKeys, cond, "left_anti")
-      val keepCol = insertClauses
-        .foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-          acc.when(c.cond.getOrElse(lit(true)), lit(true))
-        }.otherwise(lit(false))
-      def insProjection(n: String): Column =
-        insertClauses.foldLeft(when(lit(false), lit(null))) { (acc, c) =>
-          acc.when(c.cond.getOrElse(lit(true)), c.values.getOrElse(n, lit(null)))
-        }.cast(schema.fieldType(schema.fieldId(n))).as(n)
-      val rows = notMatched.filter(keepCol)
-        .select(schema.columnNames.map(insProjection): _*)
-      val written = Writes.writeDataFiles(spark, table, m, rows)
-      if (written.nonEmpty)
-        table.commitSnapshot(Operation.Append, written, Set.empty,
-          Map("merge-insert-only" -> "true"))
-      return
-    }
-
-    // source runs twice (probe + rewrite join) — materialize once, see execute()
-    val src0 = srcPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // probe: per-target-row source-match counts, keyed by (_gf_file, _gf_pos)
-    // — one job yields the affected-file set AND the cardinality guard. The
-    // probe is SKIPPED (like execute()) when it cannot pay off: few files,
-    // or NOT MATCHED BY SOURCE present (every file is affected anyway). The
-    // cardinality guard then rides in the rewrite join as a window count
-    // over the row identity.
-    val allTasks = table.newScan().planFiles()
-    val probeMinFiles = m.property(TableProperties.MergeProbeMinFiles,
-      TableProperties.MergeProbeMinFilesDefault).toInt
-    val skipProbe = bySourceClauses.nonEmpty ||
-      allTasks.size <= probeMinFiles
-    val affectedTasks = if (skipProbe) allTasks else {
-      val probeT = table.newScan().select(condTargetCols: _*).withRowPositions().toDF
-      probeAffectedTasks(allTasks,
-        probeT.join(src0, cond, "inner")
-          .groupBy(col(TableScan.MetaFileCol), col(TableScan.MetaPosCol))
-          .agg(count(lit(1)).as("_gf_cnt"))
-          .groupBy(col(TableScan.MetaFileCol))
-          .agg(max(col("_gf_cnt")).as("_gf_max")))
-    }
-    if (affectedTasks.isEmpty && insertClauses.isEmpty) return
-
-    val mor = m.property(TableProperties.MergeMode,
-      TableProperties.RowLevelCopyOnWrite) == TableProperties.RowLevelMergeOnRead
-    // the in-join cardinality guard and merge-on-read both key rows by the
-    // (_gf_file, _gf_pos) identity — DETERMINISTIC across task retries for
-    // every format (parquet reads the row-index column; ORC/Avro positions
-    // are synthesized whole-file ordinals, stable per file)
-    val preserve = Writes.lineagePreserve(m)
-    val affected = Reads.readTasksWithDeletes(table, m,
-      affectedTasks.map(_.copy(residual = TrueExpr)),
-      table.newScan().planDeletes(), schema.columnNames, TrueExpr,
-      rowPositions = mor || skipProbe, withLineage = preserve)
-    val t = affected.withColumn(MergeBuilder.FromTarget, lit(true))
-    val ridCols: Seq[Column] =
-      Seq(col(TableScan.MetaFileCol), col(TableScan.MetaPosCol))
-    val s = src0.withColumn(MergeBuilder.FromSource, lit(true))
-    // LEFT ∪ LEFT ANTI instead of FULL OUTER — see execute(): broadcastable
-    val leftPart0 = t.join(s, cond, "left")
-    // per-target-row match count (window over the row identity) for the
-    // in-join cardinality guard; computed on the left branch only so
-    // insert rows don't funnel into one null-id window partition
-    val leftPart = if (!skipProbe) leftPart0
-      else leftPart0.withColumn("_gf_card_cnt",
-        count(when(col(MergeBuilder.FromSource).isNotNull, lit(1)))
-          .over(org.apache.spark.sql.expressions.Window.partitionBy(ridCols: _*)))
-    val joined =
-      if (insertClauses.isEmpty) leftPart
-      else leftPart.unionByName(
-        s.join(affected.select(condTargetCols.map(col): _*), cond, "left_anti"),
-        allowMissingColumns = true)
-    val matched = col(MergeBuilder.FromTarget).isNotNull && col(MergeBuilder.FromSource).isNotNull
-    val sourceOnly = col(MergeBuilder.FromTarget).isNull && col(MergeBuilder.FromSource).isNotNull
-    val targetOnly = col(MergeBuilder.FromTarget).isNotNull && col(MergeBuilder.FromSource).isNull
-
-    def clauseCond(c: Clause, base: Column): Column =
-      c.cond.map(base && _).getOrElse(base)
-    val keepCol = {
-      val mk = (matchedClauses ++ bySourceClauses).foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-        c match {
-          case DeleteClause(_, by) =>
-            acc.when(clauseCond(c, if (by) targetOnly else matched), lit(false))
-          case UpdateClause(_, _, by) =>
-            acc.when(clauseCond(c, if (by) targetOnly else matched), lit(true))
-          case _ => acc
-        }
-      }
-      val withInsert = insertClauses.foldLeft(mk) { (acc, c) =>
-        acc.when(clauseCond(c, sourceOnly), lit(true))
-      }
-      withInsert.otherwise(col(MergeBuilder.FromTarget).isNotNull)
-    }
-    def colProjection(n: String): Column = {
-      val base = (matchedClauses ++ bySourceClauses).foldLeft(when(lit(false), lit(null))) { (acc, c) =>
-        c match {
-          case UpdateClause(_, set, by) =>
-            acc.when(clauseCond(c, if (by) targetOnly else matched), set.getOrElse(n, col(n)))
-          case DeleteClause(_, by) =>
-            acc.when(clauseCond(c, if (by) targetOnly else matched), col(n))
-          case _ => acc
-        }
-      }
-      val withInsert = insertClauses.foldLeft(base) { (acc, c) =>
-        acc.when(clauseCond(c, sourceOnly),
-          c.asInstanceOf[InsertClause].values.getOrElse(n, lit(null)))
-      }
-      withInsert.otherwise(col(n))
-        .cast(schema.fieldType(schema.fieldId(n))).as(n)
-    }
-    // merge-on-read: fired target rows (any matched / by-source clause)
-    // become position-delete entries; emitted rows are updated copies +
-    // inserts; pass-through rows stay untouched. See execute() for the
-    // equi-key variant of the same shape.
-    if (mor) {
-      val firedRaw = (matchedClauses ++ bySourceClauses)
-        .foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-          val base = c match {
-            case DeleteClause(_, by) => if (by) targetOnly else matched
-            case UpdateClause(_, _, by) => if (by) targetOnly else matched
-            case _ => matched
-          }
-          acc.when(clauseCond(c, base), lit(true))
-        }.otherwise(lit(false))
-      val fired = if (!skipProbe) firedRaw else
-        when(col("_gf_card_cnt") > 1,
-          raise_error(lit(MergeBuilder.CardinalityMsg)).cast("boolean"))
-          .otherwise(firedRaw)
-      val emitCol = {
-        val mk = (matchedClauses ++ bySourceClauses)
-          .foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-            c match {
-              case UpdateClause(_, _, by) =>
-                acc.when(clauseCond(c, if (by) targetOnly else matched), lit(true))
-              case DeleteClause(_, by) =>
-                acc.when(clauseCond(c, if (by) targetOnly else matched), lit(false))
-              case _ => acc
-            }
-          }
-        insertClauses.foldLeft(mk) { (acc, c) =>
-          acc.when(clauseCond(c, sourceOnly), lit(true))
-        }.otherwise(lit(false))
-      }
-      val marked = joined.withColumn("_gf_fired", fired)
-        .withColumn(MergeBuilder.Keep, emitCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (posFiles, refPaths) = MergeOnRead.writePositionDeleteFiles(table, m,
-          marked
-          .filter(col("_gf_fired") && col(MergeBuilder.FromTarget).isNotNull)
-          .select(col(TableScan.MetaFileCol).as(MergeOnRead.PosPathCol),
-            col(TableScan.MetaPosCol).as(MergeOnRead.PosPosCol)),
-          affected = Some(affectedTasks))
-        val dataFiles = Writes.writeDataFiles(spark, table, m, marked
-          .filter(col(MergeBuilder.Keep))
-          .select((schema.columnNames.map(colProjection) ++ (if (!preserve) Nil
-            else Seq(col("_gf_row_id"),
-              lit(null).cast("long").as("_gf_last_seq")))): _*),
-          lineageCols = preserve)
-        if (posFiles.nonEmpty || dataFiles.nonEmpty)
-          table.commitSnapshot(Operation.Overwrite, posFiles ++ dataFiles,
-            Set.empty,
-            Map("merge-matched-files" -> affectedTasks.size.toString,
-              "position-delete-files" -> posFiles.size.toString),
-            validate = Some(ConflictValidation(m.currentSnapshotId, TrueExpr,
-              m.property(TableProperties.MergeIsolationLevel,
-                TableProperties.IsolationSerializable),
-              // concurrent rewrites of referenced files would orphan the
-              // position deletes; only the referenced files must stay live
-              requiredLivePaths = refPaths)))
-      } catch {
-        case e: Throwable if MergeBuilder.isCardinalityError(e) =>
-          throw new ValidationException(MergeBuilder.CardinalityMsg)
-      } finally marked.unpersist()
-      return
-    }
-
-    // guard as the CASE branch of the keep value — see execute()
-    val keepGuarded = if (!skipProbe) keepCol else
-      when(col("_gf_card_cnt") > 1,
-        raise_error(lit(MergeBuilder.CardinalityMsg)).cast("boolean"))
-        .otherwise(keepCol)
-    // seq resets for rows a fired UPDATE (matched or by-source) changed
-    val updatedCol = (matchedClauses ++ bySourceClauses)
-      .foldLeft(when(lit(false), lit(false))) { (acc, c) =>
-        c match {
-          case UpdateClause(_, _, by) =>
-            acc.when(clauseCond(c, if (by) targetOnly else matched), lit(true))
-          case _ => acc
-        }
-      }.otherwise(lit(false))
-    val result = joined
-      .withColumn(MergeBuilder.Keep, keepGuarded)
-      .filter(col(MergeBuilder.Keep))
-      .select((schema.columnNames.map(colProjection) ++ (if (!preserve) Nil
-        else Seq(col("_gf_row_id"),
-          when(updatedCol, lit(null)).otherwise(col("_gf_last_seq"))
-            .cast("long").as("_gf_last_seq")))): _*)
-
-    val written = try {
-      Writes.writeDataFiles(spark, table, m, result, lineageCols = preserve)
-    } catch {
-      case e: Throwable if MergeBuilder.isCardinalityError(e) =>
-        throw new ValidationException(MergeBuilder.CardinalityMsg)
-    }
-    table.commitSnapshot(Operation.Overwrite, written,
-      affectedTasks.map(_.file.path).toSet,
-      Map("merge-matched-files" -> affectedTasks.size.toString),
-      validate = Some(ConflictValidation(m.currentSnapshotId, TrueExpr,
-        m.property(TableProperties.MergeIsolationLevel,
-          TableProperties.IsolationSerializable))),
-      removedMeta = affectedTasks.map(_.file))
-    } finally {
-      src0.unpersist(false)
-    }
   }
 }
 
@@ -762,6 +468,8 @@ object MergeBuilder {
   private val FromTarget = "_gf_from_target"
   private val FromSource = "_gf_from_source"
   private val Keep = "_gf_keep"
+  private val Fired = "_gf_fired"
+  private val MatchCnt = "_gf_match_cnt"
   private[table] val CardinalityMsg =
     "MERGE cardinality violation: a target row matches more than one source row"
 

@@ -167,8 +167,8 @@ object TableImport {
   }
 
   private def relPath(base: String, full: String): String = {
-    val b = new org.apache.hadoop.fs.Path(base).toUri.getPath
-    val f = new org.apache.hadoop.fs.Path(full).toUri.getPath
+    val b = GraftPaths.norm(base)
+    val f = GraftPaths.norm(full)
     f.stripPrefix(b).stripPrefix("/")
   }
 }

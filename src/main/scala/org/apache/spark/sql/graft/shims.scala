@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeExpression, ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge into Spark's `private[sql]` Column <-> catalyst Expression
   * converters (Spark 4 moved these behind the classic facade). Living in the
@@ -12,6 +12,18 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** The single-part column names `c` reads. A DataFrame-API column
+    * (`col("k")`) stays an unconverted `ColumnNodeExpression` until
+    * analysis; those nodes are converted here so their attributes show. */
+  def referencedNames(c: Column): Seq[String] =
+    expression(c).transform {
+      case ColumnNodeExpression(node) => ColumnNodeToExpressionConverter(node)
+    }.collect {
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+          if a.nameParts.length == 1 => a.nameParts.head
+      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference => a.name
+    }
 
   /** Parse a SQL boolean/scalar expression into a catalyst tree (Spark 4's
     * `functions.expr` defers parsing into a lazy SqlExpression node). */

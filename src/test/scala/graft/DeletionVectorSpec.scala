@@ -208,7 +208,7 @@ class DeletionVectorSpec extends AnyFunSuite {
     // the sidecar bytes on disk are ciphertext (GAC1 magic, no GDV1 magic)
     val raw = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(new java.net.URI(
-        "file://" + graft.spark.GraftDeleteApply.normPath(dvs.head.path))))
+        "file://" + graft.table.GraftPaths.norm(dvs.head.path))))
     assert(graft.table.AesGcmEncryptionManager.isEncrypted(raw),
       "DV sidecar written plaintext on an encrypted table")
     assert(t.toDF.count() === 297)

@@ -12,12 +12,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Model-based DML fuzz: a deterministic random sequence of appends,
-  * deletes/updates in BOTH row-level modes, keyed merges, compactions, and
-  * maintenance runs against one table per file format, checked after every
-  * op against an in-memory model of the expected rows. This is the
-  * interleaving torture test for the merge-on-read machinery — parquet's
-  * row-index positions and ORC/Avro's synthesized ordinals must survive any
-  * op order, including deletes stacked on deletes and compaction mid-stream.
+  * deletes/updates in BOTH row-level modes, keyed and ON-condition merges,
+  * compactions, and maintenance runs against one table per file format,
+  * checked after every op against an in-memory model of the expected rows.
+  * This is the interleaving torture test for the merge-on-read machinery —
+  * parquet's row-index positions and ORC/Avro's synthesized ordinals must
+  * survive any op order, including deletes stacked on deletes and
+  * compaction mid-stream.
   */
 class DmlFuzzSpec extends AnyFunSuite {
   import SparkSessionHelper._
@@ -88,7 +89,7 @@ class DmlFuzzSpec extends AnyFunSuite {
     }
 
     (1 to ops).foreach { i =>
-      rng.nextInt(12) match {
+      rng.nextInt(14) match {
         case 0 | 1 | 2 => // append
           val rows = freshRows(rng.nextInt(40) + 10)
           t.append(df(rows))
@@ -108,7 +109,9 @@ class DmlFuzzSpec extends AnyFunSuite {
           (a to b).foreach(k => model.get(k).foreach { case (v, q) =>
             model(k) = (v, q + 1.0) })
           check(s"update[$a,$b]#$i")
-        case 7 => // keyed merge upsert: half existing keys touched, half new
+        case 7 | 12 | 13 => // merge upsert: half existing keys touched, half
+          // new; the join is given by key or as the equivalent ON condition,
+          // each in a random row-level mode
           setMode(TableProperties.MergeMode)
           val (a, b) = keyRange()
           val upd = (a to b).filter(model.contains)
@@ -116,8 +119,10 @@ class DmlFuzzSpec extends AnyFunSuite {
           val ins = freshRows(rng.nextInt(10) + 1)
           val src = upd ++ ins
           if (src.nonEmpty) {
-            t.merge(df(src), Seq("k"))
-              .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+            val merge =
+              if (rng.nextBoolean()) t.merge(df(src), Seq("k"))
+              else t.mergeOn(df(src), col("k") === col("_s_k"))
+            merge.whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
             src.foreach { case (k, v, q) => model(k) = (v, q) }
           }
           check(s"merge#$i")

@@ -424,6 +424,13 @@ class TableSpec extends AnyFunSuite {
     intercept[ValidationException] {
       t.merge(dup, Seq("o_orderkey")).whenMatchedUpdateAll().execute()
     }
+    // a source that matches no target row, and no insert clause: the probe
+    // finds no affected file, so nothing is written or committed
+    val before = t.currentSnapshot.get.snapshotId
+    val noMatch = src.withColumn("o_orderkey", col("o_orderkey") + 1000000000L)
+    t.merge(noMatch, Seq("o_orderkey")).whenMatchedUpdateAll().execute()
+    assert(t.currentSnapshot.get.snapshotId === before)
+    assert(t.toDF.count() === orders.count())
   }
 
   test("unknown transform: table still loads and scans, writes fail") {

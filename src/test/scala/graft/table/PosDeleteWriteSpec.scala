@@ -40,7 +40,7 @@ class PosDeleteWriteSpec extends AnyFunSuite {
     val (files, refs) = MergeOnRead.writePositionDeleteFiles(t, t.meta,
       posDf(fileA -> 0L, fileA -> 3L))
     assert(files.nonEmpty)
-    assert(refs.map(t.normPath) === Set(t.normPath(fileA)))
+    assert(refs.map(GraftPaths.norm) === Set(GraftPaths.norm(fileA)))
     // a concurrent rewrite removes the UNreferenced file between plan and
     // commit: with requiredLivePaths scoped to the referenced set the commit
     // lands; the planned-set superset (the old behavior) would abort

@@ -48,10 +48,10 @@ class SnapshotProducerSpec extends AnyFunSuite {
   private def unreferenced(t: IceTable): Set[String] = {
     val m = t.meta
     val referenced = m.snapshots.flatMap(s =>
-      s.manifestList +: t.readManifestList(m, s).map(_.path)).map(t.normPath).toSet
+      s.manifestList +: t.readManifestList(m, s).map(_.path)).map(GraftPaths.norm).toSet
     t.io.list(s"${t.location}/metadata").map(_.getPath)
       .filter(p => p.getName.startsWith("manifest-") || p.getName.startsWith("snap-"))
-      .map(p => t.normPath(p.toString)).toSet -- referenced
+      .map(p => GraftPaths.norm(p.toString)).toSet -- referenced
   }
 
   private def keys(t: IceTable): Set[Long] = t.toDF.select("k").as[Long].collect().toSet
