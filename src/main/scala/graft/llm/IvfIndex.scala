@@ -123,10 +123,10 @@ final class IvfIndex private (val table: IceTable,
     val inValues: Array[Any] =
       if (idIsLong) ids.map(Long.box).toArray[Any]
       else ids.map(i => Int.box(i.toInt)).toArray[Any]
-    val reader = org.apache.spark.sql.graft.ColumnBridge.fileReader(
+    val reader = graft.spark.GraftReadPlanner.ReaderMemo(
       spark, "parquet", struct, readSchema,
       Seq(org.apache.spark.sql.sources.In(idCol, inValues)),
-      vectorized = false)._1
+      vectorized = false, Map.empty)._1
     val want = ids.toSet
     val vecType = readSchema(1).dataType
       .asInstanceOf[org.apache.spark.sql.types.ArrayType].elementType

@@ -837,39 +837,97 @@ object GraftReadPlanner {
 
   final case class Planned(partitions: Array[GraftInputPartition], columnar: Boolean)
 
-  /** Readers built by [[ReaderMemo]]s — lets tests pin how many readers a
-    * scan builds. */
+  /** Readers [[ReaderMemo]] built, and lookups it answered with a reader
+    * already built — lets tests pin how many readers a read builds. */
   private[graft] val readerBuilds = new java.util.concurrent.atomic.AtomicLong()
+  private[graft] val readerReuses = new java.util.concurrent.atomic.AtomicLong()
 
   type FileReader = PartitionedFile => Iterator[InternalRow]
 
-  /** One reader per distinct (format, write schema, required schema,
-    * filters, vectorized, options): `ColumnBridge.fileReader` may clone the
-    * session and broadcasts a Hadoop conf on every call, 10–14 ms a build.
-    * Groups differ mostly by partition tuple (key-grouped scans split per
-    * partition, so a 200k-file table is thousands of groups) and a
-    * merge-on-read scan plans once per applicability class; one memo per
-    * scan makes that one build per schema era and delete-key family. */
-  final class ReaderMemo {
-    private val built = scala.collection.mutable.HashMap.empty[
-      (String, StructType, StructType, Seq[Filter], Boolean, Map[String, String]),
-      (FileReader, Boolean)]
+  /** The JVM's one reader memo: every `FileFormat` reader graft opens files
+    * with is built here. A build (`ColumnBridge.fileReader`) takes 7–10 ms
+    * on a 4-core VM (median 7.2 ms vectorized, 7.8 ms row): it copies the
+    * session's Hadoop conf, broadcasts it and, for row readers under a
+    * vectorized session, clones the session.
+    *
+    * Key: the reader's shape — format, write schema, required schema,
+    * filters, vectorized, options — plus every other input a build reads:
+    * the `SparkContext` the broadcast belongs to (a stopped context's
+    * readers are never returned, and are dropped on the next miss), the
+    * calling session's SQL conf and the context's Hadoop conf, both by
+    * content. So a repeated read of an unchanged shape builds nothing (the
+    * delete readers of every merge-on-read read, every unfiltered data
+    * read), and a changed setting builds a new reader. A hit costs one
+    * fingerprint of the two confs (~1,100 Hadoop entries), 0.2 ms median.
+    *
+    * Bound: the [[Bound]] most recently used readers (LRU). A miss builds
+    * outside the memo's lock, so concurrent reads of other shapes do not
+    * wait behind it; a read of the same shape waits for that one build. */
+  object ReaderMemo {
+    val Bound = 64
+
+    private final case class Key(sc: org.apache.spark.SparkContext,
+        sqlConf: Map[String, String], hadoopConf: java.util.Map[String, String],
+        format: String, writeSchema: StructType, required: StructType,
+        filters: Seq[Filter], vectorized: Boolean, options: Map[String, String])
+
+    /** Filled once by the first caller of its key; later callers of the
+      * key wait on the slot, not on the memo. */
+    private final class Slot {
+      @volatile var reader: (FileReader, Boolean) = _
+    }
+
+    private val slots = new java.util.LinkedHashMap[Key, Slot](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Slot]): Boolean =
+        this.size > Bound
+    }
 
     def apply(spark: SparkSession, format: String, writeSchema: StructType,
         required: StructType, filters: Seq[Filter], vectorized: Boolean,
-        options: Map[String, String]): (FileReader, Boolean) = synchronized {
-      built.getOrElseUpdate(
-        (format, writeSchema, required, filters, vectorized, options), {
-          readerBuilds.incrementAndGet()
-          ColumnBridge.fileReader(spark, format, writeSchema, required,
-            filters, vectorized, options)
-        })
+        options: Map[String, String]): (FileReader, Boolean) = {
+      val sc = spark.sparkContext
+      val hadoopConf = new java.util.HashMap[String, String]()
+      sc.hadoopConfiguration.forEach(e => hadoopConf.put(e.getKey, e.getValue))
+      val key = Key(sc, spark.conf.getAll, hadoopConf, format, writeSchema,
+        required, filters, vectorized, options)
+      val slot = slots.synchronized {
+        val found = slots.get(key)
+        if (found != null) found
+        else {
+          slots.keySet.removeIf(_.sc.isStopped)
+          val fresh = new Slot
+          slots.put(key, fresh)
+          fresh
+        }
+      }
+      var built = false
+      if (slot.reader == null) slot.synchronized {
+        if (slot.reader == null) {
+          try {
+            slot.reader = ColumnBridge.fileReader(spark, format, writeSchema,
+              required, filters, vectorized, options)
+          } catch {
+            case e: Throwable =>
+              slots.synchronized(slots.remove(key, slot))
+              throw e
+          }
+          built = true
+        }
+      }
+      (if (built) readerBuilds else readerReuses).incrementAndGet()
+      slot.reader
     }
 
     /** A row reader (delete files). */
     def rows(spark: SparkSession, format: String, schema: StructType,
         options: Map[String, String]): FileReader =
       apply(spark, format, schema, schema, Nil, vectorized = false, options)._1
+
+    private[graft] def size: Int = slots.synchronized(slots.size)
+
+    /** Drops every reader, so a test's build counts do not depend on the
+      * reads that ran before it. */
+    private[graft] def clear(): Unit = slots.synchronized(slots.clear())
   }
 
   /** @param wantKeys group per partition tuple and attach partition keys
@@ -894,8 +952,7 @@ object GraftReadPlanner {
         * read-side bin-packing follows the session the caller configured
         * (binPack compaction packs with open cost 0: each task carries
         * ~target BYTES of small files, not target-minus-padding). */
-      openCostOverride: Option[Long] = None,
-      readers: ReaderMemo = new ReaderMemo): Planned = {
+      openCostOverride: Option[Long] = None): Planned = {
     if (files.isEmpty) return Planned(Array.empty, columnar = false)
     val schema = m.schema
     val inject = m.property(TableProperties.InjectPartitionConstants, "false").toBoolean
@@ -1040,12 +1097,12 @@ object GraftReadPlanner {
         encryption, "parquet",
         m.property(TableProperties.EncryptionRequired, "false").toBoolean)
       val posReader = if (posDeletes.isEmpty) null
-        else readers.rows(spark, "parquet", posSchema, delOpts)
+        else ReaderMemo.rows(spark, "parquet", posSchema, delOpts)
       val eqGroups = eqMetaGroups.map { case (ids, fs) =>
         val keySchema = StructType(ids.map(id =>
           StructField(schema.fieldName(id), schema.fieldType(id))))
         GraftEqDeletes(fs.map(whole).toArray,
-          readers.rows(spark, "parquet", keySchema, delOpts),
+          ReaderMemo.rows(spark, "parquet", keySchema, delOpts),
           ids.map(id => extNames.indexOf(schema.fieldName(id))).toArray,
           ids.map(id => schema.fieldType(id): DataType).toArray)
       }
@@ -1076,7 +1133,7 @@ object GraftReadPlanner {
     // parquet through modular decryption (factory + manager on the conf)
     def build(vectorized: Boolean): Option[Planned] = {
       val partitions = plans.flatMap { p =>
-        val (reader, batches) = readers(spark, p.format, p.writeSchema,
+        val (reader, batches) = ReaderMemo(spark, p.format, p.writeSchema,
           p.required, p.filters, vectorized,
           graft.table.EncryptionManagers.contentOptionsFor(encryption, p.format,
             m.property(TableProperties.EncryptionRequired, "false").toBoolean))
@@ -1234,9 +1291,6 @@ final class GraftBatchScan(val table: IceTable,
   private var runtimeV1: Seq[Filter] = Nil
   @transient private var cachedTasks: Seq[FileScanTask] = _
   @transient private var cachedPlan: GraftReadPlanner.Planned = _
-  // one reader per distinct reader shape for the whole scan: every
-  // applicability class, the delete readers and the row fallback share it
-  @transient private lazy val readers = new GraftReadPlanner.ReaderMemo
 
   appendsRange.foreach { case (from, to) => scan.appendsBetween(from, to) }
   sample.foreach { case (f, sd) => scan.sampleFiles(f, sd) }
@@ -1501,7 +1555,7 @@ final class GraftBatchScan(val table: IceTable,
           encryption = table.io.encryption,
           seqs = if (!wantLineage) Map.empty
             else group.map(t => t.file.path -> t.seq).toMap,
-          openCostOverride = openCostOverride, readers = readers)
+          openCostOverride = openCostOverride)
       }
       cachedPlan = GraftReadPlanner.Planned(
         planned.flatMap(_.partitions).toArray,
