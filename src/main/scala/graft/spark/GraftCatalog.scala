@@ -422,7 +422,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with StagingTabl
     if (tableExists(to)) throw new TableAlreadyExistsException(to)
     val src = new org.apache.hadoop.fs.Path(tablePath(from))
     val dst = new org.apache.hadoop.fs.Path(tablePath(to))
-    val fs = src.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = FileIO.fileSystem(src, spark.sparkContext.hadoopConfiguration)
     // fs.rename returns false (no exception) when e.g. the destination parent
     // is missing — surface that as a failure instead of a silent no-op
     fs.mkdirs(dst.getParent)
@@ -492,7 +492,7 @@ final class StagedGraftTable(delegate: GraftSparkTable, spark: SparkSession,
     val conf = spark.sparkContext.hadoopConfiguration
     val src = new org.apache.hadoop.fs.Path(stagedPath)
     val dst = new org.apache.hadoop.fs.Path(finalPath)
-    val fs = src.getFileSystem(conf)
+    val fs = FileIO.fileSystem(src, conf)
     if (fs.exists(dst)) {
       if (!replace) throw new TableAlreadyExistsException(
         Identifier.of(Array.empty, finalPath))

@@ -84,8 +84,7 @@ object DeletionVectors {
           val conf = confB.value.value
           val sidecar = s"$outDir/dv-${UUID.randomUUID()}.gdv"
           val p = new Path(sidecar)
-          val fs = p.getFileSystem(conf)
-          val raw = fs.create(p, false)
+          val raw = FileIO.fileSystem(p, conf).create(p, false)
           val counted = new CountingOutputStream(enc.encrypt(sidecar, raw))
           val out = new DataOutputStream(counted)
           val descs = scala.collection.mutable.ArrayBuffer.empty[BlobDesc]

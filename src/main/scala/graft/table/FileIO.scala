@@ -12,6 +12,11 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * comes from rename-without-overwrite; on the local FS we get a true CAS via
   * hard-link creation, which atomically fails if the target exists.
   *
+  * LOCAL FILES: every path resolves through [[FileIO.fileSystem]], so a
+  * local file or directory this IO creates gets its mode set in-process
+  * ([[LocalFs]]) rather than by a `chmod` child process, and listings load
+  * no permissions (each would start an `ls -ld` without `libhadoop`).
+  *
   * METADATA CONFIDENTIALITY: when `encryption` is non-plaintext, every
   * string file written through this IO (table metadata JSON, manifest
   * lists, jsonl manifests, stats files) is SEALED with the manager's
@@ -45,7 +50,7 @@ final class FileIO(@transient val conf: Configuration,
   require(!requireSealed || encryption != PlaintextEncryptionManager,
     "encryption-required asserted on a plaintext FileIO — a plaintext " +
       "handle can never read sealed metadata; supply the table's keyed manager")
-  private def fs(p: Path): FileSystem = p.getFileSystem(conf)
+  private def fs(p: Path): FileSystem = FileIO.fileSystem(p, conf)
 
   /** Gzip-compressed metadata files (ref `TableMetadataParser.Codec`) are
     * recognized by name — `v3.gz.metadata.json` / legacy `*.metadata.json.gz`. */
@@ -192,13 +197,23 @@ final class FileIO(@transient val conf: Configuration,
     val f = new Path(from); fs(f).rename(f, new Path(to))
   }
 
+  /** Every file under `dir` (Nil when it is missing), walked with plain
+    * statuses: `listFiles` copies each entry's permission, owner and group
+    * into a `LocatedFileStatus` (an `ls -ld` child process per entry on a
+    * local tree without `libhadoop`) and looks up its block locations. */
   def listRecursive(dir: String): Seq[FileStatus] = {
     val p = new Path(dir)
     val f = fs(p)
     if (!f.exists(p)) return Nil
     val out = ArrayBuffer[FileStatus]()
-    val it = f.listFiles(p, true)
-    while (it.hasNext) out += it.next()
+    def walk(d: Path): Unit = {
+      val it = f.listStatusIterator(d)
+      while (it.hasNext) {
+        val s = it.next()
+        if (s.isDirectory) walk(s.getPath) else out += s
+      }
+    }
+    walk(p)
     out.toSeq
   }
 
@@ -207,4 +222,39 @@ final class FileIO(@transient val conf: Configuration,
     val f = fs(p)
     if (!f.exists(p)) Nil else f.listStatus(p).toSeq
   }
+}
+
+object FileIO {
+  /** The filesystem the engine reads and creates `p` through: [[LocalFs]]
+    * for a local path (a `file` path, or a scheme-less one under a `file`
+    * default FS) when `conf` names no `fs.file.impl`, else Hadoop's own
+    * resolution. A configured `file` class (a user's wrapper, a tracing
+    * filesystem) always wins. */
+  def fileSystem(p: Path, conf: Configuration): FileSystem = {
+    val scheme = Option(p.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
+    if (scheme != "file" || namesLocalClass(conf)) p.getFileSystem(conf)
+    else {
+      val fs = org.apache.hadoop.util.ReflectionUtils.newInstance(classOf[LocalFs], conf)
+      fs.initialize(LocalUri, conf)
+      fs
+    }
+  }
+
+  private val LocalImplKey = "fs.file.impl"
+  private val LocalUri = java.net.URI.create("file:///")
+
+  /** Does `conf` name its own `file` filesystem class? */
+  private def namesLocalClass(conf: Configuration): Boolean =
+    Option(conf.getTrimmed(LocalImplKey)).exists(_.nonEmpty)
+
+  /** Per-write Hadoop options under which Spark's write tasks resolve
+    * [[LocalFs]] for `file` paths, or none when the Hadoop conf or the
+    * session conf names its own `file` class. The cache is bypassed: it is
+    * keyed by scheme, not class, and would return the JVM's stock instance. */
+  private[table] def localFsOptions(conf: Configuration,
+      session: org.apache.spark.sql.SparkSession): Map[String, String] =
+    if (namesLocalClass(conf) ||
+        session.conf.getOption(LocalImplKey).exists(_.trim.nonEmpty)) Map.empty
+    else Map(LocalImplKey -> classOf[LocalFs].getName,
+      s"$LocalImplKey.disable.cache" -> "true")
 }

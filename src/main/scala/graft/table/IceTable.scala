@@ -1748,8 +1748,9 @@ private[table] object Writes {
       Some(e).filter(_ != PlaintextEncryptionManager),
       partitionCols.map(n => rows.schema(n).dataType),
       trackRefs = content == FileContent.PositionDeletes)
-    org.apache.spark.sql.graft.ColumnBridge.writeFiles(rows, format, dir,
-      partitionCols, options, new DirectCommitProtocol(dir), Seq(tracker), ExecutionName)
+    org.apache.spark.sql.graft.ColumnBridge.writeFiles(rows, format, dir, partitionCols,
+      options ++ FileIO.localFsOptions(conf, table.spark), new DirectCommitProtocol(dir),
+      Seq(tracker), ExecutionName)
     val modeOf = MetricsModes.forTable(m)
     val tasks = tracker.committed.toSeq
     val (written, empty) = tasks.flatMap(_.files).partition(_.metrics.recordCount > 0)

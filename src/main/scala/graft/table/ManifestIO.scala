@@ -149,7 +149,8 @@ object ManifestIO {
     import org.apache.parquet.hadoop.api.ReadSupport
     import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.{DelegatingPositionOutputStream, OutputFile, PositionOutputStream}
     import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
     private val EntryType = MessageTypeParser.parseMessageType(
@@ -166,11 +167,36 @@ object ManifestIO {
     private val PathOnlyType = MessageTypeParser.parseMessageType(
       "message graft_manifest_entry { required binary path (STRING); }")
 
+    /** A parquet output file on the filesystem [[FileIO.fileSystem]]
+      * resolves (`HadoopOutputFile.fromPath` resolves through Hadoop's
+      * cache), created as `HadoopOutputFile` creates and named by the same
+      * path string, which keys a sealed manifest. It keeps the length
+      * written at close, so no status call follows. */
+    private final class ManifestOutputFile(fs: org.apache.hadoop.fs.FileSystem,
+        path: org.apache.hadoop.fs.Path) extends OutputFile {
+      var length: Long = -1L
+      private def open(overwrite: Boolean, blockSizeHint: Long): PositionOutputStream = {
+        val out = fs.create(path, overwrite, 4096, fs.getDefaultReplication(path),
+          math.max(defaultBlockSize(), blockSizeHint))
+        new DelegatingPositionOutputStream(out) {
+          override def getPos: Long = out.getPos
+          override def close(): Unit = { super.close(); length = out.getPos }
+        }
+      }
+      override def create(blockSizeHint: Long): PositionOutputStream = open(false, blockSizeHint)
+      override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+        open(true, blockSizeHint)
+      override def supportsBlockSize(): Boolean = defaultBlockSize() > 0
+      override def defaultBlockSize(): Long = fs.getDefaultBlockSize(path)
+      override def getPath(): String = path.toString
+    }
+
     def write(io: FileIO, path: String, entries: Seq[ManifestEntry],
         schema: Schema, spec: PartitionSpec): Long = {
       val hPath = new org.apache.hadoop.fs.Path(path)
+      val file = new ManifestOutputFile(FileIO.fileSystem(hPath, io.conf), hPath)
       val writer = ExampleParquetWriter
-        .builder(HadoopOutputFile.fromPath(hPath, io.conf))
+        .builder(file)
         .withConf(cryptoConf(io))
         .withType(EntryType)
         .withCompressionCodec(CompressionCodecName.SNAPPY)
@@ -189,7 +215,7 @@ object ManifestIO {
         g.append("data_file", JsonCodecs.dataFileToJson(e.dataFile, schema, spec))
         writer.write(g)
       } finally writer.close()
-      hPath.getFileSystem(io.conf).getFileStatus(hPath).getLen
+      file.length
     }
 
     /** Manifest reader over a [[HadoopInputFile]] carrying the crypto conf:
